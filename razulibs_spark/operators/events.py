@@ -62,17 +62,20 @@ def build_events(
     tool: str | None = None,
     description: str | None = None,
     id_offset: int = 0,
+    id_col: str | None = None,
 ) -> DataFrame:
     """One event per subject row, set-at-a-time (the reference emits
     one Python object per call site). Event ids are dense from
     id_offset — derive the offset with `max_event_id` on the existing
-    log (S8) to append monotonically."""
-    from razulibs_spark.operators.ids import dense_ids
-
+    log (S8) to append monotonically. With ``id_col`` the subjects are
+    already numbered (1, 2, … — one id pass shared by several event
+    groups) and each event id is id_offset + that number."""
     if event_type not in EVENT_TYPES.values():
         raise ValueError(f"unknown PREMIS event code {event_type!r}")
-    base = subjects.select(F.col(subject_col).alias("_subject"))
-    base = dense_ids(base, ["_subject"], "event_id", start=id_offset + 1)
+    base = _with_event_ids(
+        subjects.select(F.col(subject_col).alias("_subject"), *_optional(id_col)),
+        id_offset, id_col,
+    )
     return base.select(
         F.col("event_id"),
         F.lit(event_type).alias("event_type"),
@@ -86,6 +89,20 @@ def build_events(
         F.lit(None).cast("string").alias("generated"),
         F.lit(description).cast("string").alias("description"),
     )
+
+
+def _optional(col: str | None) -> list[str]:
+    return [col] if col else []
+
+
+def _with_event_ids(df: DataFrame, id_offset: int, id_col: str | None) -> DataFrame:
+    """``event_id`` = id_offset + ``id_col`` when the rows are numbered,
+    else dense from id_offset + 1 in ``_subject`` order."""
+    if id_col:
+        return df.withColumn("event_id", (F.col(id_col) + id_offset).cast("long"))
+    from razulibs_spark.operators.ids import dense_ids
+
+    return dense_ids(df, ["_subject"], "event_id", start=id_offset + 1)
 
 
 def max_event_id(events: DataFrame, id_col: str = "event_id") -> int:
@@ -103,13 +120,15 @@ def is_locked(events: DataFrame, lock_type: str = LOCK_EVENT) -> bool:
 
 
 def fixity_check_events(
-    manifest: DataFrame, fs_scan: DataFrame, actor: str, id_offset: int = 0
+    manifest: DataFrame, fs_scan: DataFrame, actor: str, id_offset: int = 0,
+    id_col: str | None = None,
 ) -> DataFrame:
     """Fixity verification (razu/sip.py:168-171): recompute-and-compare
-    as a join, emitting one `fix` event per file with the outcome."""
-    from razulibs_spark.operators.ids import dense_ids
-
-    joined = manifest.select("filename", F.col("md5hash").alias("_expected")).join(
+    as a join, emitting one `fix` event per file with the outcome.
+    ``id_col`` numbers the manifest rows as in :func:`build_events`."""
+    joined = manifest.select(
+        "filename", F.col("md5hash").alias("_expected"), *_optional(id_col)
+    ).join(
         fs_scan.select("filename", F.col("md5hash").alias("_actual")),
         "filename",
         "left",
@@ -121,8 +140,9 @@ def fixity_check_events(
         .otherwise(F.lit("suc"))
         .alias("outcome"),
         F.coalesce(F.col("_actual"), F.lit("missing")).alias("outcome_note"),
+        *_optional(id_col),
     )
-    checked = dense_ids(checked, ["_subject"], "event_id", start=id_offset + 1)
+    checked = _with_event_ids(checked, id_offset, id_col)
     return checked.select(
         "event_id",
         F.lit("fix").alias("event_type"),

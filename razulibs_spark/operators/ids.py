@@ -3,9 +3,10 @@
 Two implementations:
 
 - `dense_ids` — the scalable two-phase scheme: range-repartition on
-  the order key (a parallel sort), count rows per partition, broadcast
-  the tiny offset table, and number rows within each partition. No
-  single-partition global window; the only driver traffic is one
+  the order key (a parallel sort), count rows per partition, and
+  number rows within each partition from that partition's offset, a
+  literal array indexed by partition id. No single-partition global
+  window and no offsets frame to join; the only driver traffic is one
   integer per partition.
 
 - `dense_ids_global_window` — the naive row_number().over(global
@@ -19,7 +20,7 @@ SIP-compatible output only (SURVEY §2.9 design note).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -48,21 +49,25 @@ def dense_ids(
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
-    # One count per partition — tiny driver collect, then broadcast back.
-    counts = (
-        parted.groupBy("_pid").count().orderBy("_pid").collect()
-    )
-    offsets, acc = [], start
-    for r in counts:
-        offsets.append((r["_pid"], acc))
-        acc += r["count"]
-    offsets_df = df.sparkSession.createDataFrame(offsets, ["_pid", "_offset"])
+    # One count per partition — tiny driver collect, back as a literal.
+    counts = dict(parted.groupBy("_pid").count().collect())
     w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    return (
-        parted.join(F.broadcast(offsets_df), "_pid")
-        .withColumn(id_col, (F.row_number().over(w) - 1 + F.col("_offset")).cast("long"))
-        .drop("_pid", "_offset")
-    )
+    return parted.withColumn(
+        id_col,
+        (F.row_number().over(w) - 1 + partition_offsets(counts, n, start)).cast("long"),
+    ).drop("_pid")
+
+
+def partition_offsets(counts: dict[int, int], n: int, start: int = 0) -> Column:
+    """Exclusive running offsets of per-partition ``counts`` (partition
+    id → subtotal; absent ids count 0) as ``element_at(array(...),
+    _pid + 1)`` over the ``_pid`` column: one literal lookup in place
+    of an offsets frame and its broadcast join."""
+    offsets, acc = [], start
+    for pid in range(n):
+        offsets.append(f"{acc}L")
+        acc += counts.get(pid) or 0
+    return F.expr(f"element_at(array({', '.join(offsets)}), _pid + 1)")
 
 
 def dense_ids_global_window(

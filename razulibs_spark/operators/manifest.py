@@ -21,6 +21,7 @@ from pyspark.sql.types import (
 
 from razulibs_spark.functions.scalars import full_extension, normalize_path
 from razulibs_spark.operators.relational import changed_or_new, reconcile_full_outer
+from razulibs_spark.session import local_frame
 
 MANIFEST_SCHEMA = StructType(
     [
@@ -119,7 +120,7 @@ def manifest_from_json_map(spark: SparkSession, text: str) -> DataFrame:
             }
         )
     schema = StructType([f for f in MANIFEST_SCHEMA if f.name not in ("md5date", "last_modified")])
-    return spark.createDataFrame(rows, schema=schema)
+    return local_frame(spark, rows, schema)
 
 
 def sync_to_local_store(plan: DataFrame, source_root: str, dest_root: str) -> int:

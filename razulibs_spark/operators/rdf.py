@@ -61,6 +61,9 @@ class PropertyMap:
     o_type: str = "literal"  # 'uri' | 'bnode' | 'literal'
     datatype: str | Column | None = None
     lang: str | None = None
+    # When set, `value` is a term of this vocabulary and the object is
+    # the term's URI (see entities_to_triples).
+    vocabulary: str | None = None
 
 
 def skolemize(uid: Column, local: Column) -> Column:
@@ -69,46 +72,90 @@ def skolemize(uid: Column, local: Column) -> Column:
 
 
 def entity_to_triples(df: DataFrame, subject: Column, props: list[PropertyMap]) -> DataFrame:
-    """Fan one entity row out into N triples (O2; csv2rdf.py:117-237).
+    """Fan one entity row out into N triples (O2; csv2rdf.py:117-237):
+    the one-entity case of :func:`entities_to_triples`."""
+    return entities_to_triples(df, [(subject, props)])
 
-    Builds an array<struct> of candidate triples per row and explodes
+
+def entities_to_triples(
+    df: DataFrame,
+    entities: list[tuple[Column, list[PropertyMap]]],
+    vocab: DataFrame | None = None,
+) -> DataFrame:
+    """Fan each row out into the triples of several entities at once —
+    one ``(subject, props)`` pair per entity the row describes.
+
+    Builds one array<struct> of candidate triples per row and explodes
     it; null-valued properties are dropped afterwards (the optional-
     field semantics of csv2rdf.py:188-200 / pandasutils.py:5-8).
     Entirely whole-stage-codegen — one narrow transformation, no
     shuffle, linear at any scale.
+
+    Vocabulary cells (J2, concept_resolver.py:65-76): a property with
+    ``vocabulary`` carries a term, and its object is the term's URI in
+    ``vocab`` (vocabulary, term, uri). Every such cell of every entity
+    resolves in ONE broadcast left join on (vocabulary, term) — the
+    set-at-a-time replacement for the reference's per-row SPARQL +
+    lru_cache. An unresolved term gives no triple; a term with several
+    URIs gives one triple per URI.
 
     Construction (r13, guide §1.2 driver overhead): the subject and
     property-value COLUMNS project once under reserved names, and the
     array<struct> assembles as ONE F.expr parse over those names plus
     the literal predicate/o_type/datatype/lang strings — ~12 py4j
     round-trips instead of ~15 per property (measured 223 → ~35 ms
-    per call; this ran inside every O2-familied query's timed
-    construction). The planned expression tree is unchanged —
-    CollapseProject inlines the value projection into the Generate
-    input exactly as the inline-struct form planned.
+    per call). CollapseProject inlines the value projection into the
+    Generate input exactly as an inline-struct form would plan.
     """
-    sel = [subject.cast("string").alias("__ett_s")]
-    parts = []
-    for i, p in enumerate(props):
-        sel.append(p.value.alias(f"__ett_v{i}"))
-        if isinstance(p.datatype, Column):
-            sel.append(p.datatype.alias(f"__ett_d{i}"))
-            dt = f"CAST(__ett_d{i} AS STRING)"
-        elif p.datatype is None:
-            dt = "CAST(NULL AS STRING)"
-        else:
-            dt = _sq(p.datatype)
-        lang = _sq(p.lang) if p.lang is not None else "CAST(NULL AS STRING)"
-        parts.append(
-            f"struct(__ett_s AS s, {_sq(p.predicate)} AS p, "
-            f"CAST(__ett_v{i} AS STRING) AS o, {_sq(p.o_type)} AS o_type, "
-            f"{dt} AS o_datatype, {lang} AS o_lang)"
-        )
+    resolve = any(p.vocabulary for _, props in entities for p in props)
+    if resolve and vocab is None:
+        raise ValueError("vocabulary properties need a vocab frame")
+    sel, parts = [], []
+    for j, (subject, props) in enumerate(entities):
+        s = f"__ett_s{j}"
+        sel.append(subject.cast("string").alias(s))
+        for p in props:
+            i = len(parts)
+            sel.append(p.value.alias(f"__ett_v{i}"))
+            if isinstance(p.datatype, Column):
+                sel.append(p.datatype.alias(f"__ett_d{i}"))
+                dt = f"CAST(__ett_d{i} AS STRING)"
+            elif p.datatype is None:
+                dt = _NULL
+            else:
+                dt = _sq(p.datatype)
+            lang = _sq(p.lang) if p.lang is not None else _NULL
+            voc = ""
+            if resolve:
+                voc = f", {_sq(p.vocabulary) if p.vocabulary else _NULL} AS voc"
+            parts.append(
+                f"struct({s} AS s, {_sq(p.predicate)} AS p, "
+                f"CAST(__ett_v{i} AS STRING) AS o, {_sq(p.o_type)} AS o_type, "
+                f"{dt} AS o_datatype, {lang} AS o_lang{voc})"
+            )
     arr = ", ".join(parts)
-    return (
+    triples = (
         df.select(*sel)
         .select(F.expr(f"explode(array({arr}))").alias("t"))
         .select("t.*")
+        .filter(F.col("o").isNotNull())
+    )
+    if not resolve:
+        return triples
+    dim = vocab.select(
+        F.col("vocabulary").alias("__ett_voc"),
+        F.col("term").alias("__ett_term"),
+        F.col("uri").alias("__ett_uri"),
+    )
+    on = (F.col("voc") == F.col("__ett_voc")) & (F.col("o") == F.col("__ett_term"))
+    return (
+        triples.join(F.broadcast(dim), on, "left")
+        .select(
+            "s", "p",
+            F.when(F.col("voc").isNull(), F.col("o"))
+            .otherwise(F.col("__ett_uri")).alias("o"),
+            "o_type", "o_datatype", "o_lang",
+        )
         .filter(F.col("o").isNotNull())
     )
 
@@ -202,6 +249,9 @@ def _ordered_expansions() -> list[tuple[str, str]]:
 
 
 _assert_prefix_free(EXPANSIONS)
+
+
+_NULL = "CAST(NULL AS STRING)"
 
 
 def _sq(s: str) -> str:

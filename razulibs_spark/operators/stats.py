@@ -12,9 +12,9 @@ oracle; we sum exactly in scaled integers instead).
 
 Scale shapes:
 - ``range_cumsum`` — prefix sums over a total order via
-  range-repartition + per-partition subtotal broadcast (same two-tier
-  scheme as operators/ids.dense_ids); driver traffic is one integer
-  per partition.
+  range-repartition + per-partition subtotals read back as literal
+  offsets (same two-tier scheme as operators/ids.dense_ids); driver
+  traffic is one integer per partition.
 - ``ks_drift`` — one shuffle to group by value, one two-tier cumsum,
   one scalar aggregate.
 - ``chi_square_cells`` — output bounded by the category square, all
@@ -28,6 +28,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from razulibs_spark.operators.ids import partition_offsets
+from razulibs_spark.session import local_frame
 
 
 def range_cumsum(
@@ -44,7 +47,8 @@ def range_cumsum(
     Two-tier scheme: range-repartition on the order key (parallel
     sort), sum each value column per partition, collect the tiny per-
     partition subtotal table to the driver, turn it into exclusive
-    offsets, broadcast it back, and add intra-partition running sums.
+    offsets, read back as a literal lookup by partition id, and add
+    intra-partition running sums.
     The only global data movement besides the range shuffle is one
     integer per (partition, value column); all requested prefix sums
     share the single range shuffle.
@@ -92,31 +96,21 @@ def range_cumsum(
     subtotals = (
         parted.groupBy("_pid")
         .agg(*[F.sum(v).alias(v) for v in val_cols])
-        .orderBy("_pid")
         .collect()
-    )
-    offsets, acc = [], [0] * len(val_cols)
-    for r in subtotals:
-        offsets.append((r["_pid"], *acc))
-        acc = [a + r[v] for a, v in zip(acc, val_cols)]
-    off_names = [f"_off_{i}" for i in range(len(val_cols))]
-    # Explicit schema: createDataFrame cannot infer types from an
-    # EMPTY offsets list (zero input partitions with rows), and the
-    # empty-input path must return an empty frame, not crash.
-    offsets_df = df.sparkSession.createDataFrame(
-        offsets,
-        "_pid int, " + ", ".join(f"{c} long" for c in off_names),
     )
     w = (
         Window.partitionBy("_pid")
         .orderBy(*[F.col(c) for c in order_cols])
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    out = parted.join(F.broadcast(offsets_df), "_pid")
-    for v, o, off in zip(val_cols, out_cols, off_names):
+    out = parted
+    for v, o in zip(val_cols, out_cols):
+        # Empty input collects no subtotals: every offset is 0 and the
+        # (empty) frame passes through.
+        off = partition_offsets({r["_pid"]: r[v] for r in subtotals}, n)
         intra = F.coalesce(F.sum(v).over(w), F.lit(0))
-        out = out.withColumn(o, (intra + F.col(off)).cast("long"))
-    return out.drop("_pid", *off_names)
+        out = out.withColumn(o, (intra + off).cast("long"))
+    return out.drop("_pid")
 
 
 def ks_drift(
@@ -520,7 +514,7 @@ def pca_top_component(
         F.max(F.size("x")).alias("d"), F.count("*").alias("n")
     ).collect()
     if not head or head[0]["d"] is None or head[0]["d"] <= 0:
-        return df.sparkSession.createDataFrame([], out_schema)
+        return local_frame(df.sparkSession, [], out_schema)
     dim, n_rows = head[0]["d"], head[0]["n"]
     centered_rows = centered_rows.filter(F.size("x") == dim)
     if method == "auto":
@@ -587,7 +581,8 @@ def pca_top_component(
     centered.unpersist()
     spark = df.sparkSession
     extra = (eig_rel_delta, v_align) if with_convergence else ()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (i + 1, float(v[i]), float(eigenvalue), *extra)
             for i in range(dim)
@@ -635,7 +630,7 @@ def _pca_gram(
         sums += np.array(r["s"])
         n_rows += r["n"]
     if n_rows == 0:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     mu = sums / n_rows
     cov = gram - n_rows * np.outer(mu, mu)
     v = np.full(dim, 1.0 / _math.sqrt(dim))
@@ -654,7 +649,8 @@ def _pca_gram(
         eigenvalue = norm
         v = v_new
     extra = (eig_rel_delta, v_align) if with_convergence else ()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, float(v[i]), float(eigenvalue), *extra) for i in range(dim)],
         out_schema,
     )

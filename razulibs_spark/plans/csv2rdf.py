@@ -6,10 +6,12 @@ The reference walks the CSV row-by-row (csv2rdf.py:68), doing a
 blocking SPARQL round-trip per uncached vocabulary term
 (concept_resolver.py:102-114) and one JSON-LD file write per entity
 (meta_resource.py:45-54). Here the same semantics are one declarative
-plan: scan → derive → broadcast-join dims → three entity branches
-(archive singleton / serie rollup / record+bestand per row) → triple
-fan-out → union. No per-row I/O anywhere; Catalyst prunes, pushes
-down, and broadcasts.
+plan: scan → derive → broadcast-join DROID → ONE explode emitting the
+record, dekking, bestand and checksum triples and the serie→record
+link of each row, its vocabulary cells resolved by ONE broadcast join
+on (vocabulary, term) → union with the serie rollup and the archive
+singleton → distinct. No per-row I/O anywhere; Catalyst prunes,
+pushes down, and broadcasts.
 
 Ids are deterministic and content-derived (Inventarisnummer-based),
 not sequential-counter (razu/incrementer.py:1-11) — the
@@ -32,25 +34,13 @@ from razulibs_spark.functions.scalars import (
 )
 from razulibs_spark.operators.rdf import (
     PropertyMap,
+    entities_to_triples,
     entity_to_triples,
     graph_union,
     skolemize,
 )
 
 RDF_TYPE = "rdf:type"
-
-
-def resolve_terms(facts: DataFrame, vocab: DataFrame, column: str,
-                  vocabulary: str, out: str) -> DataFrame:
-    """J2 vocabulary resolve (concept_resolver.py:65-76): term column →
-    concept URI via a broadcast left join against one materialized
-    vocabulary dimension — the set-at-a-time replacement for the
-    reference's per-row SPARQL + lru_cache."""
-    dim = (
-        vocab.filter(F.col("vocabulary") == vocabulary)
-        .select(F.col("term").alias(column), F.col("uri").alias(out))
-    )
-    return facts.join(F.broadcast(dim), column, "left")
 
 
 def compose_filename(doos: F.Column, volg: F.Column) -> F.Column:
@@ -96,17 +86,6 @@ def csv2rdf_triples(metadata: DataFrame, droid: DataFrame,
     # J1: droid is tool output over the payload set — dimension-sized
     # next to a 100 TB fact table, so broadcast.
     m = m.join(F.broadcast(droid_files), m.filename == droid_files.NAME, "left")
-    for col, vocabulary, out in [
-        ("Soort", "soort", "soort_uri"),
-        ("Kleurtype", "kleurtype", "kleurtype_uri"),
-        ("Auteursrecht", "auteursrecht", "auteursrecht_uri"),
-        ("Fotograaf naam", "actor", "fotograaf_uri"),
-        ("Plaats 1", "locatie", "plaats1_uri"),
-        ("Plaats 2", "locatie", "plaats2_uri"),
-        ("Plaats 3", "locatie", "plaats3_uri"),
-    ]:
-        m = resolve_terms(m, vocab, col, vocabulary, out)
-
     xsd_type, date_value = date_type_classify(F.col("Datering"))
     date_datatype = F.when(xsd_type != "literal", xsd_type)
     x1, y1 = parse_rd_coord(F.col("`Coördinaat - Linksonder`"))
@@ -116,63 +95,59 @@ def csv2rdf_triples(metadata: DataFrame, droid: DataFrame,
     bestand_uid = razu_uid(F.concat(F.col("Inventarisnummer").cast("string"), F.lit("-b")))
     serie_uid = razu_uid(F.concat(F.lit("serie-"), F.col("Serie")))
     archive_uid = razu_uid(F.lit(archive_name))
-    m = (
-        m.withColumn("_record_uid", record_uid)
-        .withColumn("_bestand_uid", bestand_uid)
-        .withColumn("_dekking", skolemize(record_uid, F.lit("dekking")))
-    )
-
-    record_triples = entity_to_triples(
-        m,
-        razu_uri(F.col("_record_uid")),
-        [
-            PropertyMap(RDF_TYPE, F.lit("ldto:Informatieobject"), "uri"),
-            PropertyMap("ldto:naam", F.col("Titel")),
-            PropertyMap("ldto:omschrijving", F.col("`Beschrijving voorkant`")),
-            PropertyMap("ldto:identificatieKenmerk", F.col("Inventarisnummer")),
-            PropertyMap("ldto:classificatie", F.col("soort_uri"), "uri"),
-            PropertyMap("ldto:raadpleeglocatie", F.col("Plaats")),
-            # P3 optional fields: null plaats2/3 simply produce no triple.
-            PropertyMap("ldto:dekkingInRuimte", F.col("plaats1_uri"), "uri"),
-            PropertyMap("ldto:dekkingInRuimte", F.col("plaats2_uri"), "uri"),
-            PropertyMap("ldto:dekkingInRuimte", F.col("plaats3_uri"), "uri"),
-            PropertyMap("ldto:betrokkene", F.col("fotograaf_uri"), "uri"),
-            PropertyMap("ldto:beperkingGebruik", F.col("auteursrecht_uri"), "uri"),
-            PropertyMap("geo:asWKT", wkt_bbox_polygon(x1, y1, x2, y2),
-                        datatype="geo:wktLiteral"),
-            PropertyMap("ldto:isOnderdeelVan", razu_uri(serie_uid), "uri"),
-            PropertyMap("ldto:heeftRepresentatie", razu_uri(bestand_uid), "uri"),
-            PropertyMap("ldto:dekkingInTijd", F.col("_dekking"), "bnode"),
-        ],
-    )
-    # D3 nested structure: the dekkingInTijd blank node, skolemized so
-    # document merges need no remap (SURVEY §1.2 vs collect_rdf.py:37-54).
-    dekking_triples = entity_to_triples(
-        m,
-        F.col("_dekking"),
-        [
-            PropertyMap(RDF_TYPE, F.lit("ldto:dekkingInTijdGegevens"), "uri"),
-            PropertyMap("ldto:dekkingInTijdBeginDatum", date_value,
-                        datatype=date_datatype),
-            PropertyMap("ldto:dekkingInTijdType", F.lit("Vervaardiging")),
-        ],
-    )
+    record = razu_uri(record_uid)
+    bestand = razu_uri(bestand_uid)
+    dekking = skolemize(record_uid, F.lit("dekking"))
     # The checksum is a nested ChecksumGegevens structure
     # (csv2rdf.py:214-219), skolemized like the dekking bnode; the
     # checksum datum is the DROID-recorded LAST_MODIFIED (the reference
     # stamps the droid file's mtime, csv2rdf.py:57).
-    m = m.withColumn("_checksum", skolemize(bestand_uid, F.lit("checksum")))
+    checksum = skolemize(bestand_uid, F.lit("checksum"))
     file_ext = F.substring_index(F.col("filename"), ".", -1)
-    bestand_triples = entity_to_triples(
-        m,
-        razu_uri(bestand_uid),
-        [
+
+    # Every per-row entity in ONE explode; the vocabulary cells
+    # (J2) resolve in one broadcast join inside entities_to_triples.
+    row_triples = entities_to_triples(m, [
+        (record, [
+            PropertyMap(RDF_TYPE, F.lit("ldto:Informatieobject"), "uri"),
+            PropertyMap("ldto:naam", F.col("Titel")),
+            PropertyMap("ldto:omschrijving", F.col("`Beschrijving voorkant`")),
+            PropertyMap("ldto:identificatieKenmerk", F.col("Inventarisnummer")),
+            PropertyMap("ldto:classificatie", F.col("Soort"), "uri",
+                        vocabulary="soort"),
+            PropertyMap("ldto:raadpleeglocatie", F.col("Plaats")),
+            # P3 optional fields: null plaats2/3 simply produce no triple.
+            PropertyMap("ldto:dekkingInRuimte", F.col("`Plaats 1`"), "uri",
+                        vocabulary="locatie"),
+            PropertyMap("ldto:dekkingInRuimte", F.col("`Plaats 2`"), "uri",
+                        vocabulary="locatie"),
+            PropertyMap("ldto:dekkingInRuimte", F.col("`Plaats 3`"), "uri",
+                        vocabulary="locatie"),
+            PropertyMap("ldto:betrokkene", F.col("`Fotograaf naam`"), "uri",
+                        vocabulary="actor"),
+            PropertyMap("ldto:beperkingGebruik", F.col("Auteursrecht"), "uri",
+                        vocabulary="auteursrecht"),
+            PropertyMap("geo:asWKT", wkt_bbox_polygon(x1, y1, x2, y2),
+                        datatype="geo:wktLiteral"),
+            PropertyMap("ldto:isOnderdeelVan", razu_uri(serie_uid), "uri"),
+            PropertyMap("ldto:heeftRepresentatie", bestand, "uri"),
+            PropertyMap("ldto:dekkingInTijd", dekking, "bnode"),
+        ]),
+        # D3 nested structure: the dekkingInTijd blank node, skolemized so
+        # document merges need no remap (SURVEY §1.2 vs collect_rdf.py:37-54).
+        (dekking, [
+            PropertyMap(RDF_TYPE, F.lit("ldto:dekkingInTijdGegevens"), "uri"),
+            PropertyMap("ldto:dekkingInTijdBeginDatum", date_value,
+                        datatype=date_datatype),
+            PropertyMap("ldto:dekkingInTijdType", F.lit("Vervaardiging")),
+        ]),
+        (bestand, [
             PropertyMap(RDF_TYPE, F.lit("ldto:Bestand"), "uri"),
             PropertyMap("ldto:naam", F.col("filename")),
             PropertyMap("premis:originalName", F.col("filename")),
             PropertyMap("ldto:omvang", F.coalesce(F.col("SIZE"), F.lit(0)).cast("long"),
                         datatype="xsd:integer"),
-            PropertyMap("ldto:checksum", F.col("_checksum"), "bnode"),
+            PropertyMap("ldto:checksum", checksum, "bnode"),
             PropertyMap("ldto:bestandsformaat",
                         F.concat(F.lit("https://www.nationalarchives.gov.uk/PRONOM/"),
                                  F.col("PUID")), "uri"),
@@ -182,44 +157,38 @@ def csv2rdf_triples(metadata: DataFrame, droid: DataFrame,
             # hermetic equivalent).
             PropertyMap("ldto:URLBestand",
                         F.concat(F.lit("https://g0321.opslag.razu.nl/"),
-                                 F.col("_bestand_uid"), F.lit("."), file_ext),
+                                 bestand_uid, F.lit("."), file_ext),
                         datatype="xsd:anyURI"),
-            PropertyMap("ldto:isRepresentatieVan", razu_uri(F.col("_record_uid")), "uri"),
-        ],
-    )
-    checksum_triples = entity_to_triples(
-        m,
-        F.col("_checksum"),
-        [
+            PropertyMap("ldto:isRepresentatieVan", record, "uri"),
+        ]),
+        (checksum, [
             PropertyMap(RDF_TYPE, F.lit("ldto:ChecksumGegevens"), "uri"),
             PropertyMap("ldto:checksumAlgoritme",
                         F.lit("https://data.razu.nl/id/algoritme/md5"), "uri"),
             PropertyMap("ldto:checksumDatum", F.col("LAST_MODIFIED"),
                         datatype="xsd:dateTime"),
             PropertyMap("ldto:checksumWaarde", F.col("MD5_HASH")),
-        ],
-    )
+        ]),
+        # J8 both link directions: the record's isOnderdeelVan above is
+        # the parent link, this the child link (one per row; the final
+        # distinct drops repeats).
+        (razu_uri(serie_uid), [
+            PropertyMap("ldto:bevatOnderdeel", record, "uri"),
+        ]),
+    ], vocab=vocab)
 
     # A6 serie rollup: order-independent groupBy replaces the
     # sorted-input change detection of csv2rdf.py:83,90.
     series = m.groupBy("Serie").agg(F.count("*").alias("n_records"))
-    s_uid = razu_uid(F.concat(F.lit("serie-"), F.col("Serie")))
     serie_triples = entity_to_triples(
         series,
-        razu_uri(s_uid),
+        razu_uri(serie_uid),
         [
             PropertyMap(RDF_TYPE, F.lit("ldto:Serie"), "uri"),
             PropertyMap("ldto:naam", F.col("Serie")),
             PropertyMap("ldto:omvang", F.col("n_records"), datatype="xsd:integer"),
-            # J8 both link directions: child link here, parent link on
-            # the record side above.
-            PropertyMap("ldto:isOnderdeelVan", razu_uri(razu_uid(F.lit(archive_name))), "uri"),
+            PropertyMap("ldto:isOnderdeelVan", razu_uri(archive_uid), "uri"),
         ],
-    )
-    serie_child_links = entity_to_triples(
-        m.select("Serie", "_record_uid").distinct(),
-        razu_uri(razu_uid(F.concat(F.lit("serie-"), F.col("Serie")))),
-        [PropertyMap("ldto:bevatOnderdeel", razu_uri(F.col("_record_uid")), "uri")],
     )
 
     # A1/A7 archive singleton from the global date range.
@@ -240,7 +209,4 @@ def csv2rdf_triples(metadata: DataFrame, droid: DataFrame,
         ],
     )
 
-    return graph_union(
-        record_triples, dekking_triples, bestand_triples, checksum_triples,
-        serie_triples, serie_child_links, archive_triples,
-    )
+    return graph_union(row_triples, serie_triples, archive_triples)

@@ -19,10 +19,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from razulibs_spark.operators import events as ev
+from razulibs_spark.operators.ids import dense_ids
 from razulibs_spark.operators.manifest import (
     manifest_from_directory,
     manifest_to_json_map,
 )
+from razulibs_spark.session import local_frame
 from razulibs_spark.sources.jsonld import write_jsonld_per_entity
 from razulibs_spark.sources.rdf_io import write_ntriples
 
@@ -89,20 +91,23 @@ def assemble_sip(
     # ingestion_start → one mem per document → one fix per manifest
     # entry → ingestion_end. Built AFTER the manifest frame exists, so
     # subjects are final-state — the deferred-queue semantics for free.
+    # ONE id pass ranks the documents by filename (r = 1..n): mem is
+    # 1 + r, fix is 1 + n + r, and the two singletons are 1 and 2n + 2.
+    ranked = dense_ids(manifest.select("filename", "md5hash"), ["filename"], "_rank")
+    sip_row = local_frame(spark, [(sip_dir, 1)], "uri string, _n long")
     start_ev = ev.build_events(
-        spark.createDataFrame([(sip_dir,)], "uri string"), "uri",
-        "ins", actor=actor, description="Ingestion started.")
+        sip_row, "uri", "ins", actor=actor,
+        description="Ingestion started.", id_col="_n")
     mem_ev = ev.build_events(
-        manifest.select(F.col("filename").alias("uri")), "uri",
+        ranked.withColumnRenamed("filename", "uri"), "uri",
         "mem", actor=actor, description="Metadata object created.",
-        id_offset=1)
+        id_offset=1, id_col="_rank")
     fix_ev = ev.fixity_check_events(
-        manifest, manifest_from_directory(spark, sip_dir, base_segment=sip_dir.rstrip("/") + "/"),
-        actor=actor, id_offset=1 + n_files)
+        ranked, manifest_from_directory(spark, sip_dir, base_segment=sip_dir.rstrip("/") + "/"),
+        actor=actor, id_offset=1 + n_files, id_col="_rank")
     end_ev = ev.build_events(
-        spark.createDataFrame([(sip_dir,)], "uri string"), "uri",
-        "ine", actor=actor, description="Ingestion ended.",
-        id_offset=1 + 2 * n_files)
+        sip_row, "uri", "ine", actor=actor,
+        description="Ingestion ended.", id_offset=1 + 2 * n_files, id_col="_n")
     events = (
         start_ev.unionByName(mem_ev).unionByName(fix_ev).unionByName(end_ev)
     ).persist()

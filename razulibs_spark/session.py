@@ -12,8 +12,10 @@ Scale posture (100 TB target, tested on local[32]):
 from __future__ import annotations
 
 import os
+from typing import Any, Mapping, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def default_parallelism() -> int:
@@ -40,3 +42,25 @@ def get_spark(app_name: str = "razulibs-spark", cpus: int | None = None) -> Spar
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .getOrCreate()
     )
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Sequence[Mapping[str, Any] | Sequence[Any]],
+    schema: StructType | str,
+) -> DataFrame:
+    """A DataFrame over a driver-side row list, built through Arrow.
+
+    ``createDataFrame(<python list>)`` plans the rows as a pickled RDD
+    that Python-worker tasks re-serialize on every evaluation, however
+    few the rows. The same rows as one ``pyarrow.Table`` are converted
+    once on the driver and read by the JVM directly. Rows are dicts
+    keyed by field name or sequences in field order; ``schema`` is a
+    StructType or a DDL string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    records = [r if isinstance(r, Mapping) else dict(zip(struct.names, r)) for r in rows]
+    table = pa.Table.from_pylist(records, schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, schema=struct)

@@ -34,6 +34,8 @@ from typing import Callable, Iterable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from razulibs_spark.session import local_frame
+
 DELETE_BATCH_SIZE = 1000  # edepot.py:216-221 API limit
 
 
@@ -147,7 +149,7 @@ def list_objects(spark: SparkSession, client_factory, bucket: str,
         if not page.get("IsTruncated"):
             break
         token = page.get("NextContinuationToken")
-    return spark.createDataFrame(rows, "key string, size bigint, etag string")
+    return local_frame(spark, rows, "key string, size bigint, etag string")
 
 
 # ---------------------------------------------------------------------------
