@@ -6,9 +6,13 @@ Reference shape: per-resource `save()` + per-file MD5 + a deferred
 lambda queue resolving event subjects late (preservation_events.py:
 44-59). Engine shape: the deferred queue disappears — every events
 frame is a lazy plan built against the FINAL metadata/manifest frames,
-so "subjects reflect final state" holds by construction; checksums
-come from one binaryFile scan of what was actually written (S6), not
-per-file hashing; the lock is the P6 predicate gating mutating calls.
+so "subjects reflect final state" holds by construction. The
+documents are written once, from the executors; the MD5 of each
+document's bytes is taken from the same cached documents, and ONE
+binaryFile scan of what landed on disk is the manifest (S6). Fixity
+compares the written MD5s with the read-back MD5s, so a document
+changed or lost between write and scan fails its check. The lock is
+the P6 predicate gating mutating calls.
 """
 
 from __future__ import annotations
@@ -19,14 +23,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from razulibs_spark.operators import events as ev
-from razulibs_spark.operators.ids import dense_ids
 from razulibs_spark.operators.manifest import (
     manifest_from_directory,
     manifest_to_json_map,
 )
 from razulibs_spark.session import local_frame
-from razulibs_spark.sources.jsonld import write_jsonld_per_entity
+from razulibs_spark.sources.jsonld import jsonld_docs, write_jsonld_per_entity
 from razulibs_spark.sources.rdf_io import write_ntriples
+
+SUFFIX = ".meta.json"
 
 
 class SipLockedError(RuntimeError):
@@ -39,61 +44,68 @@ def assemble_sip(
     sip_dir: str,
     actor: str = "https://data.razu.nl/id/actor/razu",
     event_base: str = "https://data.razu.nl/id/event/sip",
-    distributed: bool = True,
 ) -> dict:
     """Write metadata documents, build the manifest from what landed on
     disk, emit the PREMIS provenance in dependency order, and lock.
 
     Returns {'manifest': DataFrame, 'events': DataFrame,
-    'n_documents': int}. Raises SipLockedError when the directory's
-    event log already carries ingestion_end (O6 lock gate).
+    'n_documents': int}. ``manifest`` and ``events`` are persisted and
+    the caller owns them: unpersist both when done. Raises
+    SipLockedError when the directory's event log already carries
+    ingestion_end (O6 lock gate), and RuntimeError when the files read
+    back are not the files written.
 
-    ``distributed`` (default True) writes the per-entity metadata
-    files from the executors — the scalable mode, byte-identical to
-    the driver-collect mode (golden-tested) and correct whenever
-    ``sip_dir`` is on a filesystem every executor mounts, which a SIP
-    staging area on a real cluster is (and local[n] trivially is).
-    Pass False only for a driver-local scratch directory on a
-    multi-machine cluster."""
+    The documents are written from the executors, so ``sip_dir`` must
+    be on a filesystem every executor mounts, which a SIP staging area
+    on a real cluster is (and local[n] trivially is)."""
     eventlog_path = os.path.join(sip_dir, "eventlog.nt")
     if os.path.exists(eventlog_path):
         prior = _read_eventlog(spark, eventlog_path)
         if ev.is_locked(prior):
             raise SipLockedError(f"SIP at {sip_dir} is locked (ingestion_end)")
 
-    # K1: one .meta.json per entity (executor-side by default).
-    n_docs = write_jsonld_per_entity(
-        triples, sip_dir, distributed=distributed
-    )
+    # K1: one .meta.json per entity; the MD5 of exactly the bytes
+    # written (document + newline, UTF-8) comes from the same docs.
+    docs = jsonld_docs(triples).persist()
+    try:
+        n_docs = write_jsonld_per_entity(docs, sip_dir, SUFFIX)
+        written = sorted(tuple(r) for r in docs.select(
+            F.concat("entity", F.lit(SUFFIX)),
+            F.md5(F.concat("jsonld", F.lit("\n"))),
+        ).collect())
+    finally:
+        docs.unpersist()
 
     # S6/F7: manifest from ONE distributed scan of the written files.
-    manifest = manifest_from_directory(spark, sip_dir, base_segment=sip_dir.rstrip("/") + "/").filter(
-        F.col("filename").endswith(".meta.json")
-    ).persist()
+    manifest = manifest_from_directory(
+        spark, sip_dir, base_segment=sip_dir.rstrip("/") + "/"
+    ).filter(F.col("filename").endswith(SUFFIX)).persist()
 
-    # Shared-FS assumption made LOUD (ADVICE r8): with distributed
-    # writes on a cluster whose sip_dir is NOT actually shared, files
-    # land on executor-local disks and the manifest scan under-counts
-    # — an incomplete archival SIP with no error. The two counts are
-    # both already materialized; a mismatch is a data-integrity
+    # Shared-FS assumption made LOUD (ADVICE r8): on a cluster whose
+    # sip_dir is NOT actually shared, files land on executor-local
+    # disks and the scan misses them — an incomplete archival SIP with
+    # no error. A missing or unexpected file is a data-integrity
     # failure, never a warning.
-    n_files = manifest.count()
-    if n_files != n_docs:
+    read_back = {r["filename"] for r in manifest.select("filename").collect()}
+    names = {fn for fn, _ in written}
+    if read_back != names:
+        manifest.unpersist()
         raise RuntimeError(
-            f"assemble_sip: manifest scan found {n_files} metadata "
+            f"assemble_sip: manifest scan found {len(read_back)} metadata "
             f"files but {n_docs} were written — sip_dir {sip_dir!r} "
             "is not a filesystem every executor mounts (or writes "
-            "were lost); re-run with distributed=False or point "
-            "sip_dir at shared storage"
+            f"were lost); missing {sorted(names - read_back)}, "
+            f"unexpected {sorted(read_back - names)}"
         )
 
     # Events in dependency order (ids dense across the groups, S8/A3):
-    # ingestion_start → one mem per document → one fix per manifest
-    # entry → ingestion_end. Built AFTER the manifest frame exists, so
-    # subjects are final-state — the deferred-queue semantics for free.
-    # ONE id pass ranks the documents by filename (r = 1..n): mem is
-    # 1 + r, fix is 1 + n + r, and the two singletons are 1 and 2n + 2.
-    ranked = dense_ids(manifest.select("filename", "md5hash"), ["filename"], "_rank")
+    # ingestion_start → one mem per document → one fix per document →
+    # ingestion_end. The documents are ranked by filename (r = 1..n):
+    # mem is 1 + r, fix is 1 + n + r, and the two singletons are 1 and
+    # 2n + 2. Fixity checks the written MD5s against the read-back ones.
+    ranked = local_frame(
+        spark, [(fn, md5, r) for r, (fn, md5) in enumerate(written, 1)],
+        "filename string, md5hash string, _rank long")
     sip_row = local_frame(spark, [(sip_dir, 1)], "uri string, _n long")
     start_ev = ev.build_events(
         sip_row, "uri", "ins", actor=actor,
@@ -103,11 +115,10 @@ def assemble_sip(
         "mem", actor=actor, description="Metadata object created.",
         id_offset=1, id_col="_rank")
     fix_ev = ev.fixity_check_events(
-        ranked, manifest_from_directory(spark, sip_dir, base_segment=sip_dir.rstrip("/") + "/"),
-        actor=actor, id_offset=1 + n_files, id_col="_rank")
+        ranked, manifest, actor=actor, id_offset=1 + n_docs, id_col="_rank")
     end_ev = ev.build_events(
         sip_row, "uri", "ine", actor=actor,
-        description="Ingestion ended.", id_offset=1 + 2 * n_files, id_col="_n")
+        description="Ingestion ended.", id_offset=1 + 2 * n_docs, id_col="_n")
     events = (
         start_ev.unionByName(mem_ev).unionByName(fix_ev).unionByName(end_ev)
     ).persist()

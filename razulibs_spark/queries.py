@@ -4927,7 +4927,7 @@ def s6_manifest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole write→scan→hash fixity cycle is hash-verified end-to-end —
     this was the last rows-only entry that admitted an oracle.
 
-    Like write_jsonld_per_entity(distributed=True), the executor-side
+    Like write_jsonld_per_entity, the executor-side
     file writes assume a SHARED filesystem between driver and
     executors (trivially true on local[n]; on a cluster point `base`
     at NFS/Fuse-mounted storage or swap the writer for an object-store

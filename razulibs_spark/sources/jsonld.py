@@ -252,49 +252,30 @@ def read_rdf(spark: SparkSession, path: str, fmt: str | None = None) -> DataFram
     raise ValueError(f"unsupported RDF format {fmt!r}")
 
 
-def write_jsonld_per_entity(triples: DataFrame, directory: str,
-                            suffix: str = ".meta.json",
-                            owner: Column | None = None,
-                            distributed: bool = False) -> int:
+def write_jsonld_per_entity(docs: DataFrame, directory: str,
+                            suffix: str = ".meta.json") -> int:
     """The reference's exact one-file-per-entity layout
-    (meta_resource.py:45-54: `{uid}.meta.json`). Returns the number
-    of files written.
+    (meta_resource.py:45-54: `{uid}.meta.json`), written from the
+    executors. ``docs`` is a :func:`jsonld_docs` frame of
+    (entity, jsonld) rows; each becomes ``<entity><suffix>`` holding
+    the document and a newline, UTF-8 encoded (documents keep
+    non-ASCII text). Returns the number of files written, counted by
+    the same action that writes them.
 
-    Default path is driver-side (collect + sequential writes) —
-    demo/SIP scale only; the scalable line-oriented sink is
-    write_jsonld (JSON-Lines). ``distributed=True`` writes from the
-    executors via foreachPartition instead (VERDICT r5 item 8) —
-    correct when ``directory`` is on a SHARED filesystem every
-    executor mounts (NFS/FUSE-mounted object store); same byte
-    layout, no driver I/O loop, parallelism = the doc builder's
-    partitioning. The docs frame is persisted so the count action
-    does not rebuild the documents after the write action."""
-    import os
-
+    ``directory`` must be on a filesystem every executor mounts
+    (NFS/FUSE-mounted object store; local[n] trivially). The
+    line-oriented sink for corpus scale is write_jsonld (JSON-Lines)."""
     os.makedirs(directory, exist_ok=True)
-    docs = jsonld_docs(triples, owner)
-    if not distributed:
-        rows = docs.collect()
-        for row in rows:
-            with open(
-                os.path.join(directory, row["entity"] + suffix), "w"
-            ) as fh:
-                fh.write(row["jsonld"] + "\n")
-        return len(rows)
 
-    def write_partition(rows) -> None:
-        for row in rows:
-            with open(
-                os.path.join(directory, row["entity"] + suffix), "w"
-            ) as fh:
-                fh.write(row["jsonld"] + "\n")
+    def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for entity, doc in zip(pdf["entity"], pdf["jsonld"]):
+                path = os.path.join(directory, entity + suffix)
+                with open(path, "w", encoding="utf-8") as fh:
+                    fh.write(doc + "\n")
+            yield pd.DataFrame({"n": [len(pdf)]})
 
-    docs = docs.persist()
-    try:
-        docs.foreachPartition(write_partition)
-        return docs.count()
-    finally:
-        docs.unpersist()
+    return sum(r["n"] for r in docs.mapInPandas(write, "n long").collect())
 
 
 def scan_sip_dir(spark: SparkSession, directory: str,

@@ -19,7 +19,7 @@ are sharded into ~1 GB warc files by construction, so file-level tasks
 ARE the distribution unit — same argument as the document-framed RDF
 scan); a single file parses executor-side in one Arrow batch. The sink
 writes one warc file per partition from the executors (shared-FS
-contract, as write_jsonld_per_entity(distributed=True)).
+contract, as write_jsonld_per_entity).
 
 Structural corruption (bad magic, header without colon, short payload,
 trailing garbage) raises ValueError naming the defect — an ingest
@@ -522,7 +522,7 @@ def write_warc_responses(
     response record (record id = md5 of the target URI —
     deterministic, collision-irrelevant at fixture scale). Executor
     writes on a shared filesystem, the write_jsonld_per_entity
-    (distributed=True) contract. Tasks roll over to a new shard every
+    contract. Tasks roll over to a new shard every
     ``max_records_per_file`` records — see write_warc_records for why
     shard size must not inherit the upstream scan partitioning."""
     import hashlib

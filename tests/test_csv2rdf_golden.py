@@ -166,22 +166,10 @@ def test_per_entity_files_and_sip_scan(spark, tmp_path):
     triples = csv2rdf_triples(metadata, droid, vocab).cache()
 
     sip = str(tmp_path / "sip")
-    n = write_jsonld_per_entity(triples, sip)
+    n = write_jsonld_per_entity(jsonld_docs(triples), sip)
     assert n == 11
     back = scan_sip_dir(spark, sip)
     assert back.select("entity_id").distinct().count() == 11
-    # Distributed sink (local[n] shares the FS, so executor writes
-    # land in the same directory): byte-identical layout and content.
-    import os as _os
-
-    sip2 = str(tmp_path / "sip_dist")
-    assert write_jsonld_per_entity(triples, sip2, distributed=True) == 11
-    assert sorted(_os.listdir(sip2)) == sorted(_os.listdir(sip))
-    for f in _os.listdir(sip):
-        with open(_os.path.join(sip, f)) as a, open(
-            _os.path.join(sip2, f)
-        ) as b:
-            assert a.read() == b.read(), f
     # S5 id extraction matches the K1 filenames:
     assert back.filter(F.col("entity_id") == "NL-WbDRAZU-G0321-661-1").count() > 0
     assert _triple_set(back.drop("entity_id")) == _triple_set(triples)
@@ -320,26 +308,6 @@ def test_sip_assembly_and_lock(spark, tmp_path):
     # O6: the terminal ingestion_end locks the SIP.
     with pytest.raises(SipLockedError):
         assemble_sip(spark, triples, sip)
-    # The default assembly above wrote metadata executor-side
-    # (distributed=True, plans/sip.py); the driver-collect mode must
-    # produce the byte-identical SIP — golden parity between the
-    # scalable default and the reference-shaped fallback.
-    import os as _os
-
-    sip_drv = str(tmp_path / "sip_driver")
-    out2 = assemble_sip(spark, triples, sip_drv, distributed=False)
-    assert out2["n_documents"] == 11
-    meta = sorted(
-        f for f in _os.listdir(sip) if f.endswith(".meta.json")
-    )
-    assert meta == sorted(
-        f for f in _os.listdir(sip_drv) if f.endswith(".meta.json")
-    )
-    for f in meta:
-        with open(_os.path.join(sip, f), "rb") as a, open(
-            _os.path.join(sip_drv, f), "rb"
-        ) as b:
-            assert a.read() == b.read(), f
 
 
 def test_collect_rdf_lifecycle(spark, tmp_path):
@@ -407,3 +375,117 @@ def test_sip_assembly_count_mismatch_is_loud(spark, tmp_path):
         fh.write("{}")
     with pytest.raises(RuntimeError, match="12 metadata files but 11"):
         assemble_sip(spark, triples, sip)
+
+
+def _release(out):
+    out["manifest"].unpersist()
+    out["events"].unpersist()
+
+
+def test_sip_fixity_fails_on_changed_document(spark, tmp_path, monkeypatch):
+    """Fixity compares the bytes written with the bytes read back: a
+    document changed between the write and the manifest scan gets
+    exactly one failed `fix` event, for that file."""
+    import hashlib
+    import os
+
+    import razulibs_spark.plans.sip as sip_mod
+
+    target = "NL-WbDRAZU-G0321-661-2.meta.json"
+    orig = sip_mod.write_jsonld_per_entity
+
+    def corrupting(docs, directory, *args, **kwargs):
+        n = orig(docs, directory, *args, **kwargs)
+        with open(os.path.join(directory, target), "ab") as fh:
+            fh.write(b" ")
+        return n
+
+    monkeypatch.setattr(sip_mod, "write_jsonld_per_entity", corrupting)
+    metadata, droid, vocab = _fixture(spark)
+    sip = str(tmp_path / "sip")
+    out = sip_mod.assemble_sip(spark, csv2rdf_triples(metadata, droid, vocab), sip)
+    failed = out["events"].filter(F.col("outcome") != "suc").collect()
+    with open(os.path.join(sip, target), "rb") as fh:
+        on_disk = hashlib.md5(fh.read()).hexdigest()
+    _release(out)
+    assert [(r["event_type"], r["outcome"], r["subjects"]) for r in failed] == [
+        ("fix", "fail", [target])
+    ]
+    assert failed[0]["outcome_note"] == on_disk
+
+
+def test_sip_assembly_lost_write_is_loud(spark, tmp_path, monkeypatch):
+    """A written document that is gone at the scan, with a stray file
+    in its place, keeps the file count equal; the filename sets still
+    differ, so assembly must fail and name both files."""
+    import os
+    import re
+
+    import pytest
+
+    import razulibs_spark.plans.sip as sip_mod
+
+    lost = "NL-WbDRAZU-G0321-661-3.meta.json"
+    orig = sip_mod.write_jsonld_per_entity
+
+    def losing(docs, directory, *args, **kwargs):
+        n = orig(docs, directory, *args, **kwargs)
+        os.remove(os.path.join(directory, lost))
+        with open(os.path.join(directory, "stray-orphan.meta.json"), "w") as fh:
+            fh.write("{}")
+        return n
+
+    monkeypatch.setattr(sip_mod, "write_jsonld_per_entity", losing)
+    metadata, droid, vocab = _fixture(spark)
+    with pytest.raises(RuntimeError, match=re.escape(lost) + ".*stray-orphan"):
+        sip_mod.assemble_sip(
+            spark, csv2rdf_triples(metadata, droid, vocab), str(tmp_path / "sip"))
+
+
+def test_sip_non_ascii_document_is_utf8(spark, tmp_path):
+    """Documents keep non-ASCII text (ensure_ascii=False); the file
+    holds its UTF-8 bytes whatever the locale, and fixity agrees."""
+    import json
+    import os
+
+    from razulibs_spark.plans.sip import assemble_sip
+
+    text = "Rhenen – Grebbeberg, ë"
+    triples = spark.createDataFrame(
+        [(URI.format(9), "ldto:naam", text, "literal", None, None)],
+        "s string, p string, o string, o_type string, "
+        "o_datatype string, o_lang string",
+    )
+    sip = str(tmp_path / "sip")
+    out = assemble_sip(spark, triples, sip)
+    outcomes = [r["outcome"] for r in
+                out["events"].filter(F.col("event_type") == "fix").collect()]
+    _release(out)
+    with open(os.path.join(sip, "NL-WbDRAZU-G0321-661-9.meta.json"), "rb") as fh:
+        raw = fh.read()
+    assert text.encode("utf-8") in raw
+    assert json.loads(raw.decode("utf-8"))["@graph"][0]["ldto:naam"] == [{"@value": text}]
+    assert outcomes == ["suc"]
+
+
+def test_sip_assembly_scans_once_and_caches_nothing_else(spark, tmp_path, monkeypatch):
+    """One manifest scan per SIP; once the caller releases the returned
+    manifest and events, no other cached frame is left behind."""
+    import razulibs_spark.plans.sip as sip_mod
+
+    calls = []
+    orig = sip_mod.manifest_from_directory
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(sip_mod, "manifest_from_directory", counting)
+    metadata, droid, vocab = _fixture(spark)
+    triples = csv2rdf_triples(metadata, droid, vocab)
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size
+    before = cached()
+    out = sip_mod.assemble_sip(spark, triples, str(tmp_path / "sip"))
+    _release(out)
+    assert len(calls) == 1
+    assert cached() == before
