@@ -140,7 +140,6 @@ def read_mbox_sharded(
     in LF-normalized bytes."""
     import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
 
     from razulibs_spark.sources.sharded_text import (
         record_line_expr,
@@ -206,7 +205,7 @@ def read_mbox_sharded(
     # on the driver (O(splits), the read_turtle_sharded posture),
     # complete inner segments fold locally, and only boundary rows
     # shuffle into parallel per-segment groups. Both paths produce
-    # identical mappings (test_mbox_cl_distributed_path_equivalence).
+    # identical mappings (test_cl_fold_paths_equivalent).
     sc = spark.sparkContext
     par = sc.defaultParallelism
     _fold_schema = (
@@ -241,7 +240,6 @@ def read_mbox_sharded(
         )
         return _assemble_messages(frags, mapping, dialect)
 
-    sc = spark.sparkContext
     # both persists are metadata-only (4 longs per fragment): `meta`
     # so the range sampler's pass IS upstream run #1, `meta_r` so the
     # range exchange runs once and the summary collects plus both
@@ -356,27 +354,6 @@ def read_mbox_sharded(
         "cl_framed boolean, nbytes long, cl long, tail long, seg long",
     )
 
-    def _stitch_fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        # fold one segment; its first row (the opening sync) is a
-        # guaranteed start, so remaining=0 entry state is exact
-        pdf = pdf.sort_values("rec_id")
-        out = []
-        remaining = 0
-        msg = 0
-        cl_framed = False
-        for row in pdf.itertuples(index=False):
-            if remaining > 1:
-                out.append((row.rec_id, msg, False, cl_framed))
-                remaining -= 1 + row.nbytes
-            else:
-                msg = int(row.rec_id)
-                cl_framed = row.cl >= 0
-                out.append((row.rec_id, msg, True, cl_framed))
-                remaining = (row.cl - row.tail) if cl_framed else 0
-        return pd.DataFrame(
-            out, columns=["rec_id", "msg_id", "is_start", "cl_framed"]
-        )
-
     local_map = classified.filter(F.col("kind") == 0).select(
         "rec_id", "msg_id", "is_start", "cl_framed"
     )
@@ -384,8 +361,7 @@ def read_mbox_sharded(
         "seg", "rec_id", "nbytes", "cl", "tail"
     )
     mapping = boundary.groupBy("seg").applyInPandas(
-        _stitch_fold,
-        "rec_id long, msg_id long, is_start boolean, cl_framed boolean",
+        _stitch_fold, _fold_schema
     ).unionByName(local_map)
     return _assemble_messages(frags, mapping, dialect)
 

@@ -992,8 +992,9 @@ def random_projection(
     # SQL-string literal rendering assumes INT parameters: a float
     # would render as a decimal literal that Spark parses as DECIMAL
     # (unlike F.lit's DoubleType), silently changing arithmetic typing
-    # (ADVICE r13). Pin the previous F.lit(int) semantics loudly.
-    if not isinstance(scale, int):
+    # (ADVICE r13). Pin the previous F.lit(int) semantics loudly; a
+    # bool is an int to isinstance but renders as SQL `True`.
+    if not isinstance(scale, int) or isinstance(scale, bool):
         raise TypeError(f"random_projection: scale must be int, got {scale!r}")
     # One F.expr parse for the whole out_dim·in_dim literal matrix:
     # the Column-builder form issued ~out_dim·(in_dim+3) py4j round
@@ -1111,8 +1112,9 @@ def kmeans_lloyd(
     if k < 1 or iters < 1:
         raise ValueError("k and iters must be >= 1")
     # shift is rendered into SQL text as an int literal (ADVICE r13 —
-    # a float would parse as DECIMAL and change arithmetic typing).
-    if not isinstance(shift, int):
+    # a float would parse as DECIMAL and change arithmetic typing; a
+    # bool would render as `True`).
+    if not isinstance(shift, int) or isinstance(shift, bool):
         raise TypeError(f"kmeans_lloyd: shift must be int, got {shift!r}")
     q = embeddings.select(
         "vec_id",

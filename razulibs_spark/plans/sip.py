@@ -4,20 +4,22 @@ one orchestration over the operator library.
 
 Reference shape: per-resource `save()` + per-file MD5 + a deferred
 lambda queue resolving event subjects late (preservation_events.py:
-44-59). Engine shape: the deferred queue disappears — every events
-frame is a lazy plan built against the FINAL metadata/manifest frames,
-so "subjects reflect final state" holds by construction. The
-documents are written once, from the executors; the MD5 of each
-document's bytes is taken from the same cached documents, and ONE
-binaryFile scan of what landed on disk is the manifest (S6). Fixity
-compares the written MD5s with the read-back MD5s, so a document
-changed or lost between write and scan fails its check. The lock is
-the P6 predicate gating mutating calls.
+44-59). Engine shape: the documents are written once, from the
+executors; the MD5 of each document's bytes is taken from the same
+cached documents, and ONE binaryFile scan of what landed on disk is
+the manifest (S6). The deferred queue disappears: one SIP is one
+accession, so its event log is built once on the driver from the
+final filenames and both MD5s, after the scan — "subjects reflect
+final state" holds by construction. Fixity compares the written MD5s
+with the read-back MD5s, so a document changed or lost between write
+and scan fails its check. The lock is the P6 predicate gating
+mutating calls.
 """
 
 from __future__ import annotations
 
 import os
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,8 +51,9 @@ def assemble_sip(
     disk, emit the PREMIS provenance in dependency order, and lock.
 
     Returns {'manifest': DataFrame, 'events': DataFrame,
-    'n_documents': int}. ``manifest`` and ``events`` are persisted and
-    the caller owns them: unpersist both when done. Raises
+    'n_documents': int}. ``manifest`` is persisted and the caller owns
+    it: unpersist it when done. ``events`` is built from driver-side
+    rows (2n + 2 events for n documents) and holds no cache. Raises
     SipLockedError when the directory's event log already carries
     ingestion_end (O6 lock gate), and RuntimeError when the files read
     back are not the files written.
@@ -69,7 +72,7 @@ def assemble_sip(
     docs = jsonld_docs(triples).persist()
     try:
         n_docs = write_jsonld_per_entity(docs, sip_dir, SUFFIX)
-        written = sorted(tuple(r) for r in docs.select(
+        written = dict(docs.select(
             F.concat("entity", F.lit(SUFFIX)),
             F.md5(F.concat("jsonld", F.lit("\n"))),
         ).collect())
@@ -86,16 +89,15 @@ def assemble_sip(
     # disks and the scan misses them — an incomplete archival SIP with
     # no error. A missing or unexpected file is a data-integrity
     # failure, never a warning.
-    read_back = {r["filename"] for r in manifest.select("filename").collect()}
-    names = {fn for fn, _ in written}
-    if read_back != names:
+    read_back = dict(manifest.select("filename", "md5hash").collect())
+    if read_back.keys() != written.keys():
         manifest.unpersist()
         raise RuntimeError(
             f"assemble_sip: manifest scan found {len(read_back)} metadata "
             f"files but {n_docs} were written — sip_dir {sip_dir!r} "
             "is not a filesystem every executor mounts (or writes "
-            f"were lost); missing {sorted(names - read_back)}, "
-            f"unexpected {sorted(read_back - names)}"
+            f"were lost); missing {sorted(written.keys() - read_back.keys())}, "
+            f"unexpected {sorted(read_back.keys() - written.keys())}"
         )
 
     # Events in dependency order (ids dense across the groups, S8/A3):
@@ -103,25 +105,24 @@ def assemble_sip(
     # ingestion_end. The documents are ranked by filename (r = 1..n):
     # mem is 1 + r, fix is 1 + n + r, and the two singletons are 1 and
     # 2n + 2. Fixity checks the written MD5s against the read-back ones.
-    ranked = local_frame(
-        spark, [(fn, md5, r) for r, (fn, md5) in enumerate(written, 1)],
-        "filename string, md5hash string, _rank long")
-    sip_row = local_frame(spark, [(sip_dir, 1)], "uri string, _n long")
-    start_ev = ev.build_events(
-        sip_row, "uri", "ins", actor=actor,
-        description="Ingestion started.", id_col="_n")
-    mem_ev = ev.build_events(
-        ranked.withColumnRenamed("filename", "uri"), "uri",
-        "mem", actor=actor, description="Metadata object created.",
-        id_offset=1, id_col="_rank")
-    fix_ev = ev.fixity_check_events(
-        ranked, manifest, actor=actor, id_offset=1 + n_docs, id_col="_rank")
-    end_ev = ev.build_events(
-        sip_row, "uri", "ine", actor=actor,
-        description="Ingestion ended.", id_offset=1 + 2 * n_docs, id_col="_n")
-    events = (
-        start_ev.unionByName(mem_ev).unionByName(fix_ev).unionByName(end_ev)
-    ).persist()
+    ended_at = datetime.now(timezone.utc)
+
+    def event(event_id, event_type, subject, description, outcome="suc", note=None):
+        return {"event_id": event_id, "event_type": event_type,
+                "subjects": [subject], "implemented_by": actor,
+                "outcome": outcome, "outcome_note": note,
+                "ended_at": ended_at, "description": description}
+
+    names = sorted(written)
+    n = len(names)
+    rows = [event(1, "ins", sip_dir, "Ingestion started.")]
+    rows += [event(1 + r, "mem", fn, "Metadata object created.")
+             for r, fn in enumerate(names, 1)]
+    rows += [event(1 + n + r, "fix", fn, "Fixity check",
+                   "suc" if read_back[fn] == written[fn] else "fail", read_back[fn])
+             for r, fn in enumerate(names, 1)]
+    rows.append(event(2 * n + 2, "ine", sip_dir, "Ingestion ended."))
+    events = local_frame(spark, rows, ev.EVENT_SCHEMA)
 
     # K3 + K4 sinks: byte-compatible manifest map, eventlog as RDF.
     with open(os.path.join(sip_dir, "manifest.json"), "w", encoding="utf-8") as fh:

@@ -67,23 +67,35 @@ def make_boto3_client_factory(
 
 class LocalFSClient:
     """Deterministic object-store fake over a local directory tree
-    (bucket/key → file). Implements the boto3 surface the sinks use;
-    also records per-call batch sizes so tests can assert the ≤1000
-    chunking actually happened."""
+    (bucket/key → ``<root>/<bucket>/<key>``). Implements the boto3
+    surface the sinks use; also records per-call batch sizes so tests
+    can assert the ≤1000 chunking actually happened.
+
+    Object metadata and ACLs live in sidecar trees under the root but
+    outside every bucket (``<root>/_meta/<bucket>/<key>``,
+    ``<root>/_acl/<bucket>/<key>``; no S3 bucket name starts with
+    ``_``), so any key — ``*.meta.json`` included — lists exactly as
+    uploaded, and no sidecar shows up as an object."""
 
     def __init__(self, root: str):
         self.root = root
 
-    def _path(self, bucket: str, key: str) -> str:
-        return os.path.join(self.root, bucket, key)
+    def _path(self, bucket: str, key: str, tree: str = "") -> str:
+        return os.path.join(self.root, tree, bucket, key)
+
+    def _write_sidecar(self, tree: str, bucket: str, key: str, text: str) -> None:
+        dst = self._path(bucket, key, tree)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        with open(dst, "w") as fh:
+            fh.write(text)
 
     def upload_file(self, Filename, Bucket, Key, ExtraArgs=None):
         dst = self._path(Bucket, Key)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         shutil.copyfile(Filename, dst)
         if ExtraArgs:
-            with open(dst + ".meta.json", "w") as fh:
-                json.dump(ExtraArgs, fh, sort_keys=True)
+            self._write_sidecar("_meta", Bucket, Key,
+                                json.dumps(ExtraArgs, sort_keys=True))
 
     def delete_objects(self, Bucket, Delete):
         keys = [o["Key"] for o in Delete["Objects"]]
@@ -95,6 +107,10 @@ class LocalFSClient:
             if os.path.exists(p):
                 os.remove(p)
                 deleted.append({"Key": k})
+            for tree in ("_meta", "_acl"):
+                sidecar = self._path(Bucket, k, tree)
+                if os.path.exists(sidecar):
+                    os.remove(sidecar)
         return {"Deleted": deleted}
 
     def list_objects_v2(self, Bucket, Prefix="", ContinuationToken=None):
@@ -102,8 +118,6 @@ class LocalFSClient:
         out = []
         for dirpath, _, files in os.walk(base):
             for f in files:
-                if f.endswith(".meta.json"):
-                    continue
                 full = os.path.join(dirpath, f)
                 key = os.path.relpath(full, base)
                 if key.startswith(Prefix):
@@ -115,12 +129,11 @@ class LocalFSClient:
     def copy_object(self, Bucket, Key, CopySource, Metadata=None,
                     MetadataDirective=None):
         if MetadataDirective == "REPLACE":
-            with open(self._path(Bucket, Key) + ".meta.json", "w") as fh:
-                json.dump(Metadata or {}, fh, sort_keys=True)
+            self._write_sidecar("_meta", Bucket, Key,
+                                json.dumps(Metadata or {}, sort_keys=True))
 
     def put_object_acl(self, Bucket, Key, ACL):
-        with open(self._path(Bucket, Key) + ".acl", "w") as fh:
-            fh.write(ACL)
+        self._write_sidecar("_acl", Bucket, Key, ACL)
 
 
 def make_local_client_factory(root: str) -> Callable[[], LocalFSClient]:

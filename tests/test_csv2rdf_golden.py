@@ -483,9 +483,75 @@ def test_sip_assembly_scans_once_and_caches_nothing_else(spark, tmp_path, monkey
     monkeypatch.setattr(sip_mod, "manifest_from_directory", counting)
     metadata, droid, vocab = _fixture(spark)
     triples = csv2rdf_triples(metadata, droid, vocab)
-    cached = spark.sparkContext._jsc.getPersistentRDDs().size
+    jsc = spark.sparkContext._jsc
+
+    def cached():  # getPersistentRDDs() is a snapshot: re-read it each time
+        return jsc.getPersistentRDDs().size()
+
     before = cached()
     out = sip_mod.assemble_sip(spark, triples, str(tmp_path / "sip"))
+    grew = cached() - before
+    manifest_cached, events_cached = out["manifest"].is_cached, out["events"].is_cached
     _release(out)
     assert len(calls) == 1
+    # the manifest is the only frame assembly leaves persisted
+    assert (grew, manifest_cached, events_cached) == (1, True, False)
     assert cached() == before
+
+
+# Golden SIP event numbering: (mem id, fix id) per document, ranked by
+# filename; ins is 1 and ine is 2n + 2 = 24.
+SIP_EVENT_IDS = {
+    "NL-WbDRAZU-G0321-661-1-b.meta.json": (2, 13),
+    "NL-WbDRAZU-G0321-661-1.meta.json": (3, 14),
+    "NL-WbDRAZU-G0321-661-2-b.meta.json": (4, 15),
+    "NL-WbDRAZU-G0321-661-2.meta.json": (5, 16),
+    "NL-WbDRAZU-G0321-661-3-b.meta.json": (6, 17),
+    "NL-WbDRAZU-G0321-661-3.meta.json": (7, 18),
+    "NL-WbDRAZU-G0321-661-4-b.meta.json": (8, 19),
+    "NL-WbDRAZU-G0321-661-4.meta.json": (9, 20),
+    "NL-WbDRAZU-G0321-661-archief.meta.json": (10, 21),
+    "NL-WbDRAZU-G0321-661-serie-1984.meta.json": (11, 22),
+    "NL-WbDRAZU-G0321-661-serie-1985.meta.json": (12, 23),
+}
+
+
+def test_sip_event_log_characterization(spark, tmp_path):
+    """The SIP event log on the golden fixture, as returned and as
+    written to eventlog.nt: every event's id, type, subject,
+    description, outcome, note and actor. Only ``ended_at`` is left
+    free."""
+    import hashlib
+    import os
+
+    from razulibs_spark.plans.sip import assemble_sip
+    from razulibs_spark.sources.rdf_io import read_ntriples
+
+    metadata, droid, vocab = _fixture(spark)
+    sip = str(tmp_path / "sip")
+    out = assemble_sip(spark, csv2rdf_triples(metadata, droid, vocab), sip)
+    got = {r["event_id"]: (r["event_type"], list(r["subjects"]), r["description"],
+                           r["outcome"], r["outcome_note"], r["implemented_by"])
+           for r in out["events"].collect()}
+    _release(out)
+
+    actor = "https://data.razu.nl/id/actor/razu"
+    want = {1: ("ins", [sip], "Ingestion started.", "suc", None, actor),
+            24: ("ine", [sip], "Ingestion ended.", "suc", None, actor)}
+    for fn, (mem_id, fix_id) in SIP_EVENT_IDS.items():
+        with open(os.path.join(sip, fn), "rb") as fh:
+            md5 = hashlib.md5(fh.read()).hexdigest()
+        want[mem_id] = ("mem", [fn], "Metadata object created.", "suc", None, actor)
+        want[fix_id] = ("fix", [fn], "Fixity check", "suc", md5, actor)
+    assert got == want
+
+    # eventlog.nt carries the same events (PREMIS codes as loc.gov URIs)
+    log = {}
+    for t in read_ntriples(spark, os.path.join(sip, "eventlog.nt")).collect():
+        log.setdefault(int(t["s"].rsplit("-e", 1)[1]), {})[t["p"]] = t["o"]
+    assert {i: (e["premis:eventType"].rsplit("/", 1)[1], [e["premis:object"]],
+                e["premis:outcomeNote"], e["premis:outcome"].rsplit("/", 1)[1],
+                e.get("premis:note"), e["prov:wasAssociatedWith"])
+            for i, e in log.items()} == want
+    assert all(e["rdf:type"] == "premis:Event" and "prov:endedAtTime" in e
+               for e in log.values())

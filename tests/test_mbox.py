@@ -224,5 +224,5 @@ def test_cl_fold_paths_equivalent(spark, tmp_path):
     # msg_id is the first fragment's rec_id, which depends on the
     # candidate-separator numbering — identical across split counts —
     # so full tuples must match exactly
-    assert [r[1] for r in small] == [r[1] for r in big]
+    assert small == big
     assert len(small) == 40

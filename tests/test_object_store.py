@@ -72,9 +72,34 @@ def test_acl_and_metadata_rewrite(spark, store):
     one = manifest.filter(F.col("key").contains("doc_0"))
     obs.update_acl(one, "edepot", factory, acl="public-read")
     obs.rewrite_metadata(one, "edepot", factory, meta_cols=["source"])
-    base = os.path.join(root, "edepot", "661/000/doc_0.txt")
-    assert open(base + ".acl").read() == "public-read"
-    assert '"razu"' in open(base + ".meta.json").read()
+    key = "661/000/doc_0.txt"
+    assert open(os.path.join(root, "_acl", "edepot", key)).read() == "public-read"
+    assert '"razu"' in open(os.path.join(root, "_meta", "edepot", key)).read()
+
+
+def test_sidecars_stay_out_of_the_key_namespace(spark, tmp_path):
+    """Object metadata and ACLs are not objects: a real ``*.meta.json``
+    key lists exactly once and is not shipped again by only-if-new, an
+    ACL update adds no ``.acl`` key, and a delete removes the sidecars."""
+    src = tmp_path / "a.meta.json"
+    src.write_text("{}")
+    manifest = spark.createDataFrame(
+        [("a.meta.json", str(src))], "key string, local_path string")
+    root = str(tmp_path / "bucket-root")
+    factory = obs.make_local_client_factory(root)
+
+    assert obs.upload_from_manifest(manifest, "edepot", factory) == 1
+    listing = obs.list_objects(spark, factory, "edepot")
+    assert [r["key"] for r in listing.collect()] == ["a.meta.json"]
+    assert obs.upload_from_manifest(manifest, "edepot", factory, listing=listing) == 0
+    obs.update_acl(manifest, "edepot", factory)
+    assert [r["key"] for r in obs.list_objects(spark, factory, "edepot").collect()] == [
+        "a.meta.json"]
+
+    obs.delete_keys(manifest, "edepot", factory)
+    assert obs.list_objects(spark, factory, "edepot").count() == 0
+    for tree in ("_meta", "_acl"):
+        assert not os.path.exists(os.path.join(root, tree, "edepot", "a.meta.json"))
 
 
 # ---------------------------------------------------------------------------

@@ -944,6 +944,21 @@ def test_kmeans_lloyd_tie_breaks_to_smallest_centroid_id(spark):
     assert all(r.dist_scaled == 0 for r in out)
 
 
+def test_sql_rendered_int_params_reject_bool(spark):
+    """``scale`` and ``shift`` are rendered into SQL text as int
+    literals; ``True`` passes ``isinstance(x, int)`` but would render as
+    SQL ``True``, so both operators must reject it."""
+    import pytest
+
+    from razulibs_spark.operators.similarity import kmeans_lloyd, random_projection
+
+    emb = spark.createDataFrame([(0, [0.5, 0.5])], "vec_id long, embedding array<float>")
+    with pytest.raises(TypeError, match="scale must be int"):
+        random_projection(emb, scale=True)
+    with pytest.raises(TypeError, match="shift must be int"):
+        kmeans_lloyd(emb, shift=True)
+
+
 def test_kmeans_lloyd_assignment_plan_has_no_shuffle(spark, sf_dir):
     """The assign step inlines centroids as literals: the final
     assignment job must be a single narrow map over the scan — no
