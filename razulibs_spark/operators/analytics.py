@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from razulibs_spark.operators.pinning import pin_iteration
+
 
 def _scaled_long(col: Column, scale: int) -> Column:
     m = 10**scale
@@ -129,12 +131,15 @@ def rfm_segments(events: DataFrame, buckets: int = 4) -> DataFrame:
         "recency_days",
         F.datediff(F.col("corpus_max_ts"), F.col("last_ts")),
     )
-    scored = scored.select(
-        "user_id",
-        "recency_days",
-        "frequency",
-        F.round("monetary", 4).alias("monetary"),
-    ).persist()
+    scored = pin_iteration(
+        scored.select(
+            "user_id",
+            "recency_days",
+            "frequency",
+            F.round("monetary", 4).alias("monetary"),
+        ),
+        eager=False,
+    )
     # The user dimension is orders of magnitude smaller than the event
     # log: size the range-sort to IT (loop-width pattern — a 1k-user
     # table must not schedule defaultParallelism-task stage chains; a
@@ -185,18 +190,12 @@ def rfm_segments(events: DataFrame, buckets: int = 4) -> DataFrame:
         unp, ["_metric", "_vl", "_vd", "user_id"], "_gid",
         start=0, n_parts=width,
     )
-    # Exact SQL NTILE bucket formula (first n % b buckets get
-    # n // b + 1 rows) — same expression ntile_scalable applies, with
-    # the already-collected n_users as the 1-row-broadcast equivalent.
+    # Same bucket expression ntile_scalable applies, with the
+    # already-collected n_users as the 1-row-broadcast equivalent.
     r = F.col("_gid") - F.col("_metric").cast("long") * n_users + 1
-    n = F.lit(n_users)
-    b = F.lit(buckets)
-    q = F.floor(n / b)
-    m = n % b
-    bucket = F.when(
-        r <= m * (q + 1), F.lit(1) + F.floor((r - 1) / (q + 1))
-    ).otherwise(F.lit(1) + m + F.floor((r - 1 - m * (q + 1)) / q))
-    scores = ranked.withColumn("_score", bucket.cast("int"))
+    scores = ranked.withColumn(
+        "_score", _ntile_bucket(r, F.lit(n_users), buckets)
+    )
     pick = lambda i: F.max(
         F.when(F.col("_metric") == i, F.col("_score"))
     )
@@ -294,6 +293,20 @@ def grouped_topk(
     )
 
 
+def _ntile_bucket(rank: Column, n: Column, buckets: int) -> Column:
+    """Exact SQL NTILE bucket (int) of 1-based ``rank`` among ``n``
+    rows: the first ``n % buckets`` buckets get ``n // buckets + 1``
+    rows."""
+    b = F.lit(buckets)
+    q = F.floor(n / b)
+    m = n % b
+    return F.when(
+        rank <= m * (q + 1), F.lit(1) + F.floor((rank - 1) / (q + 1))
+    ).otherwise(
+        F.lit(1) + m + F.floor((rank - 1 - m * (q + 1)) / q)
+    ).cast("int")
+
+
 def ntile_scalable(
     df: DataFrame,
     order_cols: list[Column] | list[str],
@@ -325,17 +338,11 @@ def ntile_scalable(
             names.append(nm)
     ranked = dense_ids(tmp, names, "_nt_rank", start=1, n_parts=n_parts)
     total = ranked.agg(F.count("*").alias("_nt_n"))
-    r = F.col("_nt_rank")
-    n = F.col("_nt_n")
-    b = F.lit(buckets)
-    q = F.floor(n / b)
-    m = n % b
-    bucket = F.when(
-        r <= m * (q + 1), F.lit(1) + F.floor((r - 1) / (q + 1))
-    ).otherwise(F.lit(1) + m + F.floor((r - 1 - m * (q + 1)) / q))
     out = (
         ranked.join(F.broadcast(total))
-        .withColumn(alias, bucket.cast("int"))
+        .withColumn(
+            alias, _ntile_bucket(F.col("_nt_rank"), F.col("_nt_n"), buckets)
+        )
         .drop("_nt_rank", "_nt_n")
     )
     return out.drop(*[c for c in out.columns if c.startswith("_nt_ord_")])

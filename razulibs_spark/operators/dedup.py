@@ -493,16 +493,12 @@ def prefix_filter_pairs(
         )
         .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
         .distinct()
-        # Lazy persist: jaccard_pairs traverses the candidate table
-        # twice (id semi-join + pair join) inside one job, which only
-        # block caching dedups; an eager checkpoint would execute the
-        # whole prefix join at CONSTRUCTION time and make the blocks
-        # unrecoverable on executor loss. Cache-hygiene contract:
-        # callers running many of these in one long-lived session
-        # should clearCache between queries (the bench does).
-        .persist()
     )
-    return jaccard_pairs(shingles, threshold, candidates=candidates)
+    # Lazy pin: jaccard_pairs traverses the candidate table twice (id
+    # semi-join + pair join), so the prefix join must run once.
+    return jaccard_pairs(
+        shingles, threshold, candidates=pin_iteration(candidates, eager=False)
+    )
 
 
 def minhash_signatures(shingles: DataFrame, n_hashes: int = N_MINHASH) -> DataFrame:
@@ -693,19 +689,19 @@ def minhash_incremental(
     Returns one row per batch doc: (doc_id, is_dup, matched_doc_id,
     jaccard) with the best corpus match (max jaccard, min doc_id tie).
     """
-    sh_c = word_shingles(corpus, k=k).persist()
-    sh_b = word_shingles(batch, k=k).persist()
+    sh_c = pin_iteration(word_shingles(corpus, k=k), eager=False)
+    sh_b = pin_iteration(word_shingles(batch, k=k), eager=False)
     bands_c = band_table(minhash_signatures(sh_c)).select(
         F.col("doc_id").alias("d_corpus"), "band_id", "band_hash"
     )
     bands_b = band_table(minhash_signatures(sh_b)).select(
         F.col("doc_id").alias("d_new"), "band_id", "band_hash"
     )
-    cand = (
+    cand = pin_iteration(
         bands_b.join(bands_c, ["band_id", "band_hash"])
         .select("d_new", "d_corpus")
-        .distinct()
-        .persist()
+        .distinct(),
+        eager=False,
     )
     sets_b = (
         sh_b.join(F.broadcast(cand.select(F.col("d_new").alias("doc_id")).distinct()),

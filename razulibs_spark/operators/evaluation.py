@@ -79,7 +79,7 @@ def auc_ovr(
         )
     )
     # Total from the cumsum output (whose repartitioned histogram is
-    # persisted inside range_cumsum) — not a second corpus scan.
+    # pinned inside range_cumsum) — not a second corpus scan.
     total = hist_cum.groupBy().agg(F.sum("cnt").alias("n_total"))
     per = per.crossJoin(F.broadcast(total)).withColumn(
         "n_neg", F.col("n_total") - F.col("n_pos")

@@ -67,19 +67,37 @@ def build_events(
     one Python object per call site). Event ids are dense from
     id_offset — derive the offset with `max_event_id` on the existing
     log (S8) to append monotonically."""
-    from razulibs_spark.operators.ids import dense_ids
-
     if event_type not in EVENT_TYPES.values():
         raise ValueError(f"unknown PREMIS event code {event_type!r}")
-    base = subjects.select(F.col(subject_col).alias("_subject"))
-    base = dense_ids(base, ["_subject"], "event_id", start=id_offset + 1)
-    return base.select(
-        F.col("event_id"),
+    rows = subjects.select(
+        F.col(subject_col).alias("_subject"),
+        F.lit(outcome).alias("outcome"),
+        (F.col(note_col) if note_col else F.lit(None).cast("string")).alias("outcome_note"),
+    )
+    return _event_log(rows, id_offset, event_type, actor, tool, description)
+
+
+def _event_log(
+    rows: DataFrame,
+    id_offset: int,
+    event_type: str,
+    actor: str,
+    tool: str | None,
+    description: str | None,
+) -> DataFrame:
+    """Number ``rows`` (``_subject``, ``outcome``, ``outcome_note``)
+    densely by subject from ``id_offset + 1`` and project them onto
+    EVENT_SCHEMA — the one projection both event builders share."""
+    from razulibs_spark.operators.ids import dense_ids
+
+    ranked = dense_ids(rows, ["_subject"], "event_id", start=id_offset + 1)
+    return ranked.select(
+        "event_id",
         F.lit(event_type).alias("event_type"),
         F.array(F.col("_subject")).alias("subjects"),
         F.lit(actor).alias("implemented_by"),
-        F.lit(outcome).alias("outcome"),
-        (F.col(note_col) if note_col else F.lit(None).cast("string")).alias("outcome_note"),
+        "outcome",
+        "outcome_note",
         F.lit(None).cast("timestamp").alias("started_at"),
         F.current_timestamp().alias("ended_at"),
         F.lit(tool).cast("string").alias("tool"),
@@ -107,8 +125,6 @@ def fixity_check_events(
 ) -> DataFrame:
     """Fixity verification (razu/sip.py:168-171): recompute-and-compare
     as a join, emitting one `fix` event per file with the outcome."""
-    from razulibs_spark.operators.ids import dense_ids
-
     joined = manifest.select("filename", F.col("md5hash").alias("_expected")).join(
         fs_scan.select("filename", F.col("md5hash").alias("_actual")),
         "filename",
@@ -122,20 +138,7 @@ def fixity_check_events(
         .alias("outcome"),
         F.coalesce(F.col("_actual"), F.lit("missing")).alias("outcome_note"),
     )
-    checked = dense_ids(checked, ["_subject"], "event_id", start=id_offset + 1)
-    return checked.select(
-        "event_id",
-        F.lit("fix").alias("event_type"),
-        F.array(F.col("_subject")).alias("subjects"),
-        F.lit(actor).alias("implemented_by"),
-        F.col("outcome"),
-        F.col("outcome_note"),
-        F.lit(None).cast("timestamp").alias("started_at"),
-        F.current_timestamp().alias("ended_at"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("string").alias("generated"),
-        F.lit("Fixity check").alias("description"),
-    )
+    return _event_log(checked, id_offset, "fix", actor, None, "Fixity check")
 
 
 def events_to_triples(events: DataFrame, base_uri: str) -> DataFrame:

@@ -2,27 +2,29 @@
 
 Two implementations:
 
-- `dense_ids` — the scalable two-phase scheme: range-repartition on
-  the order key (a parallel sort), count rows per partition, and
-  number rows within each partition from that partition's offset, a
-  literal array indexed by partition id. No single-partition global
-  window and no offsets frame to join; the only driver traffic is one
-  integer per partition.
+- `dense_ids` — the scalable scheme: the exclusive running count of a
+  constant-1 column through the two-tier `stats.range_cumsum` (range-
+  repartition on the order key, per-partition counts read back as
+  literal offsets, intra-partition running sums), plus ``start``. No
+  single-partition global window; the only driver traffic is one
+  integer per partition, and the pin follows ``pinning.pin_iteration``.
 
 - `dense_ids_global_window` — the naive row_number().over(global
-  window) form, kept for comparison/testing; it funnels all rows
+  window) form, the test oracle for `dense_ids`; it funnels all rows
   through one task and must not be used at scale.
 
 For 100 TB pipelines prefer content-derived uids (md5 of the natural
 key, functions/scalars.razu_uid over a hash) — dense ids exist for
-SIP-compatible output only (SURVEY §2.9 design note).
+reference-compatible numbering only (SURVEY §2.9 design note).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from razulibs_spark.operators.stats import range_cumsum
 
 
 def dense_ids(
@@ -39,35 +41,12 @@ def dense_ids(
     know the input is dimension-sized (e.g. ntile_scalable over a
     per-user aggregate) pass a small width so a 1k-row sort doesn't
     schedule defaultParallelism tasks across three stages."""
-    n = n_parts or df.sparkSession.sparkContext.defaultParallelism
-    # persist() pins ONE materialization of the range partitioning:
-    # repartitionByRange SAMPLES its bounds per job, so without the
-    # pin the counts job and the numbering job could see different
-    # partition boundaries and the offsets would misalign.
-    parted = (
-        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+    ones = df.withColumn("_one", F.lit(1))
+    return (
+        range_cumsum(ones, order_cols, ["_one"], [id_col], n_parts)
+        .withColumn(id_col, F.col(id_col) + start)
+        .drop("_one")
     )
-    # One count per partition — tiny driver collect, back as a literal.
-    counts = dict(parted.groupBy("_pid").count().collect())
-    w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    return parted.withColumn(
-        id_col,
-        (F.row_number().over(w) - 1 + partition_offsets(counts, n, start)).cast("long"),
-    ).drop("_pid")
-
-
-def partition_offsets(counts: dict[int, int], n: int, start: int = 0) -> Column:
-    """Exclusive running offsets of per-partition ``counts`` (partition
-    id → subtotal; absent ids count 0) as ``element_at(array(...),
-    _pid + 1)`` over the ``_pid`` column: one literal lookup in place
-    of an offsets frame and its broadcast join."""
-    offsets, acc = [], start
-    for pid in range(n):
-        offsets.append(f"{acc}L")
-        acc += counts.get(pid) or 0
-    return F.expr(f"element_at(array({', '.join(offsets)}), _pid + 1)")
 
 
 def dense_ids_global_window(

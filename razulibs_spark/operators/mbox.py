@@ -30,6 +30,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from razulibs_spark.operators.pinning import pin_iteration
+
 _FROM_LINE = "From MAILER-DAEMON Thu Jan  1 00:00:00 1970"
 _QUOTED_FROM_RE = re.compile(r"^(>+)From ", re.M)
 
@@ -240,14 +242,15 @@ def read_mbox_sharded(
         )
         return _assemble_messages(frags, mapping, dialect)
 
-    # both persists are metadata-only (4 longs per fragment): `meta`
-    # so the range sampler's pass IS upstream run #1, `meta_r` so the
+    # both pins are metadata-only (4 longs per fragment): `meta` so
+    # the range sampler's pass IS upstream run #1, `meta_r` so the
     # range exchange runs once and the summary collects plus both
-    # classify branches read the cached, already-ordered frame
-    meta = meta.persist()
-    meta_r = meta.repartitionByRange(par, "rec_id").sortWithinPartitions(
-        "rec_id"
-    ).persist()
+    # classify branches read the pinned, already-ordered frame
+    meta = pin_iteration(meta, eager=False)
+    meta_r = pin_iteration(
+        meta.repartitionByRange(par, "rec_id").sortWithinPartitions("rec_id"),
+        eager=False,
+    )
 
     def _summ(idx: int, it):
         # per-partition transfer function: (total byte cost, max T')

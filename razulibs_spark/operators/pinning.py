@@ -1,13 +1,14 @@
-"""Iteration pinning — one policy for materializing per-round state
-in driver-looped algorithms (PageRank, BFS levels, transitive closure,
-connected components).
-
-Every iterative operator here must pin each round's frame: cut the
-self-referencing lineage (which otherwise grows the plan every round —
-for self-joining loops Catalyst analysis goes EXPONENTIAL in rounds)
-and materialize once so later rounds don't recompute earlier ones.
-There are three mechanisms with different failure/lifecycle trades,
-and the right one depends on the deployment, not the algorithm:
+"""The library's one pin policy: every frame an operator or driver
+query materializes and hands on — per-round state in driver-looped
+algorithms (PageRank, BFS levels, transitive closure, connected
+components), the range partitioning of ``stats.range_cumsum`` (and so
+``ids.dense_ids``), and the shared inputs of returned query frames —
+goes through ``pin_iteration``. A pin cuts the lineage (which otherwise
+grows the plan every round — for self-joining loops Catalyst analysis
+goes EXPONENTIAL in rounds) and materializes once so later consumers
+don't recompute it. There are three mechanisms with different
+failure/lifecycle trades, and the right one depends on the
+deployment, not the algorithm:
 
 - ``localCheckpoint``: blocks are UNREPLICATED and lineage is gone —
   on a real cluster, losing any executor mid-algorithm fails the
@@ -45,10 +46,12 @@ and the right one depends on the deployment, not the algorithm:
   other value raises (a typo must not silently hand back the
   fault-intolerant default the operator tried to opt out of).
 
-operators/stats.py:range_cumsum keeps its own tuned pin (lazy
-localCheckpoint, ``spark.razulibs.rangeCumsum.pin``): its frame is
-consumed by exactly two back-to-back jobs in one call, not a loop —
-the lifecycle trade is different and separately documented there.
+Caches outside this policy are scoped — persisted and unpersisted in
+the same function: ``graph.pagerank``/``triangle_count``/
+``bfs_levels``, ``text.bpe_train``, ``dedup.connected_components``,
+``stats.pca_top_component``, ``queries.graph_pagerank`` and the docs
+frame of ``plans/sip.assemble_sip`` — plus ``assemble_sip``'s
+returned ``manifest``, which its caller owns and unpersists.
 """
 
 from __future__ import annotations

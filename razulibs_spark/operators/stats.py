@@ -13,8 +13,10 @@ oracle; we sum exactly in scaled integers instead).
 Scale shapes:
 - ``range_cumsum`` — prefix sums over a total order via
   range-repartition + per-partition subtotals read back as literal
-  offsets (same two-tier scheme as operators/ids.dense_ids); driver
-  traffic is one integer per partition.
+  offsets (``partition_offsets``); driver traffic is one integer per
+  partition. The range partitioning is pinned through
+  ``pinning.pin_iteration``. operators/ids.dense_ids is its running
+  count of a constant 1.
 - ``ks_drift`` — one shuffle to group by value, one two-tier cumsum,
   one scalar aggregate.
 - ``chi_square_cells`` — output bounded by the category square, all
@@ -29,8 +31,20 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from razulibs_spark.operators.ids import partition_offsets
+from razulibs_spark.operators.pinning import pin_iteration
 from razulibs_spark.session import local_frame
+
+
+def partition_offsets(counts: dict[int, int], n: int) -> Column:
+    """Exclusive running offsets of per-partition ``counts`` (partition
+    id → subtotal; absent ids count 0) as ``element_at(array(...),
+    _pid + 1)`` over the ``_pid`` column: one literal lookup in place
+    of an offsets frame and its broadcast join."""
+    offsets, acc = [], 0
+    for pid in range(n):
+        offsets.append(f"{acc}L")
+        acc += counts.get(pid) or 0
+    return F.expr(f"element_at(array({', '.join(offsets)}), _pid + 1)")
 
 
 def range_cumsum(
@@ -51,48 +65,23 @@ def range_cumsum(
     intra-partition running sums.
     The only global data movement besides the range shuffle is one
     integer per (partition, value column); all requested prefix sums
-    share the single range shuffle.
+    share the single range shuffle. The range partitioning is pinned by
+    ``pinning.pin_iteration``, so on a non-local master without a
+    checkpoint directory this raises (unless ``spark.razulibs.iterPin``
+    forces a mode).
     """
     n = n_parts or df.sparkSession.sparkContext.defaultParallelism
     # Pin ONE materialization of the range partitioning:
     # repartitionByRange samples bounds per job, so the subtotal job
     # and the cumsum job must see identical partition boundaries.
-    # localCheckpoint (not persist): a CacheManager entry would outlive
-    # every caller until an explicit unpersist/clearCache — one leaked
-    # cached dataset per call in long-lived sessions — whereas
-    # checkpoint blocks are dropped by the ContextCleaner as soon as
-    # the returned frame is garbage-collected, and the materialized
-    # blocks pin the sampled range bounds just as hard. LAZY (eager
-    # =False): the subtotal collect below is always the first action,
-    # so it both computes and stores the blocks in one job — an eager
-    # checkpoint would add a third job per call (measured 3x on
-    # events_peak_concurrency, whose upstream sessionize is the
-    # expensive part).
-    #
-    # CLUSTER caveat (ADVICE r5): localCheckpoint blocks are
-    # UNREPLICATED and lineage-truncated — on a real cluster, losing an
-    # executor between the subtotal job and the cumsum job fails the
-    # query unrecoverably. That trade is tuned for local[n] (where
-    # executor loss means the whole JVM died anyway). Deploys that need
-    # fault tolerance set spark.razulibs.rangeCumsum.pin=persist: a
-    # CacheManager entry that survives block loss via lineage replay,
-    # at the cost of living until unpersist/clearCache. "auto" picks
-    # localCheckpoint on local[*] masters and persist otherwise.
-    spark = df.sparkSession
-    pin = spark.conf.get("spark.razulibs.rangeCumsum.pin", "auto")
-    if pin == "auto":
-        pin = (
-            "localCheckpoint"
-            if spark.sparkContext.master.startswith("local")
-            else "persist"
-        )
-    parted = df.repartitionByRange(
-        n, *[F.col(c) for c in order_cols]
-    ).withColumn("_pid", F.spark_partition_id())
-    if pin == "persist":
-        parted = parted.persist()
-    else:
-        parted = parted.localCheckpoint(eager=False)
+    # LAZY (eager=False): the subtotal collect below is always the
+    # first action, so it both computes and stores the pinned blocks
+    # in one job — an eager pin would add a third job per call.
+    parted = pin_iteration(
+        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
+        .withColumn("_pid", F.spark_partition_id()),
+        eager=False,
+    )
     subtotals = (
         parted.groupBy("_pid")
         .agg(*[F.sum(v).alias(v) for v in val_cols])
@@ -151,7 +140,7 @@ def ks_drift(
         (F.col("cb_before") + F.col("cb")).alias("fb"),
     )
     # Totals from the cumsum output (whose repartitioned histogram is
-    # persisted inside range_cumsum) — NOT a second scan of the input
+    # pinned inside range_cumsum) — NOT a second scan of the input
     # corpus, which at 100 TB would double the query's IO.
     totals = cum0.groupBy().agg(
         F.sum("ca").alias("na"), F.sum("cb").alias("nb")

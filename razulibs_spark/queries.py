@@ -40,6 +40,7 @@ from razulibs_spark.operators import (
     temporal,
     text,
 )
+from razulibs_spark.operators.pinning import pin_iteration
 from razulibs_spark.operators.rdf import PropertyMap, entity_to_triples
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -886,8 +887,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Uncapped brute force survives as `jaccard_pairs(sh, t)` for the
     exactness tests; `dedup_jaccard_prefix_filter` is the lossless
     scale path. The shingle table feeds the df window, pair join, and
-    count aggregate → persisted once."""
-    sh = dedup.word_shingles(T(spark, sf_dir, "documents")).persist()
+    count aggregate → pinned once."""
+    sh = pin_iteration(dedup.word_shingles(T(spark, sf_dir, "documents")), eager=False)
     return dedup.df_capped_jaccard(sh, 0.5, _NGRAM_MAX_DF)
 
 
@@ -930,11 +931,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; candidates from band-hash equality joins, then verified
     Jaccard ≥ 0.2. The scale path: candidate generation never touches
     the O(n²) pair space. Shingles feed four consumers (signatures,
-    counts, two join sides) → persisted once."""
-    sh = dedup.word_shingles(T(spark, sf_dir, "documents")).persist()
-    # Candidates persisted: the signature aggregate is a full-corpus
+    counts, two join sides) → pinned once."""
+    sh = pin_iteration(dedup.word_shingles(T(spark, sf_dir, "documents")), eager=False)
+    # Candidates pinned: the signature aggregate is a full-corpus
     # pass and feeds both the candidate-id semi-join and the pair join.
-    cand = dedup.lsh_candidate_pairs(dedup.minhash_signatures(sh)).persist()
+    cand = pin_iteration(
+        dedup.lsh_candidate_pairs(dedup.minhash_signatures(sh)), eager=False
+    )
     return dedup.jaccard_pairs(sh, 0.2, candidates=cand)
 
 
@@ -1000,7 +1003,7 @@ def dedup_minhash_lsh_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stays — the spark.ml coverage price is ~zero here. A first
     # attempt that verified with exact word-shingle Jaccard was 2×
     # WORSE (231k band candidates × full collect_set pass).
-    emitted = dedup.minhash_lsh_ml(corpus, threshold=0.9).persist()
+    emitted = pin_iteration(dedup.minhash_lsh_ml(corpus, threshold=0.9), eager=False)
 
     planted = docs.filter(F.size(F.split("text", " ")) >= 3).select(
         F.col("doc_id").cast("long").alias("d1"),
@@ -1015,10 +1018,10 @@ def dedup_minhash_lsh_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Global precision invariant over everything the ml join emitted:
     # map shifted ids back to source texts, drop identity pairs (exact
     # Jaccard 1 by construction), verify the rest candidate-driven.
-    # Persisted: traversed three times (candidate-id set, pair join,
+    # Pinned: traversed three times (candidate-id set, pair join,
     # checked left join) — without the pin each traversal re-runs the
     # distinct shuffle over the emitted pair table (r13).
-    nonid = (
+    nonid = pin_iteration(
         emitted.select(
             F.pmod("d1", shift).alias("a"), F.pmod("d2", shift).alias("b")
         )
@@ -1026,8 +1029,8 @@ def dedup_minhash_lsh_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.least("a", "b").alias("d1"), F.greatest("a", "b").alias("d2")
         )
-        .distinct()
-        .persist()
+        .distinct(),
+        eager=False,
     )
     member = nonid.select(F.col("d1").alias("doc_id")).union(
         nonid.select("d2")
@@ -5917,12 +5920,8 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast queries, corpus streams, per-bucket compare."""
     e = T(spark, sf_dir, "embeddings")
     # The assignment table feeds both sides of the bucket join —
-    # localCheckpoint (eager) so centroid scoring runs once, not per
-    # side; unlike persist, the blocks are auto-released when the
-    # frame goes out of scope instead of leaking a CacheManager entry.
-    assign = similarity.ivf_assign(
-        e, e.filter(F.col("vec_id") < 4)
-    ).localCheckpoint(eager=True)
+    # pinned (eager) so centroid scoring runs once, not per side.
+    assign = pin_iteration(similarity.ivf_assign(e, e.filter(F.col("vec_id") < 4)))
     return similarity.ivf_topk(e, assign, e.filter(F.col("vec_id") < 10), k=5)
 
 
@@ -6660,7 +6659,7 @@ def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     here (the driver corpus has near-uniform shingle df, so the
     df-ordering join would cost more than it saves — measured; real
     heavy-tailed text flips that, order="frequency")."""
-    sh = dedup.word_shingles(T(spark, sf_dir, "documents")).persist()
+    sh = pin_iteration(dedup.word_shingles(T(spark, sf_dir, "documents")), eager=False)
     return dedup.prefix_filter_pairs(sh, 0.5, order="lexicographic")
 
 
@@ -6732,7 +6731,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = docs.select(
         F.min("doc_id").over(w).alias("d1"), F.col("doc_id").alias("d2")
     ).filter(F.col("d1") < F.col("d2"))
-    sh = dedup.word_shingles(docs).persist()
+    sh = pin_iteration(dedup.word_shingles(docs), eager=False)
     jac = dedup.jaccard_pairs(sh, 0.5).select("d1", "d2")
     edges = ex.union(jac)
     return dedup.connected_components(docs.select("doc_id"), edges)
@@ -7768,9 +7767,12 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "total_revenue")
-    ).persist()
+    rev = pin_iteration(
+        li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
+            dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "total_revenue")
+        ),
+        eager=False,
+    )
     mx = rev.agg(F.max("total_revenue").alias("_mx"))
     s = T(spark, sf_dir, "supplier")
     return (
@@ -8015,11 +8017,11 @@ def q2_mincost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
-    cand = (
+    cand = pin_iteration(
         supply.join(F.broadcast(target), supply.l_partkey == target.p_partkey)
         .join(F.broadcast(eu), supply.l_suppkey == eu.s_suppkey)
-        .select("p_partkey", "p_name", "s_name", "s_acctbal", "n_name", "cost")
-        .persist()
+        .select("p_partkey", "p_name", "s_name", "s_acctbal", "n_name", "cost"),
+        eager=False,
     )
     best = cand.groupBy(F.col("p_partkey").alias("bp")).agg(
         F.min("cost").alias("min_cost")
@@ -9009,7 +9011,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     near zero. Same df-capped count-based physical plan
     (dedup.pair_common_counts), different final score; the shingle
     table feeds the df window, pair join and count aggregate once."""
-    sh = dedup.word_shingles(T(spark, sf_dir, "documents")).persist()
+    sh = pin_iteration(dedup.word_shingles(T(spark, sf_dir, "documents")), eager=False)
     return dedup.containment_pairs(sh, 0.6, _CONTAIN_MAX_DF)
 
 
@@ -10406,11 +10408,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # Materialize DISTRIBUTED before unpersisting the inputs it
-        # derives from: localCheckpoint cuts the lineage onto block
+        # derives from: the eager pin cuts the lineage onto block
         # storage, so no per-node row ever rides through the driver
         # (a collect()+createDataFrame here was the one driver-sized
         # loop in the query — the item vocabulary can be large).
-        result = result.localCheckpoint(eager=True)
+        result = pin_iteration(result)
     finally:
         edges.unpersist()
         ranks.unpersist()
@@ -11504,9 +11506,7 @@ def eval_ann_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
     queries_df = e.filter(F.col("vec_id") < 10)
     exact = similarity.cosine_topk(e, queries_df, k=5)
-    assign = similarity.ivf_assign(
-        e, e.filter(F.col("vec_id") < 4)
-    ).localCheckpoint(eager=True)  # auto-released, unlike persist
+    assign = pin_iteration(similarity.ivf_assign(e, e.filter(F.col("vec_id") < 4)))
     ivf = similarity.ivf_topk(e, assign, queries_df, k=5)
     return evaluation.topk_agreement(
         exact, ivf, "query_id", "neighbor_id", k=5

@@ -4,6 +4,7 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -21,3 +22,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(autouse=True)
+def no_cached_plans():
+    """Fail a test that leaves a cached plan in the shared session: a
+    leaked CacheManager entry changes the plans (and timings) of every
+    later test. The cache is cleared before failing, so one leak cannot
+    cascade. Tests that never started Spark are not checked, and the
+    check never starts it."""
+    yield
+    session = SparkSession._instantiatedSession
+    if session is None:
+        return
+    if not session._jsparkSession.sharedState().cacheManager().isEmpty():
+        session.catalog.clearCache()
+        pytest.fail("test left cached plans in the shared Spark session", pytrace=False)

@@ -89,70 +89,76 @@ def test_compose_filename(spark):
 def test_csv2rdf_golden_triples(spark):
     metadata, droid, vocab = _fixture(spark)
     triples = csv2rdf_triples(metadata, droid, vocab).cache()
-    got = _triple_set(triples)
+    try:
+        got = _triple_set(triples)
 
-    rec1 = URI.format("1")
-    # J1 droid lookup reached the bestand entity:
-    assert (URI.format("1-b"), "ldto:omvang", "14509774", "literal",
-            "xsd:integer", None) in got
-    # J2 vocab resolve:
-    assert (rec1, "ldto:dekkingInRuimte",
-            "https://data.razu.nl/id/locatie/houten", "uri", None, None) in got
-    # P3 optional: row 1 has Plaats 2, rows 2-4 do not → exactly 5
-    # dekkingInRuimte triples in total (4×Plaats1 + 1×Plaats2).
-    assert sum(1 for t in got if t[1] == "ldto:dekkingInRuimte") == 5
-    # F1 per-row date datatypes on the nested dekking bnode (D3):
-    dek = {t[4] for t in got if t[1] == "ldto:dekkingInTijdBeginDatum"
-           and t[0].startswith("bnode:")}
-    assert dek == {"xsd:date", "xsd:gYear"}
-    # Dutch d-m-yyyy reformatted to ISO (util.py:9-30 semantics):
-    assert ("bnode:NL-WbDRAZU-G0321-661-3:dekking",
-            "ldto:dekkingInTijdBeginDatum", "1985-06-24", "literal",
-            "xsd:date", None) in got
-    # F11/F12 WKT bbox:
-    assert (rec1, "geo:asWKT",
-            "POLYGON ((136669.0 451994.996, 137355.0 451994.996, "
-            "137355.0 452680.996, 136669.0 452680.996, 136669.0 451994.996))",
-            "literal", "geo:wktLiteral", None) in got
-    # A1/A7 archive singleton with the global min/max Datering:
-    arch = URI.format("archief")
-    assert (arch, "ldto:dekkingInTijdBeginDatum", "1984", "literal",
-            None, None) in got
-    assert (arch, "ldto:dekkingInTijdEindDatum", "24-06-1985", "literal",
-            None, None) in got
-    # A6/J8: two series, linked both directions:
-    assert (URI.format("serie-1984"), "ldto:bevatOnderdeel", rec1,
-            "uri", None, None) in got
-    assert (rec1, "ldto:isOnderdeelVan", URI.format("serie-1984"),
-            "uri", None, None) in got
-    # Entity census: 4 records + 4 bestanden + 4 dekking bnodes +
-    # 4 checksum bnodes + 2 series + 1 archive typed nodes.
-    assert sum(1 for t in got if t[1] == "rdf:type") == 19
+        rec1 = URI.format("1")
+        # J1 droid lookup reached the bestand entity:
+        assert (URI.format("1-b"), "ldto:omvang", "14509774", "literal",
+                "xsd:integer", None) in got
+        # J2 vocab resolve:
+        assert (rec1, "ldto:dekkingInRuimte",
+                "https://data.razu.nl/id/locatie/houten", "uri", None, None) in got
+        # P3 optional: row 1 has Plaats 2, rows 2-4 do not → exactly 5
+        # dekkingInRuimte triples in total (4×Plaats1 + 1×Plaats2).
+        assert sum(1 for t in got if t[1] == "ldto:dekkingInRuimte") == 5
+        # F1 per-row date datatypes on the nested dekking bnode (D3):
+        dek = {t[4] for t in got if t[1] == "ldto:dekkingInTijdBeginDatum"
+               and t[0].startswith("bnode:")}
+        assert dek == {"xsd:date", "xsd:gYear"}
+        # Dutch d-m-yyyy reformatted to ISO (util.py:9-30 semantics):
+        assert ("bnode:NL-WbDRAZU-G0321-661-3:dekking",
+                "ldto:dekkingInTijdBeginDatum", "1985-06-24", "literal",
+                "xsd:date", None) in got
+        # F11/F12 WKT bbox:
+        assert (rec1, "geo:asWKT",
+                "POLYGON ((136669.0 451994.996, 137355.0 451994.996, "
+                "137355.0 452680.996, 136669.0 452680.996, 136669.0 451994.996))",
+                "literal", "geo:wktLiteral", None) in got
+        # A1/A7 archive singleton with the global min/max Datering:
+        arch = URI.format("archief")
+        assert (arch, "ldto:dekkingInTijdBeginDatum", "1984", "literal",
+                None, None) in got
+        assert (arch, "ldto:dekkingInTijdEindDatum", "24-06-1985", "literal",
+                None, None) in got
+        # A6/J8: two series, linked both directions:
+        assert (URI.format("serie-1984"), "ldto:bevatOnderdeel", rec1,
+                "uri", None, None) in got
+        assert (rec1, "ldto:isOnderdeelVan", URI.format("serie-1984"),
+                "uri", None, None) in got
+        # Entity census: 4 records + 4 bestanden + 4 dekking bnodes +
+        # 4 checksum bnodes + 2 series + 1 archive typed nodes.
+        assert sum(1 for t in got if t[1] == "rdf:type") == 19
+    finally:
+        triples.unpersist()
 
 
 def test_csv2rdf_roundtrips(spark, tmp_path):
     metadata, droid, vocab = _fixture(spark)
     triples = csv2rdf_triples(metadata, droid, vocab).cache()
-    want = _triple_set(triples)
+    try:
+        want = _triple_set(triples)
 
-    nt = str(tmp_path / "graph.nt")
-    write_ntriples(triples, nt)
-    # N-Triples loses the skolem prefix by design (bnodes serialize as
-    # label-hashed `_:`); compare on the stable remainder.
-    back_nt = read_rdf(spark, nt, fmt="ntriples")
-    assert back_nt.count() == len(want)
+        nt = str(tmp_path / "graph.nt")
+        write_ntriples(triples, nt)
+        # N-Triples loses the skolem prefix by design (bnodes serialize as
+        # label-hashed `_:`); compare on the stable remainder.
+        back_nt = read_rdf(spark, nt, fmt="ntriples")
+        assert back_nt.count() == len(want)
 
-    jd = str(tmp_path / "graph.jsonld")
-    write_jsonld(triples, jd)
-    back = _triple_set(read_rdf(spark, jd, fmt="jsonld"))
-    assert back == want
+        jd = str(tmp_path / "graph.jsonld")
+        write_jsonld(triples, jd)
+        back = _triple_set(read_rdf(spark, jd, fmt="jsonld"))
+        assert back == want
 
-    # One document per entity (4 records + 4 bestanden + 2 series + 1
-    # archive; each record doc also carries its dekking bnode node).
-    docs = jsonld_docs(triples)
-    assert docs.count() == 11
-    one = docs.filter(F.col("entity") == "NL-WbDRAZU-G0321-661-1").collect()[0]
-    assert '"@graph"' in one["jsonld"] and "bnode:NL-WbDRAZU-G0321-661-1:dekking" in one["jsonld"]
+        # One document per entity (4 records + 4 bestanden + 2 series + 1
+        # archive; each record doc also carries its dekking bnode node).
+        docs = jsonld_docs(triples)
+        assert docs.count() == 11
+        one = docs.filter(F.col("entity") == "NL-WbDRAZU-G0321-661-1").collect()[0]
+        assert '"@graph"' in one["jsonld"] and "bnode:NL-WbDRAZU-G0321-661-1:dekking" in one["jsonld"]
+    finally:
+        triples.unpersist()
 
 
 def test_per_entity_files_and_sip_scan(spark, tmp_path):
@@ -164,37 +170,42 @@ def test_per_entity_files_and_sip_scan(spark, tmp_path):
 
     metadata, droid, vocab = _fixture(spark)
     triples = csv2rdf_triples(metadata, droid, vocab).cache()
+    try:
+        sip = str(tmp_path / "sip")
+        n = write_jsonld_per_entity(jsonld_docs(triples), sip)
+        assert n == 11
+        back = scan_sip_dir(spark, sip)
+        assert back.select("entity_id").distinct().count() == 11
+        # S5 id extraction matches the K1 filenames:
+        assert back.filter(F.col("entity_id") == "NL-WbDRAZU-G0321-661-1").count() > 0
+        assert _triple_set(back.drop("entity_id")) == _triple_set(triples)
 
-    sip = str(tmp_path / "sip")
-    n = write_jsonld_per_entity(jsonld_docs(triples), sip)
-    assert n == 11
-    back = scan_sip_dir(spark, sip)
-    assert back.select("entity_id").distinct().count() == 11
-    # S5 id extraction matches the K1 filenames:
-    assert back.filter(F.col("entity_id") == "NL-WbDRAZU-G0321-661-1").count() > 0
-    assert _triple_set(back.drop("entity_id")) == _triple_set(triples)
+        # K4: events → PREMIS triples → JSON-LD round-trip.
+        ev = build_events(triples.select("s").distinct().limit(3), "s",
+                          "mem", actor="razu-spark")
+        # F18: event timestamps come from current_timestamp(), fixed per
+        # query execution — materialize once so write and compare agree.
+        ev_triples = events_to_triples(ev, "https://data.razu.nl/id/event/tool").cache()
+        try:
+            ev_triples.count()
+            jd = str(tmp_path / "eventlog.jsonld")
+            write_jsonld(ev_triples, jd, owner=F.col("s"))
+            assert _triple_set(read_rdf(spark, jd, fmt="jsonld")) == _triple_set(ev_triples)
+        finally:
+            ev_triples.unpersist()
 
-    # K4: events → PREMIS triples → JSON-LD round-trip.
-    ev = build_events(triples.select("s").distinct().limit(3), "s",
-                      "mem", actor="razu-spark")
-    # F18: event timestamps come from current_timestamp(), fixed per
-    # query execution — materialize once so write and compare agree.
-    ev_triples = events_to_triples(ev, "https://data.razu.nl/id/event/tool").cache()
-    ev_triples.count()
-    jd = str(tmp_path / "eventlog.jsonld")
-    write_jsonld(ev_triples, jd, owner=F.col("s"))
-    assert _triple_set(read_rdf(spark, jd, fmt="jsonld")) == _triple_set(ev_triples)
-
-    # P10: malformed rows dropped, well-formed kept.
-    bad = spark.createDataFrame(
-        [("", "p", "o", "uri", None, None),
-         ("s", "p", None, "uri", None, None),
-         ("s", "p", "x", "wat", None, None),
-         ("s", "p", "", "literal", None, None)],
-        "s string, p string, o string, o_type string, o_datatype string, o_lang string",
-    )
-    assert valid_triples(bad).count() == 1
-    assert valid_triples(triples).count() == triples.count()
+        # P10: malformed rows dropped, well-formed kept.
+        bad = spark.createDataFrame(
+            [("", "p", "o", "uri", None, None),
+             ("s", "p", None, "uri", None, None),
+             ("s", "p", "x", "wat", None, None),
+             ("s", "p", "", "literal", None, None)],
+            "s string, p string, o string, o_type string, o_datatype string, o_lang string",
+        )
+        assert valid_triples(bad).count() == 1
+        assert valid_triples(triples).count() == triples.count()
+    finally:
+        triples.unpersist()
 
 
 def test_csv_sources_feed_pipeline(spark, tmp_path):
@@ -260,18 +271,25 @@ def test_prefix_expansion_roundtrip_and_valid_ntriples(spark, tmp_path):
 
     metadata, droid, vocab = _fixture(spark)
     triples = csv2rdf_triples(metadata, droid, vocab).cache()
-    want = _triple_set(triples)
-    assert _triple_set(compact_triples(expand_triples(triples))) == want
+    try:
+        want = _triple_set(triples)
+        assert _triple_set(compact_triples(expand_triples(triples))) == want
 
-    nt = str(tmp_path / "valid.nt")
-    write_ntriples(expand_triples(triples), nt)
-    import glob
-    text = "".join(open(p).read() for p in glob.glob(nt + "/part-*"))
-    assert "<ldto:" not in text and "<rdf:" not in text and "<geo:" not in text
-    assert "<https://data.razu.nl/def/ldto/naam>" in text
-    assert "^^<http://www.w3.org/2001/XMLSchema#date>" in text
-    back = read_rdf(spark, nt, fmt="ntriples")
-    assert back.count() == len(want)
+        nt = str(tmp_path / "valid.nt")
+        write_ntriples(expand_triples(triples), nt)
+        import glob
+        text = "".join(open(p).read() for p in glob.glob(nt + "/part-*"))
+        assert "<ldto:" not in text and "<rdf:" not in text and "<geo:" not in text
+        assert "<https://data.razu.nl/def/ldto/naam>" in text
+        assert "^^<http://www.w3.org/2001/XMLSchema#date>" in text
+        back = read_rdf(spark, nt, fmt="ntriples")
+        assert back.count() == len(want)
+    finally:
+        triples.unpersist()
+
+
+def _release(out):
+    out["manifest"].unpersist()
 
 
 def test_sip_assembly_and_lock(spark, tmp_path):
@@ -286,28 +304,30 @@ def test_sip_assembly_and_lock(spark, tmp_path):
     triples = csv2rdf_triples(metadata, droid, vocab)
     sip = str(tmp_path / "sip")
     out = assemble_sip(spark, triples, sip)
-
-    assert out["n_documents"] == 11
-    manifest = out["manifest"]
-    assert manifest.count() == 11
-    # Manifest checksums describe the bytes actually on disk:
-    import hashlib
-    row = manifest.filter(
-        F.col("filename") == "NL-WbDRAZU-G0321-661-1.meta.json").collect()[0]
-    with open(f"{sip}/NL-WbDRAZU-G0321-661-1.meta.json", "rb") as fh:
-        assert row["md5hash"] == hashlib.md5(fh.read()).hexdigest()
-    # Provenance: ins + 11 mem + 11 fix (all 'suc') + ine, dense ids.
-    ev = out["events"]
-    by_type = {r["event_type"]: r["n"] for r in
-               ev.groupBy("event_type").agg(F.count("*").alias("n")).collect()}
-    assert by_type == {"ins": 1, "mem": 11, "fix": 11, "ine": 1}
-    assert ev.filter(F.col("event_type") == "fix")
-    assert ev.filter(F.col("outcome") != "suc").count() == 0
-    ids = sorted(r["event_id"] for r in ev.select("event_id").collect())
-    assert ids == list(range(1, 25))
-    # O6: the terminal ingestion_end locks the SIP.
-    with pytest.raises(SipLockedError):
-        assemble_sip(spark, triples, sip)
+    try:
+        assert out["n_documents"] == 11
+        manifest = out["manifest"]
+        assert manifest.count() == 11
+        # Manifest checksums describe the bytes actually on disk:
+        import hashlib
+        row = manifest.filter(
+            F.col("filename") == "NL-WbDRAZU-G0321-661-1.meta.json").collect()[0]
+        with open(f"{sip}/NL-WbDRAZU-G0321-661-1.meta.json", "rb") as fh:
+            assert row["md5hash"] == hashlib.md5(fh.read()).hexdigest()
+        # Provenance: ins + 11 mem + 11 fix (all 'suc') + ine, dense ids.
+        ev = out["events"]
+        by_type = {r["event_type"]: r["n"] for r in
+                   ev.groupBy("event_type").agg(F.count("*").alias("n")).collect()}
+        assert by_type == {"ins": 1, "mem": 11, "fix": 11, "ine": 1}
+        assert ev.filter(F.col("event_type") == "fix")
+        assert ev.filter(F.col("outcome") != "suc").count() == 0
+        ids = sorted(r["event_id"] for r in ev.select("event_id").collect())
+        assert ids == list(range(1, 25))
+        # O6: the terminal ingestion_end locks the SIP.
+        with pytest.raises(SipLockedError):
+            assemble_sip(spark, triples, sip)
+    finally:
+        _release(out)
 
 
 def test_collect_rdf_lifecycle(spark, tmp_path):
@@ -341,18 +361,21 @@ def test_collect_rdf_lifecycle(spark, tmp_path):
     assert invalid_integer_report(bad).count() == 1
 
     got = collect_rdf(spark, a, b).cache()
-    # demotion kept the triple but dropped the datatype (P11)
-    demoted = got.filter((F.col("s") == "urn:x") & (F.col("p") == "ldto:omvang"))
-    assert demoted.count() == 1 and demoted.first()["o_datatype"] is None
-    # after demotion both rows survive the demote step
-    assert demote_invalid_integers(bad).count() == 2
-    # union folded both inputs; every csv2rdf triple survived
-    assert got.count() == len(_triple_set(triples)) + 2
+    try:
+        # demotion kept the triple but dropped the datatype (P11)
+        demoted = got.filter((F.col("s") == "urn:x") & (F.col("p") == "ldto:omvang"))
+        assert demoted.count() == 1 and demoted.first()["o_datatype"] is None
+        # after demotion both rows survive the demote step
+        assert demote_invalid_integers(bad).count() == 2
+        # union folded both inputs; every csv2rdf triple survived
+        assert got.count() == len(_triple_set(triples)) + 2
 
-    out = str(tmp_path / "combined.ttl")
-    collect_rdf_to_turtle(spark, out, a, b)
-    back = read_turtle(spark, out)
-    assert back.count() == got.count()
+        out = str(tmp_path / "combined.ttl")
+        collect_rdf_to_turtle(spark, out, a, b)
+        back = read_turtle(spark, out)
+        assert back.count() == got.count()
+    finally:
+        got.unpersist()
 
 
 def test_sip_assembly_count_mismatch_is_loud(spark, tmp_path):
@@ -377,11 +400,6 @@ def test_sip_assembly_count_mismatch_is_loud(spark, tmp_path):
         assemble_sip(spark, triples, sip)
 
 
-def _release(out):
-    out["manifest"].unpersist()
-    out["events"].unpersist()
-
-
 def test_sip_fixity_fails_on_changed_document(spark, tmp_path, monkeypatch):
     """Fixity compares the bytes written with the bytes read back: a
     document changed between the write and the manifest scan gets
@@ -404,10 +422,12 @@ def test_sip_fixity_fails_on_changed_document(spark, tmp_path, monkeypatch):
     metadata, droid, vocab = _fixture(spark)
     sip = str(tmp_path / "sip")
     out = sip_mod.assemble_sip(spark, csv2rdf_triples(metadata, droid, vocab), sip)
-    failed = out["events"].filter(F.col("outcome") != "suc").collect()
+    try:
+        failed = out["events"].filter(F.col("outcome") != "suc").collect()
+    finally:
+        _release(out)
     with open(os.path.join(sip, target), "rb") as fh:
         on_disk = hashlib.md5(fh.read()).hexdigest()
-    _release(out)
     assert [(r["event_type"], r["outcome"], r["subjects"]) for r in failed] == [
         ("fix", "fail", [target])
     ]
@@ -458,9 +478,11 @@ def test_sip_non_ascii_document_is_utf8(spark, tmp_path):
     )
     sip = str(tmp_path / "sip")
     out = assemble_sip(spark, triples, sip)
-    outcomes = [r["outcome"] for r in
-                out["events"].filter(F.col("event_type") == "fix").collect()]
-    _release(out)
+    try:
+        outcomes = [r["outcome"] for r in
+                    out["events"].filter(F.col("event_type") == "fix").collect()]
+    finally:
+        _release(out)
     with open(os.path.join(sip, "NL-WbDRAZU-G0321-661-9.meta.json"), "rb") as fh:
         raw = fh.read()
     assert text.encode("utf-8") in raw
@@ -470,7 +492,7 @@ def test_sip_non_ascii_document_is_utf8(spark, tmp_path):
 
 def test_sip_assembly_scans_once_and_caches_nothing_else(spark, tmp_path, monkeypatch):
     """One manifest scan per SIP; once the caller releases the returned
-    manifest and events, no other cached frame is left behind."""
+    manifest, no other cached frame is left behind."""
     import razulibs_spark.plans.sip as sip_mod
 
     calls = []
@@ -490,9 +512,11 @@ def test_sip_assembly_scans_once_and_caches_nothing_else(spark, tmp_path, monkey
 
     before = cached()
     out = sip_mod.assemble_sip(spark, triples, str(tmp_path / "sip"))
-    grew = cached() - before
-    manifest_cached, events_cached = out["manifest"].is_cached, out["events"].is_cached
-    _release(out)
+    try:
+        grew = cached() - before
+        manifest_cached, events_cached = out["manifest"].is_cached, out["events"].is_cached
+    finally:
+        _release(out)
     assert len(calls) == 1
     # the manifest is the only frame assembly leaves persisted
     assert (grew, manifest_cached, events_cached) == (1, True, False)
@@ -530,10 +554,12 @@ def test_sip_event_log_characterization(spark, tmp_path):
     metadata, droid, vocab = _fixture(spark)
     sip = str(tmp_path / "sip")
     out = assemble_sip(spark, csv2rdf_triples(metadata, droid, vocab), sip)
-    got = {r["event_id"]: (r["event_type"], list(r["subjects"]), r["description"],
-                           r["outcome"], r["outcome_note"], r["implemented_by"])
-           for r in out["events"].collect()}
-    _release(out)
+    try:
+        got = {r["event_id"]: (r["event_type"], list(r["subjects"]), r["description"],
+                               r["outcome"], r["outcome_note"], r["implemented_by"])
+               for r in out["events"].collect()}
+    finally:
+        _release(out)
 
     actor = "https://data.razu.nl/id/actor/razu"
     want = {1: ("ins", [sip], "Ingestion started.", "suc", None, actor),

@@ -229,35 +229,38 @@ def payload_dir(tmp_path):
 
 def test_manifest_scan_validate_sync(spark, payload_dir):
     m = manifest_from_directory(spark, payload_dir).cache()
-    rows = {r["filename"]: r for r in m.collect()}
-    assert set(rows) == {"a.jpg", "b.tar.gz", "sub/c.txt"}
-    assert rows["a.jpg"]["md5hash"] == "47bce5c74f589f4867dbd57e9ca9f808"
-    assert rows["b.tar.gz"]["file_extension"] == ".tar.gz"
-    assert rows["sub/c.txt"]["file_size"] == 1
+    try:
+        rows = {r["filename"]: r for r in m.collect()}
+        assert set(rows) == {"a.jpg", "b.tar.gz", "sub/c.txt"}
+        assert rows["a.jpg"]["md5hash"] == "47bce5c74f589f4867dbd57e9ca9f808"
+        assert rows["b.tar.gz"]["file_extension"] == ".tar.gz"
+        assert rows["sub/c.txt"]["file_size"] == 1
 
-    # tamper one entry + drop another → reconcile buckets (J4)
-    tampered = m.withColumn(
-        "md5hash",
-        F.when(F.col("filename") == "a.jpg", F.lit("deadbeef")).otherwise(
-            F.col("md5hash")
-        ),
-    ).filter(F.col("filename") != "sub/c.txt")
-    buckets = {
-        r["filename"]: r["status"]
-        for r in validate_manifest(tampered, m).collect()
-    }
-    assert buckets == {"a.jpg": "mismatch", "b.tar.gz": "ok", "sub/c.txt": "extra"}
+        # tamper one entry + drop another → reconcile buckets (J4)
+        tampered = m.withColumn(
+            "md5hash",
+            F.when(F.col("filename") == "a.jpg", F.lit("deadbeef")).otherwise(
+                F.col("md5hash")
+            ),
+        ).filter(F.col("filename") != "sub/c.txt")
+        buckets = {
+            r["filename"]: r["status"]
+            for r in validate_manifest(tampered, m).collect()
+        }
+        assert buckets == {"a.jpg": "mismatch", "b.tar.gz": "ok", "sub/c.txt": "extra"}
 
-    # J5: what must sync from fs into the tampered manifest's store
-    todo = {r["filename"] for r in incremental_sync_plan(m, tampered).collect()}
-    assert todo == {"a.jpg", "sub/c.txt"}
+        # J5: what must sync from fs into the tampered manifest's store
+        todo = {r["filename"] for r in incremental_sync_plan(m, tampered).collect()}
+        assert todo == {"a.jpg", "sub/c.txt"}
 
-    # K3/S7 round-trip through the JSON object map
-    js = manifest_to_json_map(m)
-    back = manifest_from_json_map(spark, js)
-    assert {r["filename"]: r["md5hash"] for r in back.collect()} == {
-        k: v["md5hash"] for k, v in rows.items()
-    }
+        # K3/S7 round-trip through the JSON object map
+        js = manifest_to_json_map(m)
+        back = manifest_from_json_map(spark, js)
+        assert {r["filename"]: r["md5hash"] for r in back.collect()} == {
+            k: v["md5hash"] for k, v in rows.items()
+        }
+    finally:
+        m.unpersist()
 
 
 # -- events (D6/S8/P6) ------------------------------------------------------
@@ -278,18 +281,28 @@ def test_event_builders_and_lock(spark):
     assert ev.max_event_id(full) == 3
     with pytest.raises(ValueError):
         ev.build_events(subjects, "uri", "zzz", actor="x")
+    # note_col rides along with its subject row
+    noted = ev.build_events(
+        subjects.withColumn("why", F.upper("uri")), "uri", "mem", actor="x", note_col="why"
+    )
+    assert sorted((r["event_id"], r["outcome_note"]) for r in noted.collect()) == [
+        (1, "URN:A"), (2, "URN:B")
+    ]
 
 
 def test_fixity_events(spark, payload_dir):
     m = manifest_from_directory(spark, payload_dir).cache()
-    tampered = m.withColumn(
-        "md5hash",
-        F.when(F.col("filename") == "a.jpg", F.lit("deadbeef")).otherwise(F.col("md5hash")),
-    )
-    fx = ev.fixity_check_events(tampered, m, actor="urn:actor")
-    out = {r["subjects"][0]: r["outcome"] for r in fx.collect()}
-    assert out["a.jpg"] == "fail"
-    assert out["b.tar.gz"] == "suc"
+    try:
+        tampered = m.withColumn(
+            "md5hash",
+            F.when(F.col("filename") == "a.jpg", F.lit("deadbeef")).otherwise(F.col("md5hash")),
+        )
+        fx = ev.fixity_check_events(tampered, m, actor="urn:actor")
+        out = {r["subjects"][0]: r["outcome"] for r in fx.collect()}
+        assert out["a.jpg"] == "fail"
+        assert out["b.tar.gz"] == "suc"
+    finally:
+        m.unpersist()
 
 
 # -- multimodal plumbing ----------------------------------------------------
@@ -588,28 +601,31 @@ def test_progress_observation_counts(spark, payload_dir):
     )
 
     m = manifest_from_directory(spark, payload_dir).cache()
-    tampered = m.withColumn(
-        "md5hash",
-        F.when(F.col("filename") == "a.jpg", F.lit("deadbeef")).otherwise(
-            F.col("md5hash")
-        ),
-    ).filter(F.col("filename") != "sub/c.txt")
-    df, obs = validate_manifest_with_progress(tampered, m)
-    assert df.count() == 3
-    got = obs.get
-    assert got == {
-        "n_rows": 3,
-        "missing_files": 0,
-        "checksum_mismatch": 1,
-        "extra_files": 1,
-        "ok": 1,
-    }
+    try:
+        tampered = m.withColumn(
+            "md5hash",
+            F.when(F.col("filename") == "a.jpg", F.lit("deadbeef")).otherwise(
+                F.col("md5hash")
+            ),
+        ).filter(F.col("filename") != "sub/c.txt")
+        df, obs = validate_manifest_with_progress(tampered, m)
+        assert df.count() == 3
+        got = obs.get
+        assert got == {
+            "n_rows": 3,
+            "missing_files": 0,
+            "checksum_mismatch": 1,
+            "extra_files": 1,
+            "ok": 1,
+        }
 
-    df2, obs2 = observe_counts(
-        m, "scan", big=F.col("file_size") > 1, jpg=F.col("filename").endswith(".jpg")
-    )
-    df2.write.format("noop").mode("overwrite").save()
-    assert obs2.get == {"n_rows": 3, "big": 2, "jpg": 1}
+        df2, obs2 = observe_counts(
+            m, "scan", big=F.col("file_size") > 1, jpg=F.col("filename").endswith(".jpg")
+        )
+        df2.write.format("noop").mode("overwrite").save()
+        assert obs2.get == {"n_rows": 3, "big": 2, "jpg": 1}
+    finally:
+        m.unpersist()
 
 
 def test_streaming_idempotent_upsert_sink(spark, sf_dir, tmp_path):

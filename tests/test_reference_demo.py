@@ -90,32 +90,34 @@ def test_demo_full_pipeline(spark):
     metadata, droid = _demo_inputs(spark)
     vocab = _local_vocab(spark, metadata)
     triples = csv2rdf_triples(metadata, droid, vocab).cache()
+    try:
+        # Entity census: 3 records + 3 bestanden + 3 dekking bnodes +
+        # 3 checksum bnodes + 2 series (1984, 2000) + 1 archive.
+        types = (
+            triples.filter(F.col("p") == "rdf:type")
+            .groupBy("o").count().collect()
+        )
+        by_type = {r["o"]: r["count"] for r in types}
+        assert sum(by_type.values()) == 15
+        assert (
+            triples.filter(F.col("p") == "rdf:type")
+            .filter(F.col("s").contains("serie")).count() == 2
+        )
 
-    # Entity census: 3 records + 3 bestanden + 3 dekking bnodes +
-    # 3 checksum bnodes + 2 series (1984, 2000) + 1 archive.
-    types = (
-        triples.filter(F.col("p") == "rdf:type")
-        .groupBy("o").count().collect()
-    )
-    by_type = {r["o"]: r["count"] for r in types}
-    assert sum(by_type.values()) == 15
-    assert (
-        triples.filter(F.col("p") == "rdf:type")
-        .filter(F.col("s").contains("serie")).count() == 2
-    )
-
-    # J1 reached the bestanden: each carries the droid MD5 + PUID.
-    assert triples.filter(F.col("p") == "ldto:checksumWaarde").count() == 3
-    # J2: every vocab term resolved (no dangling lookups) — each record
-    # has a soort URI.
-    soort = triples.filter(F.col("p") == "ldto:classificatie")
-    assert soort.count() == 3 and all(
-        r["o_type"] == "uri" for r in soort.collect()
-    )
-    # A1/A7: the archive's date range spans the data (1984..2000).
-    arch = {
-        r["p"]: r["o"]
-        for r in triples.filter(F.col("s").endswith("-archief")).collect()
-    }
-    assert arch["ldto:dekkingInTijdBeginDatum"] == "1984-07-24"
-    assert arch["ldto:dekkingInTijdEindDatum"] == "2000-04-09"
+        # J1 reached the bestanden: each carries the droid MD5 + PUID.
+        assert triples.filter(F.col("p") == "ldto:checksumWaarde").count() == 3
+        # J2: every vocab term resolved (no dangling lookups) — each record
+        # has a soort URI.
+        soort = triples.filter(F.col("p") == "ldto:classificatie")
+        assert soort.count() == 3 and all(
+            r["o_type"] == "uri" for r in soort.collect()
+        )
+        # A1/A7: the archive's date range spans the data (1984..2000).
+        arch = {
+            r["p"]: r["o"]
+            for r in triples.filter(F.col("s").endswith("-archief")).collect()
+        }
+        assert arch["ldto:dekkingInTijdBeginDatum"] == "1984-07-24"
+        assert arch["ldto:dekkingInTijdEindDatum"] == "2000-04-09"
+    finally:
+        triples.unpersist()

@@ -185,13 +185,16 @@ def test_prefix_filter_jaccard_is_exact(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sh = dedup.word_shingles(docs).persist()
-    brute = {(r["d1"], r["d2"]) for r in dedup.jaccard_pairs(sh, 0.5).collect()}
-    for order in ("frequency", "lexicographic"):
-        pf = {
-            (r["d1"], r["d2"])
-            for r in dedup.prefix_filter_pairs(sh, 0.5, order=order).collect()
-        }
-        assert pf == brute, order
+    try:
+        brute = {(r["d1"], r["d2"]) for r in dedup.jaccard_pairs(sh, 0.5).collect()}
+        for order in ("frequency", "lexicographic"):
+            pf = {
+                (r["d1"], r["d2"])
+                for r in dedup.prefix_filter_pairs(sh, 0.5, order=order).collect()
+            }
+            assert pf == brute, order
+    finally:
+        sh.unpersist()
 
 
 def test_df_capped_jaccard_candidates(spark, sf_dir):
@@ -204,26 +207,29 @@ def test_df_capped_jaccard_candidates(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sh = dedup.word_shingles(docs).persist()
-    brute = {
-        (r["d1"], r["d2"], r["jaccard"])
-        for r in dedup.jaccard_pairs(sh, 0.5).collect()
-    }
-    cand = dedup.df_capped_candidates(sh, 100)
-    capped = {
-        (r["d1"], r["d2"], r["jaccard"])
-        for r in dedup.jaccard_pairs(sh, 0.5, candidates=cand).collect()
-    }
-    assert capped == brute
-    fused = {
-        (r["d1"], r["d2"], r["jaccard"])
-        for r in dedup.df_capped_jaccard(sh, 0.5, 100).collect()
-    }
-    assert fused == brute
-    tight_pairs = {
-        (r["d1"], r["d2"], r["jaccard"])
-        for r in dedup.df_capped_jaccard(sh, 0.5, 1).collect()
-    }
-    assert tight_pairs <= brute
+    try:
+        brute = {
+            (r["d1"], r["d2"], r["jaccard"])
+            for r in dedup.jaccard_pairs(sh, 0.5).collect()
+        }
+        cand = dedup.df_capped_candidates(sh, 100)
+        capped = {
+            (r["d1"], r["d2"], r["jaccard"])
+            for r in dedup.jaccard_pairs(sh, 0.5, candidates=cand).collect()
+        }
+        assert capped == brute
+        fused = {
+            (r["d1"], r["d2"], r["jaccard"])
+            for r in dedup.df_capped_jaccard(sh, 0.5, 100).collect()
+        }
+        assert fused == brute
+        tight_pairs = {
+            (r["d1"], r["d2"], r["jaccard"])
+            for r in dedup.df_capped_jaccard(sh, 0.5, 1).collect()
+        }
+        assert tight_pairs <= brute
+    finally:
+        sh.unpersist()
 
 
 def test_asof_join_tolerance(spark):
@@ -267,18 +273,21 @@ def test_connected_components_properties(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sh = dedup.word_shingles(docs).persist()
-    edges = dedup.jaccard_pairs(sh, 0.5).select("d1", "d2")
-    cc = dedup.connected_components(docs.select("doc_id"), edges).toPandas()
-    lab = dict(zip(cc.doc_id, cc.component))
-    assert len(lab) == docs.count()
-    for r in edges.collect():
-        assert lab[r["d1"]] == lab[r["d2"]]
-    import collections
-    members = collections.defaultdict(list)
-    for d, c in lab.items():
-        members[c].append(d)
-    for c, ms in members.items():
-        assert c == min(ms)
+    try:
+        edges = dedup.jaccard_pairs(sh, 0.5).select("d1", "d2")
+        cc = dedup.connected_components(docs.select("doc_id"), edges).toPandas()
+        lab = dict(zip(cc.doc_id, cc.component))
+        assert len(lab) == docs.count()
+        for r in edges.collect():
+            assert lab[r["d1"]] == lab[r["d2"]]
+        import collections
+        members = collections.defaultdict(list)
+        for d, c in lab.items():
+            members[c].append(d)
+        for c, ms in members.items():
+            assert c == min(ms)
+    finally:
+        sh.unpersist()
 
 
 def test_pipeline_cluster_best_invariants(spark, sf_dir):
