@@ -5,7 +5,9 @@ demotion → invalid-triple filter → graph union → combined Turtle.
 
 Deltas from the reference, by design:
 - The per-file loop with rdflib (collect_rdf.py:70-75) is a
-  distributed line-framed JSON-LD scan (sources/jsonld.py).
+  distributed line-framed JSON-LD scan in built-in expressions
+  (sources/jsonld.py); a `dir/*.meta.json` input is read as the one
+  directory with a file-name filter, not one path per file.
 - The bnode suffix-remap (collect_rdf.py:37-54) does not exist:
   skolemized bnode ids are globally unique already (SURVEY §1.2).
 - Integer demotion (collect_rdf.py:57-60,93-111) is a when/otherwise

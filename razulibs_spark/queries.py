@@ -5697,8 +5697,8 @@ SELECT s, p, o FROM triples
 def k1_jsonld_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K1 sink + S3 source round-trip (razu/meta_resource.py:45-61):
     group the O2 triples into one flat JSON-LD document per entity
-    (applyInPandas on the entity key — the document boundary), write as
-    JSON-Lines, parse back with mapInPandas, return (s,p,o). The
+    (the entity key is the document boundary), write as JSON-Lines,
+    parse back with built-in variant expressions, return (s,p,o). The
     oracle checks document (de)serialization is the identity."""
     from razulibs_spark.sources.jsonld import read_jsonld, write_jsonld
 

@@ -15,10 +15,13 @@ Scale shape: the sink is JSON-Lines — one complete JSON-LD document
 per line — not one file per entity (the reference's per-entity
 `open()`/`write()` at meta_resource.py:45-54 is the single-node
 pattern; a 100 TB corpus wants few large files, and any consumer can
-still address one entity = one line). Document (de)serialization is
-the one genuinely row-shaped job in the engine (SURVEY §2.11), so it
-runs as Arrow-batched applyInPandas / mapInPandas — never
-row-at-a-time Python UDFs.
+still address one entity = one line). Building documents is the one
+genuinely row-shaped job here (SURVEY §2.11), so it runs as an
+Arrow-batched mapInPandas — never row-at-a-time Python UDFs. The read
+side has no Python worker: one chain of built-in variant expressions
+(parse_json, then explodes over nodes, predicates and values) serves
+both `read_jsonld` and the per-entity `scan_sip_dir`, and a glob over
+one directory is read as that directory with a file-name filter.
 """
 
 from __future__ import annotations
@@ -31,7 +34,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from razulibs_spark.operators.rdf import NAMESPACES, TRIPLE_SCHEMA
+from razulibs_spark.operators.rdf import NAMESPACES
 
 
 def owning_entity(subject: Column) -> Column:
@@ -146,56 +149,64 @@ def write_jsonld(triples: DataFrame, path: str, owner: Column | None = None) -> 
     jsonld_docs(triples, owner).select("jsonld").write.mode("overwrite").text(path)
 
 
-def _parse_lines(values) -> tuple[dict, list[int]]:
-    """Parse an iterable of JSON-LD document lines into flat triple
-    columns, returning (columns, per-line triple counts). The counts
-    let callers attach per-line metadata (entity_id) with one
-    np.repeat instead of re-invoking the parser per row."""
-    out = {k: [] for k in ("s", "p", "o", "o_type", "o_datatype", "o_lang")}
-    counts: list[int] = []
-    for line in values:
-        before = len(out["s"])
-        doc = json.loads(line)
-        for node in doc.get("@graph", [doc]):
-            s = node["@id"]
-            for p, vals in node.items():
-                if p.startswith("@"):
-                    continue
-                if not isinstance(vals, list):
-                    vals = [vals]
-                for v in vals:
-                    if not isinstance(v, dict):
-                        v = {"@value": v}
-                    if "@id" in v:
-                        o, o_type = v["@id"], (
-                            "bnode" if v["@id"].startswith("bnode:") else "uri"
-                        )
-                        dt = lang = None
-                    else:
-                        o, o_type = str(v["@value"]), "literal"
-                        dt, lang = v.get("@type"), v.get("@language")
-                    out["s"].append(s)
-                    out["p"].append(p)
-                    out["o"].append(o)
-                    out["o_type"].append(o_type)
-                    out["o_datatype"].append(dt)
-                    out["o_lang"].append(lang)
-        counts.append(len(out["s"]) - before)
-    return out, counts
+# A JSON-LD value object as a struct; NULL for a bare scalar. A
+# non-string @value becomes its JSON lexical form.
+_VALUE_OBJECT = "struct<`@id`:string,`@value`:string,`@type`:string,`@language`:string>"
 
 
-def _parse_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out, _ = _parse_lines(pdf["value"])
-        yield pd.DataFrame(out)
+def _text_lines(spark: SparkSession, path: str) -> DataFrame:
+    """The non-blank lines under ``path``. A glob in the last path
+    component (``dir/*.meta.json``) reads the one directory with a
+    file-name filter: Spark expands a glob to one path per file, and
+    above ``parallelPartitionDiscovery.threshold`` paths lists them in
+    a job of one task per file, on every action."""
+    head, base = os.path.split(path)
+    reader = spark.read
+    if any(c in base for c in "*?[{"):
+        reader, path = reader.option("pathGlobFilter", base), head or "."
+    return reader.text(path).filter(F.length(F.trim("value")) > 0)
+
+
+def _triples(lines: DataFrame, *keep: str) -> DataFrame:
+    """Flat JSON-LD document lines -> triple columns plus ``keep``:
+    explode each document's nodes (``@graph``, or the document
+    itself), their non-keyword predicates, and each predicate's values
+    (a list, or one value). ``parse_json``, not ``try_parse_json``: a
+    malformed document fails the read."""
+    doc, node, v = F.parse_json("value"), F.col("node"), F.col("v")
+    obj, iri = F.col("obj"), F.col("obj")["@id"]
+    values = (
+        lines.select(*keep, F.explode(F.coalesce(
+            F.try_variant_get(doc, "$['@graph']", "array<variant>"), F.array(doc)
+        )).alias("node"))
+        .select(*keep, F.variant_get(node, "$['@id']", "string").alias("s"),
+                F.explode(node.cast("map<string,variant>")).alias("p", "v"))
+        .filter(~F.col("p").startswith("@"))
+        .select(*keep, "s", "p", F.explode(F.coalesce(
+            F.try_variant_get(v, "$", "array<variant>"), F.array(v)
+        )).alias("e"))
+        .withColumn("obj", F.try_variant_get("e", "$", _VALUE_OBJECT))
+    )
+    return values.select(
+        "s", "p",
+        F.when(obj.isNull(), F.variant_get("e", "$", "string"))
+        .otherwise(F.coalesce(iri, obj["@value"])).alias("o"),
+        F.when(iri.startswith("bnode:"), "bnode")
+        .when(iri.isNotNull(), "uri").otherwise("literal").alias("o_type"),
+        F.when(iri.isNull(), obj["@type"]).alias("o_datatype"),
+        F.when(iri.isNull(), obj["@language"]).alias("o_lang"),
+        *keep,
+    )
 
 
 def read_jsonld(spark: SparkSession, path: str) -> DataFrame:
-    """S3 source: JSON-LD documents (one per line) → triples DataFrame.
-    Line-framed, so the parse distributes per input split with no
-    document-level coordination."""
-    lines = spark.read.text(path).filter(F.length(F.trim("value")) > 0)
-    return lines.mapInPandas(_parse_docs, schema=TRIPLE_SCHEMA)
+    """S3 source: JSON-LD documents (one per line) -> triples DataFrame.
+    ``path`` is a file, a directory or a file-name glob in one
+    directory (``sip/*.meta.json``). Line-framed, so the parse
+    distributes per input split, in built-in expressions only. A
+    boolean ``@value`` reads as its RDF lexical form ``true``/``false``
+    (the earlier Python parser's ``str(True)`` gave ``True``)."""
+    return _triples(_text_lines(spark, path))
 
 
 def read_rdf(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
@@ -259,8 +270,12 @@ def write_jsonld_per_entity(docs: DataFrame, directory: str,
     executors. ``docs`` is a :func:`jsonld_docs` frame of
     (entity, jsonld) rows; each becomes ``<entity><suffix>`` holding
     the document and a newline, UTF-8 encoded (documents keep
-    non-ASCII text). Returns the number of files written, counted by
-    the same action that writes them.
+    non-ASCII text). Each file is written under a dot-prefixed temporary
+    name in ``directory`` and renamed onto its final name, so a killed
+    or retried task leaves no truncated document; directory listings
+    and the ``*<suffix>`` filter skip dot-prefixed names. Returns the
+    number of files written, counted by the same action that writes
+    them.
 
     ``directory`` must be on a filesystem every executor mounts
     (NFS/FUSE-mounted object store; local[n] trivially). The
@@ -270,9 +285,11 @@ def write_jsonld_per_entity(docs: DataFrame, directory: str,
     def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for entity, doc in zip(pdf["entity"], pdf["jsonld"]):
-                path = os.path.join(directory, entity + suffix)
-                with open(path, "w", encoding="utf-8") as fh:
+                name = entity + suffix
+                tmp = os.path.join(directory, f".{name}.{os.getpid()}.tmp")
+                with open(tmp, "w", encoding="utf-8") as fh:
                     fh.write(doc + "\n")
+                os.replace(tmp, os.path.join(directory, name))
             yield pd.DataFrame({"n": [len(pdf)]})
 
     return sum(r["n"] for r in docs.mapInPandas(write, "n long").collect())
@@ -280,36 +297,14 @@ def write_jsonld_per_entity(docs: DataFrame, directory: str,
 
 def scan_sip_dir(spark: SparkSession, directory: str,
                  suffix: str = ".meta.json") -> DataFrame:
-    """S5 directory scan → resource set (razu/sip.py:186-196):
-    glob `*.meta.json`, extract the entity id from the filename with
-    input_file_name + regexp_extract, parse each document to triples.
-    Returns triples plus an `entity_id` column."""
-    lines = (
-        spark.read.text(os.path.join(directory, "*" + suffix))
-        .withColumn(
-            "entity_id",
-            F.regexp_extract(
-                F.input_file_name(), r"([^/]+)" + suffix.replace(".", r"\.") + "$", 1
-            ),
-        )
-        .filter(F.length(F.trim("value")) > 0)
+    """S5 directory scan -> resource set (razu/sip.py:186-196): the
+    ``*<suffix>`` documents of one listed directory parsed to triples,
+    plus an ``entity_id`` column, the filename less its suffix, taken
+    from input_file_name() before the explodes."""
+    lines = _text_lines(spark, os.path.join(directory, "*" + suffix)).withColumn(
+        "entity_id",
+        F.regexp_extract(
+            F.input_file_name(), r"([^/]+)" + suffix.replace(".", r"\.") + "$", 1
+        ),
     )
-    parsed_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in TRIPLE_SCHEMA.fields
-    ) + ", entity_id string"
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # One _parse_lines call per Arrow batch (not per row): the
-        # per-line triple counts fan the batch's entity_id column out
-        # over the parsed rows with a single np.repeat — same
-        # tiny-group fix as jsonld_docs (SCALE.md r5; VERDICT r5 #3).
-        import numpy as np
-
-        for pdf in batches:
-            out, counts = _parse_lines(pdf["value"])
-            out["entity_id"] = np.repeat(
-                pdf["entity_id"].to_numpy(), counts
-            )
-            yield pd.DataFrame(out)
-
-    return lines.mapInPandas(parse, schema=parsed_schema)
+    return _triples(lines, "entity_id")

@@ -11,6 +11,8 @@ requires the parsed-back triple set to be identical.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from razulibs_spark.plans.csv2rdf import compose_filename, csv2rdf_triples
@@ -166,19 +168,33 @@ def test_per_entity_files_and_sip_scan(spark, tmp_path):
     round-trip + P10 filter."""
     from razulibs_spark.operators.events import build_events, events_to_triples
     from razulibs_spark.operators.rdf import valid_triples
-    from razulibs_spark.sources.jsonld import scan_sip_dir, write_jsonld_per_entity
+    from razulibs_spark.sources.jsonld import (
+        owning_entity, read_jsonld, scan_sip_dir, write_jsonld_per_entity,
+    )
 
     metadata, droid, vocab = _fixture(spark)
     triples = csv2rdf_triples(metadata, droid, vocab).cache()
     try:
-        sip = str(tmp_path / "sip")
-        n = write_jsonld_per_entity(jsonld_docs(triples), sip)
+        sip = tmp_path / "sip"
+        n = write_jsonld_per_entity(jsonld_docs(triples), str(sip))
         assert n == 11
-        back = scan_sip_dir(spark, sip)
-        assert back.select("entity_id").distinct().count() == 11
-        # S5 id extraction matches the K1 filenames:
-        assert back.filter(F.col("entity_id") == "NL-WbDRAZU-G0321-661-1").count() > 0
-        assert _triple_set(back.drop("entity_id")) == _triple_set(triples)
+        # What else lives in a SIP directory is not read as a document:
+        # the manifest, the event log (a part-file directory) and a
+        # dot-prefixed leftover that would not even parse.
+        (sip / "manifest.json").write_text('{"a.meta.json": {"MD5Hash": "0"}}\n')
+        write_ntriples(triples.limit(3), str(sip / "eventlog.nt"))
+        (sip / ".stray.meta.json").write_text("{not json\n")
+
+        back = scan_sip_dir(spark, str(sip))
+        # S5 id extraction matches the K1 filenames, row for row:
+        files = {f[:-len(".meta.json")] for f in os.listdir(sip)
+                 if f.endswith(".meta.json") and not f.startswith(".")}
+        assert {r[0] for r in back.select("entity_id").distinct().collect()} == files
+        assert len(files) == 11
+        want = triples.withColumn("entity_id", owning_entity(F.col("s")))
+        for got, exp in [(back, want), (read_jsonld(spark, str(sip / "*.meta.json")), triples)]:
+            exp = exp.select(got.columns)
+            assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
 
         # K4: events → PREMIS triples → JSON-LD round-trip.
         ev = build_events(triples.select("s").distinct().limit(3), "s",

@@ -1132,6 +1132,84 @@ def test_jsonld_docs_carry_across_tiny_arrow_batches(spark):
             assert node[f"urn:p{p}"] == [{"@value": f"v{e}:{p}"}]
 
 
+_LIT = "literal"
+
+
+@pytest.mark.parametrize("doc, want", [
+    pytest.param({"@id": "s", "p": [{"@id": "o"}]},
+                 [("s", "p", "o", "uri", None, None)], id="no_graph"),
+    pytest.param({"@graph": [{"@id": "s", "p": {"@id": "o"}}]},
+                 [("s", "p", "o", "uri", None, None)], id="single_object"),
+    pytest.param({"@id": "s", "p": "x"},
+                 [("s", "p", "x", _LIT, None, None)], id="bare_scalar"),
+    pytest.param({"@id": "s", "p": ["a", "b", "a"]},
+                 [("s", "p", "a", _LIT, None, None), ("s", "p", "b", _LIT, None, None),
+                  ("s", "p", "a", _LIT, None, None)], id="scalar_list"),
+    pytest.param({"@id": "s", "p": [{"@id": "o"}, "x", 7, {"@value": "y"}]},
+                 [("s", "p", "o", "uri", None, None), ("s", "p", "x", _LIT, None, None),
+                  ("s", "p", "7", _LIT, None, None), ("s", "p", "y", _LIT, None, None)],
+                 id="mixed_list"),
+    pytest.param({"@id": "s", "n": [{"@value": 42}], "f": {"@value": 1.5},
+                  "t": [{"@value": True}], "u": [{"@value": False}]},
+                 [("s", "n", "42", _LIT, None, None), ("s", "f", "1.5", _LIT, None, None),
+                  ("s", "t", "true", _LIT, None, None), ("s", "u", "false", _LIT, None, None)],
+                 id="number_boolean_value"),
+    pytest.param({"@context": {"xsd": "http://www.w3.org/2001/XMLSchema#"},
+                  "@graph": [{"@id": "bnode:e1:d", "@type": "ignored",
+                              "p": [{"@value": "hoi", "@language": "nl"},
+                                    {"@value": "2020", "@type": "xsd:gYear"},
+                                    {"@id": "bnode:e1:x"}]}]},
+                 [("bnode:e1:d", "p", "hoi", _LIT, None, "nl"),
+                  ("bnode:e1:d", "p", "2020", _LIT, "xsd:gYear", None),
+                  ("bnode:e1:d", "p", "bnode:e1:x", "bnode", None, None)],
+                 id="language_type_bnode"),
+    pytest.param({"@id": "s", "p": "[1,2]", "q": [{"@value": '{"a": 1}'}]},
+                 [("s", "p", "[1,2]", _LIT, None, None),
+                  ("s", "q", '{"a": 1}', _LIT, None, None)], id="json_lookalike_string"),
+])
+def test_read_jsonld_contract(spark, tmp_path, doc, want):
+    """S3 reader contract over hand-written flat JSON-LD: each document
+    line yields exactly these triples, duplicates included."""
+    import json as _json
+    from collections import Counter
+
+    from razulibs_spark.sources.jsonld import read_jsonld
+
+    path = tmp_path / "doc.jsonld"
+    path.write_text(_json.dumps(doc) + "\n\n", encoding="utf-8")
+    got = read_jsonld(spark, str(path)).collect()
+    assert Counter(map(tuple, got)) == Counter(want)
+
+
+def test_read_jsonld_malformed_document_fails(spark, tmp_path):
+    from razulibs_spark.sources.jsonld import read_jsonld
+
+    path = tmp_path / "bad.jsonld"
+    path.write_text('{"@id": "s", "p": \n', encoding="utf-8")
+    with pytest.raises(Exception, match="MALFORMED"):
+        read_jsonld(spark, str(path)).collect()
+
+
+def test_per_entity_rewrite_is_atomic(spark, tmp_path):
+    """A rewrite replaces an existing document through a dot-prefixed
+    temporary file and leaves no temporary file behind. The old file is
+    renamed over, never truncated: a hard link to it keeps its bytes."""
+    from razulibs_spark.session import local_frame
+    from razulibs_spark.sources.jsonld import write_jsonld_per_entity
+
+    sip = tmp_path / "sip"
+    sip.mkdir()
+    old = '{"old": "and longer than the new one"}\n'
+    (sip / "e1.meta.json").write_text(old)
+    os.link(sip / "e1.meta.json", tmp_path / "old.json")
+    docs = local_frame(spark, [("e1", '{"@id": "s1"}'), ("e2", '{"@id": "s2"}')],
+                       "entity string, jsonld string")
+    assert write_jsonld_per_entity(docs, str(sip)) == 2
+    assert sorted(os.listdir(sip)) == ["e1.meta.json", "e2.meta.json"]
+    assert (sip / "e1.meta.json").read_text() == '{"@id": "s1"}\n'
+    assert (tmp_path / "old.json").read_text() == old
+
+
 def test_ntriples_roundtrip_backslash_letter_adjacency(spark, tmp_path):
     """A raw backslash immediately before n/r/t/quote must survive the
     write->read cycle: decode protects escaped backslashes FIRST, so

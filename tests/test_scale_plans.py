@@ -86,6 +86,25 @@ def test_flagship_no_python_udf_on_hot_path(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_jsonld_reads_list_one_root_with_no_python_worker(spark, tmp_path):
+    from razulibs_spark.session import local_frame
+    from razulibs_spark.sources.jsonld import (
+        read_jsonld, scan_sip_dir, write_jsonld_per_entity,
+    )
+
+    sip = tmp_path / "sip"
+    docs = local_frame(spark, [(f"e{i}", f'{{"@id": "s{i}", "p": "o"}}') for i in range(3)],
+                       "entity string, jsonld string")
+    write_jsonld_per_entity(docs, str(sip))
+    (sip / "manifest.json").write_text("{}\n")
+    for df in (read_jsonld(spark, str(sip / "*.meta.json")), scan_sip_dir(spark, str(sip))):
+        plan = _plan(df)
+        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan
+        # the directory is the one listed root; a glob lists every file
+        assert f"Location: InMemoryFileIndex [file:{sip}]" in plan
+
+
 def test_ivf_assign_is_hash_aggregate_not_window(spark):
     plan = _plan(Q.sim_ivf_assign(spark, SF))
     # argmax via max_by hash aggregate — a per-vector window sort
