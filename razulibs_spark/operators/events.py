@@ -9,6 +9,8 @@ final resources DataFrame resolves "late" by construction.
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -87,9 +89,12 @@ def _event_log(
 ) -> DataFrame:
     """Number ``rows`` (``_subject``, ``outcome``, ``outcome_note``)
     densely by subject from ``id_offset + 1`` and project them onto
-    EVENT_SCHEMA — the one projection both event builders share."""
+    EVENT_SCHEMA — the one projection both event builders share. An
+    event starts when its builder is called on the driver and ends when
+    the plan runs (``current_timestamp``), so ``started_at <= ended_at``."""
     from razulibs_spark.operators.ids import dense_ids
 
+    started_at = datetime.now(timezone.utc)
     ranked = dense_ids(rows, ["_subject"], "event_id", start=id_offset + 1)
     return ranked.select(
         "event_id",
@@ -98,7 +103,7 @@ def _event_log(
         F.lit(actor).alias("implemented_by"),
         "outcome",
         "outcome_note",
-        F.lit(None).cast("timestamp").alias("started_at"),
+        F.lit(started_at).alias("started_at"),
         F.current_timestamp().alias("ended_at"),
         F.lit(tool).cast("string").alias("tool"),
         F.lit(None).cast("string").alias("generated"),

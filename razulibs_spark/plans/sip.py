@@ -61,6 +61,7 @@ def assemble_sip(
     The documents are written from the executors, so ``sip_dir`` must
     be on a filesystem every executor mounts, which a SIP staging area
     on a real cluster is (and local[n] trivially is)."""
+    started_at = datetime.now(timezone.utc)
     eventlog_path = os.path.join(sip_dir, "eventlog.nt")
     if os.path.exists(eventlog_path):
         prior = _read_eventlog(spark, eventlog_path)
@@ -105,13 +106,16 @@ def assemble_sip(
     # ingestion_end. The documents are ranked by filename (r = 1..n):
     # mem is 1 + r, fix is 1 + n + r, and the two singletons are 1 and
     # 2n + 2. Fixity checks the written MD5s against the read-back ones.
+    # Every event spans the assembly: it started when assemble_sip was
+    # called and ended once the read-back scan was checked.
     ended_at = datetime.now(timezone.utc)
 
     def event(event_id, event_type, subject, description, outcome="suc", note=None):
         return {"event_id": event_id, "event_type": event_type,
                 "subjects": [subject], "implemented_by": actor,
                 "outcome": outcome, "outcome_note": note,
-                "ended_at": ended_at, "description": description}
+                "started_at": started_at, "ended_at": ended_at,
+                "description": description}
 
     names = sorted(written)
     n = len(names)

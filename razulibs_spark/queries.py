@@ -11,6 +11,10 @@ bit-identical across engines.
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +49,19 @@ from razulibs_spark.operators.rdf import PropertyMap, entity_to_triples
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
+
+
+def _scratch(name: str) -> str:
+    """``name`` under this process's own directory in the system temp
+    dir, where queries stage the files they write and read back. One
+    directory per process, so two runs or two checkouts on one host
+    never share or clobber each other's files; it is removed when the
+    process exits."""
+    root = os.path.join(tempfile.gettempdir(), f"razulibs-spark-{os.getpid()}")
+    if not os.path.isdir(root):
+        os.makedirs(root, exist_ok=True)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return os.path.join(root, name)
 
 
 def query(name: str, oracle: str | None = None):
@@ -1372,13 +1389,8 @@ def io_parquet_footer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max pruning trustworthy. A writer that mis-sizes groups,
     drops stats, or a reader that scans instead of trusting footers
     all mismatch."""
-    import os
-    import shutil
 
-    base = (
-        "/root/repo/.scratch/pq_footer_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("pq_footer_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base, exist_ok=True)
     docs = T(spark, sf_dir, "documents").select(
@@ -1700,13 +1712,8 @@ def io_csv_dialect_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     dialect on all eight, and the oracle pins dialect, header flag,
     row count and an order-exact id digest per shard. Per-FILE Arrow
     tasks — the sniff reads a prefix, the parse is the same pass."""
-    import os
-    import shutil
 
-    base = (
-        "/root/repo/.scratch/csv_dialects_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("csv_dialects_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base, exist_ok=True)
     docs = T(spark, sf_dir, "documents").select(
@@ -1838,12 +1845,8 @@ def o_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     over ALL events in one pass — a delta row double-counted, an MV
     group lost in the merge, or float drift in the sum (micro-BIGINT
     forbids it) all mismatch."""
-    import os
 
-    base_dir = (
-        "/root/repo/.scratch/incr_mv_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base_dir = _scratch("incr_mv_" + os.path.basename(sf_dir.rstrip("/")))
     events = T(spark, sf_dir, "events").select(
         "ts", "event_type", "user_id", "value"
     )
@@ -1892,14 +1895,12 @@ def streaming_mv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch. Scale: partial aggregation bounds each micro-batch's
     write to |groups|, not |events|; the final re-agg reads
     partial-sized data only."""
-    import os
-    import shutil
 
     from razulibs_spark.streaming.events_stream import read_events_stream
 
     sf_key = os.path.basename(sf_dir.rstrip("/"))
-    mv_dir = f"/root/repo/.scratch/stream_mv_{sf_key}"
-    ckpt = f"/root/repo/.scratch/stream_mv_ckpt_{sf_key}"
+    mv_dir = _scratch(f"stream_mv_{sf_key}")
+    ckpt = _scratch(f"stream_mv_ckpt_{sf_key}")
     shutil.rmtree(mv_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     micro = F.round(F.col("value") * 1000000).cast("long")
@@ -2165,18 +2166,13 @@ def text_wikitext_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch. Scale: dump shards are the distribution unit
     (binaryFile per-file tasks, the Wikimedia multistream layout);
     write is executor-side per partition."""
-    import os
 
     from razulibs_spark.operators.wikitext import (
         read_wiki_dump,
         write_wiki_dump,
     )
 
-    dump_dir = (
-        "/root/repo/.scratch/wiki_dump_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
-    import shutil
+    dump_dir = _scratch("wiki_dump_" + os.path.basename(sf_dir.rstrip("/")))
 
     shutil.rmtree(dump_dir, ignore_errors=True)
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2556,7 +2552,6 @@ def pipeline_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Store path keyed by sf_dir (eager write / lazy read, the
     io_orc_roundtrip rationale)."""
-    import os
 
     from razulibs_spark.operators.html import (
         extract_main_text,
@@ -2567,10 +2562,7 @@ def pipeline_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_warc_responses,
     )
 
-    base = (
-        "/root/repo/.scratch/warc_store_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("warc_store_" + os.path.basename(sf_dir.rstrip("/")))
     pages = synthesize_html_pages(T(spark, sf_dir, "documents")).select(
         F.concat(F.lit("https://ex.org/doc/"), F.col("doc_id")).alias("uri"),
         "html",
@@ -2707,17 +2699,13 @@ def pipeline_warc_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     stat (record count, both statuses, raw byte lengths, response body
     md5) from documents alone — any record dropped, misrouted to the
     wrong branch, or with a mangled payload mismatches."""
-    import os
 
     from razulibs_spark.sources.warc import (
         read_warc,
         write_warc_records,
     )
 
-    base = (
-        "/root/repo/.scratch/warc_mixed_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("warc_mixed_" + os.path.basename(sf_dir.rstrip("/")))
     records = _mixed_warc_records(spark, sf_dir)
     write_warc_records(records.repartition(8), base, compress=True)
     return _warc_mixed_stats(read_warc(spark, base))
@@ -2773,7 +2761,6 @@ def streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Scale shape: per-FILE tasks exactly as batch; a restarted
     query resumes from the checkpoint's file ledger instead of
     re-parsing the corpus."""
-    import os
 
     from razulibs_spark.sources.warc import (
         read_warc_stream,
@@ -2783,10 +2770,7 @@ def streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_append_available_now,
     )
 
-    base = (
-        "/root/repo/.scratch/warc_stream_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("warc_stream_" + os.path.basename(sf_dir.rstrip("/")))
     write_warc_records(
         _mixed_warc_records(spark, sf_dir).repartition(8), base,
         compress=True,
@@ -2824,17 +2808,13 @@ def pipeline_warc_http_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     with no per-variant escape hatch. Payload synthesis is one Arrow
     stage (gzip needs Python); parse-back is the standard per-file
     scan."""
-    import os
 
     from razulibs_spark.sources.warc import (
         read_warc,
         write_warc_records,
     )
 
-    base = (
-        "/root/repo/.scratch/warc_httpdec_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("warc_httpdec_" + os.path.basename(sf_dir.rstrip("/")))
 
     def payload_batches(it):
         import zlib
@@ -2963,7 +2943,6 @@ def pipeline_corpus_from_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     the WET payload, or a broken back-pointer all mismatch. Scale:
     two per-file scans, two Arrow stages, zero joins, zero shuffles
     before the sink."""
-    import os
 
     from razulibs_spark.operators.html import (
         extract_main_text,
@@ -2976,8 +2955,8 @@ def pipeline_corpus_from_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sf_key = os.path.basename(sf_dir.rstrip("/"))
-    src_dir = f"/root/repo/.scratch/crawlcorpus_src_{sf_key}"
-    wet_dir = f"/root/repo/.scratch/crawlcorpus_wet_{sf_key}"
+    src_dir = _scratch(f"crawlcorpus_src_{sf_key}")
+    wet_dir = _scratch(f"crawlcorpus_wet_{sf_key}")
     pages = synthesize_html_pages(T(spark, sf_dir, "documents")).select(
         F.concat(F.lit("https://ex.org/doc/"), F.col("doc_id")).alias("uri"),
         "html",
@@ -3071,7 +3050,6 @@ def pipeline_wet_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     a record id drifting from its response, or a byte lost in either
     WARC roundtrip mismatches. Scale: two per-file scans, two Arrow
     stages, zero joins."""
-    import os
 
     from razulibs_spark.operators.html import (
         extract_main_text,
@@ -3084,8 +3062,8 @@ def pipeline_wet_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sf_key = os.path.basename(sf_dir.rstrip("/"))
-    src_dir = f"/root/repo/.scratch/wet_src_{sf_key}"
-    wet_dir = f"/root/repo/.scratch/wet_store_{sf_key}"
+    src_dir = _scratch(f"wet_src_{sf_key}")
+    wet_dir = _scratch(f"wet_store_{sf_key}")
     pages = synthesize_html_pages(T(spark, sf_dir, "documents")).select(
         F.concat(F.lit("https://ex.org/doc/"), F.col("doc_id")).alias("uri"),
         "html",
@@ -3159,7 +3137,6 @@ def pipeline_wat_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     every JSON field from the planted fixture formulas; a
     mis-serialized field, a dropped record, or a from_json schema
     drift mismatches. Zero joins, zero cache: scan → Arrow → sink."""
-    import os
 
     from razulibs_spark.operators.html import (
         extract_wat,
@@ -3172,8 +3149,8 @@ def pipeline_wat_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sf_key = os.path.basename(sf_dir.rstrip("/"))
-    src_dir = f"/root/repo/.scratch/wat_src_{sf_key}"
-    wat_dir = f"/root/repo/.scratch/wat_store_{sf_key}"
+    src_dir = _scratch(f"wat_src_{sf_key}")
+    wat_dir = _scratch(f"wat_store_{sf_key}")
     pages = synthesize_html_pages(T(spark, sf_dir, "documents")).select(
         F.concat(F.lit("https://ex.org/doc/"), F.col("doc_id")).alias("uri"),
         "html",
@@ -3247,17 +3224,13 @@ def pipeline_revisit_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     response side is corpus-sized); the oracle recomputes the
     recovered digest/length from documents, so a refers_to written or
     parsed wrong, or a revisit body mistaken for content, mismatches."""
-    import os
 
     from razulibs_spark.sources.warc import (
         read_warc,
         write_warc_records,
     )
 
-    base = (
-        "/root/repo/.scratch/warc_revisit_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("warc_revisit_" + os.path.basename(sf_dir.rstrip("/")))
     crlf = "\r\n"
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
     uri = F.concat(
@@ -3340,7 +3313,6 @@ def pipeline_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure codegen after the parse. Requests and revisits must NOT
     index (a revisit's empty body would corrupt dedup digests); the
     oracle recomputes every field from documents alone."""
-    import os
 
     from razulibs_spark.sources.warc import (
         cdx_from_records,
@@ -3348,10 +3320,7 @@ def pipeline_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_warc_records,
     )
 
-    base = (
-        "/root/repo/.scratch/warc_cdx_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("warc_cdx_" + os.path.basename(sf_dir.rstrip("/")))
     write_warc_records(
         _mixed_warc_records(spark, sf_dir).repartition(8), base,
         compress=True,
@@ -3387,12 +3356,8 @@ def _archive_roundtrip(
     and body digest is recomputed by the oracle — a member dropped by
     the central-directory walk or a byte lost to the container
     mismatches."""
-    import os
 
-    base = (
-        f"/root/repo/.scratch/{tag}_store_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch(f"{tag}_store_" + os.path.basename(sf_dir.rstrip("/")))
     members = T(spark, sf_dir, "documents").select(
         F.concat(
             F.lit("doc-"), F.col("doc_id").cast("string"), F.lit(".txt")
@@ -3545,7 +3510,6 @@ def pipeline_sitemap_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority mis-formatted mismatches.
 
     Store path keyed by sf_dir (the io_orc_roundtrip rationale)."""
-    import os
 
     from razulibs_spark.sources.sitemap import (
         read_sitemaps,
@@ -3553,10 +3517,7 @@ def pipeline_sitemap_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_urlset_files,
     )
 
-    base = (
-        "/root/repo/.scratch/sitemap_store_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("sitemap_store_" + os.path.basename(sf_dir.rstrip("/")))
     docs = T(spark, sf_dir, "documents")
     urls = docs.select(
         F.concat(F.lit("h"), F.col("doc_id") % 8).alias("host"),
@@ -3618,7 +3579,6 @@ def pipeline_sitemap_discovery(
     mix-up changes the surviving set.
 
     Store path keyed by sf_dir (the io_orc_roundtrip rationale)."""
-    import os
 
     from razulibs_spark.operators.robots import discover_sitemaps
     from razulibs_spark.sources.sitemap import (
@@ -3626,10 +3586,7 @@ def pipeline_sitemap_discovery(
         write_urlset_files,
     )
 
-    base = (
-        "/root/repo/.scratch/sitemap_disc_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("sitemap_disc_" + os.path.basename(sf_dir.rstrip("/")))
     docs = T(spark, sf_dir, "documents")
     urls = docs.select(
         (F.col("doc_id") % 8).alias("hk"),
@@ -3973,17 +3930,13 @@ def pipeline_recrawl_due(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents — a changefreq dropped by the writer or a date slip in
     the scan flips a due flag. All codegen after the scan; the
     frontier's recrawl feed at 100 TB is this exact projection."""
-    import os
 
     from razulibs_spark.sources.sitemap import (
         read_sitemaps,
         write_urlset_files,
     )
 
-    base = (
-        "/root/repo/.scratch/recrawl_store_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("recrawl_store_" + os.path.basename(sf_dir.rstrip("/")))
     docs = T(spark, sf_dir, "documents")
     urls = docs.select(
         F.concat(F.lit("h"), F.col("doc_id") % 8).alias("host"),
@@ -4936,12 +4889,10 @@ def s6_manifest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     at NFS/Fuse-mounted storage or swap the writer for an object-store
     client) — the binaryFile re-scan runs from the driver's view of
     the same path."""
-    import os
-    import shutil
 
     from razulibs_spark.operators.manifest import manifest_from_directory
 
-    base = "/root/repo/.scratch/s6_store"
+    base = _scratch("s6_store")
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base + "/bestanden", exist_ok=True)
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
@@ -4983,14 +4934,10 @@ def io_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Store path keyed by sf_dir for the same eager-write/lazy-read
     reason as io_orc_roundtrip."""
-    import os
 
     from razulibs_spark.sources.avro import read_avro, write_avro
 
-    base = (
-        "/root/repo/.scratch/avro_store_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("avro_store_" + os.path.basename(sf_dir.rstrip("/")))
     docs = T(spark, sf_dir, "documents")
     write_avro(docs, base, partition_by=["lang"])
     back = read_avro(spark, base)
@@ -5033,12 +4980,8 @@ def io_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame construction but the read is lazy, so a shared path
     would let a later construction at another scale factor clobber
     the store an earlier DataFrame still points at."""
-    import os
 
-    base = (
-        "/root/repo/.scratch/orc_store_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("orc_store_" + os.path.basename(sf_dir.rstrip("/")))
     orders = T(spark, sf_dir, "orders")
     orders.write.mode("overwrite").partitionBy("o_orderpriority").orc(base)
     back = spark.read.orc(base)
@@ -5080,12 +5023,8 @@ def io_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     time (not a data pass) — acceptable per-batch, and the reason
     production tables pin a catalog schema once evolution settles.
     Store path keyed by sf_dir (eager write / lazy read)."""
-    import os
 
-    base = (
-        "/root/repo/.scratch/evo_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("evo_" + os.path.basename(sf_dir.rstrip("/")))
     orders = T(spark, sf_dir, "orders")
     old = orders.filter(F.month("o_orderdate") <= 6).select(
         "o_orderkey", "o_totalprice"
@@ -5682,7 +5621,7 @@ def k2_ntriples_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is lossless. Both directions are per-line, shuffle-free."""
     from razulibs_spark.sources.rdf_io import read_ntriples, write_ntriples
 
-    path = "/root/repo/.scratch/ntriples_rt"
+    path = _scratch("ntriples_rt")
     write_ntriples(_o2_triples_full(spark, sf_dir), path)
     return read_ntriples(spark, path).select("s", "p", "o")
 
@@ -5702,7 +5641,7 @@ def k1_jsonld_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle checks document (de)serialization is the identity."""
     from razulibs_spark.sources.jsonld import read_jsonld, write_jsonld
 
-    path = "/root/repo/.scratch/jsonld_rt"
+    path = _scratch("jsonld_rt")
     write_jsonld(_o2_triples_full(spark, sf_dir), path)
     return read_jsonld(spark, path).select("s", "p", "o")
 
@@ -5725,7 +5664,7 @@ def k2_turtle_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from razulibs_spark.operators.rdf import compact_triples, expand_triples
     from razulibs_spark.sources.rdf_io import read_turtle, write_turtle
 
-    path = "/root/repo/.scratch/turtle_rt"
+    path = _scratch("turtle_rt")
     write_turtle(expand_triples(_o2_triples_full(spark, sf_dir)), path)
     return compact_triples(read_turtle(spark, path)).select("s", "p", "o")
 
@@ -5748,7 +5687,7 @@ def k2_rdfxml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from razulibs_spark.operators.rdf import compact_triples, expand_triples
     from razulibs_spark.sources.rdfxml import read_rdfxml, write_rdfxml
 
-    path = "/root/repo/.scratch/rdfxml_rt"
+    path = _scratch("rdfxml_rt")
     write_rdfxml(expand_triples(_o2_triples_full(spark, sf_dir)), path)
     return compact_triples(read_rdfxml(spark, path)).select("s", "p", "o")
 
@@ -5818,7 +5757,7 @@ def k2_trig_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     set including the graph labels (null = default graph)."""
     from razulibs_spark.sources.rdfxml import read_trig, write_trig
 
-    path = "/root/repo/.scratch/trig_rt"
+    path = _scratch("trig_rt")
     write_trig(_quads_for_roundtrip(spark, sf_dir), path)
     return _compact_quads(read_trig(spark, path))
 
@@ -5831,7 +5770,7 @@ def k2_trix_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/rdfxml.py). Same quad oracle as TriG."""
     from razulibs_spark.sources.rdfxml import read_trix, write_trix
 
-    path = "/root/repo/.scratch/trix_rt"
+    path = _scratch("trix_rt")
     write_trix(_quads_for_roundtrip(spark, sf_dir), path)
     return _compact_quads(read_trix(spark, path))
 
@@ -10496,12 +10435,8 @@ def io_jsonl_gz_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-lang char sums to hash-match the parquet-derived oracle.
     Store path keyed by sf_dir (same eager-write/lazy-read hazard as
     io_orc_roundtrip)."""
-    import os
 
-    base = (
-        "/root/repo/.scratch/jsonl_gz_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("jsonl_gz_" + os.path.basename(sf_dir.rstrip("/")))
     docs = T(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "text"
     )
@@ -10539,13 +10474,8 @@ def io_bz2_foreign_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id digest must hash-match the parquet oracle: one record
     lost at a block boundary or one byte mangled in transcoding
     mismatches."""
-    import os
-    import shutil
 
-    base = (
-        "/root/repo/.scratch/jsonl_bz2_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("jsonl_bz2_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base, exist_ok=True)
     docs = T(spark, sf_dir, "documents").select(
@@ -12765,22 +12695,20 @@ def io_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-shuffle-per-read pattern a 100 TB store uses for its
     recurring entity↔payload joins. Tables are keyed by sf so an
     eager write at one scale never clobbers a lazy read at another;
-    the database pins LOCATION under .scratch so no spark-warehouse
+    the database pins LOCATION under _scratch so no spark-warehouse
     directory appears wherever the harness happens to cwd."""
-    import os
-    import shutil
 
     sfx = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     spark.sql(
         "CREATE DATABASE IF NOT EXISTS bjq "
-        "LOCATION '/root/repo/.scratch/bucketed_db'"
+        f"LOCATION '{_scratch('bucketed_db')}'"
     )
     # A fresh session's in-memory catalog can't see (and so can't
     # overwrite) tables a previous session left on disk — drop any
     # catalog entry AND clear the stale managed locations explicitly.
     for t in (f"orders_{sfx}", f"lineitem_{sfx}"):
         spark.sql(f"DROP TABLE IF EXISTS bjq.{t}")
-        shutil.rmtree(f"/root/repo/.scratch/bucketed_db/{t}",
+        shutil.rmtree(_scratch(f"bucketed_db/{t}"),
                       ignore_errors=True)
     from razulibs_spark.sources.bucketed import save_bucketed
 
@@ -13022,14 +12950,10 @@ def io_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_scale_plans.py::test_partition_pruning); at 100 TB this
     is the difference between a directory lookup and a full scan.
     Store path keyed by sf_dir (eager write, lazy read)."""
-    import os
 
     from razulibs_spark.sources.bucketed import save_partitioned
 
-    base = (
-        "/root/repo/.scratch/partitioned_docs_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("partitioned_docs_" + os.path.basename(sf_dir.rstrip("/")))
     docs = T(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars", "source"
     )
@@ -13073,12 +12997,8 @@ def io_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero corrupt records — the n_parsed_ids column both pins that
     caveat and proves poison rows carry no usable key. Same executor-side store pattern as
     s6_manifest_scan (path keyed by sf)."""
-    import os
 
-    base = (
-        "/root/repo/.scratch/csv_malformed_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("csv_malformed_" + os.path.basename(sf_dir.rstrip("/")))
     docs = T(spark, sf_dir, "documents").select("doc_id", "lang")
     lines = docs.select(
         F.when(
@@ -13312,15 +13232,10 @@ def k2_turtle_foreign(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-FILE binaryFile tasks (statements span lines, so the
     file is the honest split unit); the pivot is one hash
     aggregation."""
-    import os
-    import shutil
 
     from razulibs_spark.sources.turtle_full import XSD, read_turtle_full
 
-    base = (
-        "/root/repo/.scratch/turtle_foreign_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("turtle_foreign_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(base, ignore_errors=True)
 
     d = F.col("doc_id")
@@ -13585,7 +13500,7 @@ def k2_turtle_grouped_roundtrip(
         F.lit(None).cast("string").alias("o_lang"),
     )
     triples = _o2_triples_full(spark, sf_dir).unionByName(hub)
-    path = "/root/repo/.scratch/turtle_grouped_rt"
+    path = _scratch("turtle_grouped_rt")
     write_turtle_grouped(
         expand_triples(triples), path, obj_cap=100, pred_cap=4
     )
@@ -13878,13 +13793,8 @@ def io_schema_contract_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     is schema metadata (driver-side, O(columns)) plus one
     null-counting aggregate per snapshot — no joins, no shuffle
     beyond the two 1-row aggs."""
-    import os
-    import shutil
 
-    base = (
-        "/root/repo/.scratch/schema_diff_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = _scratch("schema_diff_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(base, ignore_errors=True)
     docs = T(spark, sf_dir, "documents")
     a = docs.select(
@@ -14232,7 +14142,7 @@ def k2_turtle_sharded_roundtrip(
     header = spark.range(1).select(
         F.lit(TURTLE_FULL_HEADER.rstrip("\n")).alias("value")
     )
-    path = "/root/repo/.scratch/turtle_sharded_rt"
+    path = _scratch("turtle_sharded_rt")
     # ONE physical file, the dump shape (the single-file write is the
     # fixture constructor, not the engine plan — real dumps arrive as
     # one file; the point under test is reading it back distributed).
@@ -14340,7 +14250,7 @@ def text_mbox_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                     vals.append(_FROM_LINE + "\n" + mbox_escape(msg))
             yield pd.DataFrame({"value": vals})
 
-    path = "/root/repo/.scratch/mbox_rt"
+    path = _scratch("mbox_rt")
     (
         T(spark, sf_dir, "documents")
         .select("doc_id", "text")
@@ -14369,18 +14279,13 @@ def text_wiki_sharded_extract(
     straddle split boundaries, and the SAME wikitext stripping runs
     in the Arrow stage. Identical oracle to the per-file entry:
     sharding must be invisible to extraction."""
-    import os
-    import shutil
 
     from razulibs_spark.operators.wikitext import (
         read_wiki_dump_sharded,
         write_wiki_dump,
     )
 
-    dump_dir = (
-        "/root/repo/.scratch/wiki_dump1_"
-        + os.path.basename(sf_dir.rstrip("/"))
-    )
+    dump_dir = _scratch("wiki_dump1_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(dump_dir, ignore_errors=True)
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
     write_wiki_dump(docs.coalesce(1), dump_dir)

@@ -215,16 +215,19 @@ def read_rdf(spark: SparkSession, path: str, fmt: str | None = None) -> DataFram
     the extension decides, with an explicit override —
     content-sniffing a 100 TB input is not a plan, a schema is).
 
-    All eight reference formats dispatch: the line-framed five
-    (jsonld/nt/ttl/n3/nq) parse per input split; the document-framed
-    three (rdfxml/trig/trix — sources/rdfxml.py) parse per file.
+    All eight reference formats dispatch: the line-framed three
+    (jsonld/nt/nq) parse per input split; Turtle/N3 and the
+    document-framed three (rdfxml/trig/trix — sources/rdfxml.py) parse
+    per file. Turtle goes to the full-grammar reader
+    (``turtle_full.read_turtle_full``): a statement may span lines and
+    carry ``;``/``,`` lists, which the line-subset ``rdf_io.read_turtle``
+    (``write_turtle``'s inverse) would mis-parse without an error.
     Graph labels of quad formats (nquads/trig/trix) are dropped here —
     S4's contract is a triples frame; use the readers directly for the
     quad shape."""
-    from razulibs_spark.sources.rdf_io import (
-        read_nquads, read_ntriples, read_turtle,
-    )
+    from razulibs_spark.sources.rdf_io import read_nquads, read_ntriples
     from razulibs_spark.sources.rdfxml import read_rdfxml, read_trig, read_trix
+    from razulibs_spark.sources.turtle_full import read_turtle_full
 
     if fmt is None:
         low = path.lower().rstrip("/")
@@ -251,7 +254,8 @@ def read_rdf(spark: SparkSession, path: str, fmt: str | None = None) -> DataFram
     if fmt == "ntriples":
         return read_ntriples(spark, path)
     if fmt in ("turtle", "n3"):
-        return read_turtle(spark, path)
+        # every file of a directory, as the line-framed readers take it
+        return read_turtle_full(spark, path, glob="*")
     if fmt == "nquads":
         return read_nquads(spark, path).drop("g")
     if fmt in ("rdfxml", "xml"):

@@ -17,11 +17,14 @@ Usage:
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF1 = os.path.join(ROOT, ".scratch", "sf1")
+sys.path.insert(0, ROOT)
 
 HEAVY = [
     "text_pdf_extract",
@@ -71,12 +74,10 @@ def build_sf1() -> None:
     together so joins stay consistent), per-copy text prefix and
     vector perturbation keep dedup/ANN collision rates realistic,
     dims copied verbatim."""
-    import os
-
     import duckdb
 
     src = "/root/testdata/sf0.1"
-    dst = "/root/repo/.scratch/sf1"
+    dst = SF1
     os.makedirs(dst, exist_ok=True)
     con = duckdb.connect()
     for t in ["customer", "part", "supplier", "nation", "region"]:
@@ -133,7 +134,7 @@ def main() -> None:
     seen: set = set()
     for sf_dir, label in (
         ("/root/testdata/sf0.1", "sf0.1"),
-        ("/root/repo/.scratch/sf1", "sf1"),
+        (SF1, "sf1"),
     ):
         for name in names:
             fn = qs[name]

@@ -559,8 +559,8 @@ SIP_EVENT_IDS = {
 def test_sip_event_log_characterization(spark, tmp_path):
     """The SIP event log on the golden fixture, as returned and as
     written to eventlog.nt: every event's id, type, subject,
-    description, outcome, note and actor. Only ``ended_at`` is left
-    free."""
+    description, outcome, note and actor. The times are left free but
+    must be set and ordered: every event spans the assembly."""
     import hashlib
     import os
 
@@ -571,11 +571,16 @@ def test_sip_event_log_characterization(spark, tmp_path):
     sip = str(tmp_path / "sip")
     out = assemble_sip(spark, csv2rdf_triples(metadata, droid, vocab), sip)
     try:
-        got = {r["event_id"]: (r["event_type"], list(r["subjects"]), r["description"],
-                               r["outcome"], r["outcome_note"], r["implemented_by"])
-               for r in out["events"].collect()}
+        rows = out["events"].collect()
     finally:
         _release(out)
+    got = {r["event_id"]: (r["event_type"], list(r["subjects"]), r["description"],
+                           r["outcome"], r["outcome_note"], r["implemented_by"])
+           for r in rows}
+    spans = {(r["started_at"], r["ended_at"]) for r in rows}
+    assert len(spans) == 1
+    ((started_at, ended_at),) = spans
+    assert started_at is not None and started_at <= ended_at
 
     actor = "https://data.razu.nl/id/actor/razu"
     want = {1: ("ins", [sip], "Ingestion started.", "suc", None, actor),

@@ -5,9 +5,6 @@ spent on entries that benefit from driver verification."""
 from __future__ import annotations
 
 import importlib
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 _entry = importlib.import_module("__spark_entry__")
 from razulibs_spark import queries as Q  # noqa: E402

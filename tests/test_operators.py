@@ -272,6 +272,9 @@ def test_event_builders_and_lock(spark):
     rows = sorted(log.collect(), key=lambda r: r["event_id"])
     assert [r["event_id"] for r in rows] == [1, 2]
     assert rows[0]["subjects"] == ["urn:a"] and rows[0]["event_type"] == "mem"
+    # real PREMIS times: started when the builder ran, ended at execution
+    assert all(r["started_at"] is not None and r["started_at"] <= r["ended_at"]
+               for r in rows)
     assert not ev.is_locked(log)
     assert ev.max_event_id(log) == 2
 

@@ -677,7 +677,7 @@ def test_jsonl_gz_reads_with_explicit_schema(spark):
 
     df = Q.io_jsonl_gz_roundtrip(spark, SF)
     df.collect()
-    files = glob.glob("/root/repo/.scratch/jsonl_gz_sf0.001/*.json.gz")
+    files = glob.glob(Q._scratch("jsonl_gz_sf0.001/*.json.gz"))
     assert files, "expected gzip-compressed part files"
     assert [f.name for f in df.schema.fields] == [
         "lang", "n_docs", "sum_chars", "n_sources"
@@ -857,7 +857,7 @@ def test_cdx_index_single_parse_pass_no_cartesian(spark):
     assert "Join" not in plan
 
 
-def test_streaming_warc_ingest_shares_batch_parse(spark):
+def test_streaming_warc_ingest_shares_batch_parse(spark, tmp_path):
     """The streaming reader reuses the exact batch Arrow parse stage —
     one implementation of the record grammar (the vocab-lesson applied
     to crawl ingestion)."""
@@ -866,7 +866,7 @@ def test_streaming_warc_ingest_shares_batch_parse(spark):
         read_warc_stream,
     )
 
-    df = read_warc_stream(spark, "/root/repo/.scratch")
+    df = read_warc_stream(spark, str(tmp_path))
     assert df.isStreaming
     # the shared stage is the module-level function, not a copy
     import razulibs_spark.sources.warc as w
@@ -906,9 +906,6 @@ def test_wat_derive_single_arrow_pass_no_join(spark):
     """WAT metadata comes from ONE extract_page pass — a regression
     to the two-pass shape reintroduces a join and an extra Python
     stage over every page."""
-    import os
-
-    os.makedirs("/root/repo/.scratch", exist_ok=True)
     df = Q.pipeline_wat_derive(spark, SF)
     plan = _plan(df)
     assert "Join" not in plan

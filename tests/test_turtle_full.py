@@ -364,3 +364,33 @@ def test_sharded_equals_per_file_reader(spark, tmp_path):
     }
     assert sharded == perfile
     assert len(sharded) == 8 * 6
+
+
+def test_read_rdf_routes_turtle_to_full_grammar(spark, tmp_path):
+    """``read_rdf`` on a .ttl/.n3 file parses the full grammar: a
+    statement over several lines with a ``;`` predicate list and a
+    ``,`` object list gives exactly its triples (the line-subset
+    reader drops or mangles such statements without an error)."""
+    from razulibs_spark.sources.jsonld import read_rdf
+
+    text = _ttl(
+        "ex:a a ex:T ;\n"
+        '    ex:name "Alpha"@nl ;\n'
+        "    ex:knows ex:b ,\n"
+        "             ex:c .\n"
+        "ex:b\n"
+        "    ex:size 3 .\n"
+    )
+    want = {
+        (EX + "a", RDF_NS + "type", EX + "T", "uri", None, None),
+        (EX + "a", EX + "name", "Alpha", "literal", None, "nl"),
+        (EX + "a", EX + "knows", EX + "b", "uri", None, None),
+        (EX + "a", EX + "knows", EX + "c", "uri", None, None),
+        (EX + "b", EX + "size", "3", "literal", XSD + "integer", None),
+    }
+    for name in ("doc.ttl", "doc.n3"):
+        path = tmp_path / name
+        path.write_text(text)
+        got = read_rdf(spark, str(path)).collect()
+        assert len(got) == len(want)
+        assert {tuple(r) for r in got} == want
