@@ -21,7 +21,7 @@ from pyspark.sql.types import (
 
 from razulibs_spark.functions.scalars import full_extension, normalize_path
 from razulibs_spark.operators.relational import changed_or_new, reconcile_full_outer
-from razulibs_spark.session import local_frame
+from razulibs_spark.session import each_partition, local_frame
 
 MANIFEST_SCHEMA = StructType(
     [
@@ -129,11 +129,10 @@ def sync_to_local_store(plan: DataFrame, source_root: str, dest_root: str) -> in
     incremental_sync_plan by copying each `filename` from
     `source_root` to `dest_root`, per partition — the decision of
     *what* to copy is the J5 anti-join, never a per-file stat probe.
-    Returns the number of files copied (accumulator, A4-style)."""
+    Returns the number of files copied (A4), counted by the action that
+    copies them (`session.each_partition`)."""
     import os
     import shutil
-
-    n = plan.sparkSession.sparkContext.accumulator(0)
 
     def copy(rows) -> None:
         for row in rows:
@@ -141,10 +140,8 @@ def sync_to_local_store(plan: DataFrame, source_root: str, dest_root: str) -> in
             dst = os.path.join(dest_root, row["filename"])
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             shutil.copyfile(src, dst)
-            n.add(1)
 
-    plan.select("filename").foreachPartition(copy)
-    return n.value
+    return each_partition(plan.select("filename"), copy)
 
 
 # F20 — tool signature extraction (razu/application_registry.py:49-70):

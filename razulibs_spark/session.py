@@ -35,7 +35,7 @@ plans.
 from __future__ import annotations
 
 import os
-from typing import Any, Mapping, Sequence
+from typing import Any, Callable, Iterator, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -95,3 +95,40 @@ def local_frame(
     records = [r if isinstance(r, Mapping) else dict(zip(struct.names, r)) for r in rows]
     table = pa.Table.from_pylist(records, schema=to_arrow_schema(struct))
     return spark.createDataFrame(table, schema=struct)
+
+
+def each_partition(df: DataFrame, fn: Callable[[Iterator[dict]], None]) -> int:
+    """Run the side effect ``fn(rows)`` once per partition on the
+    executors and return the number of rows it consumed.
+
+    ``rows`` is an iterator of dicts keyed by column name. The frame is
+    coalesced to one partition per core (never more partitions, never a
+    shuffle) and run through ``mapInArrow``, the SQL Arrow runner that
+    ``mapInPandas`` also uses, so the side effects share the session's
+    one Python worker pool and pay its fixed per-task cost once per
+    core. ``foreachPartition`` would start a second pool, keyed apart
+    by its environment, and run one task per input partition. The count
+    is summed from the same action's result; no accumulator is needed."""
+    import pyarrow as pa
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        n = 0
+
+        def rows() -> Iterator[dict]:
+            nonlocal n
+            for batch in batches:
+                for row in batch.to_pylist():
+                    n += 1
+                    yield row
+
+        fn(rows())
+        yield pa.RecordBatch.from_pydict({"n": [n]})
+
+    width = df.sparkSession.sparkContext.defaultParallelism
+    # The optimizer folds coalesce(width) over a caller's own coalesce
+    # into one coalesce(width), which would undo a narrower one (a
+    # caller bounding its request parallelism); keep the narrower width.
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.nodeName() == "Repartition" and not plan.shuffle():
+        width = min(width, plan.numPartitions())
+    return sum(r["n"] for r in df.coalesce(width).mapInArrow(run, "n long").collect())

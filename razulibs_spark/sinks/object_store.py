@@ -4,7 +4,8 @@ re-expressing razu/s3storage.py and razu/edepot.py set-at-a-time.
 
 The reference loops one HTTPS call per object on one machine
 (edepot.py:127-147: head_object per key, upload per file, sequential).
-Here every side effect runs in `foreachPartition` — one client per
+Here every side effect runs through `session.each_partition` — one
+task per core in the session's one Python worker pool, one client per
 partition, objects streamed per executor — and every *decision* (which
 keys are new, which differ, which failed) is a DataFrame join, not a
 per-key probe:
@@ -12,9 +13,11 @@ per-key probe:
 - P9 only-if-new  → left-anti join manifest × one LIST (S9), replacing
   N head_object round-trips with one paginated listing.
 - K8 delete       → ≤1000-key batches per API call (edepot.py:216-221)
-  inside foreachPartition; reconciliation is a re-list + left-anti
+  inside each partition; reconciliation is a re-list + left-anti
   join (J6), exactly edepot.py:223-250's "which are still there".
-- J7 verification → manifest ⋈ listing on key, md5 vs ETag.
+- J7 verification → `verify_upload`: expected (key, md5hash) ⋈ one
+  LIST on key, the MD5 against the ETag; a multipart `-N` ETag is not
+  an MD5 and is flagged for a re-hash (edepot.py:257-269).
 
 Clients are pluggable via a serializable zero-arg factory so the same
 plans run against real S3 (boto3, import-gated — not baked into this
@@ -23,6 +26,7 @@ container) or the deterministic `LocalFSClient` used by the tests.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import mimetypes
 import os
@@ -34,7 +38,7 @@ from typing import Callable, Iterable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from razulibs_spark.session import local_frame
+from razulibs_spark.session import each_partition, local_frame
 
 DELETE_BATCH_SIZE = 1000  # edepot.py:216-221 API limit
 
@@ -50,7 +54,7 @@ def make_boto3_client_factory(
     the OBJECT_STORE_ENDPOINT env var; credentials ride the standard
     AWS env/config chain or explicit ``session_kwargs``. The factory
     closes over plain strings only, so it serializes into
-    foreachPartition tasks unchanged."""
+    executor tasks unchanged."""
 
     def factory():
         import boto3  # noqa: PLC0415
@@ -75,7 +79,11 @@ class LocalFSClient:
     outside every bucket (``<root>/_meta/<bucket>/<key>``,
     ``<root>/_acl/<bucket>/<key>``; no S3 bucket name starts with
     ``_``), so any key — ``*.meta.json`` included — lists exactly as
-    uploaded, and no sidecar shows up as an object."""
+    uploaded, and no sidecar shows up as an object.
+
+    A listed object's ETag is the hex MD5 of its bytes as they are now,
+    the way S3 reports it for a single-part PUT, so a changed object
+    fails fixity against the MD5 of the file that was uploaded."""
 
     def __init__(self, root: str):
         self.root = root
@@ -122,7 +130,7 @@ class LocalFSClient:
                 key = os.path.relpath(full, base)
                 if key.startswith(Prefix):
                     out.append({"Key": key, "Size": os.path.getsize(full),
-                                "ETag": '"%d"' % os.path.getsize(full)})
+                                "ETag": '"%s"' % _md5_file(full)})
         return {"Contents": sorted(out, key=lambda o: o["Key"]),
                 "IsTruncated": False}
 
@@ -134,6 +142,14 @@ class LocalFSClient:
 
     def put_object_acl(self, Bucket, Key, ACL):
         self._write_sidecar("_acl", Bucket, Key, ACL)
+
+
+def _md5_file(path: str) -> str:
+    h = hashlib.md5()
+    with open(path, "rb") as fh:
+        for chunk in iter(lambda: fh.read(1 << 20), b""):
+            h.update(chunk)
+    return h.hexdigest()
 
 
 def make_local_client_factory(root: str) -> Callable[[], LocalFSClient]:
@@ -190,14 +206,13 @@ def upload_from_manifest(manifest: DataFrame, bucket: str, client_factory,
     (from list_objects), only-if-new keys are selected by a left-anti
     join — the set-at-a-time form of the reference's per-key
     head_object probe (P9, edepot.py:137-142). Returns the number of
-    files shipped (counted with an accumulator, A4-style)."""
+    files shipped (A4), counted by the action that ships them."""
     todo = manifest
     if listing is not None:
         todo = manifest.join(listing.select("key"), "key", "left_anti")
-    n = manifest.sparkSession.sparkContext.accumulator(0)
     meta_cols = list(meta_cols)
 
-    def ship(rows: Iterator) -> None:
+    def ship(rows: Iterator[dict]) -> None:
         client = client_factory()
         for row in rows:
             extra = encode_metadata({c: row[c] for c in meta_cols if row[c] is not None})
@@ -205,10 +220,36 @@ def upload_from_manifest(manifest: DataFrame, bucket: str, client_factory,
                 Filename=row["local_path"], Bucket=bucket, Key=row["key"],
                 ExtraArgs={"ContentType": guess_mime(row["key"]), **extra},
             )
-            n.add(1)
 
-    todo.select("key", "local_path", *meta_cols).foreachPartition(ship)
-    return n.value
+    return each_partition(todo.select("key", "local_path", *meta_cols), ship)
+
+
+# ---------------------------------------------------------------------------
+# J7 — upload verification.
+# ---------------------------------------------------------------------------
+
+def verify_upload(expected: DataFrame, listing: DataFrame) -> DataFrame:
+    """J7 (edepot.py:257-269, s3storage.py:219-255): the expected
+    (key, md5hash) rows that the bucket does not verify, as
+    (key, status) rows. ``listing`` is a list_objects frame taken after
+    the upload. ``missing_remote``: the key is not listed;
+    ``multipart_recheck``: a multipart ``-N`` ETag, which is not the
+    object's MD5, so the object must be re-hashed; ``md5_mismatch``:
+    the ETag is not the expected MD5 (or there is no expected MD5 to
+    compare it with). An empty frame means every expected object is in
+    the bucket with the expected bytes."""
+    etag = F.col("etag")
+    status = (
+        F.when(etag.isNull(), "missing_remote")
+        .when(etag.contains("-"), "multipart_recheck")
+        .when(~etag.eqNullSafe(F.col("md5hash")), "md5_mismatch")
+    )
+    return (
+        expected.select("key", "md5hash")
+        .join(listing.select("key", "etag"), "key", "left")
+        .select("key", status.alias("status"))
+        .filter(F.col("status").isNotNull())
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -217,10 +258,11 @@ def upload_from_manifest(manifest: DataFrame, bucket: str, client_factory,
 
 def delete_keys(keys: DataFrame, bucket: str, client_factory) -> None:
     """K8 (edepot.py:154-255): delete in ≤1000-key API batches. Each
-    partition chunks locally — no collect, no driver bottleneck; bound
-    partition count with repartition() to bound request parallelism."""
+    partition chunks locally — no collect, no driver bottleneck; at
+    most one partition per core runs, so at most that many requests
+    are in flight; coalesce() lower to bound it further."""
 
-    def drop(rows: Iterator) -> None:
+    def drop(rows: Iterator[dict]) -> None:
         client = client_factory()
         batch = []
         for row in rows:
@@ -231,7 +273,7 @@ def delete_keys(keys: DataFrame, bucket: str, client_factory) -> None:
         if batch:
             client.delete_objects(Bucket=bucket, Delete={"Objects": batch})
 
-    keys.select("key").foreachPartition(drop)
+    each_partition(keys.select("key"), drop)
 
 
 def delete_and_reconcile(spark: SparkSession, keys: DataFrame, bucket: str,
@@ -254,7 +296,7 @@ def rewrite_metadata(entries: DataFrame, bucket: str, client_factory,
     MetadataDirective=REPLACE, per partition."""
     meta_cols = list(meta_cols)
 
-    def rewrite(rows: Iterator) -> None:
+    def rewrite(rows: Iterator[dict]) -> None:
         client = client_factory()
         for row in rows:
             client.copy_object(
@@ -265,7 +307,7 @@ def rewrite_metadata(entries: DataFrame, bucket: str, client_factory,
                 MetadataDirective="REPLACE",
             )
 
-    entries.select("key", *meta_cols).foreachPartition(rewrite)
+    each_partition(entries.select("key", *meta_cols), rewrite)
 
 
 def update_acl(entries: DataFrame, bucket: str, client_factory,
@@ -273,9 +315,9 @@ def update_acl(entries: DataFrame, bucket: str, client_factory,
     """K10 (edepot.py:271-304): per-entry ACL update; filter upstream
     (the reference's closure filters are plain DataFrame filters)."""
 
-    def put(rows: Iterator) -> None:
+    def put(rows: Iterator[dict]) -> None:
         client = client_factory()
         for row in rows:
             client.put_object_acl(Bucket=bucket, Key=row["key"], ACL=acl)
 
-    entries.select("key").foreachPartition(put)
+    each_partition(entries.select("key"), put)

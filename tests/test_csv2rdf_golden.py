@@ -346,6 +346,60 @@ def test_sip_assembly_and_lock(spark, tmp_path):
         _release(out)
 
 
+def test_sip_assembly_lock_is_exclusive(spark, tmp_path):
+    """Two assemblies racing on one sip_dir: the lock file is taken by
+    an exclusive create, so one assembles a complete SIP and the other
+    raises SipLockedError without writing; a lock file that is already
+    there refuses an assembly before any document is written."""
+    import threading
+
+    import pytest
+
+    from razulibs_spark.plans.sip import LOCK_FILE, SipLockedError, assemble_sip
+
+    metadata, droid, vocab = _fixture(spark)
+    triples = csv2rdf_triples(metadata, droid, vocab)
+    sip = str(tmp_path / "sip")
+    start = threading.Barrier(2)
+    results, errors = [], []
+
+    def run():
+        start.wait(timeout=60)
+        try:
+            results.append(assemble_sip(spark, triples, sip))
+        except SipLockedError as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=run) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    try:
+        assert len(results) == 1 and len(errors) == 1, (results, errors)
+        out = results[0]
+        assert out["n_documents"] == 11
+        docs = sorted(f for f in os.listdir(sip) if f.endswith(".meta.json"))
+        assert len(docs) == 11
+        assert sorted(r["filename"] for r in out["manifest"].collect()) == docs
+        assert sorted(os.listdir(sip)) == sorted(docs + ["eventlog.nt", "manifest.json"])
+        by_type = {r["event_type"]: r["n"] for r in out["events"].groupBy(
+            "event_type").agg(F.count("*").alias("n")).collect()}
+        assert by_type == {"ins": 1, "mem": 11, "fix": 11, "ine": 1}
+        assert out["events"].filter(F.col("outcome") != "suc").count() == 0
+    finally:
+        for out in results:
+            _release(out)
+
+    other = tmp_path / "held"
+    other.mkdir()
+    (other / LOCK_FILE).touch()
+    with pytest.raises(SipLockedError, match="being assembled"):
+        assemble_sip(spark, triples, str(other))
+    assert os.listdir(other) == [LOCK_FILE]
+
+
 def test_collect_rdf_lifecycle(spark, tmp_path):
     """§3 runner-up entry point (tools/collect_rdf.py:63-136): JSON-LD
     files → demote invalid xsd:integer → drop malformed → union →

@@ -8,6 +8,8 @@
   URIs gives both objects, an unresolvable term gives none — the same
   objects as one left join per term column.
 - No lifecycle module builds a frame from a Python list.
+- The archive path's side effects run through `session.each_partition`,
+  never `foreachPartition` or an accumulator.
 """
 
 from __future__ import annotations
@@ -196,3 +198,20 @@ def test_lifecycle_modules_build_no_frame_from_a_python_list(module):
         and node.func.attr == "createDataFrame"
     ]
     assert not calls, f"{module} calls createDataFrame at lines {calls}; use local_frame"
+
+
+@pytest.mark.parametrize("module", ["sinks/object_store.py", "operators/manifest.py"])
+def test_side_effects_run_through_each_partition(module):
+    """`foreachPartition` starts a second Python worker pool beside the
+    Arrow runner's and runs one task per input partition; the object
+    store and local-store sinks call `session.each_partition`, whose
+    count comes back with the action, so no accumulator either."""
+    with open(os.path.join(ROOT, module), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    calls = [
+        (node.lineno, node.func.attr) for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("foreachPartition", "accumulator")
+    ]
+    assert not calls, f"{module} calls {calls}; use session.each_partition"
