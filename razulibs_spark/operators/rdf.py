@@ -15,6 +15,7 @@ merge-time bnode-suffix remap of tools/collect_rdf.py:37-54 entirely.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -209,25 +210,13 @@ EXPANSIONS = {
 }
 
 
-# The when-chains below are ORDER-INDEPENDENT: no namespace URI is a
-# string prefix of another, and no "k:" compact form is a prefix of
-# another key's (e.g. "rdf:" does not prefix "rdfs:x" — the 4th char
-# differs). That lets the chains iterate in HIT-FREQUENCY order (r13):
-# the engine's own data overwhelmingly carries ldto/xsd/rdf/schema
-# terms, which previously sat 4th-15th in the longest-first walk, so
-# every term paid ~11 startswith evaluations; frequency order pays
-# ~2. Guarded at import so a future namespace addition that breaks
-# pairwise prefix-freedom fails loudly (longest-first would then be
-# required again).
-_FREQ_RANK = {
-    k: i
-    for i, k in enumerate(
-        ["ldto", "xsd", "rdf", "schema", "dct", "premis", "prov",
-         "skos", "rdfs", "mdto", "geo", "eo", "eror", "erar", "owl"]
-    )
-}
-
-
+# Prefixed names and absolute URIs convert through ONE literal map
+# lookup per term, whatever the number of bindings. Expansion keys the
+# map on the text up to the first colon. Compaction finds the namespace
+# with one anchored regex over the namespace alternation; that is
+# order-independent only while no namespace URI is a string prefix of
+# another (and no "k:" of another's), which is guarded at import, so
+# a binding that breaks it fails loudly.
 def _assert_prefix_free(expansions: dict[str, str]) -> None:
     vals = list(expansions.values())
     keys = [k + ":" for k in expansions]
@@ -236,16 +225,9 @@ def _assert_prefix_free(expansions: dict[str, str]) -> None:
             for b in group:
                 if a != b and b.startswith(a):
                     raise AssertionError(
-                        f"prefix-ordered chains unsafe: {a!r} prefixes "
-                        f"{b!r}; restore longest-first iteration"
+                        f"namespace alternation ambiguous: {a!r} "
+                        f"prefixes {b!r}"
                     )
-
-
-def _ordered_expansions() -> list[tuple[str, str]]:
-    return sorted(
-        EXPANSIONS.items(),
-        key=lambda kv: (_FREQ_RANK.get(kv[0], 99), -len(kv[1])),
-    )
 
 
 _assert_prefix_free(EXPANSIONS)
@@ -260,94 +242,72 @@ def _sq(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _expand_case_sql(ref: str) -> str:
-    """The expand_prefixed when-chain as ONE SQL CASE string over
-    column reference ``ref`` (r13, guide §1.2 driver overhead): the
-    Column-builder form issued ~4 py4j round-trips per branch × 15
-    branches ≈ 85 ms of driver time PER CALL — ~0.5 s per RDF
-    round-trip query construction across its s/p/o/o_datatype
-    columns. The parsed expression tree is identical (StartsWith /
-    Substring / Concat / CaseWhen)."""
-    arms = "".join(
-        f"WHEN startswith({ref}, {_sq(k + ':')}) THEN "
-        f"concat({_sq(ns)}, substring({ref}, {len(k) + 2}, 1000000)) "
-        for k, ns in _ordered_expansions()
-    )
-    return f"CASE {arms}ELSE {ref} END"
+def _lookup(table: Mapping[str, str], key: Column) -> Column:
+    """``table[key]`` as one lookup in a literal map; null when ``key``
+    is null or not bound."""
+    pairs = ", ".join(f"{_sq(k)}, {_sq(v)}" for k, v in table.items())
+    return F.try_element_at(F.expr(f"map({pairs})"), key)
 
 
-def _compact_case_sql(ref: str) -> str:
-    """Inverse of :func:`_expand_case_sql` — one SQL CASE string."""
-    arms = "".join(
-        f"WHEN startswith({ref}, {_sq(ns)}) THEN "
-        f"concat({_sq(k + ':')}, substring({ref}, {len(ns) + 1}, 1000000)) "
-        for k, ns in _ordered_expansions()
-    )
-    return f"CASE {arms}ELSE {ref} END"
+def _expand_with(col: Column, bindings: Mapping[str, str]) -> Column:
+    """``k:local`` -> ``bindings[k] + local``, else ``col`` unchanged
+    (no colon, an unbound prefix, null)."""
+    if not bindings:
+        return col
+    colon = F.instr(col, ":")
+    ns = _lookup({f"{k}:": v for k, v in bindings.items()}, col.substr(F.lit(1), colon))
+    return F.coalesce(F.concat(ns, col.substr(colon + 1, F.lit(1_000_000))), col)
+
+
+def _compact_with(col: Column, bindings: Mapping[str, str], local: str | None = None) -> Column:
+    """``<namespace><local>`` -> ``k:local`` for the bound namespace
+    ``col`` starts with, else null. With ``local`` (a regex), only a
+    local part that matches it in full compacts."""
+    alt = "|".join(rf"\Q{ns}\E" for ns in bindings.values())
+    ns = F.regexp_extract(col, f"^({alt})" + (f"(?:{local})$" if local else ""), 1)
+    prefix = _lookup({v: f"{k}:" for k, v in bindings.items()}, ns)
+    return F.concat(prefix, col.substr(F.length(ns) + 1, F.lit(1_000_000)))
+
+
+def _term(col: Column | str) -> Column:
+    return F.col(col) if isinstance(col, str) else col
 
 
 def expand_prefixed(col: Column | str) -> Column:
     """`ldto:naam` → full URI; absolute URIs and unknown prefixes pass
     through. Engine-internal triples use compact names (cheaper to
     store and shuffle); expansion happens at the serialization edge so
-    emitted N-Triples/JSON-LD are standards-valid.
-
-    Pass a column NAME (str) on hot construction paths: the chain then
-    builds as one ``F.expr`` CASE parse (single py4j round-trip)
-    instead of ~60 Column-builder calls — same expression tree, ~85 ms
-    less driver time per call. Column input keeps the builder form for
-    arbitrary expressions."""
-    if isinstance(col, str):
-        return F.expr(_expand_case_sql(f"`{col}`"))
-    out = None
-    for k, ns in _ordered_expansions():
-        cond = col.startswith(f"{k}:")
-        val = F.concat(F.lit(ns), F.substring(col, len(k) + 2, 1_000_000))
-        out = F.when(cond, val) if out is None else out.when(cond, val)
-    return out.otherwise(col)
+    emitted N-Triples/JSON-LD are standards-valid."""
+    return _expand_with(_term(col), EXPANSIONS)
 
 
 def compact_prefixed(col: Column | str) -> Column:
-    """Inverse of expand_prefixed (frequency-ordered chain — safe
-    because the namespace set is pairwise prefix-free, see above).
-    Accepts a column name for the cheap-construction path, like
-    :func:`expand_prefixed`."""
-    if isinstance(col, str):
-        return F.expr(_compact_case_sql(f"`{col}`"))
-    out = None
-    for k, ns in _ordered_expansions():
-        cond = col.startswith(ns)
-        val = F.concat(F.lit(k + ":"), F.substring(col, len(ns) + 1, 1_000_000))
-        out = F.when(cond, val) if out is None else out.when(cond, val)
-    return out.otherwise(col)
+    """Inverse of expand_prefixed: an absolute URI in a bound namespace
+    → `k:local`; anything else passes through."""
+    c = _term(col)
+    return F.coalesce(_compact_with(c, EXPANSIONS), c)
+
+
+def _convert_terms(triples: DataFrame, convert) -> DataFrame:
+    """``convert`` applied to s, p, o_datatype and uri-typed objects;
+    every other column is kept in place."""
+    return triples.withColumns({
+        "s": convert("s"),
+        "p": convert("p"),
+        "o": F.when(F.col("o_type") == "uri", convert("o")).otherwise(F.col("o")),
+        "o_datatype": convert("o_datatype"),
+    })
 
 
 def expand_triples(triples: DataFrame) -> DataFrame:
     """Expand s/p/o_datatype (and uri-typed objects) to absolute URIs
-    for standards-valid serialization. selectExpr + the CASE-string
-    chains: 6 py4j calls total instead of ~250 (r13)."""
-    return triples.selectExpr(
-        f"{_expand_case_sql('s')} AS s",
-        f"{_expand_case_sql('p')} AS p",
-        f"CASE WHEN o_type = 'uri' THEN {_expand_case_sql('o')} "
-        f"ELSE o END AS o",
-        "o_type",
-        f"{_expand_case_sql('o_datatype')} AS o_datatype",
-        "o_lang",
-    )
+    for standards-valid serialization."""
+    return _convert_terms(triples, expand_prefixed).select(*TRIPLE_SCHEMA.names)
 
 
 def compact_triples(triples: DataFrame) -> DataFrame:
     """Inverse of expand_triples."""
-    return triples.selectExpr(
-        f"{_compact_case_sql('s')} AS s",
-        f"{_compact_case_sql('p')} AS p",
-        f"CASE WHEN o_type = 'uri' THEN {_compact_case_sql('o')} "
-        f"ELSE o END AS o",
-        "o_type",
-        f"{_compact_case_sql('o_datatype')} AS o_datatype",
-        "o_lang",
-    )
+    return _convert_terms(triples, compact_prefixed).select(*TRIPLE_SCHEMA.names)
 
 
 def bgp_match(triples: DataFrame, patterns: list[tuple]) -> DataFrame:

@@ -5711,9 +5711,7 @@ def _quads_for_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2 triples + deterministic graph label (computed on the compact
     predicate, matching _QUAD_G_SQL), then s/p/o expanded to absolute
     URIs for standards-valid serialization — g carried through."""
-    from razulibs_spark.operators.rdf import expand_prefixed
-
-    from razulibs_spark.operators.rdf import _expand_case_sql
+    from razulibs_spark.operators.rdf import _convert_terms, expand_prefixed
 
     t = _o2_triples_full(spark, sf_dir).withColumn(
         "g",
@@ -5725,27 +5723,13 @@ def _quads_for_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     )
-    return t.selectExpr(
-        f"{_expand_case_sql('s')} AS s",
-        f"{_expand_case_sql('p')} AS p",
-        f"CASE WHEN o_type = 'uri' THEN {_expand_case_sql('o')} "
-        f"ELSE o END AS o",
-        "o_type",
-        f"{_expand_case_sql('o_datatype')} AS o_datatype",
-        "o_lang", "g",
-    )
+    return _convert_terms(t, expand_prefixed)
 
 
 def _compact_quads(quads: DataFrame) -> DataFrame:
-    from razulibs_spark.operators.rdf import _compact_case_sql
+    from razulibs_spark.operators.rdf import _convert_terms, compact_prefixed
 
-    return quads.selectExpr(
-        f"{_compact_case_sql('s')} AS s",
-        f"{_compact_case_sql('p')} AS p",
-        f"CASE WHEN o_type = 'uri' THEN {_compact_case_sql('o')} "
-        f"ELSE o END AS o",
-        "g",
-    )
+    return _convert_terms(quads, compact_prefixed).select("s", "p", "o", "g")
 
 
 @query("k2_trig_roundtrip", _K2_QUAD_SQL)

@@ -30,6 +30,13 @@ line, so a caller's own ``-XX`` flags there still win, and
 the driver JVM: in ``local[n]`` the driver is the executor too, while
 on a cluster the executors keep the JDK default and the driver only
 plans.
+
+Python workers fork from ``razulibs_spark.pyworker``
+(``spark.python.daemon.module``), which is pyspark's own daemon except
+that an unchanged zip on the workers' path is not re-read every task;
+see that module. ``spark.executorEnv.PYTHONPATH`` names the directory
+that holds this package, so the daemon starts whatever the driver's
+cwd and ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -46,6 +53,12 @@ JIT_POLICY = (
     "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
     "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
 )
+
+
+# The directory that holds this package: Python workers start in the
+# driver's cwd, which need not be a checkout, and must still import the
+# daemon module named in ``spark.python.daemon.module``.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -70,6 +83,8 @@ def get_spark(app_name: str = "razulibs-spark", cpus: int | None = None) -> Spar
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.defaultJavaOptions", JIT_POLICY)
+        .config("spark.python.daemon.module", "razulibs_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .getOrCreate()
     )

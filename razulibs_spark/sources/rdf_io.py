@@ -14,7 +14,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from razulibs_spark.operators.rdf import EXPANSIONS, NAMESPACES, TRIPLE_SCHEMA
+from razulibs_spark.operators.rdf import (
+    EXPANSIONS,
+    NAMESPACES,
+    TRIPLE_SCHEMA,
+    _compact_with,
+    _expand_with,
+    _term,
+)
 
 
 def _escape_literal(col: Column) -> Column:
@@ -225,45 +232,23 @@ TURTLE_FULL_HEADER = "".join(
     f"@prefix {k}: <{v}> .\n" for k, v in sorted(EXPANSIONS.items())
 )
 
-# Local part of a prefixed name we are willing to emit (conservative
-# PN_LOCAL subset); anything else stays a full <IRI>.
-_PN_LOCAL_RE = r"^[A-Za-z0-9_][A-Za-z0-9_.\-]*$"
+# Local part of a prefixed name we are willing to emit: a conservative
+# subset of Turtle's PN_LOCAL, which may not end in '.'. Anything else
+# stays a full <IRI>.
+_PN_LOCAL_RE = r"[A-Za-z0-9_](?:[A-Za-z0-9_.\-]*[A-Za-z0-9_\-])?"
 
 
 def _compactable(col: Column | str) -> Column:
     """Prefixed-name form of an absolute URI when the local part is
-    safe to emit, else null. Frequency-ordered chain (r13): safe
-    because the namespace set is pairwise prefix-free (guarded in
-    operators/rdf.py) — and the per-branch rlike then runs only for
-    the branch whose startswith matches, ~2 branches in instead of
-    ~11. A column NAME (str) builds the chain as one F.expr CASE
-    parse — ~90 py4j round-trips fewer per call (r13, driver-side
-    construction cost; same expression tree)."""
-    from razulibs_spark.operators.rdf import _ordered_expansions, _sq
-
-    if isinstance(col, str):
-        arms = "".join(
-            f"WHEN startswith(`{col}`, {_sq(ns)}) AND "
-            f"substring(`{col}`, {len(ns) + 1}, 1000000) RLIKE "
-            f"{_sq(_PN_LOCAL_RE)} THEN "
-            f"concat({_sq(k + ':')}, "
-            f"substring(`{col}`, {len(ns) + 1}, 1000000)) "
-            for k, ns in _ordered_expansions()
-        )
-        return F.expr(f"CASE {arms}ELSE CAST(NULL AS STRING) END")
-    out = None
-    for k, ns in _ordered_expansions():
-        local = F.substring(col, len(ns) + 1, 1_000_000)
-        cond = col.startswith(ns) & local.rlike(_PN_LOCAL_RE)
-        val = F.concat(F.lit(k + ":"), local)
-        out = F.when(cond, val) if out is None else out.when(cond, val)
-    return out.otherwise(F.lit(None).cast("string"))
+    safe to emit, else null: one anchored regex over the namespace
+    alternation and one map lookup, whatever the number of bound
+    namespaces."""
+    return _compact_with(_term(col), EXPANSIONS, _PN_LOCAL_RE)
 
 
 def _turtle_uri(col: Column | str) -> Column:
-    inner = F.col(col) if isinstance(col, str) else col
     return F.coalesce(
-        _compactable(col), F.concat(F.lit("<"), inner, F.lit(">"))
+        _compactable(col), F.concat(F.lit("<"), _term(col), F.lit(">"))
     )
 
 
@@ -296,6 +281,11 @@ def write_turtle(triples: DataFrame, path: str) -> None:
     file that is a complete Turtle document (prefix header + lines) —
     append-merge friendly, and `cat part-*` is itself valid Turtle
     because repeated @prefix declarations are legal."""
+    _turtle_values(triples).write.mode("overwrite").text(path)
+
+
+def _turtle_values(triples: DataFrame) -> DataFrame:
+    """The one-column ``value`` frame that ``write_turtle`` writes."""
     # Entirely JVM-side: the header rides the partition's FIRST row as
     # a codegen concat instead of an Arrow pass whose only job was to
     # prepend 11 lines (shipping every line JVM->Python->JVM measured
@@ -304,18 +294,15 @@ def write_turtle(triples: DataFrame, path: str) -> None:
     # == 0 identifies exactly the first row of every non-empty
     # partition; empty partitions stay empty files, and the emitted
     # bytes are identical to the old header-rows form (the text sink
-    # writes one '\n' per row either way).
+    # writes one '\n' per row either way). Only the prefix depends on
+    # the row: a `when` around the whole line would generate the line's
+    # code once per branch.
     header = TURTLE_FULL_HEADER.rstrip("\n") + "\n"
-    line = turtle_line()
     first_in_partition = (
         F.monotonically_increasing_id() % F.lit(1 << 33)
     ) == 0
-    value = F.when(
-        first_in_partition, F.concat(F.lit(header), line)
-    ).otherwise(line)
-    _widen(triples).select(value.alias("value")).write.mode(
-        "overwrite"
-    ).text(path)
+    prefix = F.when(first_in_partition, F.lit(header)).otherwise(F.lit(""))
+    return _widen(triples).select(F.concat(prefix, turtle_line()).alias("value"))
 
 
 # Turtle term alternations. Group map (regexp_extract indices):
@@ -330,18 +317,6 @@ _TTL_RE = (
     rf'(?:<([^>]*)>|(_:\S+)|"([^"\\]*(?:\\.[^"\\]*)*)"'
     rf'(?:@([A-Za-z\-]+)|\^\^<([^>]*)>|\^\^({_PNAME}))?|({_PNAME}))\s*\.\s*$'
 )
-
-
-def _expand_with(col: Column, pmap: dict[str, str]) -> Column:
-    """Dynamic prefixed-name expansion using the @prefix map collected
-    from the document header (the distributed analog of rdflib's
-    namespace manager)."""
-    out = None
-    for k, ns in pmap.items():
-        cond = col.startswith(k + ":")
-        val = F.concat(F.lit(ns), F.substring(col, len(k) + 2, 1_000_000))
-        out = F.when(cond, val) if out is None else out.when(cond, val)
-    return col if out is None else out.otherwise(col)
 
 
 def read_turtle(spark, path: str) -> DataFrame:
