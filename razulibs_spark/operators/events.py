@@ -154,12 +154,15 @@ def events_to_triples(events: DataFrame, base_uri: str) -> DataFrame:
     Event subjects are `{base}-e{N}` (preservation_events.py:90-92);
     scalar properties fan out via entity_to_triples, the subjects
     array via explode — one premis:object link per related object
-    (eror roles). All narrow transformations, no shuffle."""
+    (eror roles); an event without a start time has no
+    prov:startedAtTime. Narrow transformations up to graph_union's
+    distinct."""
     from razulibs_spark.operators.rdf import PropertyMap, entity_to_triples, graph_union
 
     ev = events.withColumn(
         "_uri", F.concat(F.lit(base_uri + "-e"), F.col("event_id").cast("string"))
     )
+    stamp = "yyyy-MM-dd'T'HH:mm:ssXXX"
     scalar = entity_to_triples(
         ev,
         F.col("_uri"),
@@ -183,9 +186,10 @@ def events_to_triples(events: DataFrame, base_uri: str) -> DataFrame:
             ),
             PropertyMap("premis:note", F.col("outcome_note")),
             PropertyMap("prov:wasAssociatedWith", F.col("implemented_by")),
-            PropertyMap("prov:endedAtTime", F.date_format(
-                F.col("ended_at"), "yyyy-MM-dd'T'HH:mm:ssXXX"),
-                datatype="xsd:dateTime"),
+            PropertyMap("prov:startedAtTime", F.date_format(F.col("started_at"), stamp),
+                        datatype="xsd:dateTime"),
+            PropertyMap("prov:endedAtTime", F.date_format(F.col("ended_at"), stamp),
+                        datatype="xsd:dateTime"),
             PropertyMap("premis:outcomeNote", F.col("description")),
         ],
     )

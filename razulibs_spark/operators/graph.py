@@ -193,9 +193,7 @@ def pagerank(
             # Reliable-checkpoint pins (cluster auto mode) instead
             # leave files in the checkpoint dir for the app lifetime
             # unless spark.cleaner.referenceTracking.cleanCheckpoints
-            # =true — retention notes in pinning.py. (Forced
-            # iterPin=persist trades that for CacheManager entries
-            # that last until clearCache — see pinning.py.)
+            # =true — retention notes in pinning.py.
             ranks = new_ranks
         return ranks.select(
             "node", F.round(F.col("rank"), 8).alias("rank")

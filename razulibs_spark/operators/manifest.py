@@ -84,12 +84,13 @@ def incremental_sync_plan(source: DataFrame, target: DataFrame) -> DataFrame:
 def manifest_to_json_map(manifest: DataFrame) -> str:
     """K3 byte-compatible sink: the single JSON object map of
     razu/manifest.py:164-183. Driver-side by design (SIP manifests are
-    small); the distributed form is `df.write.json`."""
+    small); the distributed form is `df.write.json`. One plain collect:
+    ``sort_keys`` orders the filenames, so a sort in Spark would only
+    add jobs."""
     import json
 
-    rows = manifest.orderBy("filename").collect()
     out = {}
-    for r in rows:
+    for r in manifest.collect():
         d = r.asDict()
         fn = d.pop("filename")
         out[fn] = {k: (v.isoformat() if hasattr(v, "isoformat") else v)

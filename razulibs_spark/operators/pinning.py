@@ -6,7 +6,7 @@ components), the range partitioning of ``stats.range_cumsum`` (and so
 goes through ``pin_iteration``. A pin cuts the lineage (which otherwise
 grows the plan every round — for self-joining loops Catalyst analysis
 goes EXPONENTIAL in rounds) and materializes once so later consumers
-don't recompute it. There are three mechanisms with different
+don't recompute it. There are two mechanisms with different
 failure/lifecycle trades, and the right one depends on the
 deployment, not the algorithm:
 
@@ -28,22 +28,21 @@ deployment, not the algorithm:
   is garbage-collected) or point the checkpoint dir at
   lifecycle-managed storage (e.g. an object-store prefix with an
   expiry rule).
-- ``persist``: keeps lineage (block loss triggers recompute) but does
-  NOT cut the plan — the exponential-analysis hazard above — and
-  entries outlive the algorithm in the CacheManager until an explicit
-  unpersist/clearCache. Acceptable only as a deliberate, forced
-  choice for few-round loops.
+
+``persist`` is deliberately not a mode: it does not cut the plan (the
+exponential-analysis hazard above), and its CacheManager entries
+outlive the algorithm, since ``range_cumsum`` and ``dense_ids`` hand
+back a derived frame, not the pinned one to release.
 
 ``pin_iteration`` picks by ``spark.razulibs.iterPin``:
 
 - ``auto`` (default): ``localCheckpoint`` on a local master;
   reliable ``checkpoint`` on a cluster with a checkpoint dir. A
-  cluster WITHOUT a checkpoint dir raises — every silent fallback is
-  wrong somewhere (localCheckpoint loses the query on executor loss;
-  persist can hang the driver on deep loops), so the deploy must
+  cluster WITHOUT a checkpoint dir raises — a silent fallback to
+  localCheckpoint loses the query on executor loss, so the deploy must
   either ``sc.setCheckpointDir(...)`` or force a mode it understands.
-- ``localCheckpoint`` / ``checkpoint`` / ``persist``: forced. Any
-  other value raises (a typo must not silently hand back the
+- ``localCheckpoint`` / ``checkpoint``: forced. Any other value,
+  ``persist`` included, raises (a typo must not silently hand back the
   fault-intolerant default the operator tried to opt out of).
 
 Caches outside this policy are scoped — persisted and unpersisted in
@@ -58,7 +57,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-_MODES = ("localCheckpoint", "checkpoint", "persist")
+_MODES = ("localCheckpoint", "checkpoint")
 
 
 def resolve_pin_mode(
@@ -80,9 +79,7 @@ def resolve_pin_mode(
             "a checkpoint directory (sc.setCheckpointDir on shared "
             "storage) for fault-tolerant iteration state. Set one, or "
             "force spark.razulibs.iterPin=localCheckpoint (fast; query "
-            "dies on executor loss) / persist (lineage kept; only safe "
-            "for few-round loops — plan analysis grows per round and "
-            "cache entries outlive the algorithm)."
+            "dies on executor loss)."
         )
     if conf_value not in _MODES:
         raise ValueError(
@@ -105,9 +102,4 @@ def pin_iteration(df: DataFrame, eager: bool = True) -> DataFrame:
     )
     if mode == "checkpoint":
         return df.checkpoint(eager=eager)
-    if mode == "persist":
-        pinned = df.persist()
-        if eager:
-            pinned.count()
-        return pinned
     return df.localCheckpoint(eager=eager)

@@ -66,9 +66,10 @@ def range_cumsum(
     The only global data movement besides the range shuffle is one
     integer per (partition, value column); all requested prefix sums
     share the single range shuffle. The range partitioning is pinned by
-    ``pinning.pin_iteration``, so on a non-local master without a
-    checkpoint directory this raises (unless ``spark.razulibs.iterPin``
-    forces a mode).
+    ``pinning.pin_iteration`` (a checkpoint, never a cache entry, since
+    the pinned frame is not handed back to be released), so on a
+    non-local master without a checkpoint directory this raises (unless
+    ``spark.razulibs.iterPin`` forces a mode).
     """
     n = n_parts or df.sparkSession.sparkContext.defaultParallelism
     # Pin ONE materialization of the range partitioning:

@@ -5371,16 +5371,15 @@ def _o2_triples_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-schema (TRIPLE_SCHEMA) variant of the O2 fan-out, for
     queries that need o_type/o_datatype/o_lang.
 
-    The source is widened BEFORE the fan-out: the downstream
-    roundtrip consumers (JSON-LD / Turtle / N-Triples sinks) chain
-    seconds of per-row string work onto this frame, and a single-split
-    parquet source would otherwise serialize all of it through one
-    task. Widening here moves the (cheap, entity-sized) shuffle ahead
-    of the 5x row fan-out; at cluster scale the scan has more splits
-    than cores and the widen is a no-op."""
-    from razulibs_spark.sources.rdf_io import _widen
-
-    o = _widen(T(spark, sf_dir, "orders"))
+    The scan is widened (``tables.widen_python_stage``) BEFORE the
+    fan-out: the downstream roundtrip sinks (JSON-LD / Turtle /
+    N-Triples) chain seconds of per-row string work onto this frame,
+    and a single-split parquet source would otherwise serialize all of
+    it through one task. A scan's partitions are counted without
+    running a job, and the (cheap, entity-sized) shuffle moves ahead of
+    the 5x row fan-out; at cluster scale the scan has more splits than
+    cores and the widen is a no-op."""
+    o = tables.widen_python_stage(T(spark, sf_dir, "orders"))
     uid = razu_uid(F.col("o_orderkey"))
     return entity_to_triples(
         o,
@@ -13217,6 +13216,7 @@ def k2_turtle_foreign(spark: SparkSession, sf_dir: str) -> DataFrame:
     file is the honest split unit); the pivot is one hash
     aggregation."""
 
+    from razulibs_spark.sources.rdf_io import with_partition_header
     from razulibs_spark.sources.turtle_full import XSD, read_turtle_full
 
     base = _scratch("turtle_foreign_" + os.path.basename(sf_dir.rstrip("/")))
@@ -13262,12 +13262,7 @@ def k2_turtle_foreign(spark: SparkSession, sf_dir: str) -> DataFrame:
         "@prefix ex: <http://example.org/> .\n"
         "@base <http://base.example/> .\n"
     )
-    first_in_partition = (
-        F.monotonically_increasing_id() % F.lit(1 << 33)
-    ) == 0
-    value = F.when(
-        first_in_partition, F.concat(F.lit(header), block)
-    ).otherwise(block)
+    value = with_partition_header(header, block)
     (
         T(spark, sf_dir, "documents")
         .select("doc_id", "lang", "text")

@@ -3,10 +3,11 @@
 N-Triples is the distributed-friendly interchange form: one triple per
 line, no document state, so a triples DataFrame maps to `write.text`
 with a per-row formatter and parses back with per-line regexes — both
-directions scale linearly and shuffle nothing. Turtle output adds the
-11-prefix header of razu/meta_graph.py:19-29 and per-subject grouping;
-it is produced per-partition (each partition's subjects are complete
-because we repartition by subject first).
+directions scale linearly and shuffle nothing. Turtle output adds a
+prefix header to each part file and compacts IRIs to prefixed names.
+Both writers format terms through one builder (`_terms`), and every
+sink writes its input as planned: no partition count or widening
+runs the input's shuffles a second time.
 """
 
 from __future__ import annotations
@@ -34,52 +35,44 @@ def _escape_literal(col: Column) -> Column:
     return out
 
 
-def ntriples_line(s=None, p=None, o=None, o_type=None, o_datatype=None,
-                  o_lang=None) -> Column:
-    """Format one triple row as an N-Triples line (pure expressions).
-    Defaults bind to the canonical triple columns lazily (F.col needs
-    an active session, so not in default args)."""
-    s = F.col("s") if s is None else s
-    p = F.col("p") if p is None else p
-    o = F.col("o") if o is None else o
-    o_type = F.col("o_type") if o_type is None else o_type
-    o_datatype = F.col("o_datatype") if o_datatype is None else o_datatype
-    o_lang = F.col("o_lang") if o_lang is None else o_lang
-    subj = F.when(s.startswith("bnode:"), F.concat(F.lit("_:"), F.md5(s))).otherwise(
-        F.concat(F.lit("<"), s, F.lit(">"))
-    )
-    pred = F.concat(F.lit("<"), p, F.lit(">"))
+def _bnode(col: Column) -> Column:
+    return F.concat(F.lit("_:"), F.md5(col))
+
+
+def _terms(iri) -> tuple[Column, Column, Column]:
+    """Subject, predicate and object terms of the canonical triple
+    columns, where ``iri(name)`` spells the IRI held in column
+    ``name``: the one place the term rules live. Engine bnodes
+    (``bnode:…``) become ``_:<md5>`` labels; literals carry the
+    N-Triples escapes, then a language tag or a datatype IRI."""
+    s, o = F.col("s"), F.col("o")
     lit_body = F.concat(F.lit('"'), _escape_literal(o), F.lit('"'))
+    subj = F.when(s.startswith("bnode:"), _bnode(s)).otherwise(iri("s"))
     obj = (
-        F.when(o_type == "uri", F.concat(F.lit("<"), o, F.lit(">")))
-        .when(o_type == "bnode", F.concat(F.lit("_:"), F.md5(o)))
-        .when(o_lang.isNotNull(), F.concat(lit_body, F.lit("@"), o_lang))
+        F.when(F.col("o_type") == "uri", iri("o"))
+        .when(F.col("o_type") == "bnode", _bnode(o))
+        .when(F.col("o_lang").isNotNull(), F.concat(lit_body, F.lit("@"), F.col("o_lang")))
         .when(
-            o_datatype.isNotNull(),
-            F.concat(lit_body, F.lit("^^<"), o_datatype, F.lit(">")),
+            F.col("o_datatype").isNotNull(),
+            F.concat(lit_body, F.lit("^^"), iri("o_datatype")),
         )
         .otherwise(lit_body)
     )
-    return F.concat_ws(" ", subj, pred, obj, F.lit("."))
+    return subj, iri("p"), obj
 
 
+def _ntriples_iri(name: str) -> Column:
+    return F.concat(F.lit("<"), F.col(name), F.lit(">"))
 
-def _widen(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to defaultParallelism iff the frame has
-    FEWER partitions — serializing 750k triples through one task is
-    the measured bottleneck of the sink paths when the source is a
-    single parquet split (small SF / single file). At cluster scale a
-    scan has far more splits than cores, so this is a no-op and adds
-    no shuffle."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
-    return df
+
+def ntriples_line() -> Column:
+    """Format one triple row as an N-Triples line (pure expressions)."""
+    return F.concat_ws(" ", *_terms(_ntriples_iri), F.lit("."))
 
 
 def write_ntriples(triples: DataFrame, path: str) -> None:
     """K2 sink: one `.nt` part per partition, append-merge friendly."""
-    _widen(triples).select(ntriples_line().alias("value")).write.mode(
+    triples.select(ntriples_line().alias("value")).write.mode(
         "overwrite"
     ).text(path)
 
@@ -126,28 +119,27 @@ _NT_RE = (
 _SEP = "\x01"
 
 
-def _packed_groups_df(df: DataFrame, value, regex: str, n_groups: int):
-    """(projected df, group columns): `df` reduced to the packed
-    array + raw value, plus n_groups extraction columns to select FROM
-    that frame. One regex execution per row on the fast path,
-    per-group extraction only for \x01-tainted lines."""
+def _packed_groups_df(df: DataFrame, value, regex: str, names) -> DataFrame:
+    """`df` reduced to one string column per regex group, named by
+    ``names`` in group order ("" where the group did not match). One
+    regex execution per row on the fast path, per-group extraction
+    only for \x01-tainted lines."""
+    n_groups = len(names)
     repl = _SEP.join(f"${i}" for i in range(1, n_groups + 1))
     arr = F.split(F.regexp_replace(value, regex, repl), _SEP, -1)
     base = df.select(value.alias("_v"), arr.alias("_arr"))
     ok = F.size("_arr") == n_groups
     tainted = F.col("_v").contains(_SEP)
-    gs = [
+    return base.select(*[
         F.when(
             tainted, F.regexp_extract(F.col("_v"), regex, i + 1)
         ).otherwise(
             F.when(
                 ok, F.coalesce(F.get(F.col("_arr"), i), F.lit(""))
             ).otherwise(F.lit(""))
-        )
-        for i in range(n_groups)
-    ]
-    return base, gs
-
+        ).alias(name)
+        for i, name in enumerate(names)
+    ])
 
 
 def _unescape_literal(o_lit):
@@ -189,31 +181,39 @@ def _unescape_literal(o_lit):
     return F.when(o_lit.contains("\\"), decoded).otherwise(o_lit)
 
 
+# The statement groups of an N-Triples line, in _NT_RE's group order.
+_NT_GROUPS = ("s_uri", "s_bnode", "p", "o_uri", "o_bnode", "o_lit", "o_lang", "o_datatype")
+
+
+def _triple_columns(raw: DataFrame, **iris: Column) -> list[Column]:
+    """The triples schema from a frame of statement groups named as in
+    ``_NT_GROUPS`` ("" = that alternative did not match). ``iris``
+    replaces the ``s_uri``, ``p``, ``o_uri`` or ``o_datatype`` group
+    with an IRI expression ("" when absent): the Turtle reader's
+    prefixed-name expansion."""
+    g = {n: iris[n] if n in iris else raw[n] for n in _NT_GROUPS}
+    return [
+        F.when(g["s_uri"] != "", g["s_uri"]).otherwise(g["s_bnode"]).alias("s"),
+        g["p"].alias("p"),
+        F.when(g["o_uri"] != "", g["o_uri"])
+        .when(g["o_bnode"] != "", g["o_bnode"])
+        .otherwise(_unescape_literal(g["o_lit"]))
+        .alias("o"),
+        F.when(g["o_uri"] != "", F.lit("uri"))
+        .when(g["o_bnode"] != "", F.lit("bnode"))
+        .otherwise(F.lit("literal"))
+        .alias("o_type"),
+        F.when(g["o_datatype"] != "", g["o_datatype"]).alias("o_datatype"),
+        F.when(g["o_lang"] != "", g["o_lang"]).alias("o_lang"),
+    ]
+
+
 def read_ntriples(spark, path: str) -> DataFrame:
     """S4 source: parse N-Triples lines back into the triples schema
     with per-line regexes — distributed, no document-level state."""
     lines = spark.read.text(path).filter(F.length(F.trim("value")) > 0)
-    base, gs = _packed_groups_df(lines, F.col("value"), _NT_RE, 8)
-    raw = base.select(
-        gs[0].alias("s_uri"), gs[1].alias("s_bnode"), gs[2].alias("p"),
-        gs[3].alias("o_uri"), gs[4].alias("o_bnode"), gs[5].alias("o_lit"),
-        gs[6].alias("o_lang_m"), gs[7].alias("o_dt_m"),
-    )
-    o_lit = _unescape_literal(raw["o_lit"])
-    return raw.select(
-        F.when(raw["s_uri"] != "", raw["s_uri"]).otherwise(raw["s_bnode"]).alias("s"),
-        F.col("p"),
-        F.when(raw["o_uri"] != "", raw["o_uri"])
-        .when(raw["o_bnode"] != "", raw["o_bnode"])
-        .otherwise(o_lit)
-        .alias("o"),
-        F.when(raw["o_uri"] != "", F.lit("uri"))
-        .when(raw["o_bnode"] != "", F.lit("bnode"))
-        .otherwise(F.lit("literal"))
-        .alias("o_type"),
-        F.when(raw["o_dt_m"] != "", raw["o_dt_m"]).alias("o_datatype"),
-        F.when(raw["o_lang_m"] != "", raw["o_lang_m"]).alias("o_lang"),
-    )
+    raw = _packed_groups_df(lines, F.col("value"), _NT_RE, _NT_GROUPS)
+    return raw.select(*_triple_columns(raw))
 
 
 # ---------------------------------------------------------------------------
@@ -252,28 +252,18 @@ def _turtle_uri(col: Column | str) -> Column:
     )
 
 
+def turtle_terms() -> tuple[Column, Column, Column]:
+    """Subject, predicate and object as Turtle terms: prefixed names
+    where compactable, `a` for rdf:type, N-Triples escapes for
+    literals."""
+    subj, pred, obj = _terms(_turtle_uri)
+    pred = F.when(F.col("p") == EXPANSIONS["rdf"] + "type", F.lit("a")).otherwise(pred)
+    return subj, pred, obj
+
+
 def turtle_line() -> Column:
-    """Format one triple row as a Turtle line (pure expressions):
-    prefixed names where compactable, `a` for rdf:type, N-Triples
-    escapes for literals."""
-    s, p, o = F.col("s"), F.col("p"), F.col("o")
-    subj = F.when(s.startswith("bnode:"), F.concat(F.lit("_:"), F.md5(s))).otherwise(
-        _turtle_uri("s")
-    )
-    rdf_type = EXPANSIONS["rdf"] + "type"
-    pred = F.when(p == rdf_type, F.lit("a")).otherwise(_turtle_uri("p"))
-    lit_body = F.concat(F.lit('"'), _escape_literal(o), F.lit('"'))
-    obj = (
-        F.when(F.col("o_type") == "uri", _turtle_uri("o"))
-        .when(F.col("o_type") == "bnode", F.concat(F.lit("_:"), F.md5(o)))
-        .when(F.col("o_lang").isNotNull(), F.concat(lit_body, F.lit("@"), F.col("o_lang")))
-        .when(
-            F.col("o_datatype").isNotNull(),
-            F.concat(lit_body, F.lit("^^"), _turtle_uri("o_datatype")),
-        )
-        .otherwise(lit_body)
-    )
-    return F.concat_ws(" ", subj, pred, obj, F.lit("."))
+    """Format one triple row as a Turtle line (pure expressions)."""
+    return F.concat_ws(" ", *turtle_terms(), F.lit("."))
 
 
 def write_turtle(triples: DataFrame, path: str) -> None:
@@ -284,25 +274,33 @@ def write_turtle(triples: DataFrame, path: str) -> None:
     _turtle_values(triples).write.mode("overwrite").text(path)
 
 
+def with_partition_header(header: str, value: Column) -> Column:
+    """``value`` with ``header`` prepended on the first row of every
+    partition, so each part file the text sink writes opens with it.
+    monotonically_increasing_id() is documented as
+    partitionId·2^33 + rowInPartition, so low-33-bits == 0 identifies
+    exactly the first row of every non-empty partition; empty
+    partitions stay empty files. Only the prefix depends on the row: a
+    `when` around the whole value would generate its code once per
+    branch."""
+    first_in_partition = (
+        F.monotonically_increasing_id() % F.lit(1 << 33)
+    ) == 0
+    prefix = F.when(first_in_partition, F.lit(header)).otherwise(F.lit(""))
+    return F.concat(prefix, value)
+
+
 def _turtle_values(triples: DataFrame) -> DataFrame:
     """The one-column ``value`` frame that ``write_turtle`` writes."""
     # Entirely JVM-side: the header rides the partition's FIRST row as
     # a codegen concat instead of an Arrow pass whose only job was to
     # prepend 11 lines (shipping every line JVM->Python->JVM measured
-    # ~70% of the whole write). monotonically_increasing_id() is
-    # documented as partitionId·2^33 + rowInPartition, so low-33-bits
-    # == 0 identifies exactly the first row of every non-empty
-    # partition; empty partitions stay empty files, and the emitted
-    # bytes are identical to the old header-rows form (the text sink
-    # writes one '\n' per row either way). Only the prefix depends on
-    # the row: a `when` around the whole line would generate the line's
-    # code once per branch.
-    header = TURTLE_FULL_HEADER.rstrip("\n") + "\n"
-    first_in_partition = (
-        F.monotonically_increasing_id() % F.lit(1 << 33)
-    ) == 0
-    prefix = F.when(first_in_partition, F.lit(header)).otherwise(F.lit(""))
-    return _widen(triples).select(F.concat(prefix, turtle_line()).alias("value"))
+    # ~70% of the whole write); the emitted bytes are identical to the
+    # old header-rows form (the text sink writes one '\n' per row
+    # either way).
+    return triples.select(
+        with_partition_header(TURTLE_FULL_HEADER, turtle_line()).alias("value")
+    )
 
 
 # Turtle term alternations. Group map (regexp_extract indices):
@@ -339,40 +337,22 @@ def read_turtle(spark, path: str) -> DataFrame:
     body = lines.filter(
         ~F.col("value").startswith("@prefix") & ~F.col("value").startswith("#")
     )
-    base, gs = _packed_groups_df(body, F.col("value"), _TTL_RE, 13)
-    raw = base.select(
-        gs[0].alias("s_uri"), gs[1].alias("s_bnode"), gs[2].alias("s_pn"),
-        gs[3].alias("p_uri"), gs[4].alias("p_pn"), gs[5].alias("p_a"),
-        gs[6].alias("o_uri"), gs[7].alias("o_bnode"), gs[8].alias("o_lit"),
-        gs[9].alias("o_lang_m"), gs[10].alias("o_dt_uri"),
-        gs[11].alias("o_dt_pn"), gs[12].alias("o_pn"),
-    )
-    o_lit = _unescape_literal(raw["o_lit"])
-    rdf_type = EXPANSIONS["rdf"] + "type"
-    is_obj_uri = (raw["o_uri"] != "") | (raw["o_pn"] != "")
-    return raw.select(
-        F.when(raw["s_uri"] != "", raw["s_uri"])
-        .when(raw["s_bnode"] != "", raw["s_bnode"])
-        .otherwise(_expand_with(raw["s_pn"], pmap))
-        .alias("s"),
-        F.when(raw["p_a"] != "", F.lit(rdf_type))
-        .when(raw["p_uri"] != "", raw["p_uri"])
-        .otherwise(_expand_with(raw["p_pn"], pmap))
-        .alias("p"),
-        F.when(raw["o_uri"] != "", raw["o_uri"])
-        .when(raw["o_pn"] != "", _expand_with(raw["o_pn"], pmap))
-        .when(raw["o_bnode"] != "", raw["o_bnode"])
-        .otherwise(o_lit)
-        .alias("o"),
-        F.when(is_obj_uri, F.lit("uri"))
-        .when(raw["o_bnode"] != "", F.lit("bnode"))
-        .otherwise(F.lit("literal"))
-        .alias("o_type"),
-        F.when(raw["o_dt_uri"] != "", raw["o_dt_uri"])
-        .when(raw["o_dt_pn"] != "", _expand_with(raw["o_dt_pn"], pmap))
-        .alias("o_datatype"),
-        F.when(raw["o_lang_m"] != "", raw["o_lang_m"]).alias("o_lang"),
-    )
+    raw = _packed_groups_df(body, F.col("value"), _TTL_RE, (
+        "s_uri", "s_bnode", "s_pn", "p_uri", "p_pn", "p_a", "o_uri",
+        "o_bnode", "o_lit", "o_lang", "o_dt_uri", "o_dt_pn", "o_pn",
+    ))
+
+    def iri(uri: str, pname: str) -> Column:
+        return F.when(raw[uri] != "", raw[uri]).otherwise(_expand_with(raw[pname], pmap))
+
+    return raw.select(*_triple_columns(
+        raw,
+        s_uri=iri("s_uri", "s_pn"),
+        p=F.when(raw["p_a"] != "", F.lit(EXPANSIONS["rdf"] + "type"))
+        .otherwise(iri("p_uri", "p_pn")),
+        o_uri=iri("o_uri", "o_pn"),
+        o_datatype=iri("o_dt_uri", "o_dt_pn"),
+    ))
 
 
 # N-Quads (S4): N-Triples + optional graph label as 4th term.
@@ -388,27 +368,9 @@ def read_nquads(spark, path: str) -> DataFrame:
     """S4 source: N-Quads → triples DataFrame + nullable `g` graph
     column (null = default graph)."""
     lines = spark.read.text(path).filter(F.length(F.trim("value")) > 0)
-    base, gs = _packed_groups_df(lines, F.col("value"), _NQ_RE, 10)
-    raw = base.select(
-        gs[0].alias("s_uri"), gs[1].alias("s_bnode"), gs[2].alias("p"),
-        gs[3].alias("o_uri"), gs[4].alias("o_bnode"), gs[5].alias("o_lit"),
-        gs[6].alias("o_lang_m"), gs[7].alias("o_dt_m"),
-        gs[8].alias("g_uri"), gs[9].alias("g_bnode"),
-    )
-    o_lit = _unescape_literal(raw["o_lit"])
+    raw = _packed_groups_df(lines, F.col("value"), _NQ_RE, _NT_GROUPS + ("g_uri", "g_bnode"))
     return raw.select(
-        F.when(raw["s_uri"] != "", raw["s_uri"]).otherwise(raw["s_bnode"]).alias("s"),
-        F.col("p"),
-        F.when(raw["o_uri"] != "", raw["o_uri"])
-        .when(raw["o_bnode"] != "", raw["o_bnode"])
-        .otherwise(o_lit)
-        .alias("o"),
-        F.when(raw["o_uri"] != "", F.lit("uri"))
-        .when(raw["o_bnode"] != "", F.lit("bnode"))
-        .otherwise(F.lit("literal"))
-        .alias("o_type"),
-        F.when(raw["o_dt_m"] != "", raw["o_dt_m"]).alias("o_datatype"),
-        F.when(raw["o_lang_m"] != "", raw["o_lang_m"]).alias("o_lang"),
+        *_triple_columns(raw),
         F.when(raw["g_uri"] != "", raw["g_uri"])
         .when(raw["g_bnode"] != "", raw["g_bnode"])
         .alias("g"),

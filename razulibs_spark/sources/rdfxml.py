@@ -440,8 +440,6 @@ def write_rdfxml(triples: DataFrame, path: str) -> None:
     bnodes ride the subject column) before writing when that matters."""
     import pandas as pd
 
-    from razulibs_spark.sources.rdf_io import _widen
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         opened = False
         for pdf in it:
@@ -455,7 +453,7 @@ def write_rdfxml(triples: DataFrame, path: str) -> None:
         if opened:
             yield pd.DataFrame({"value": [_RDFXML_FOOTER]})
 
-    _widen(triples).mapInPandas(batches, "value string").write.mode(
+    triples.mapInPandas(batches, "value string").write.mode(
         "overwrite"
     ).text(path)
 
@@ -635,8 +633,6 @@ def write_trix(triples: DataFrame, path: str) -> None:
     by contrast passes ``_:`` labels through unscoped."""
     import pandas as pd
 
-    from razulibs_spark.sources.rdf_io import _widen
-
     if "g" not in triples.columns:
         triples = triples.withColumn("g", F.lit(None).cast("string"))
 
@@ -654,7 +650,7 @@ def write_trix(triples: DataFrame, path: str) -> None:
         if opened:
             yield pd.DataFrame({"value": [_TRIX_FOOTER]})
 
-    _widen(triples).mapInPandas(batches, "value string").write.mode(
+    triples.mapInPandas(batches, "value string").write.mode(
         "overwrite"
     ).text(path)
 
@@ -845,14 +841,12 @@ def write_trig(triples: DataFrame, path: str) -> None:
     """TriG sink: each partition emits complete `<g> { … }` blocks
     (plus bare default-graph lines) built from N-Triples-style terms.
     A graph's rows may span partitions — repeated blocks with the same
-    label are legal TriG and merge on parse, so the writer keeps full
-    parallelism (`_widen`) instead of collapsing to one partition per
+    label are legal TriG and merge on parse, so the writer keeps its
+    input's partitioning instead of collapsing to one partition per
     graph; `cat part-*` is itself valid TriG, the same merge property
     as write_turtle. Line building is vectorized pandas string ops
     (an iterrows loop measured ~10x slower at 750k triples)."""
     import pandas as pd
-
-    from razulibs_spark.sources.rdf_io import _widen
 
     if "g" not in triples.columns:
         triples = triples.withColumn("g", F.lit(None).cast("string"))
@@ -863,6 +857,6 @@ def write_trig(triples: DataFrame, path: str) -> None:
                 continue
             yield pd.DataFrame({"value": _trig_chunks(pdf)})
 
-    _widen(triples).mapInPandas(emit, "value string").write.mode(
+    triples.mapInPandas(emit, "value string").write.mode(
         "overwrite"
     ).text(path)

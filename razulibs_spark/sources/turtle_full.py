@@ -472,17 +472,11 @@ def write_turtle_grouped(
     asymmetry is the point)."""
     from pyspark.sql import functions as F
 
-    from razulibs_spark.sources.rdf_io import TURTLE_FULL_HEADER
+    from razulibs_spark.sources.rdf_io import TURTLE_FULL_HEADER, with_partition_header
 
     blocks = grouped_turtle_blocks(triples, obj_cap, pred_cap)
     block = F.concat(F.col("sj"), F.lit(" "), F.col("po"), F.lit(" ."))
-    header = TURTLE_FULL_HEADER.rstrip("\n") + "\n"
-    first_in_partition = (
-        F.monotonically_increasing_id() % F.lit(1 << 33)
-    ) == 0
-    value = F.when(
-        first_in_partition, F.concat(F.lit(header), block)
-    ).otherwise(block)
+    value = with_partition_header(TURTLE_FULL_HEADER, block)
     blocks.select(value.alias("value")).write.mode("overwrite").text(path)
 
 
@@ -496,11 +490,7 @@ def grouped_turtle_blocks(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from razulibs_spark.operators.rdf import EXPANSIONS
-    from razulibs_spark.sources.rdf_io import (
-        _escape_literal,
-        _turtle_uri,
-    )
+    from razulibs_spark.sources.rdf_io import turtle_terms
 
     # r13 shuffle shape: ONE full-size exchange, keyed on the RAW
     # (s, p) columns, with every formatting expression evaluated
@@ -516,28 +506,7 @@ def grouped_turtle_blocks(
     # terms format once per BLOCK, not once per triple.
     spark = triples.sparkSession
     par = spark.sparkContext.defaultParallelism
-    s, p, o = F.col("s"), F.col("p"), F.col("o")
-    rdf_type = EXPANSIONS["rdf"] + "type"
-    subj = F.when(
-        s.startswith("bnode:"), F.concat(F.lit("_:"), F.md5(s))
-    ).otherwise(_turtle_uri("s"))
-    pred = F.when(p == rdf_type, F.lit("a")).otherwise(_turtle_uri("p"))
-    lit_body = F.concat(F.lit('"'), _escape_literal(o), F.lit('"'))
-    obj = (
-        F.when(F.col("o_type") == "uri", _turtle_uri("o"))
-        .when(F.col("o_type") == "bnode", F.concat(F.lit("_:"), F.md5(o)))
-        .when(
-            F.col("o_lang").isNotNull(),
-            F.concat(lit_body, F.lit("@"), F.col("o_lang")),
-        )
-        .when(
-            F.col("o_datatype").isNotNull(),
-            F.concat(
-                lit_body, F.lit("^^"), _turtle_uri("o_datatype")
-            ),
-        )
-        .otherwise(lit_body)
-    )
+    subj, pred, obj = turtle_terms()
     terms = triples.repartition(par, "s", "p").select(
         "s", "p", obj.alias("ob")
     )

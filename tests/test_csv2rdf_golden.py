@@ -617,6 +617,7 @@ def test_sip_event_log_characterization(spark, tmp_path):
     must be set and ordered: every event spans the assembly."""
     import hashlib
     import os
+    from datetime import datetime
 
     from razulibs_spark.plans.sip import assemble_sip
     from razulibs_spark.sources.rdf_io import read_ntriples
@@ -655,4 +656,8 @@ def test_sip_event_log_characterization(spark, tmp_path):
                 e.get("premis:note"), e["prov:wasAssociatedWith"])
             for i, e in log.items()} == want
     assert all(e["rdf:type"] == "premis:Event" and "prov:endedAtTime" in e
+               for e in log.values())
+    # Every logged event has both times, and none ends before it starts.
+    assert all(datetime.fromisoformat(e["prov:startedAtTime"])
+               <= datetime.fromisoformat(e["prov:endedAtTime"])
                for e in log.values())

@@ -15,7 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from razulibs_spark.operators import evaluation, stats
-from razulibs_spark.operators.pinning import pin_iteration
 
 SF = "/root/testdata/sf0.001"
 
@@ -42,40 +41,6 @@ def test_range_cumsum_matches_pandas(spark):
         .toPandas()
         .sort_values("k", ignore_index=True)
     )
-    expect = pdf.sort_values("k", ignore_index=True)
-    expect["before"] = expect["v"].cumsum().shift(1, fill_value=0)
-    assert (out["before"].to_numpy() == expect["before"].to_numpy()).all()
-
-
-def test_range_cumsum_persist_pin_mode(spark, monkeypatch):
-    """The forced persist pin (spark.razulibs.iterPin=persist, the
-    cluster-deploy choice that keeps lineage) must produce identical
-    results to the default local-mode localCheckpoint path. Its cache
-    entry belongs to the caller, who unpersists the pinned frame."""
-    rng = np.random.RandomState(11)
-    pdf = pd.DataFrame(
-        {"k": rng.permutation(311), "v": rng.randint(0, 9, 311)}
-    )
-    df = spark.createDataFrame(pdf)
-    pinned = []
-
-    def recording_pin(frame, eager=True):
-        pinned.append(pin_iteration(frame, eager))
-        return pinned[-1]
-
-    monkeypatch.setattr(stats, "pin_iteration", recording_pin)
-    spark.conf.set("spark.razulibs.iterPin", "persist")
-    try:
-        out = (
-            stats.range_cumsum(df, ["k"], ["v"], ["before"], n_parts=5)
-            .toPandas()
-            .sort_values("k", ignore_index=True)
-        )
-        assert [p.is_cached for p in pinned] == [True]
-    finally:
-        spark.conf.unset("spark.razulibs.iterPin")
-        for p in pinned:
-            p.unpersist()
     expect = pdf.sort_values("k", ignore_index=True)
     expect["before"] = expect["v"].cumsum().shift(1, fill_value=0)
     assert (out["before"].to_numpy() == expect["before"].to_numpy()).all()

@@ -10,21 +10,34 @@
 - No lifecycle module builds a frame from a Python list.
 - The archive path's side effects run through `session.each_partition`,
   never `foreachPartition` or an accumulator.
+- The sinks run their input once: writing a graph union to N-Triples
+  runs its shuffle once, and the manifest JSON map is one collect. No
+  source, sink or plan counts its input's partitions, which with AQE
+  runs the input's shuffles before the write runs them again.
 """
 
 from __future__ import annotations
 
 import ast
+import json
 import os
+import uuid
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from razulibs_spark.operators.ids import dense_ids, dense_ids_global_window
-from razulibs_spark.operators.manifest import MANIFEST_SCHEMA, manifest_from_json_map
+from razulibs_spark.operators.manifest import (
+    MANIFEST_SCHEMA,
+    manifest_from_json_map,
+    manifest_to_json_map,
+)
+from razulibs_spark.operators.rdf import TRIPLE_SCHEMA, graph_union
 from razulibs_spark.plans.csv2rdf import csv2rdf_triples
 from razulibs_spark.session import local_frame
+from razulibs_spark.sources.rdf_io import read_ntriples, write_ntriples
 
 LISTING = "key string, size bigint, etag string"
 MAP_SCHEMA = StructType(
@@ -66,6 +79,50 @@ def test_dense_ids_match_global_window(spark, n_parts, start):
     want = dense_ids_global_window(df, ["k", "id"], "n", start=start)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
     assert dense_ids(df.limit(0), ["k", "id"], "n", start=start).count() == 0
+
+
+# --- jobs per sink ------------------------------------------------------------
+
+def _jobs(spark, action) -> int:
+    """The number of Spark jobs ``action()`` runs, counted under a job
+    group of its own."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_ntriples_runs_a_graph_union_once(spark, tmp_path):
+    """The union's distinct is one shuffle: one job materializes it and
+    one writes the lines."""
+    rows = [(f"ex:s{i}", "ex:p", str(i), "literal", None, None) for i in range(20)]
+    triples = graph_union(local_frame(spark, rows, TRIPLE_SCHEMA),
+                          local_frame(spark, rows[::2], TRIPLE_SCHEMA))
+    out = str(tmp_path / "nt")
+    assert _jobs(spark, lambda: write_ntriples(triples, out)) == 2
+    assert {tuple(r) for r in read_ntriples(spark, out).collect()} == set(rows)
+
+
+def test_manifest_json_map_is_one_collect(spark):
+    """The JSON map sorts its filenames itself, so a manifest of several
+    partitions, listed out of order, is collected in one job and gives
+    the text of the sorted form."""
+    ts = datetime(2024, 1, 2, 3, 4, 5)
+    manifest = spark.range(0, 12, 1, numPartitions=3).select(
+        F.format_string("f%02d.meta.json", 11 - F.col("id")).alias("filename"),
+        F.md5(F.col("id").cast("string")).alias("md5hash"),
+        F.lit(ts).alias("md5date"),
+        F.col("id").alias("file_size"),
+    )
+    texts = []
+    assert _jobs(spark, lambda: texts.append(manifest_to_json_map(manifest))) == 1
+    assert texts == [manifest_to_json_map(manifest.orderBy("filename"))]
+    assert list(json.loads(texts[0]))[:2] == ["f00.meta.json", "f01.meta.json"]
 
 
 # --- csv2rdf vocabulary cells ---------------------------------------------
@@ -184,20 +241,21 @@ LIFECYCLE_MODULES = sorted(
 )
 
 
+def _attribute_uses(module, names) -> list[tuple[int, str]]:
+    """(line, name) of every attribute in ``names`` that ``module`` uses."""
+    with open(os.path.join(ROOT, module), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    return [(node.lineno, node.attr) for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute) and node.attr in names]
+
+
 @pytest.mark.parametrize("module", LIFECYCLE_MODULES)
 def test_lifecycle_modules_build_no_frame_from_a_python_list(module):
     """Driver-side rows go through session.local_frame (Arrow); a
     createDataFrame call on a Python list costs Python-worker tasks on
     every evaluation."""
-    with open(os.path.join(ROOT, module), encoding="utf-8") as fh:
-        tree = ast.parse(fh.read())
-    calls = [
-        node.lineno for node in ast.walk(tree)
-        if isinstance(node, ast.Call)
-        and isinstance(node.func, ast.Attribute)
-        and node.func.attr == "createDataFrame"
-    ]
-    assert not calls, f"{module} calls createDataFrame at lines {calls}; use local_frame"
+    calls = _attribute_uses(module, {"createDataFrame"})
+    assert not calls, f"{module} calls createDataFrame at {calls}; use local_frame"
 
 
 @pytest.mark.parametrize("module", ["sinks/object_store.py", "operators/manifest.py"])
@@ -206,12 +264,20 @@ def test_side_effects_run_through_each_partition(module):
     Arrow runner's and runs one task per input partition; the object
     store and local-store sinks call `session.each_partition`, whose
     count comes back with the action, so no accumulator either."""
-    with open(os.path.join(ROOT, module), encoding="utf-8") as fh:
-        tree = ast.parse(fh.read())
-    calls = [
-        (node.lineno, node.func.attr) for node in ast.walk(tree)
-        if isinstance(node, ast.Call)
-        and isinstance(node.func, ast.Attribute)
-        and node.func.attr in ("foreachPartition", "accumulator")
-    ]
+    calls = _attribute_uses(module, {"foreachPartition", "accumulator"})
     assert not calls, f"{module} calls {calls}; use session.each_partition"
+
+
+ARCHIVE_LAYERS = sorted(
+    os.path.join(layer, f)
+    for layer in ("sources", "sinks", "plans")
+    for f in os.listdir(os.path.join(ROOT, layer)) if f.endswith(".py")
+)
+
+
+@pytest.mark.parametrize("module", ARCHIVE_LAYERS)
+def test_archive_layers_count_no_partitions(module):
+    """`getNumPartitions` on a frame with a shuffle runs that shuffle's
+    stages under AQE, and the write that follows runs them again."""
+    uses = _attribute_uses(module, {"getNumPartitions"})
+    assert not uses, f"{module} counts partitions at {uses}"

@@ -1,7 +1,9 @@
 """Turtle term conversion: prefixed names and absolute URIs convert
 through one map lookup per term, with literal expectations for every
 bound namespace and edge case, and the Turtle writer emits only local
-names that Turtle's PN_LOCAL accepts."""
+names that Turtle's PN_LOCAL accepts. The bytes of every kind of term
+are pinned through the N-Triples line, the Turtle line and a grouped
+Turtle block."""
 
 from __future__ import annotations
 
@@ -20,8 +22,11 @@ from razulibs_spark.sources.rdf_io import (
     _compactable,
     _expand_with,
     _turtle_values,
+    ntriples_line,
+    turtle_line,
     write_turtle,
 )
+from razulibs_spark.sources.turtle_full import grouped_turtle_blocks
 
 BINDINGS = {
     "dct": "http://purl.org/dc/terms/",
@@ -102,6 +107,61 @@ def test_expansion_pinned_to_literal_values(spark):
     }
     assert got == cases
     assert df.select(_expand_with(F.col("v"), {}).alias("w")).collect() == df.collect()
+
+
+BNODE = "_:3e99b369cccc60430b911793c51e1a90"  # md5("bnode:b1")
+RDF_TYPE = BINDINGS["rdf"] + "type"
+XSD_DATE = BINDINGS["xsd"] + "date"
+ESCAPES = 'a\\b"c\nd\re\tf'  # backslash, quote, newline, CR, tab
+# triple: (N-Triples line, Turtle line)
+TERM_LINES = {
+    (LDTO + "s1", RDF_TYPE, LDTO + "Informatieobject", "uri", None, None): (
+        f"<{LDTO}s1> <{RDF_TYPE}> <{LDTO}Informatieobject> .",
+        "ldto:s1 a ldto:Informatieobject ."),
+    ("bnode:b1", LDTO + "naam", "hallo", "literal", None, "nl"): (
+        f'{BNODE} <{LDTO}naam> "hallo"@nl .',
+        f'{BNODE} ldto:naam "hallo"@nl .'),
+    (LDTO + "s1", LDTO + "datum", "2020-01-01", "literal", XSD_DATE, None): (
+        f'<{LDTO}s1> <{LDTO}datum> "2020-01-01"^^<{XSD_DATE}> .',
+        'ldto:s1 ldto:datum "2020-01-01"^^xsd:date .'),
+    (LDTO + "s1", LDTO + "w", "5", "literal", "http://example.org/dt#int", None): (
+        f'<{LDTO}s1> <{LDTO}w> "5"^^<http://example.org/dt#int> .',
+        'ldto:s1 ldto:w "5"^^<http://example.org/dt#int> .'),
+    (LDTO + "s1", LDTO + "t", ESCAPES, "literal", None, None): (
+        f'<{LDTO}s1> <{LDTO}t> "a\\\\b\\"c\\nd\\re\\tf" .',
+        'ldto:s1 ldto:t "a\\\\b\\"c\\nd\\re\\tf" .'),
+    (LDTO + "s1", "http://example.org/p", "http://example.org/o", "uri", None, None): (
+        f"<{LDTO}s1> <http://example.org/p> <http://example.org/o> .",
+        "ldto:s1 <http://example.org/p> <http://example.org/o> ."),
+    (LDTO + "s1", LDTO + "dekking", "bnode:b1", "bnode", None, None): (
+        f"<{LDTO}s1> <{LDTO}dekking> {BNODE} .",
+        f"ldto:s1 ldto:dekking {BNODE} ."),
+    ("http://example.org/x", LDTO + "y", "plain", "literal", None, None): (
+        f'<http://example.org/x> <{LDTO}y> "plain" .',
+        '<http://example.org/x> ldto:y "plain" .'),
+}
+
+
+def test_term_bytes_pinned_to_literal_lines(spark):
+    df = spark.createDataFrame(list(TERM_LINES), TRIPLE_SCHEMA)
+    got = {
+        tuple(r[:6]): (r["nt"], r["ttl"])
+        for r in df.select(
+            "*", ntriples_line().alias("nt"), turtle_line().alias("ttl")
+        ).collect()
+    }
+    assert got == TERM_LINES
+    block = {
+        r["sj"]: r["po"] for r in grouped_turtle_blocks(df, 1024, 64).collect()
+    }["ldto:s1"]
+    assert block == (
+        "<http://example.org/p> <http://example.org/o> ;\n"
+        "    a ldto:Informatieobject ;\n"
+        '    ldto:datum "2020-01-01"^^xsd:date ;\n'
+        f"    ldto:dekking {BNODE} ;\n"
+        '    ldto:t "a\\\\b\\"c\\nd\\re\\tf" ;\n'
+        '    ldto:w "5"^^<http://example.org/dt#int>'
+    )
 
 
 def test_local_name_ending_in_dot_round_trips_through_full_grammar(spark, tmp_path):

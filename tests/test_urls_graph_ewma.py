@@ -202,19 +202,6 @@ def test_pin_iteration_modes(spark):
     pinned = pin_iteration(df)
     assert "LogicalRDD" in pinned._jdf.queryExecution().optimizedPlan().toString()
     assert not pinned.is_cached
-    # forced persist → CacheManager entry, lineage kept (plan is still
-    # the Range, not a materialized RDD)
-    spark.conf.set("spark.razulibs.iterPin", "persist")
-    try:
-        pinned = pin_iteration(spark.range(10))
-        assert pinned.is_cached
-        assert "LogicalRDD" not in (
-            pinned._jdf.queryExecution().optimizedPlan().toString()
-        )
-        pinned.unpersist()
-    finally:
-        spark.conf.unset("spark.razulibs.iterPin")
-    # results identical either way
     assert pin_iteration(spark.range(5)).count() == 5
 
 
@@ -243,7 +230,8 @@ def test_pin_iteration_reliable_checkpoint_and_errors(spark, tmp_path):
         resolve_pin_mode("auto", "yarn", False)  # no silent bad default
     with pytest.raises(ValueError, match="not one of"):
         resolve_pin_mode("Persist", "local[8]", False)  # typo must raise
-    assert resolve_pin_mode("persist", "yarn", False) == "persist"
+    with pytest.raises(ValueError, match="not one of"):
+        resolve_pin_mode("persist", "yarn", False)  # no mode leaves cache entries
     # local-cluster runs REAL separate executor JVMs — localCheckpoint
     # blocks can be lost on executor failure, so it is NOT "local"
     assert resolve_pin_mode("auto", "local", False) == "localCheckpoint"
