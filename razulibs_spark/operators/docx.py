@@ -36,14 +36,12 @@ from __future__ import annotations
 
 import io
 import zipfile
-from typing import Iterator
 from xml.etree import ElementTree as ET
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from razulibs_spark.tables import widen_python_stage
+from razulibs_spark.session import map_rows
+from razulibs_spark.tables import PAYLOAD_SCHEMA, widen_python_stage
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     LongType,
     StringType,
@@ -145,13 +143,6 @@ def parse_docx_text(payload: bytes) -> dict:
 # ---------------------------------------------------------------------------
 # Synthesis (fixture-side twin)
 # ---------------------------------------------------------------------------
-
-_DOCX_MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ]
-)
 
 DOCX_TEXT_SCHEMA = StructType(
     [
@@ -348,25 +339,18 @@ def synthesize_docx_media(documents: DataFrame) -> DataFrame:
     SECOND producer (encode_docx_foreign — alternate part name,
     stored members) with identical logical content."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                ws = str(text).split(" ")
-                if d % 19 == 7:
-                    payload = encode_docx(d, ws, poison=True)
-                elif d % 23 == 13:
-                    payload = encode_docx_foreign(d, ws)
-                else:
-                    payload = encode_docx(d, ws)
-                rows.append((d, payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def one(doc_id, text):
+        d = int(doc_id)
+        ws = str(text).split(" ")
+        if d % 19 == 7:
+            return [(d, encode_docx(d, ws, poison=True))]
+        if d % 23 == 13:
+            return [(d, encode_docx_foreign(d, ws))]
+        return [(d, encode_docx(d, ws))]
 
-    return widen_python_stage(
-        documents.select("doc_id", "text")
-    ).mapInPandas(
-        batches, schema=_DOCX_MEDIA_SCHEMA
+    return map_rows(
+        widen_python_stage(documents.select("doc_id", "text")),
+        one, PAYLOAD_SCHEMA,
     )
 
 
@@ -374,27 +358,18 @@ def docx_text_stats(media: DataFrame) -> DataFrame:
     """Parse each payload for real; fail-closed per row."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in DOCX_TEXT_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = int(doc_id)
-                try:
-                    m = parse_docx_text(bytes(payload))
-                except ValueError as exc:
-                    rows.append((d, False, None, None, str(exc)))
-                    continue
-                text = "\n".join(m["paragraphs"])
-                rows.append(
-                    (
-                        d,
-                        True,
-                        len(m["paragraphs"]),
-                        hashlib.md5(text.encode("utf-8")).hexdigest(),
-                        None,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(doc_id, payload):
+        d = int(doc_id)
+        try:
+            m = parse_docx_text(bytes(payload))
+        except ValueError as exc:
+            return [(d, False, None, None, str(exc))]
+        text = "\n".join(m["paragraphs"])
+        return [(
+            d, True, len(m["paragraphs"]),
+            hashlib.md5(text.encode("utf-8")).hexdigest(), None,
+        )]
 
-    return media.mapInPandas(batches, schema=DOCX_TEXT_SCHEMA)
+    return map_rows(
+        media.select("doc_id", "payload"), one, DOCX_TEXT_SCHEMA
+    )

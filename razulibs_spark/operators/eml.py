@@ -22,24 +22,14 @@ same posture as operators/pdf.py / docx.py.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from razulibs_spark.tables import widen_python_stage
+from razulibs_spark.session import map_rows
+from razulibs_spark.tables import PAYLOAD_SCHEMA, widen_python_stage
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-_EML_MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ]
 )
 
 EML_TEXT_SCHEMA = StructType(
@@ -213,43 +203,30 @@ def synthesize_eml_media(documents: DataFrame) -> DataFrame:
     the email.generator-based SECOND producer (encode_eml_foreign),
     the rest from the hand assembler."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                enc = encode_eml_foreign if d % 7 == 3 else encode_eml
-                rows.append((d, enc(d, str(text).split(" "))))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def one(doc_id, text):
+        d = int(doc_id)
+        enc = encode_eml_foreign if d % 7 == 3 else encode_eml
+        return [(d, enc(d, str(text).split(" ")))]
 
-    return widen_python_stage(
-        documents.select("doc_id", "text")
-    ).mapInPandas(
-        batches, schema=_EML_MEDIA_SCHEMA
+    return map_rows(
+        widen_python_stage(documents.select("doc_id", "text")),
+        one, PAYLOAD_SCHEMA,
     )
 
 
 def eml_text_stats(media: DataFrame) -> DataFrame:
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in EML_TEXT_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                m = parse_eml(bytes(payload))
-                rows.append(
-                    (
-                        int(doc_id),
-                        hashlib.md5(
-                            m["subject"].encode("utf-8")
-                        ).hexdigest(),
-                        hashlib.md5(m["body"].encode("utf-8")).hexdigest()
-                        if m["body"] is not None else None,
-                        m["n_parts"],
-                        m["cte"],
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(doc_id, payload):
+        m = parse_eml(bytes(payload))
+        body = m["body"]
+        return [(
+            int(doc_id),
+            hashlib.md5(m["subject"].encode("utf-8")).hexdigest(),
+            hashlib.md5(body.encode("utf-8")).hexdigest()
+            if body is not None else None,
+            m["n_parts"],
+            m["cte"],
+        )]
 
-    return media.mapInPandas(batches, schema=EML_TEXT_SCHEMA)
+    return map_rows(media.select("doc_id", "payload"), one, EML_TEXT_SCHEMA)

@@ -30,13 +30,11 @@ from __future__ import annotations
 import io
 import posixpath
 import zipfile
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from razulibs_spark.tables import widen_python_stage
+from razulibs_spark.session import map_rows
+from razulibs_spark.tables import PAYLOAD_SCHEMA, widen_python_stage
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     LongType,
     StringType,
@@ -358,13 +356,6 @@ def encode_epub3_nav(d: int, lang: str, words: list[str]) -> bytes:
 # Spark stages
 # ---------------------------------------------------------------------------
 
-_EPUB_MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ]
-)
-
 EPUB_TEXT_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
@@ -399,20 +390,12 @@ def synthesize_epub_media(documents: DataFrame) -> DataFrame:
             return encode_epub3_nav(d, lang, text.split(" "))
         return encode_epub(d, lang, text.split(" "))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                (int(doc_id), _one(int(doc_id), str(lang), str(text)))
-                for doc_id, lang, text in zip(
-                    pdf["doc_id"], pdf["lang"], pdf["text"]
-                )
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return widen_python_stage(
-        documents.select("doc_id", "lang", "text")
-    ).mapInPandas(
-        batches, schema=_EPUB_MEDIA_SCHEMA
+    return map_rows(
+        widen_python_stage(documents.select("doc_id", "lang", "text")),
+        lambda doc_id, lang, text: [
+            (int(doc_id), _one(int(doc_id), str(lang), str(text)))
+        ],
+        PAYLOAD_SCHEMA,
     )
 
 
@@ -420,29 +403,15 @@ def epub_text_stats(media: DataFrame) -> DataFrame:
     """Parse each payload for real; fail-closed per row."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in EPUB_TEXT_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = int(doc_id)
-                try:
-                    m = parse_epub(bytes(payload))
-                except (ValueError, ET.ParseError) as exc:
-                    rows.append(
-                        (d, False, None, None, None, None, str(exc))
-                    )
-                    continue
-                rows.append(
-                    (
-                        d, True, m["title"], m["language"],
-                        m["n_chapters"],
-                        hashlib.md5(
-                            m["text"].encode("utf-8")
-                        ).hexdigest(),
-                        None,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(doc_id, payload):
+        d = int(doc_id)
+        try:
+            m = parse_epub(bytes(payload))
+        except (ValueError, ET.ParseError) as exc:
+            return [(d, False, None, None, None, None, str(exc))]
+        return [(
+            d, True, m["title"], m["language"], m["n_chapters"],
+            hashlib.md5(m["text"].encode("utf-8")).hexdigest(), None,
+        )]
 
-    return media.mapInPandas(batches, schema=EPUB_TEXT_SCHEMA)
+    return map_rows(media.select("doc_id", "payload"), one, EPUB_TEXT_SCHEMA)

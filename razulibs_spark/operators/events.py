@@ -155,9 +155,10 @@ def events_to_triples(events: DataFrame, base_uri: str) -> DataFrame:
     scalar properties fan out via entity_to_triples, the subjects
     array via explode — one premis:object link per related object
     (eror roles); an event without a start time has no
-    prov:startedAtTime. Narrow transformations up to graph_union's
-    distinct."""
-    from razulibs_spark.operators.rdf import PropertyMap, entity_to_triples, graph_union
+    prov:startedAtTime. Narrow transformations only: the two parts are
+    disjoint by predicate, and a subject an event lists twice is one
+    link, so no distinct (a shuffle) is needed."""
+    from razulibs_spark.operators.rdf import PropertyMap, entity_to_triples
 
     ev = events.withColumn(
         "_uri", F.concat(F.lit(base_uri + "-e"), F.col("event_id").cast("string"))
@@ -196,9 +197,9 @@ def events_to_triples(events: DataFrame, base_uri: str) -> DataFrame:
     objects = ev.select(
         F.col("_uri").alias("s"),
         F.lit("premis:object").alias("p"),
-        F.explode("subjects").alias("o"),
+        F.explode(F.array_distinct("subjects")).alias("o"),
         F.lit("uri").alias("o_type"),
         F.lit(None).cast("string").alias("o_datatype"),
         F.lit(None).cast("string").alias("o_lang"),
     )
-    return graph_union(scalar, objects)
+    return scalar.unionByName(objects)

@@ -22,13 +22,11 @@ driver loop, bounded output (a few rows per file).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from razulibs_spark.tables import widen_python_stage
+from razulibs_spark.session import map_rows
+from razulibs_spark.tables import TYPED_PAYLOAD_SCHEMA, widen_python_stage
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     DoubleType,
     LongType,
@@ -285,14 +283,6 @@ def parse_mp4_metadata(payload: bytes) -> dict:
 # Spark stages
 # ---------------------------------------------------------------------------
 
-_MP4_MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-        StructField("media_format", StringType(), False),
-    ]
-)
-
 MP4_METADATA_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
@@ -323,58 +313,49 @@ def synthesize_mp4_media(documents: DataFrame) -> DataFrame:
     strict walker must fail that row closed, not emit half-parsed
     tracks. Payloads are a few hundred bytes (headers + stub mdat)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        langs = ["und", "eng", "nld"]
-        for pdf in it:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                sec = 1 + d % 9
-                tracks = [
-                    {
-                        "id": 1, "handler": "vide",
-                        "timescale": 1000 * (1 + d % 3),
-                        "lang": langs[d % 3],
-                        "width": 16 * (1 + d % 4),
-                        "height": 16 * (1 + (d // 2) % 3),
-                    }
-                ]
-                if d % 2 == 1:
-                    tracks.append(
-                        {
-                            "id": 2, "handler": "soun",
-                            "timescale": 8000 * (1 + d % 3),
-                            "lang": langs[d % 3],
-                            "width": 0, "height": 0,
-                        }
-                    )
-                payload = encode_mp4_skeleton(
-                    "isom" if d % 2 == 0 else "mp42", 600, sec, tracks
-                )
-                if d % 13 == 7:
-                    # corrupt the moov size field: moov starts right
-                    # after ftyp (ftyp is the first box, read its size)
-                    ftyp_size = struct.unpack(">I", payload[0:4])[0]
-                    moov_size = struct.unpack(
-                        ">I", payload[ftyp_size:ftyp_size + 4]
-                    )[0]
-                    payload = (
-                        payload[:ftyp_size]
-                        + _u32(moov_size + 64)
-                        + payload[ftyp_size + 4:]
-                    )
-                ids.append(d)
-                payloads.append(payload)
-            yield pd.DataFrame(
+    langs = ["und", "eng", "nld"]
+
+    def one(doc_id):
+        d = int(doc_id)
+        sec = 1 + d % 9
+        tracks = [
+            {
+                "id": 1, "handler": "vide",
+                "timescale": 1000 * (1 + d % 3),
+                "lang": langs[d % 3],
+                "width": 16 * (1 + d % 4),
+                "height": 16 * (1 + (d // 2) % 3),
+            }
+        ]
+        if d % 2 == 1:
+            tracks.append(
                 {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "media_format": ["video/mp4"] * len(ids),
+                    "id": 2, "handler": "soun",
+                    "timescale": 8000 * (1 + d % 3),
+                    "lang": langs[d % 3],
+                    "width": 0, "height": 0,
                 }
             )
+        payload = encode_mp4_skeleton(
+            "isom" if d % 2 == 0 else "mp42", 600, sec, tracks
+        )
+        if d % 13 == 7:
+            # corrupt the moov size field: moov starts right after
+            # ftyp (ftyp is the first box, read its size)
+            ftyp_size = struct.unpack(">I", payload[0:4])[0]
+            moov_size = struct.unpack(
+                ">I", payload[ftyp_size:ftyp_size + 4]
+            )[0]
+            payload = (
+                payload[:ftyp_size]
+                + _u32(moov_size + 64)
+                + payload[ftyp_size + 4:]
+            )
+        return [(d, payload, "video/mp4")]
 
-    return widen_python_stage(documents.select("doc_id")).mapInPandas(
-        batches, schema=_MP4_MEDIA_SCHEMA
+    return map_rows(
+        widen_python_stage(documents.select("doc_id")), one,
+        TYPED_PAYLOAD_SCHEMA,
     )
 
 
@@ -385,31 +366,25 @@ def extract_mp4_metadata(media: DataFrame) -> DataFrame:
     its OWN media timescale, the movie row (track_id null) in the
     movie timescale."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in MP4_METADATA_SCHEMA.fields]
-        for pdf in it:
-            rows: list[tuple] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = int(doc_id)
-                try:
-                    meta = parse_mp4_metadata(bytes(payload))
-                except (ValueError, struct.error, IndexError) as exc:
-                    rows.append(
-                        (d, False, None, None, None, None, None, None,
-                         None, None, None, None, f"mp4 parse failed: {exc}")
-                    )
-                    continue
-                for t in meta["tracks"]:
-                    rows.append(
-                        (
-                            d, True, meta["brand"], meta["n_tracks"],
-                            t["track_id"], t["handler"], t["lang"],
-                            t["width"] or None, t["height"] or None,
-                            t["timescale"], t["duration"],
-                            round(t["duration"] / t["timescale"], 6),
-                            None,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(doc_id, payload):
+        d = int(doc_id)
+        try:
+            meta = parse_mp4_metadata(bytes(payload))
+        except (ValueError, struct.error, IndexError) as exc:
+            return [(d, False, None, None, None, None, None, None,
+                     None, None, None, None, f"mp4 parse failed: {exc}")]
+        return [
+            (
+                d, True, meta["brand"], meta["n_tracks"],
+                t["track_id"], t["handler"], t["lang"],
+                t["width"] or None, t["height"] or None,
+                t["timescale"], t["duration"],
+                round(t["duration"] / t["timescale"], 6),
+                None,
+            )
+            for t in meta["tracks"]
+        ]
 
-    return media.mapInPandas(batches, schema=MP4_METADATA_SCHEMA)
+    return map_rows(
+        media.select("doc_id", "payload"), one, MP4_METADATA_SCHEMA
+    )

@@ -34,13 +34,11 @@ from __future__ import annotations
 
 import io
 import zipfile
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from razulibs_spark.tables import widen_python_stage
+from razulibs_spark.session import map_rows
+from razulibs_spark.tables import PAYLOAD_SCHEMA, widen_python_stage
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     LongType,
     StringType,
@@ -299,13 +297,6 @@ def encode_odt_foreign(d: int, words: list[str]) -> bytes:
 # Spark stages
 # ---------------------------------------------------------------------------
 
-_ODT_MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ]
-)
-
 ODT_TEXT_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
@@ -332,18 +323,10 @@ def synthesize_odt_media(documents: DataFrame) -> DataFrame:
             return encode_odt_foreign(d, text.split(" "))
         return encode_odt(d, text.split(" "))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                (int(doc_id), _one(int(doc_id), str(text)))
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return widen_python_stage(
-        documents.select("doc_id", "text")
-    ).mapInPandas(
-        batches, schema=_ODT_MEDIA_SCHEMA
+    return map_rows(
+        widen_python_stage(documents.select("doc_id", "text")),
+        lambda doc_id, text: [(int(doc_id), _one(int(doc_id), str(text)))],
+        PAYLOAD_SCHEMA,
     )
 
 
@@ -351,26 +334,15 @@ def odt_text_stats(media: DataFrame) -> DataFrame:
     """Parse each payload for real; fail-closed per row."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in ODT_TEXT_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = int(doc_id)
-                try:
-                    m = parse_odt(bytes(payload))
-                except (ValueError, ET.ParseError) as exc:
-                    rows.append((d, False, None, None, str(exc)))
-                    continue
-                rows.append(
-                    (
-                        d, True, m["n_paragraphs"],
-                        hashlib.md5(
-                            m["text"].encode("utf-8")
-                        ).hexdigest(),
-                        None,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(doc_id, payload):
+        d = int(doc_id)
+        try:
+            m = parse_odt(bytes(payload))
+        except (ValueError, ET.ParseError) as exc:
+            return [(d, False, None, None, str(exc))]
+        return [(
+            d, True, m["n_paragraphs"],
+            hashlib.md5(m["text"].encode("utf-8")).hexdigest(), None,
+        )]
 
-    return media.mapInPandas(batches, schema=ODT_TEXT_SCHEMA)
+    return map_rows(media.select("doc_id", "payload"), one, ODT_TEXT_SCHEMA)

@@ -988,26 +988,15 @@ def parse_pdf_text(payload: bytes) -> dict:
 # doc_id, real parse back, stats the oracle recomputes)
 # ---------------------------------------------------------------------------
 
-from typing import Iterator  # noqa: E402
-
-import pandas as pd  # noqa: E402
 from pyspark.sql import DataFrame  # noqa: E402
-from razulibs_spark.tables import widen_python_stage
+from razulibs_spark.session import map_rows
+from razulibs_spark.tables import TYPED_PAYLOAD_SCHEMA, widen_python_stage
 from pyspark.sql.types import (  # noqa: E402
-    BinaryType,
     BooleanType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-_PDF_MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-        StructField("media_format", StringType(), False),
-    ]
 )
 
 PDF_TEXT_SCHEMA = StructType(
@@ -1056,81 +1045,66 @@ def synthesize_pdf_media(documents: DataFrame) -> DataFrame:
     themselves, so extraction is again byte-identical and needs no
     oracle branch."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_ in it:
-            ids, payloads = [], []
-            for doc_id, text in zip(pdf_["doc_id"], pdf_["text"]):
-                d = int(doc_id)
-                if d % 23 == 17:
-                    ids.append(d)
-                    payloads.append(
-                        b"%PDF-1.4\n"
-                        b"1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\n"
-                        b"endobj\n"
-                        b"2 0 obj\n<< /Type /Pages /Kids [4 0 R] "
-                        b"/Count 1 >>\nendobj\n"
-                        b"4 0 obj\n<< /Type /Page /Parent 2 0 R "
-                        b"/Contents 9 0 R >>\nendobj\n"
-                        b"%%EOF\n"
-                    )
-                    continue
-                # d%23==11: CID doc with '#' planted in the torture
-                # word but OMITTED from the CMap — its code must be
-                # flagged, never emitted, so the extracted text equals
-                # the normal construction exactly.
-                gap = d % 23 == 11
-                marker = f"w(){d}\\esc" + ("#" if gap else "")
-                words = [marker] + str(text).split(" ")
-                lines = [
-                    " ".join(words[i:i + _WORDS_PER_LINE])
-                    for i in range(0, len(words), _WORDS_PER_LINE)
-                ]
-                pages = [
-                    lines[j:j + _LINES_PER_PAGE]
-                    for j in range(0, len(lines), _LINES_PER_PAGE)
-                ]
-                if d % 89 == 3:
-                    enc, pwd = "rc4-128", "secret"
-                elif d % 23 == 5:
-                    enc, pwd = "rc4-128", ""
-                elif d % 23 == 7:
-                    enc, pwd = "rc4-40", ""
-                elif d % 23 == 19:
-                    enc, pwd = "aes-128", ""
-                elif d % 23 == 9:
-                    enc, pwd = "aes-256", ""
-                elif d % 23 == 15:
-                    enc, pwd = "aes-256-r5", ""
-                else:
-                    enc, pwd = None, ""
-                ids.append(d)
-                payloads.append(
-                    encode_pdf(
-                        pages,
-                        compress=(d % 2 == 0),
-                        object_streams=(d % 5 == 1),
-                        cid_font=(
-                            d % 5 == 2 or gap or d % 23 == 13
-                        ),
-                        cid_predefined=(d % 23 == 13),
-                        cmap_skip=frozenset("#") if gap else frozenset(),
-                        split_contents=(d % 7 == 4),
-                        encrypt=enc,
-                        user_password=pwd,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "media_format": ["application/pdf"] * len(ids),
-                }
-            )
+    def one(doc_id, text):
+        d = int(doc_id)
+        if d % 23 == 17:
+            return [(
+                d,
+                b"%PDF-1.4\n"
+                b"1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\n"
+                b"endobj\n"
+                b"2 0 obj\n<< /Type /Pages /Kids [4 0 R] "
+                b"/Count 1 >>\nendobj\n"
+                b"4 0 obj\n<< /Type /Page /Parent 2 0 R "
+                b"/Contents 9 0 R >>\nendobj\n"
+                b"%%EOF\n",
+                "application/pdf",
+            )]
+        # d%23==11: CID doc with '#' planted in the torture word but
+        # OMITTED from the CMap — its code must be flagged, never
+        # emitted, so the extracted text equals the normal
+        # construction exactly.
+        gap = d % 23 == 11
+        marker = f"w(){d}\\esc" + ("#" if gap else "")
+        words = [marker] + str(text).split(" ")
+        lines = [
+            " ".join(words[i:i + _WORDS_PER_LINE])
+            for i in range(0, len(words), _WORDS_PER_LINE)
+        ]
+        pages = [
+            lines[j:j + _LINES_PER_PAGE]
+            for j in range(0, len(lines), _LINES_PER_PAGE)
+        ]
+        if d % 89 == 3:
+            enc, pwd = "rc4-128", "secret"
+        elif d % 23 == 5:
+            enc, pwd = "rc4-128", ""
+        elif d % 23 == 7:
+            enc, pwd = "rc4-40", ""
+        elif d % 23 == 19:
+            enc, pwd = "aes-128", ""
+        elif d % 23 == 9:
+            enc, pwd = "aes-256", ""
+        elif d % 23 == 15:
+            enc, pwd = "aes-256-r5", ""
+        else:
+            enc, pwd = None, ""
+        payload = encode_pdf(
+            pages,
+            compress=(d % 2 == 0),
+            object_streams=(d % 5 == 1),
+            cid_font=(d % 5 == 2 or gap or d % 23 == 13),
+            cid_predefined=(d % 23 == 13),
+            cmap_skip=frozenset("#") if gap else frozenset(),
+            split_contents=(d % 7 == 4),
+            encrypt=enc,
+            user_password=pwd,
+        )
+        return [(d, payload, "application/pdf")]
 
-    return widen_python_stage(
-        documents.select("doc_id", "text")
-    ).mapInPandas(
-        batches, schema=_PDF_MEDIA_SCHEMA
+    return map_rows(
+        widen_python_stage(documents.select("doc_id", "text")),
+        one, TYPED_PAYLOAD_SCHEMA,
     )
 
 
@@ -1138,29 +1112,19 @@ def pdf_text_stats(media: DataFrame) -> DataFrame:
     """Parse each payload for real; fail-closed per row."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PDF_TEXT_SCHEMA.fields]
-        for pdf_ in it:
-            rows = []
-            for doc_id, payload in zip(pdf_["doc_id"], pdf_["payload"]):
-                d = int(doc_id)
-                try:
-                    m = parse_pdf_text(bytes(payload))
-                except ValueError as exc:
-                    rows.append((d, False, None, None, None, str(exc)))
-                    continue
-                note = (
-                    f"pdf: {m['unmapped_codes']} unmapped CID codes "
-                    "flagged"
-                    if m["unmapped_codes"] else None
-                )
-                rows.append(
-                    (
-                        d, True, m["n_pages"], m["compressed_pages"],
-                        hashlib.md5(m["text"].encode("utf-8")).hexdigest(),
-                        note,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(doc_id, payload):
+        d = int(doc_id)
+        try:
+            m = parse_pdf_text(bytes(payload))
+        except ValueError as exc:
+            return [(d, False, None, None, None, str(exc))]
+        note = (
+            f"pdf: {m['unmapped_codes']} unmapped CID codes flagged"
+            if m["unmapped_codes"] else None
+        )
+        return [(
+            d, True, m["n_pages"], m["compressed_pages"],
+            hashlib.md5(m["text"].encode("utf-8")).hexdigest(), note,
+        )]
 
-    return media.mapInPandas(batches, schema=PDF_TEXT_SCHEMA)
+    return map_rows(media.select("doc_id", "payload"), one, PDF_TEXT_SCHEMA)

@@ -45,13 +45,11 @@ from __future__ import annotations
 import io
 import posixpath
 import zipfile
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from razulibs_spark.tables import widen_python_stage
+from razulibs_spark.session import map_rows
+from razulibs_spark.tables import PAYLOAD_SCHEMA, widen_python_stage
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     LongType,
     StringType,
@@ -560,13 +558,6 @@ def encode_pptx_foreign(d: int, words: list[str]) -> bytes:
 # Spark stages
 # ---------------------------------------------------------------------------
 
-_PPTX_MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ]
-)
-
 PPTX_TEXT_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
@@ -593,18 +584,10 @@ def synthesize_pptx_media(documents: DataFrame) -> DataFrame:
             return encode_pptx_foreign(d, text.split(" "))
         return encode_pptx(d, text.split(" "))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                (int(doc_id), _one(int(doc_id), str(text)))
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return widen_python_stage(
-        documents.select("doc_id", "text")
-    ).mapInPandas(
-        batches, schema=_PPTX_MEDIA_SCHEMA
+    return map_rows(
+        widen_python_stage(documents.select("doc_id", "text")),
+        lambda doc_id, text: [(int(doc_id), _one(int(doc_id), str(text)))],
+        PAYLOAD_SCHEMA,
     )
 
 
@@ -618,28 +601,15 @@ def pptx_text_stats(
     (r12) — a separate registry entry gates that surface."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PPTX_TEXT_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = int(doc_id)
-                try:
-                    m = parse_pptx(
-                        bytes(payload), include_notes=include_notes
-                    )
-                except (ValueError, ET.ParseError) as exc:
-                    rows.append((d, False, None, None, None, str(exc)))
-                    continue
-                rows.append(
-                    (
-                        d, True, m["n_slides"], m["n_shapes"],
-                        hashlib.md5(
-                            m["text"].encode("utf-8")
-                        ).hexdigest(),
-                        None,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(doc_id, payload):
+        d = int(doc_id)
+        try:
+            m = parse_pptx(bytes(payload), include_notes=include_notes)
+        except (ValueError, ET.ParseError) as exc:
+            return [(d, False, None, None, None, str(exc))]
+        return [(
+            d, True, m["n_slides"], m["n_shapes"],
+            hashlib.md5(m["text"].encode("utf-8")).hexdigest(), None,
+        )]
 
-    return media.mapInPandas(batches, schema=PPTX_TEXT_SCHEMA)
+    return map_rows(media.select("doc_id", "payload"), one, PPTX_TEXT_SCHEMA)

@@ -38,13 +38,11 @@ map-only — the media-family shape.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from razulibs_spark.tables import widen_python_stage
+from razulibs_spark.session import map_rows
+from razulibs_spark.tables import PAYLOAD_SCHEMA, widen_python_stage
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     LongType,
     StringType,
@@ -366,13 +364,6 @@ def encode_rtf_foreign(d: int, words: list[str]) -> bytes:
 # Spark stages
 # ---------------------------------------------------------------------------
 
-_RTF_MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ]
-)
-
 RTF_TEXT_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
@@ -393,29 +384,19 @@ def synthesize_rtf_media(documents: DataFrame) -> DataFrame:
     \\uc2, stylesheet/xmlnstbl destinations, formatting runs) whose
     extracted text is byte-identical — oracle unchanged."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                if d % 31 == 17:
-                    rows.append((d, b"{\\pwned1 not rtf}"))
-                    continue
-                if d % 43 == 9:
-                    payload = encode_rtf(
-                        d, str(text).split(" "), cp932=True
-                    )
-                elif d % 47 == 11:
-                    payload = encode_rtf_foreign(d, str(text).split(" "))
-                else:
-                    payload = encode_rtf(d, str(text).split(" "))
-                rows.append((d, payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def one(doc_id, text):
+        d = int(doc_id)
+        if d % 31 == 17:
+            return [(d, b"{\\pwned1 not rtf}")]
+        if d % 43 == 9:
+            return [(d, encode_rtf(d, str(text).split(" "), cp932=True))]
+        if d % 47 == 11:
+            return [(d, encode_rtf_foreign(d, str(text).split(" ")))]
+        return [(d, encode_rtf(d, str(text).split(" ")))]
 
-    return widen_python_stage(
-        documents.select("doc_id", "text")
-    ).mapInPandas(
-        batches, schema=_RTF_MEDIA_SCHEMA
+    return map_rows(
+        widen_python_stage(documents.select("doc_id", "text")),
+        one, PAYLOAD_SCHEMA,
     )
 
 
@@ -423,24 +404,15 @@ def rtf_text_stats(media: DataFrame) -> DataFrame:
     """Parse each payload for real; fail-closed per row."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in RTF_TEXT_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = int(doc_id)
-                try:
-                    text = rtf_to_text(bytes(payload))
-                except ValueError as exc:
-                    rows.append((d, False, None, None, str(exc)))
-                    continue
-                rows.append(
-                    (
-                        d, True, len(text.split("\n")),
-                        hashlib.md5(text.encode("utf-8")).hexdigest(),
-                        None,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(doc_id, payload):
+        d = int(doc_id)
+        try:
+            text = rtf_to_text(bytes(payload))
+        except ValueError as exc:
+            return [(d, False, None, None, str(exc))]
+        return [(
+            d, True, len(text.split("\n")),
+            hashlib.md5(text.encode("utf-8")).hexdigest(), None,
+        )]
 
-    return media.mapInPandas(batches, schema=RTF_TEXT_SCHEMA)
+    return map_rows(media.select("doc_id", "payload"), one, RTF_TEXT_SCHEMA)

@@ -686,27 +686,16 @@ def decode_tiff(payload: bytes) -> dict:
 # from doc_id, real decode back, stats the oracle recomputes)
 # ---------------------------------------------------------------------------
 
-from typing import Iterator  # noqa: E402
-
-import pandas as pd  # noqa: E402
 from pyspark.sql import DataFrame  # noqa: E402
-from razulibs_spark.tables import widen_python_stage
+from razulibs_spark.session import map_rows
+from razulibs_spark.tables import TYPED_PAYLOAD_SCHEMA, widen_python_stage
 from pyspark.sql.types import (  # noqa: E402
-    BinaryType,
     BooleanType,
     DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-_TIFF_MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-        StructField("media_format", StringType(), False),
-    ]
 )
 
 TIFF_STATS_SCHEMA = StructType(
@@ -743,62 +732,47 @@ def synthesize_tiff_media(documents: DataFrame) -> DataFrame:
     Docs with d%17 == 9 carry a POISON payload (valid header, IFD
     offset past EOF)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 17 == 9:
-                    ids.append(d)
-                    payloads.append(
-                        b"II" + struct.pack("<HI", 42, 2**30)
-                    )
-                    continue
-                w, h = 4 + d % 9, 3 + d % 7
-                tiled = d % 11 == 3
-                if tiled:
-                    w, h = 3 * w, 3 * h  # spill past one 16x16 tile
-                scale = 257 if d % 13 == 6 else 1
-                if d % 2 == 1:
-                    pix = [
-                        (
-                            (d + 3 * x + 5 * y) % 256 * scale,
-                            (2 * d + 7 * x + y) % 256 * scale,
-                            (3 * d + x + 2 * y) % 256 * scale,
-                        )
-                        for y in range(h)
-                        for x in range(w)
-                    ]
-                else:
-                    pix = [
-                        (5 * d + 3 * x + 7 * y) % 256 * scale
-                        for y in range(h)
-                        for x in range(w)
-                    ]
-                ids.append(d)
-                payloads.append(
-                    encode_tiff(
-                        w, h, pix,
-                        rgb=(d % 2 == 1),
-                        big_endian=(d % 5 == 0),
-                        packbits=(d % 3 == 0),
-                        lzw=(d % 3 == 1),
-                        predictor2=(d % 3 == 1 and d % 7 < 3),
-                        bits=(16 if d % 13 == 6 else 8),
-                        tiled=tiled,
-                        planar2=(d % 2 == 1 and d % 19 == 4),
-                    )
+    def one(doc_id):
+        d = int(doc_id)
+        if d % 17 == 9:
+            return [(d, b"II" + struct.pack("<HI", 42, 2**30), "image/tiff")]
+        w, h = 4 + d % 9, 3 + d % 7
+        tiled = d % 11 == 3
+        if tiled:
+            w, h = 3 * w, 3 * h  # spill past one 16x16 tile
+        scale = 257 if d % 13 == 6 else 1
+        if d % 2 == 1:
+            pix = [
+                (
+                    (d + 3 * x + 5 * y) % 256 * scale,
+                    (2 * d + 7 * x + y) % 256 * scale,
+                    (3 * d + x + 2 * y) % 256 * scale,
                 )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "media_format": ["image/tiff"] * len(ids),
-                }
-            )
+                for y in range(h)
+                for x in range(w)
+            ]
+        else:
+            pix = [
+                (5 * d + 3 * x + 7 * y) % 256 * scale
+                for y in range(h)
+                for x in range(w)
+            ]
+        payload = encode_tiff(
+            w, h, pix,
+            rgb=(d % 2 == 1),
+            big_endian=(d % 5 == 0),
+            packbits=(d % 3 == 0),
+            lzw=(d % 3 == 1),
+            predictor2=(d % 3 == 1 and d % 7 < 3),
+            bits=(16 if d % 13 == 6 else 8),
+            tiled=tiled,
+            planar2=(d % 2 == 1 and d % 19 == 4),
+        )
+        return [(d, payload, "image/tiff")]
 
-    return widen_python_stage(documents.select("doc_id")).mapInPandas(
-        batches, schema=_TIFF_MEDIA_SCHEMA
+    return map_rows(
+        widen_python_stage(documents.select("doc_id")), one,
+        TYPED_PAYLOAD_SCHEMA,
     )
 
 
@@ -807,40 +781,27 @@ def tiff_stats(media: DataFrame) -> DataFrame:
     fail-closed per row (poison → decoded=false + the error note,
     never a task failure)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TIFF_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = int(doc_id)
-                try:
-                    m = decode_tiff(bytes(payload))
-                except ValueError as exc:
-                    rows.append(
-                        (d, False, None, None, None, None, None,
-                         None, None, None, str(exc))
-                    )
-                    continue
-                px = m["pixels"]
-                n = m["width"] * m["height"]
-                spp = m["n_channels"]
-                means = [
-                    sum(px[c::spp]) / n for c in range(spp)
-                ] + [None] * (3 - spp)
-                comp = (
-                    m["compression"]
-                    + ("+pred" if m["predictor"] == 2 else "")
-                    + ("+tiled" if m["layout"] == "tiled" else "")
-                    + ("+16" if m["bits"] == 16 else "")
-                    + ("+planar" if m["planar"] == 2 else "")
-                )
-                rows.append(
-                    (
-                        d, True, m["byte_order"], comp,
-                        spp, m["width"], m["height"],
-                        means[0], means[1], means[2], None,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(doc_id, payload):
+        d = int(doc_id)
+        try:
+            m = decode_tiff(bytes(payload))
+        except ValueError as exc:
+            return [(d, False, None, None, None, None, None,
+                     None, None, None, str(exc))]
+        px = m["pixels"]
+        n = m["width"] * m["height"]
+        spp = m["n_channels"]
+        means = [sum(px[c::spp]) / n for c in range(spp)] + [None] * (3 - spp)
+        comp = (
+            m["compression"]
+            + ("+pred" if m["predictor"] == 2 else "")
+            + ("+tiled" if m["layout"] == "tiled" else "")
+            + ("+16" if m["bits"] == 16 else "")
+            + ("+planar" if m["planar"] == 2 else "")
+        )
+        return [(
+            d, True, m["byte_order"], comp, spp, m["width"], m["height"],
+            means[0], means[1], means[2], None,
+        )]
 
-    return media.mapInPandas(batches, schema=TIFF_STATS_SCHEMA)
+    return map_rows(media.select("doc_id", "payload"), one, TIFF_STATS_SCHEMA)

@@ -30,9 +30,7 @@ resumable chunks); parse + strip is ONE Arrow pass per shard."""
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     LongType,
@@ -40,6 +38,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from razulibs_spark.session import map_rows
 
 _MW_NS = "http://www.mediawiki.org/xml/export-0.10/"
 
@@ -219,70 +219,58 @@ def write_wiki_dump(documents: DataFrame, directory: str) -> None:
     documents.select("doc_id", "text").foreachPartition(write_partition)
 
 
+def _page_row(page) -> tuple:
+    """One parsed ``<page>`` element → its WIKI_TEXT_SCHEMA row."""
+    import hashlib
+
+    title = page.findtext("{%s}title" % _MW_NS) or ""
+    page_id = int(page.findtext("{%s}id" % _MW_NS) or "-1")
+    src = page.findtext("{%s}revision/{%s}text" % (_MW_NS, _MW_NS)) or ""
+    text = wikitext_to_text(src)
+    return (
+        page_id,
+        title,
+        len(text.split("\n")) if text else 0,
+        hashlib.md5(text.encode("utf-8")).hexdigest(),
+    )
+
+
 def read_wiki_dump(spark: SparkSession, path: str) -> DataFrame:
     """Dump scan → (doc_id, title, n_lines, text_md5): iterparse
     page-by-page (elements cleared as consumed — O(page) memory per
     shard), wikitext stripped in the SAME Arrow pass."""
-    import hashlib
-    import io
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pages(content):
+        import io
         from xml.etree import ElementTree as ET
 
-        cols = [f.name for f in WIKI_TEXT_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for content in pdf["content"]:
-                stream = io.BytesIO(bytes(content))
-                # Track the root: el.clear() empties each consumed
-                # <page>, but the cleared shells stay ATTACHED to the
-                # root, so memory still grows O(#pages) per shard on
-                # a multi-GB dump. Detaching them (del root[:]) after
-                # each page makes the claim O(page) actually true
-                # (ADVICE r9).
-                root = None
-                for ev, el in ET.iterparse(
-                    stream, events=("start", "end")
-                ):
-                    if ev == "start":
-                        if root is None:
-                            root = el
-                        continue
-                    if el.tag != "{%s}page" % _MW_NS:
-                        continue
-                    title = el.findtext("{%s}title" % _MW_NS) or ""
-                    page_id = int(
-                        el.findtext("{%s}id" % _MW_NS) or "-1"
-                    )
-                    src = (
-                        el.findtext(
-                            "{%s}revision/{%s}text" % (_MW_NS, _MW_NS)
-                        )
-                        or ""
-                    )
-                    text = wikitext_to_text(src)
-                    rows.append(
-                        (
-                            page_id,
-                            title,
-                            len(text.split("\n")) if text else 0,
-                            hashlib.md5(
-                                text.encode("utf-8")
-                            ).hexdigest(),
-                        )
-                    )
-                    el.clear()
-                    if root is not None:
-                        del root[:]  # drop cleared page shells
-            yield pd.DataFrame(rows, columns=cols)
+        # Track the root: el.clear() empties each consumed <page>, but
+        # the cleared shells stay ATTACHED to the root, so memory
+        # still grows O(#pages) per shard on a multi-GB dump.
+        # Detaching them (del root[:]) after each page makes the claim
+        # O(page) actually true (ADVICE r9).
+        root = None
+        for ev, el in ET.iterparse(
+            io.BytesIO(bytes(content)), events=("start", "end")
+        ):
+            if ev == "start":
+                if root is None:
+                    root = el
+                continue
+            if el.tag != "{%s}page" % _MW_NS:
+                continue
+            yield _page_row(el)
+            el.clear()
+            if root is not None:
+                del root[:]  # drop cleared page shells
 
-    return (
+    shards = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.xml")
         .load(path)
         .select("content")
-        .mapInPandas(batches, schema=WIKI_TEXT_SCHEMA)
     )
+    return map_rows(shards, pages, WIKI_TEXT_SCHEMA)
 
 
 def read_wiki_dump_sharded(
@@ -301,7 +289,6 @@ def read_wiki_dump_sharded(
     title/id/text extraction and wikitext stripping as the per-file
     reader. Root open/close lines ride the dropped preamble and the
     last page's tail respectively (stripped before parse)."""
-    import hashlib
     import re as _re
 
     from razulibs_spark.sources.sharded_text import separator_records
@@ -315,40 +302,13 @@ def read_wiki_dump_sharded(
 
     _close_re = _re.compile(r"</mediawiki>\s*$")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pages(rec):
         from xml.etree import ElementTree as ET
 
-        cols = [f.name for f in WIKI_TEXT_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for rec in pdf["rec"]:
-                frag = _close_re.sub("", str(rec))
-                el = ET.fromstring(
-                    f'<mediawiki xmlns="{_MW_NS}">' + frag
-                    + "</mediawiki>"
-                )
-                for pg in el.findall("{%s}page" % _MW_NS):
-                    title = pg.findtext("{%s}title" % _MW_NS) or ""
-                    page_id = int(
-                        pg.findtext("{%s}id" % _MW_NS) or "-1"
-                    )
-                    src = (
-                        pg.findtext(
-                            "{%s}revision/{%s}text" % (_MW_NS, _MW_NS)
-                        )
-                        or ""
-                    )
-                    text = wikitext_to_text(src)
-                    rows.append(
-                        (
-                            page_id,
-                            title,
-                            len(text.split("\n")) if text else 0,
-                            hashlib.md5(
-                                text.encode("utf-8")
-                            ).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+        frag = _close_re.sub("", str(rec))
+        el = ET.fromstring(
+            f'<mediawiki xmlns="{_MW_NS}">' + frag + "</mediawiki>"
+        )
+        return [_page_row(pg) for pg in el.findall("{%s}page" % _MW_NS)]
 
-    return recs.mapInPandas(batches, schema=WIKI_TEXT_SCHEMA)
+    return map_rows(recs.select("rec"), pages, WIKI_TEXT_SCHEMA)

@@ -37,13 +37,11 @@ from __future__ import annotations
 import io
 import posixpath
 import zipfile
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from razulibs_spark.tables import widen_python_stage
+from razulibs_spark.session import map_rows
+from razulibs_spark.tables import PAYLOAD_SCHEMA, widen_python_stage
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     LongType,
     StringType,
@@ -542,13 +540,6 @@ def encode_xlsx_foreign(d: int) -> bytes:
 # Spark stages
 # ---------------------------------------------------------------------------
 
-_XLSX_MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ]
-)
-
 XLSX_STATS_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
@@ -575,18 +566,10 @@ def synthesize_xlsx_media(documents: DataFrame) -> DataFrame:
             return encode_xlsx_foreign(d)
         return encode_xlsx(d, str(text).split(" "))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                (int(doc_id), _one(int(doc_id), text))
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return widen_python_stage(
-        documents.select("doc_id", "text")
-    ).mapInPandas(
-        batches, schema=_XLSX_MEDIA_SCHEMA
+    return map_rows(
+        widen_python_stage(documents.select("doc_id", "text")),
+        lambda doc_id, text: [(int(doc_id), _one(int(doc_id), text))],
+        PAYLOAD_SCHEMA,
     )
 
 
@@ -597,30 +580,17 @@ def xlsx_stats(media: DataFrame) -> DataFrame:
     0/1 or a formula string leaking its formula all flip it."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in XLSX_STATS_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = int(doc_id)
-                try:
-                    m = parse_xlsx(bytes(payload))
-                except (ValueError, ET.ParseError) as exc:
-                    rows.append(
-                        (d, False, None, None, None, None, str(exc))
-                    )
-                    continue
-                digest = hashlib.md5(
-                    "\x01".join(
-                        f"{ref}={val}" for ref, val in m["cells"]
-                    ).encode("utf-8")
-                ).hexdigest()
-                rows.append(
-                    (
-                        d, True, m["sheet_name"], m["n_rows"],
-                        m["n_cells"], digest, None,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(doc_id, payload):
+        d = int(doc_id)
+        try:
+            m = parse_xlsx(bytes(payload))
+        except (ValueError, ET.ParseError) as exc:
+            return [(d, False, None, None, None, None, str(exc))]
+        digest = hashlib.md5(
+            "\x01".join(f"{ref}={val}" for ref, val in m["cells"]).encode("utf-8")
+        ).hexdigest()
+        return [(
+            d, True, m["sheet_name"], m["n_rows"], m["n_cells"], digest, None,
+        )]
 
-    return media.mapInPandas(batches, schema=XLSX_STATS_SCHEMA)
+    return map_rows(media.select("doc_id", "payload"), one, XLSX_STATS_SCHEMA)

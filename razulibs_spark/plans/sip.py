@@ -154,10 +154,11 @@ def assemble_sip(
         rows.append(event(2 * n + 2, "ine", sip_dir, "Ingestion ended."))
         events = local_frame(spark, rows, ev.EVENT_SCHEMA)
 
-        # K3 + K4 sinks: byte-compatible manifest map, eventlog as RDF.
+        # K3 + K4 sinks: byte-compatible manifest map, eventlog as RDF in
+        # one part file (2n + 2 events; the coalesce is narrow).
         with open(os.path.join(sip_dir, "manifest.json"), "w", encoding="utf-8") as fh:
             fh.write(manifest_to_json_map(manifest))
-        write_ntriples(ev.events_to_triples(events, event_base),
+        write_ntriples(ev.events_to_triples(events, event_base).coalesce(1),
                        eventlog_path)
         return {"manifest": manifest, "events": events, "n_documents": n_docs}
 

@@ -5659,7 +5659,10 @@ def k2_turtle_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     document with its @prefix header), parse back per-line, compact —
     the oracle checks the full cycle is the identity. Write and read
     are both narrow (no shuffle); the only driver work is collecting
-    the handful of @prefix declarations."""
+    the handful of @prefix declarations. On this export at sf0.1
+    (72 MB, 750k triples; 4 vCPU, single warm runs) producing every
+    column took the line reader 2.8-4.3 s and the full-grammar
+    ``read_turtle_full`` 2.0-3.0 s, with the same triple set."""
     from razulibs_spark.operators.rdf import compact_triples, expand_triples
     from razulibs_spark.sources.rdf_io import read_turtle, write_turtle
 

@@ -42,7 +42,7 @@ cwd and ``PYTHONPATH``.
 from __future__ import annotations
 
 import os
-from typing import Any, Callable, Iterator, Mapping, Sequence
+from typing import Any, Callable, Iterable, Iterator, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -110,6 +110,42 @@ def local_frame(
     records = [r if isinstance(r, Mapping) else dict(zip(struct.names, r)) for r in rows]
     table = pa.Table.from_pylist(records, schema=to_arrow_schema(struct))
     return spark.createDataFrame(table, schema=struct)
+
+
+def map_rows(
+    df: DataFrame,
+    fn: Callable[..., Iterable[Sequence[Any]]],
+    schema: StructType | str,
+) -> DataFrame:
+    """One ``mapInPandas`` pass that calls ``fn(*row)`` for each input
+    row, with the row's values in ``df``'s column order, and returns
+    the output tuples it yields, each in ``schema``'s field order.
+
+    Output rows are framed every
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows (read when
+    the pass is planned; zero or less means no limit, as in Spark) and
+    once more at the end, so a task's memory stays bounded whether one
+    input row gives one output row (a payload) or millions (a file)."""
+    import pandas as pd
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    names = struct.names
+    limit = int(df.sparkSession.conf.get(
+        "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
+
+    def run(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        out: list = []
+        for pdf in frames:
+            for row in pdf.itertuples(index=False, name=None):
+                for r in fn(*row):
+                    out.append(r)
+                    if len(out) == limit:
+                        yield pd.DataFrame(out, columns=names)
+                        out = []
+        if out:
+            yield pd.DataFrame(out, columns=names)
+
+    return df.mapInPandas(run, schema=struct)
 
 
 def each_partition(df: DataFrame, fn: Callable[[Iterator[dict]], None]) -> int:

@@ -4,8 +4,8 @@ corpora arrive in: academic dumps and Kaggle-style datasets ship as
 domain moves SIPs as zipped transfer packages. The engine's job is the
 DISTRIBUTION shape, not the codec (stdlib zipfile/tarfile are the
 codec): per-FILE binaryFile tasks — archive shards are the natural
-parallelism unit exactly like WARC files — and one Arrow stage that
-explodes each archive into (archive, member, body) rows.
+parallelism unit exactly like WARC files — and one ``session.map_rows``
+pass that explodes each archive into (archive, member, body) rows.
 
 Sinks write one archive per partition from the executors (the
 write_warc_records contract), byte-deterministic: member timestamps
@@ -21,9 +21,7 @@ naming the archive defect — ingest gate, not silent drop.
 from __future__ import annotations
 
 import io
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType,
@@ -33,6 +31,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from razulibs_spark.session import map_rows
 
 ARCHIVE_MEMBER_SCHEMA = StructType(
     [
@@ -92,24 +92,18 @@ def _read_archives(
 ) -> DataFrame:
     import os
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in ARCHIVE_MEMBER_SCHEMA.fields]
-        for pdf in it:
-            rows: list[tuple] = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                b = bytes(content)
-                if b:
-                    rows.extend(parse(os.path.basename(p), b))
-            yield pd.DataFrame(rows, columns=cols)
+    def members(p, content):
+        b = bytes(content)
+        return parse(os.path.basename(p), b) if b else []
 
-    return (
+    files = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", glob)
         .load(path)
         .select("path", "content")
-        .mapInPandas(batches, schema=ARCHIVE_MEMBER_SCHEMA)
     )
+    return map_rows(files, members, ARCHIVE_MEMBER_SCHEMA)
 
 
 def read_zip(spark: SparkSession, path: str) -> DataFrame:

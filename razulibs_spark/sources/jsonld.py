@@ -221,7 +221,7 @@ def read_rdf(spark: SparkSession, path: str, fmt: str | None = None) -> DataFram
     per file. Turtle goes to the full-grammar reader
     (``turtle_full.read_turtle_full``): a statement may span lines and
     carry ``;``/``,`` lists, which the line-subset ``rdf_io.read_turtle``
-    (``write_turtle``'s inverse) would mis-parse without an error.
+    (``write_turtle``'s inverse) rejects.
     Graph labels of quad formats (nquads/trig/trix) are dropped here —
     S4's contract is a triples frame; use the readers directly for the
     quad shape."""

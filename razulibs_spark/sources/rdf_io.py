@@ -39,35 +39,44 @@ def _bnode(col: Column) -> Column:
     return F.concat(F.lit("_:"), F.md5(col))
 
 
-def _terms(iri) -> tuple[Column, Column, Column]:
+def _terms(short) -> tuple[Column, Column, Column]:
     """Subject, predicate and object terms of the canonical triple
-    columns, where ``iri(name)`` spells the IRI held in column
-    ``name``: the one place the term rules live. Engine bnodes
-    (``bnode:…``) become ``_:<md5>`` labels; literals carry the
-    N-Triples escapes, then a language tag or a datatype IRI."""
-    s, o = F.col("s"), F.col("o")
+    columns, where ``short(name)`` is the writer's short spelling of
+    the value in column ``name`` (a ``_:`` blank-node label it can
+    write as is, or a prefixed name), else null: the one place the
+    term rules live. A value without a short spelling is an ``<IRI>``,
+    except an engine bnode (``bnode:…``) or a blank-node label the
+    writer cannot spell, which becomes ``_:<md5>``. A parsed label is
+    thus the same node as subject and as object, and a parsed graph
+    keeps its blank-node links. Literals carry the N-Triples escapes,
+    then a language tag or a datatype IRI."""
+    s, o, o_type = F.col("s"), F.col("o"), F.col("o_type")
+
+    def term(name: str, blank: Column) -> Column:
+        value = F.col(name)
+        return F.coalesce(short(name), F.when(blank, _bnode(value)).otherwise(
+            F.concat(F.lit("<"), value, F.lit(">"))))
+
     lit_body = F.concat(F.lit('"'), _escape_literal(o), F.lit('"'))
-    subj = F.when(s.startswith("bnode:"), _bnode(s)).otherwise(iri("s"))
     obj = (
-        F.when(F.col("o_type") == "uri", iri("o"))
-        .when(F.col("o_type") == "bnode", _bnode(o))
+        F.when(o_type.isin("uri", "bnode"), term("o", o_type == "bnode"))
         .when(F.col("o_lang").isNotNull(), F.concat(lit_body, F.lit("@"), F.col("o_lang")))
         .when(
             F.col("o_datatype").isNotNull(),
-            F.concat(lit_body, F.lit("^^"), iri("o_datatype")),
+            F.concat(lit_body, F.lit("^^"), term("o_datatype", F.lit(False))),
         )
         .otherwise(lit_body)
     )
-    return subj, iri("p"), obj
+    return term("s", s.rlike("^(?:bnode|_):")), term("p", F.lit(False)), obj
 
 
-def _ntriples_iri(name: str) -> Column:
-    return F.concat(F.lit("<"), F.col(name), F.lit(">"))
+def _ntriples_label(name: str) -> Column:
+    return F.when(F.col(name).startswith("_:"), F.col(name))
 
 
 def ntriples_line() -> Column:
     """Format one triple row as an N-Triples line (pure expressions)."""
-    return F.concat_ws(" ", *_terms(_ntriples_iri), F.lit("."))
+    return F.concat_ws(" ", *_terms(_ntriples_label), F.lit("."))
 
 
 def write_ntriples(triples: DataFrame, path: str) -> None:
@@ -88,7 +97,7 @@ TURTLE_HEADER = "".join(
 _NT_RE = (
     r'^(?:<([^>]*)>|(_:\S+))\s+<([^>]*)>\s+'
     r'(?:<([^>]*)>|(_:\S+)|"([^"\\]*(?:\\.[^"\\]*)*)"'
-    r'(?:@([A-Za-z-]+)|\^\^<([^>]*)>)?)\s*\.\s*$'
+    r'(?:@([A-Za-z-]+)|\^\^<([^>]*)>)?)\s*\.\s*(?:#.*)?$'
 )
 
 
@@ -119,24 +128,42 @@ _NT_RE = (
 _SEP = "\x01"
 
 
-def _packed_groups_df(df: DataFrame, value, regex: str, names) -> DataFrame:
+def _statement_lines(spark, path: str) -> DataFrame:
+    """The lines of a line-framed RDF file that hold a statement: no
+    blank lines and no ``#`` comment lines."""
+    value = F.col("value")
+    return spark.read.text(path).filter(
+        (F.length(F.trim(value)) > 0) & ~F.ltrim(value).startswith("#")
+    )
+
+
+def _packed_groups_df(
+    df: DataFrame, value, regex: str, names, error: str
+) -> DataFrame:
     """`df` reduced to one string column per regex group, named by
     ``names`` in group order ("" where the group did not match). One
     regex execution per row on the fast path, per-group extraction
-    only for \x01-tainted lines."""
+    only for \x01-tainted lines. A line ``regex`` does not match
+    raises ``error`` followed by the line when the frame is
+    evaluated, in the same stage."""
     n_groups = len(names)
     repl = _SEP.join(f"${i}" for i in range(1, n_groups + 1))
     arr = F.split(F.regexp_replace(value, regex, repl), _SEP, -1)
     base = df.select(value.alias("_v"), arr.alias("_arr"))
-    ok = F.size("_arr") == n_groups
     tainted = F.col("_v").contains(_SEP)
-    return base.select(*[
+    matched = F.when(tainted, F.col("_v").rlike(regex)).otherwise(
+        F.size("_arr") == n_groups
+    )
+    checked = base.filter(
+        F.when(matched, F.lit(True)).otherwise(
+            F.raise_error(F.concat(F.lit(error), F.col("_v")))
+        )
+    )
+    return checked.select(*[
         F.when(
             tainted, F.regexp_extract(F.col("_v"), regex, i + 1)
         ).otherwise(
-            F.when(
-                ok, F.coalesce(F.get(F.col("_arr"), i), F.lit(""))
-            ).otherwise(F.lit(""))
+            F.coalesce(F.get(F.col("_arr"), i), F.lit(""))
         ).alias(name)
         for i, name in enumerate(names)
     ])
@@ -210,9 +237,13 @@ def _triple_columns(raw: DataFrame, **iris: Column) -> list[Column]:
 
 def read_ntriples(spark, path: str) -> DataFrame:
     """S4 source: parse N-Triples lines back into the triples schema
-    with per-line regexes — distributed, no document-level state."""
-    lines = spark.read.text(path).filter(F.length(F.trim("value")) > 0)
-    raw = _packed_groups_df(lines, F.col("value"), _NT_RE, _NT_GROUPS)
+    with per-line regexes — distributed, no document-level state.
+    Comment lines are skipped; any other line outside the grammar
+    raises."""
+    raw = _packed_groups_df(
+        _statement_lines(spark, path), F.col("value"), _NT_RE, _NT_GROUPS,
+        "read_ntriples: not an N-Triples statement: ",
+    )
     return raw.select(*_triple_columns(raw))
 
 
@@ -242,21 +273,16 @@ def _compactable(col: Column | str) -> Column:
     """Prefixed-name form of an absolute URI when the local part is
     safe to emit, else null: one anchored regex over the namespace
     alternation and one map lookup, whatever the number of bound
-    namespaces."""
-    return _compact_with(_term(col), EXPANSIONS, _PN_LOCAL_RE)
-
-
-def _turtle_uri(col: Column | str) -> Column:
-    return F.coalesce(
-        _compactable(col), F.concat(F.lit("<"), _term(col), F.lit(">"))
-    )
+    namespaces. A ``_:`` blank-node label whose name is as safe rides
+    the same regex and lookup and stays as it is."""
+    return _compact_with(_term(col), {**EXPANSIONS, "_": "_:"}, _PN_LOCAL_RE)
 
 
 def turtle_terms() -> tuple[Column, Column, Column]:
     """Subject, predicate and object as Turtle terms: prefixed names
     where compactable, `a` for rdf:type, N-Triples escapes for
     literals."""
-    subj, pred, obj = _terms(_turtle_uri)
+    subj, pred, obj = _terms(_compactable)
     pred = F.when(F.col("p") == EXPANSIONS["rdf"] + "type", F.lit("a")).otherwise(pred)
     return subj, pred, obj
 
@@ -313,7 +339,7 @@ _TTL_RE = (
     rf'^(?:<([^>]*)>|(_:\S+)|({_PNAME}))\s+'
     rf'(?:<([^>]*)>|({_PNAME})|(a))\s+'
     rf'(?:<([^>]*)>|(_:\S+)|"([^"\\]*(?:\\.[^"\\]*)*)"'
-    rf'(?:@([A-Za-z\-]+)|\^\^<([^>]*)>|\^\^({_PNAME}))?|({_PNAME}))\s*\.\s*$'
+    rf'(?:@([A-Za-z\-]+)|\^\^<([^>]*)>|\^\^({_PNAME}))?|({_PNAME}))\s*\.\s*(?:#.*)?$'
 )
 
 
@@ -323,7 +349,7 @@ def read_turtle(spark, path: str) -> DataFrame:
     @prefix declarations are dimension-sized (a handful per document)
     — collected once on the driver to build the expansion map; triple
     lines parse per-line with one regex, fully distributed."""
-    lines = spark.read.text(path).filter(F.length(F.trim("value")) > 0)
+    lines = _statement_lines(spark, path)
     decls = (
         lines.filter(F.col("value").startswith("@prefix"))
         .select(
@@ -334,13 +360,12 @@ def read_turtle(spark, path: str) -> DataFrame:
         .collect()
     )
     pmap = {r["k"]: r["ns"] for r in decls if r["k"]}
-    body = lines.filter(
-        ~F.col("value").startswith("@prefix") & ~F.col("value").startswith("#")
-    )
+    body = lines.filter(~F.col("value").startswith("@prefix"))
     raw = _packed_groups_df(body, F.col("value"), _TTL_RE, (
         "s_uri", "s_bnode", "s_pn", "p_uri", "p_pn", "p_a", "o_uri",
         "o_bnode", "o_lit", "o_lang", "o_dt_uri", "o_dt_pn", "o_pn",
-    ))
+    ), "read_turtle: not a one-triple line of the write_turtle subset "
+       "(read_rdf reads the full Turtle grammar): ")
 
     def iri(uri: str, pname: str) -> Column:
         return F.when(raw[uri] != "", raw[uri]).otherwise(_expand_with(raw[pname], pmap))
@@ -360,15 +385,19 @@ _NQ_RE = (
     r'^(?:<([^>]*)>|(_:\S+))\s+<([^>]*)>\s+'
     r'(?:<([^>]*)>|(_:\S+)|"([^"\\]*(?:\\.[^"\\]*)*)"'
     r'(?:@([A-Za-z\-]+)|\^\^<([^>]*)>)?)'
-    r'(?:\s+(?:<([^>]*)>|(_:\S+)))?\s*\.\s*$'
+    r'(?:\s+(?:<([^>]*)>|(_:\S+)))?\s*\.\s*(?:#.*)?$'
 )
 
 
 def read_nquads(spark, path: str) -> DataFrame:
     """S4 source: N-Quads → triples DataFrame + nullable `g` graph
-    column (null = default graph)."""
-    lines = spark.read.text(path).filter(F.length(F.trim("value")) > 0)
-    raw = _packed_groups_df(lines, F.col("value"), _NQ_RE, _NT_GROUPS + ("g_uri", "g_bnode"))
+    column (null = default graph). Comment lines are skipped; any
+    other line outside the grammar raises."""
+    raw = _packed_groups_df(
+        _statement_lines(spark, path), F.col("value"), _NQ_RE,
+        _NT_GROUPS + ("g_uri", "g_bnode"),
+        "read_nquads: not an N-Quads statement: ",
+    )
     return raw.select(
         *_triple_columns(raw),
         F.when(raw["g_uri"] != "", raw["g_uri"])

@@ -9,8 +9,9 @@ parsed per input split the way N-Triples can. The scale contract is
 therefore per-FILE parallelism: a ``binaryFile`` scan distributes one
 task per file (archive metadata documents are per-entity and small —
 the same argument as the S5 SIP dir scan), and each file parses
-executor-side in one Arrow batch. A single multi-GB RDF/XML file does
-not split; that is the format's nature, and the honest answer at
+executor-side in one ``session.map_rows`` pass, its triples framed
+``maxRecordsPerBatch`` rows at a time. A single multi-GB RDF/XML file
+does not split; that is the format's nature, and the honest answer at
 100 TB is "convert to N-Triples once, then operate line-framed" — the
 writers here exist so round trips are testable, while write_ntriples
 remains the bulk sink.
@@ -35,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from razulibs_spark.operators.rdf import TRIPLE_SCHEMA
+from razulibs_spark.session import map_rows
 
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 XML_NS = "http://www.w3.org/XML/1998/namespace"
@@ -72,9 +74,11 @@ def _reject_xml_illegal(col, what: str) -> None:
         )
 
 
-def _files(spark: SparkSession, path: str) -> DataFrame:
-    """One row per file (path, content) — per-file task granularity.
-    Hidden/_SUCCESS files are skipped by the source's default filter.
+def _read_files(spark: SparkSession, path: str, parse, schema: StructType) -> DataFrame:
+    """``parse(content, path)``'s rows for every non-blank file under
+    ``path`` (an empty writer partition leaves an empty part file) —
+    per-file task granularity. Hidden/_SUCCESS files are skipped by
+    the source's default filter.
 
     Task packing is left to the source: binaryFile sizes splits at
     min(maxPartitionBytes, max(openCost, totalBytes/parallelism)), so
@@ -83,12 +87,18 @@ def _files(spark: SparkSession, path: str) -> DataFrame:
     alternative — a conditional round-robin widen of the (path,
     content) rows: with ≤ cores files it cannot raise parallelism,
     only shuffle the payload bytes; reverted.)"""
-    return (
+
+    def parse_file(p, content):
+        raw = bytes(content)
+        return parse(raw, str(p)) if raw.strip() else []
+
+    files = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
         .load(path)
         .select("path", "content")
     )
+    return map_rows(files, parse_file, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -293,22 +303,7 @@ def read_rdfxml(spark: SparkSession, path: str) -> DataFrame:
     tasks (module docstring); each file parses executor-side with the
     first-principles subset parser. A malformed document raises — the
     scan is an ingest gate, not a best-effort filter."""
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cols = [f.name for f in TRIPLE_SCHEMA.fields]
-        for pdf in it:
-            # one frame PER FILE: bounds memory at one document's rows
-            # and keeps construction linear when binaryFile packs
-            # several files into a task (r14)
-            for p, content in zip(pdf["path"], pdf["content"]):
-                if not bytes(content).strip():
-                    continue  # empty part file (empty writer partition)
-                yield pd.DataFrame(
-                    _parse_rdfxml(bytes(content), str(p)), columns=cols
-                )
-
-    return _files(spark, path).mapInPandas(batches, schema=TRIPLE_SCHEMA)
+    return _read_files(spark, path, _parse_rdfxml, TRIPLE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -523,20 +518,7 @@ def _parse_trix(content: bytes, scope: str) -> list[tuple]:
 def read_trix(spark: SparkSession, path: str) -> DataFrame:
     """S4 source: TriX documents → quads DataFrame (TRIPLE_SCHEMA +
     nullable ``g``, same shape as read_nquads). Per-file tasks."""
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cols = [f.name for f in QUAD_SCHEMA.fields]
-        for pdf in it:
-            # one frame per file (r14) — see read_rdfxml
-            for p, content in zip(pdf["path"], pdf["content"]):
-                if not bytes(content).strip():
-                    continue  # empty part file (empty writer partition)
-                yield pd.DataFrame(
-                    _parse_trix(bytes(content), str(p)), columns=cols
-                )
-
-    return _files(spark, path).mapInPandas(batches, schema=QUAD_SCHEMA)
+    return _read_files(spark, path, _parse_trix, QUAD_SCHEMA)
 
 
 _TRIX_HEADER = (
@@ -769,19 +751,9 @@ def read_trig(spark: SparkSession, path: str) -> DataFrame:
     DataFrame. Per-file tasks: the graph-block state machine walks one
     file per task — files parse independently, so the scan distributes
     across the corpus even though a block can't split."""
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cols = [f.name for f in QUAD_SCHEMA.fields]
-        for pdf in it:
-            # one frame per file (r14) — see read_rdfxml
-            for content in pdf["content"]:
-                yield pd.DataFrame(
-                    _parse_trig(bytes(content).decode("utf-8")),
-                    columns=cols,
-                )
-
-    return _files(spark, path).mapInPandas(batches, schema=QUAD_SCHEMA)
+    return _read_files(
+        spark, path, lambda raw, p: _parse_trig(raw.decode("utf-8")), QUAD_SCHEMA
+    )
 
 
 def _trig_lines(pdf) -> "pd.Series":  # noqa: F821

@@ -19,9 +19,6 @@ raises ValueError — an ingest gate, never a silently dropped URL.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     DoubleType,
@@ -29,6 +26,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from razulibs_spark.session import map_rows
 
 SITEMAP_NS = "http://www.sitemaps.org/schemas/sitemap/0.9"
 _NS = "{%s}" % SITEMAP_NS
@@ -105,31 +104,26 @@ def read_sitemaps(
             + [StructField("source", StringType(), False)]
         )
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def parse_file(content, p):
         import os
 
-        cols = [f.name for f in schema.fields]
-        for pdf in it:
-            rows: list[tuple] = []
-            for content, p in zip(pdf["content"], pdf["path"]):
-                b = bytes(content)
-                if not b.strip():
-                    continue
-                parsed = parse_sitemap(b)
-                if include_source:
-                    base = os.path.basename(p)
-                    parsed = [r + (base,) for r in parsed]
-                rows.extend(parsed)
-            yield pd.DataFrame(rows, columns=cols)
+        b = bytes(content)
+        if not b.strip():
+            return []
+        parsed = parse_sitemap(b)
+        if include_source:
+            base = os.path.basename(p)
+            return [r + (base,) for r in parsed]
+        return parsed
 
-    return (
+    files = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.{xml,xml.gz}")
         .load(path)
         .select("content", "path")
-        .mapInPandas(batches, schema=schema)
     )
+    return map_rows(files, parse_file, schema)
 
 
 _XML_ILLEGAL_RE = None  # compiled lazily

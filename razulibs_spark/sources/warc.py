@@ -17,7 +17,8 @@ zero-length members raise).
 Scale shape: per-FILE parallelism via ``binaryFile`` (crawl corpora
 are sharded into ~1 GB warc files by construction, so file-level tasks
 ARE the distribution unit — same argument as the document-framed RDF
-scan); a single file parses executor-side in one Arrow batch. The sink
+scan); a single file parses executor-side in one ``session.map_rows``
+pass, its records framed ``maxRecordsPerBatch`` rows at a time. The sink
 writes one warc file per partition from the executors (shared-FS
 contract, as write_jsonld_per_entity).
 
@@ -28,9 +29,6 @@ gate, never a silently dropped record.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType,
@@ -39,6 +37,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from razulibs_spark.session import map_rows
 
 WARC_RECORD_SCHEMA = StructType(
     [
@@ -311,32 +311,23 @@ def parse_warc(content: bytes) -> list[tuple]:
     return rows
 
 
-def _parse_batches(
-    it: Iterator["pd.DataFrame"],
-) -> Iterator["pd.DataFrame"]:
-    """The shared Arrow parse stage of the batch and streaming WARC
-    scans: one input row per FILE, one output row per record."""
-    cols = [f.name for f in WARC_RECORD_SCHEMA.fields]
-    for pdf in it:
-        rows: list[tuple] = []
-        for content in pdf["content"]:
-            b = bytes(content)
-            if not b.strip():
-                continue
-            rows.extend(parse_warc(b))
-        yield pd.DataFrame(rows, columns=cols)
+def _file_records(content) -> list[tuple]:
+    """The shared row function of the batch and streaming WARC scans:
+    one input row per FILE, one output row per record."""
+    b = bytes(content)
+    return parse_warc(b) if b.strip() else []
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """WARC scan → records DataFrame. Per-file tasks (module
     docstring); plain and .gz files both parse."""
-    return (
+    files = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
         .load(path)
         .select("content")
-        .mapInPandas(_parse_batches, schema=WARC_RECORD_SCHEMA)
     )
+    return map_rows(files, _file_records, WARC_RECORD_SCHEMA)
 
 
 def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -357,14 +348,14 @@ def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
             StructField("content", BinaryType(), True),
         ]
     )
-    return (
+    files = (
         spark.readStream.format("binaryFile")
         .schema(binary_file_schema)
         .option("recursiveFileLookup", "true")
         .load(path)
         .select("content")
-        .mapInPandas(_parse_batches, schema=WARC_RECORD_SCHEMA)
     )
+    return map_rows(files, _file_records, WARC_RECORD_SCHEMA)
 
 
 def cdx_from_records(records: DataFrame) -> DataFrame:

@@ -9,6 +9,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    BinaryType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 TABLES = (
     "region",
@@ -56,6 +63,21 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load(spark, sf_dir, t) for t in TABLES}
+
+
+# The frames the payload operators synthesize from the documents table
+# and parse back (operators/{docx,odt,pptx,...}.py): one encoded file
+# per document, with the container's MIME type where the format names
+# one.
+PAYLOAD_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType(), False),
+        StructField("payload", BinaryType(), False),
+    ]
+)
+TYPED_PAYLOAD_SCHEMA = StructType(
+    PAYLOAD_SCHEMA.fields + [StructField("media_format", StringType(), False)]
+)
 
 
 def widen_python_stage(df: DataFrame) -> DataFrame:

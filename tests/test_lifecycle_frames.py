@@ -13,7 +13,10 @@
 - The sinks run their input once: writing a graph union to N-Triples
   runs its shuffle once, and the manifest JSON map is one collect. No
   source, sink or plan counts its input's partitions, which with AQE
-  runs the input's shuffles before the write runs them again.
+  runs the input's shuffles before the write runs them again. Writing
+  an event log is one job.
+- The file readers and payload operators run their Python rows through
+  `session.map_rows`, the one `mapInPandas` batch loop.
 """
 
 from __future__ import annotations
@@ -106,6 +109,30 @@ def test_write_ntriples_runs_a_graph_union_once(spark, tmp_path):
     out = str(tmp_path / "nt")
     assert _jobs(spark, lambda: write_ntriples(triples, out)) == 2
     assert {tuple(r) for r in read_ntriples(spark, out).collect()} == set(rows)
+
+
+def test_event_log_write_is_one_job(spark, tmp_path):
+    """The event properties and the premis:object links are disjoint
+    by predicate, so writing the log needs no distinct (a shuffle):
+    one job writes it, with the lines of the distinct form, and a
+    subject an event lists twice is still one link."""
+    from razulibs_spark.operators import events as ev
+    from razulibs_spark.sources.rdf_io import ntriples_line
+
+    ts = datetime(2024, 1, 2, 3, 4, 5)
+    rows = [{"event_id": i, "event_type": t, "subjects": subjects,
+             "implemented_by": "razu", "outcome": "suc", "started_at": ts,
+             "ended_at": ts, "description": "d"}
+            for i, t, subjects in [(1, "ins", ["sip", "sip"]),
+                                   (2, "mem", ["a.meta.json"]),
+                                   (3, "ine", ["sip"])]]
+    triples = ev.events_to_triples(local_frame(spark, rows, ev.EVENT_SCHEMA), "urn:ev")
+    out = str(tmp_path / "eventlog.nt")
+    assert _jobs(spark, lambda: write_ntriples(triples, out)) == 1
+    lines = [r["value"] for r in spark.read.text(out).collect()]
+    want = {r["v"] for r in graph_union(triples).select(ntriples_line().alias("v")).collect()}
+    assert len(lines) == len(set(lines)) and set(lines) == want
+    assert sum(" <premis:object> " in line for line in lines) == 3
 
 
 def test_manifest_json_map_is_one_collect(spark):
@@ -281,3 +308,39 @@ def test_archive_layers_count_no_partitions(module):
     stages under AQE, and the write that follows runs them again."""
     uses = _attribute_uses(module, {"getNumPartitions"})
     assert not uses, f"{module} counts partitions at {uses}"
+
+
+# The file readers and payload operators whose per-row Python work runs
+# through session.map_rows; in rdfxml.py the three vectorized writers
+# keep their own batch passes.
+ROW_MODULES = sorted(
+    ["sources/turtle_full.py", "sources/rdfxml.py", "sources/archives.py",
+     "sources/sitemap.py", "sources/warc.py", "operators/wikitext.py"]
+    + [f"operators/{m}.py" for m in
+       ("docx", "odt", "pptx", "xlsx", "epub", "rtf", "pdf", "eml", "mp4", "tiff")]
+)
+OWN_BATCH_PASSES = {"sources/rdfxml.py": {"write_rdfxml", "write_trix", "write_trig"}}
+
+
+def _mapinpandas_uses(module, exempt=()) -> list[tuple[int, str]]:
+    """(line, enclosing top-level function) of every ``mapInPandas``
+    in ``module`` outside the functions named in ``exempt``."""
+    with open(os.path.join(ROOT, module), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    return [(node.lineno, top.name)
+            for top in tree.body if getattr(top, "name", None) not in exempt
+            for node in ast.walk(top)
+            if isinstance(node, ast.Attribute) and node.attr == "mapInPandas"]
+
+
+@pytest.mark.parametrize("module", ROW_MODULES)
+def test_row_modules_run_python_rows_through_map_rows(module):
+    """One per-row runner: a reader or payload operator gives
+    `session.map_rows` its row function and builds no batch loop,
+    column list or pandas frame of its own."""
+    uses = _mapinpandas_uses(module, OWN_BATCH_PASSES.get(module, ()))
+    assert not uses, f"{module} calls mapInPandas at {uses}; use session.map_rows"
+
+
+def test_map_rows_is_the_session_batch_loop():
+    assert {name for _, name in _mapinpandas_uses("session.py")} == {"map_rows"}

@@ -858,20 +858,20 @@ def test_cdx_index_single_parse_pass_no_cartesian(spark):
 
 
 def test_streaming_warc_ingest_shares_batch_parse(spark, tmp_path):
-    """The streaming reader reuses the exact batch Arrow parse stage —
+    """The streaming reader reuses the exact batch row function —
     one implementation of the record grammar (the vocab-lesson applied
     to crawl ingestion)."""
     from razulibs_spark.sources.warc import (
-        _parse_batches,
+        _file_records,
         read_warc_stream,
     )
 
     df = read_warc_stream(spark, str(tmp_path))
     assert df.isStreaming
-    # the shared stage is the module-level function, not a copy
+    # the shared row function is the module-level function, not a copy
     import razulibs_spark.sources.warc as w
 
-    assert w._parse_batches is _parse_batches
+    assert w._file_records is _file_records
 
 
 def test_markdown_extract_zero_exchange_zero_python(spark):

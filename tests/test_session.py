@@ -1,12 +1,17 @@
 """The session factory's JIT policy reaches the driver JVM, on
 ``spark.driver.defaultJavaOptions`` and nowhere else; ``each_partition``
-runs a side effect over every row once, in at most one task per core."""
+runs a side effect over every row once, in at most one task per core;
+``map_rows`` calls its row function once per input row and frames the
+output ``maxRecordsPerBatch`` rows at a time."""
 
 from __future__ import annotations
 
 import os
+from types import SimpleNamespace
 
-from razulibs_spark.session import JIT_POLICY, each_partition
+import pandas as pd
+
+from razulibs_spark.session import JIT_POLICY, each_partition, map_rows
 
 
 def test_driver_jvm_runs_the_jit_policy(spark):
@@ -65,3 +70,44 @@ def test_each_partition_keeps_a_narrower_coalesce(spark, tmp_path):
     df = spark.range(0, 10, numPartitions=5).coalesce(1)
     assert each_partition(df.select("id"), mark) == 10
     assert len(os.listdir(out)) == 1
+
+
+def test_map_rows_calls_fn_per_row_in_column_order(spark):
+    df = spark.range(0, 5, numPartitions=2).selectExpr(
+        "id", "CAST(id AS STRING) AS name", "CAST(NULL AS BINARY) AS blob")
+    out = map_rows(
+        df,
+        lambda i, name, blob: [(i, f"{name}-{k}", blob, type(i) is int) for k in range(i)],
+        "id long, label string, blob binary, plain_int boolean",
+    )
+    got = sorted(map(tuple, out.collect()))
+    assert got == [(i, f"{i}-{k}", None, True) for i in range(5) for k in range(i)]
+
+
+class _Frame:
+    """Stands in for a DataFrame: records the batch function map_rows
+    hands to ``mapInPandas`` so its framing can be run directly."""
+
+    def __init__(self, limit):
+        self.sparkSession = SimpleNamespace(conf=SimpleNamespace(get=lambda key, default: str(limit)))
+
+    def mapInPandas(self, fn, schema):
+        self.fn = fn
+        return self
+
+
+def _frames(limit, batches):
+    frame = map_rows(_Frame(limit), lambda a: [(a, k) for k in range(a)], "a long, k long")
+    return list(frame.fn(iter(batches)))
+
+
+def test_map_rows_frames_every_max_records_per_batch():
+    batches = [pd.DataFrame({"a": [1, 2]}), pd.DataFrame({"a": [3]}), pd.DataFrame({"a": [0]})]
+    frames = _frames(4, batches)
+    assert [len(f) for f in frames] == [4, 2]
+    assert all(list(f.columns) == ["a", "k"] for f in frames)
+    rows = [tuple(r) for f in frames for r in f.itertuples(index=False)]
+    assert rows == [(1, 0), (2, 0), (2, 1), (3, 0), (3, 1), (3, 2)]
+    # zero or less: no limit, one frame at the end; no rows: no frame
+    assert [len(f) for f in _frames(0, batches)] == [6]
+    assert _frames(4, [pd.DataFrame({"a": [0, 0]})]) == []
