@@ -9,7 +9,7 @@ whitespace-collapsed text block each, inline markup inside a block
 concatenates transparently, character references decode, and links
 inside boilerplate regions are counted as removed chrome.
 
-Scale shape: one Arrow ``mapInPandas`` stage over (doc_id, html) rows
+Scale shape: one Arrow pass (``session.map_rows``) over (doc_id, html) rows
 — per-row, stateless, fail-closed (the stdlib parser is tolerant by
 design, so malformed markup degrades to fewer blocks, never a task
 failure); output is a handful of scalar columns per page. At 100 TB
@@ -19,10 +19,8 @@ page bytes.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+from razulibs_spark.session import map_rows
 from razulibs_spark.tables import widen_python_stage
 from pyspark.sql.types import (
     BinaryType,
@@ -201,82 +199,77 @@ def synthesize_html_pages(documents: DataFrame) -> DataFrame:
     HTML the parser must normalize. The oracle recomputes the
     expected extraction from documents.text alone."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, pages = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                words = str(text).split(" ")
-                paras = []
-                for i in range(0, len(words), _CHUNK):
-                    c = words[i:i + _CHUNK]
-                    if len(c) >= 3:
-                        mid = len(c) // 2
-                        body = (
-                            " ".join(c[:mid])
-                            + " <em>" + c[mid] + "</em> "
-                            + " ".join(c[mid + 1:])
-                        )
-                    else:
-                        body = " ".join(c)
-                    paras.append(f"  <p class=\"txt\">{body}</p>")
-                nav_links = "".join(
-                    f'<li><a href="/m/{j}">menu {j}</a></li>'
-                    for j in range(3 + d % 4)
+    def one(doc_id, text):
+        d = int(doc_id)
+        words = str(text).split(" ")
+        paras = []
+        for i in range(0, len(words), _CHUNK):
+            c = words[i:i + _CHUNK]
+            if len(c) >= 3:
+                mid = len(c) // 2
+                body = (
+                    " ".join(c[:mid])
+                    + " <em>" + c[mid] + "</em> "
+                    + " ".join(c[mid + 1:])
                 )
-                page = (
-                    "<!DOCTYPE html>\n"
-                    f'<html lang="en"><head><title>Doc {d}</title>\n'
-                    f"<script>if(a<b&&c>{d}){{track()}}</script>\n"
-                    "<style>p.txt{margin:0} /* a<b */</style>\n"
-                    f'<link rel="canonical" '
-                    f'href="https://h{d % 8}.example/doc/{d}">\n'
-                    f'<meta property="og:title" content="Doc {d}">\n'
-                    f'<meta property="og:type" content='
-                    f'"{"article" if d % 2 else "website"}">\n'
-                    f'<meta name="description" '
-                    f'content="Doc {d} &amp; more">\n'
-                    # robots directives on two planted slices: the
-                    # noindex gate must drop %11==3 and keep %11==7
-                    # (whose value needs ws-trim + case-folding)
-                    + (
-                        '<meta name="robots" '
-                        'content="noindex,nofollow">\n'
-                        if d % 11 == 3 else
-                        '<meta name="ROBOTS" content="Index, Follow">\n'
-                        if d % 11 == 7 else ""
-                    )
-                    + "</head>\n"
-                    "<body>\n"
-                    f"<header><h1>Site {d % 7}</h1></header>\n"
-                    f"<nav><ul>{nav_links}</ul></nav>\n"
-                    "<!-- boilerplate above; content below -->\n"
-                    '<main id="content">\n'
-                    + "\n".join(paras)
-                    + "\n</main>\n"
-                    + "<section class=\"related\">"
-                    + "".join(
-                        f'<a href="/doc/{(d * 7 + 11 * j) % 10000}">'
-                        f"ref {j}</a> "
-                        for j in range(1 + d % 3)
-                    )
-                    + "</section>\n"
-                    '<img src="/logo.png" alt="logo">\n'
-                    "<aside>Read more &amp; subscribe &lt;now&gt;</aside>\n"
-                    '<footer><a href="/tos">ToS</a> &copy; '
-                    f'<a href="/priv">Privacy</a> {d}</footer>\n'
-                    "</body></html>"
-                )
-                if d % 10 == 6:
-                    page = page.replace("<p class=\"txt\">", "<P class=txt>")
-                    page = page.replace("</p>", "</P>")
-                ids.append(d)
-                pages.append(page)
-            yield pd.DataFrame({"doc_id": ids, "html": pages})
+            else:
+                body = " ".join(c)
+            paras.append(f"  <p class=\"txt\">{body}</p>")
+        nav_links = "".join(
+            f'<li><a href="/m/{j}">menu {j}</a></li>'
+            for j in range(3 + d % 4)
+        )
+        page = (
+            "<!DOCTYPE html>\n"
+            f'<html lang="en"><head><title>Doc {d}</title>\n'
+            f"<script>if(a<b&&c>{d}){{track()}}</script>\n"
+            "<style>p.txt{margin:0} /* a<b */</style>\n"
+            f'<link rel="canonical" '
+            f'href="https://h{d % 8}.example/doc/{d}">\n'
+            f'<meta property="og:title" content="Doc {d}">\n'
+            f'<meta property="og:type" content='
+            f'"{"article" if d % 2 else "website"}">\n'
+            f'<meta name="description" '
+            f'content="Doc {d} &amp; more">\n'
+            # robots directives on two planted slices: the
+            # noindex gate must drop %11==3 and keep %11==7
+            # (whose value needs ws-trim + case-folding)
+            + (
+                '<meta name="robots" '
+                'content="noindex,nofollow">\n'
+                if d % 11 == 3 else
+                '<meta name="ROBOTS" content="Index, Follow">\n'
+                if d % 11 == 7 else ""
+            )
+            + "</head>\n"
+            "<body>\n"
+            f"<header><h1>Site {d % 7}</h1></header>\n"
+            f"<nav><ul>{nav_links}</ul></nav>\n"
+            "<!-- boilerplate above; content below -->\n"
+            '<main id="content">\n'
+            + "\n".join(paras)
+            + "\n</main>\n"
+            + "<section class=\"related\">"
+            + "".join(
+                f'<a href="/doc/{(d * 7 + 11 * j) % 10000}">'
+                f"ref {j}</a> "
+                for j in range(1 + d % 3)
+            )
+            + "</section>\n"
+            '<img src="/logo.png" alt="logo">\n'
+            "<aside>Read more &amp; subscribe &lt;now&gt;</aside>\n"
+            '<footer><a href="/tos">ToS</a> &copy; '
+            f'<a href="/priv">Privacy</a> {d}</footer>\n'
+            "</body></html>"
+        )
+        if d % 10 == 6:
+            page = page.replace("<p class=\"txt\">", "<P class=txt>")
+            page = page.replace("</p>", "</P>")
+        return [(d, page)]
 
-    return widen_python_stage(
-        documents.select("doc_id", "text")
-    ).mapInPandas(batches, schema=_PAGE_SCHEMA)
+    return map_rows(
+        widen_python_stage(documents.select("doc_id", "text")), one, _PAGE_SCHEMA
+    )
 
 
 def extract_main_text(
@@ -324,30 +317,23 @@ def extract_main_text(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in out_schema.fields]
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                res = extract_page(str(row["html"]))
-                main = "\n".join(res["blocks"])
-                rows.append(
-                    (
-                        int(row["doc_id"]),
-                        *(row[c] for c in passthrough),
-                        res["title"] or None,
-                        len(res["blocks"]),
-                        res["n_links_removed"],
-                        hashlib.md5(main.encode("utf-8")).hexdigest(),
-                    )
-                    + ((main,) if include_text else ())
-                    + tuple(
-                        res["meta"].get(m) for m in include_meta
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(doc_id, html, *extra_values):
+        res = extract_page(str(html))
+        main = "\n".join(res["blocks"])
+        return [
+            (
+                int(doc_id),
+                *extra_values,
+                res["title"] or None,
+                len(res["blocks"]),
+                res["n_links_removed"],
+                hashlib.md5(main.encode("utf-8")).hexdigest(),
+            )
+            + ((main,) if include_text else ())
+            + tuple(res["meta"].get(m) for m in include_meta)
+        ]
 
-    return pages.mapInPandas(batches, schema=out_schema)
+    return map_rows(pages.select("doc_id", "html", *passthrough), one, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -426,19 +412,10 @@ def decode_pages(raw: DataFrame, body_col: str = "body") -> DataFrame:
     pass — the bytes-to-text gate every downstream text operator
     assumes has already happened."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, encs, texts = [], [], []
-            for doc_id, body in zip(pdf["doc_id"], pdf[body_col]):
-                enc, text = sniff_decode(bytes(body))
-                ids.append(int(doc_id))
-                encs.append(enc)
-                texts.append(text)
-            yield pd.DataFrame(
-                {"doc_id": ids, "encoding": encs, "html": texts}
-            )
+    def one(doc_id, body):
+        return [(int(doc_id), *sniff_decode(bytes(body)))]
 
-    return raw.mapInPandas(batches, schema=DECODED_PAGE_SCHEMA)
+    return map_rows(raw.select("doc_id", body_col), one, DECODED_PAGE_SCHEMA)
 
 
 # (marker word, encoding, meta snippet) per synthesis mode — the top
@@ -473,35 +450,27 @@ def synthesize_encoded_pages(documents: DataFrame) -> DataFrame:
     from the charset's own repertoire (café<d%7> / カフェ<d%7> / …) so
     a wrong decode changes the content hash, not just the label."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out_schema_cols = ("doc_id", "body")
-        for pdf in it:
-            ids, bodies = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                marker, enc, meta = _ENCODED_PAGE_MODES[d % 8]
-                if d % 19 == 5:
-                    marker, enc, meta = (
-                        "café", "windows-1252", '<meta charset="utf-8">'
-                    )
-                content = f"{marker}{d % 7} {text}"
-                page = (
-                    f"<html><head>{meta or ''}<title>Doc {d}</title>"
-                    f"</head><body><p>{content}</p></body></html>"
-                )
-                if meta is None:  # utf-16 mode: BOM carries the label
-                    body = b"\xff\xfe" + page.encode("utf-16-le")
-                else:
-                    body = page.encode(enc)
-                ids.append(d)
-                bodies.append(body)
-            yield pd.DataFrame(dict(zip(out_schema_cols, (ids, bodies))))
+    def one(doc_id, text):
+        d = int(doc_id)
+        marker, enc, meta = _ENCODED_PAGE_MODES[d % 8]
+        if d % 19 == 5:
+            marker, enc, meta = (
+                "café", "windows-1252", '<meta charset="utf-8">'
+            )
+        content = f"{marker}{d % 7} {text}"
+        page = (
+            f"<html><head>{meta or ''}<title>Doc {d}</title>"
+            f"</head><body><p>{content}</p></body></html>"
+        )
+        if meta is None:  # utf-16 mode: BOM carries the label
+            body = b"\xff\xfe" + page.encode("utf-16-le")
+        else:
+            body = page.encode(enc)
+        return [(d, body)]
 
-    return widen_python_stage(
-        documents.select("doc_id", "text")
-    ).mapInPandas(
-        batches,
-        schema=StructType(
+    return map_rows(
+        widen_python_stage(documents.select("doc_id", "text")), one,
+        StructType(
             [
                 StructField("doc_id", LongType(), False),
                 StructField("body", BinaryType(), False),
@@ -530,26 +499,21 @@ def extract_page_meta(pages: DataFrame) -> DataFrame:
     og:title/og:type, description, plus the total meta count. Same
     one-Arrow-pass posture as extract_main_text."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in HTML_META_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                meta = extract_page(str(html))["meta"]
-                rows.append(
-                    (
-                        int(doc_id),
-                        meta.get("canonical"),
-                        meta.get("og:title"),
-                        meta.get("og:type"),
-                        meta.get("description"),
-                        meta.get("robots"),
-                        len(meta),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(doc_id, html):
+        meta = extract_page(str(html))["meta"]
+        return [
+            (
+                int(doc_id),
+                meta.get("canonical"),
+                meta.get("og:title"),
+                meta.get("og:type"),
+                meta.get("description"),
+                meta.get("robots"),
+                len(meta),
+            )
+        ]
 
-    return pages.mapInPandas(batches, schema=HTML_META_SCHEMA)
+    return map_rows(pages.select("doc_id", "html"), one, HTML_META_SCHEMA)
 
 
 LINK_SCHEMA = StructType(
@@ -569,16 +533,14 @@ def extract_links(pages: DataFrame) -> DataFrame:
     Same one-Arrow-pass posture as extract_main_text; output is
     links-per-page-bounded fan-out."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in LINK_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                for href, anchor in extract_page(str(html))["links"]:
-                    rows.append((int(doc_id), href, anchor or None))
-            yield pd.DataFrame(rows, columns=cols)
+    def one(doc_id, html):
+        d = int(doc_id)
+        return [
+            (d, href, anchor or None)
+            for href, anchor in extract_page(str(html))["links"]
+        ]
 
-    return pages.mapInPandas(batches, schema=LINK_SCHEMA)
+    return map_rows(pages.select("doc_id", "html"), one, LINK_SCHEMA)
 
 
 WAT_SCHEMA = StructType(
@@ -600,22 +562,17 @@ def extract_wat(pages: DataFrame) -> DataFrame:
     frames back on doc_id (cache + shuffle). At 100 TB this single
     Arrow pass is the whole metadata stage."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in WAT_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                res = extract_page(str(html))
-                meta = res["meta"]
-                rows.append(
-                    (
-                        int(doc_id),
-                        meta.get("canonical"),
-                        meta.get("og:type"),
-                        len(meta),
-                        len(res["links"]),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(doc_id, html):
+        res = extract_page(str(html))
+        meta = res["meta"]
+        return [
+            (
+                int(doc_id),
+                meta.get("canonical"),
+                meta.get("og:type"),
+                len(meta),
+                len(res["links"]),
+            )
+        ]
 
-    return pages.mapInPandas(batches, schema=WAT_SCHEMA)
+    return map_rows(pages.select("doc_id", "html"), one, WAT_SCHEMA)

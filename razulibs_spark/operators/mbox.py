@@ -31,6 +31,7 @@ import re
 from pyspark.sql import DataFrame
 
 from razulibs_spark.operators.pinning import pin_iteration
+from razulibs_spark.session import map_rows
 
 _FROM_LINE = "From MAILER-DAEMON Thu Jan  1 00:00:00 1970"
 _QUOTED_FROM_RE = re.compile(r"^(>+)From ", re.M)
@@ -55,37 +56,29 @@ def mbox_unescape(message_text: str) -> str:
 _CL_RE = re.compile(r"^content-length:\s*(\d+)\s*$", re.IGNORECASE)
 
 
-def _fragment_meta(it):
-    """Arrow stage over reassembled candidate fragments → the three
+def _fragment_meta(rec_id, rec):
+    """Row function over reassembled candidate fragments → the three
     longs the stitch fold needs: total byte length, the
     Content-Length value found in the fragment's own header block
     (-1 when absent), and the stored-body tail length (bytes after
     the header/blank-line boundary). All byte counts are UTF-8 —
     Content-Length counts stored bytes."""
-    import pandas as pd
-
-    for pdf in it:
-        rows = []
-        for rec_id, rec in zip(pdf["rec_id"], pdf["rec"]):
-            text = str(rec)
-            nbytes = len(text.encode("utf-8"))
-            cl = -1
-            tail = nbytes
-            lines = text.split("\n")
-            # header block: lines after the From_ line up to the
-            # first blank line (CRLF mail leaves a trailing \r)
-            for k, ln in enumerate(lines[1:], start=1):
-                if ln.rstrip("\r") == "":
-                    body = "\n".join(lines[k + 1:])
-                    tail = len(body.encode("utf-8"))
-                    break
-                m = _CL_RE.match(ln.rstrip("\r"))
-                if m:
-                    cl = int(m.group(1))
-            rows.append((int(rec_id), nbytes, cl, tail))
-        yield pd.DataFrame(
-            rows, columns=["rec_id", "nbytes", "cl", "tail"]
-        )
+    text = str(rec)
+    nbytes = len(text.encode("utf-8"))
+    cl = -1
+    tail = nbytes
+    lines = text.split("\n")
+    # header block: lines after the From_ line up to the
+    # first blank line (CRLF mail leaves a trailing \r)
+    for k, ln in enumerate(lines[1:], start=1):
+        if ln.rstrip("\r") == "":
+            body = "\n".join(lines[k + 1:])
+            tail = len(body.encode("utf-8"))
+            break
+        m = _CL_RE.match(ln.rstrip("\r"))
+        if m:
+            cl = int(m.group(1))
+    return [(int(rec_id), nbytes, cl, tail)]
 
 
 def read_mbox_sharded(
@@ -172,8 +165,8 @@ def read_mbox_sharded(
         return_lines=True,
     )
     frags = lines.groupBy("rec_id").agg(record_line_expr().alias("rec"))
-    meta = frags.mapInPandas(
-        _fragment_meta, "rec_id long, nbytes long, cl long, tail long"
+    meta = map_rows(
+        frags, _fragment_meta, "rec_id long, nbytes long, cl long, tail long"
     )
 
     # linear stitch: while the current message's Content-Length is
@@ -429,9 +422,7 @@ def mbox_message_stats(messages: DataFrame) -> DataFrame:
     from the message's own Subject (``Report <d> …``) so correctness
     does not depend on file order. Fail-closed per row."""
     import hashlib
-    from typing import Iterator
 
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType,
         LongType,
@@ -454,34 +445,23 @@ def mbox_message_stats(messages: DataFrame) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schema.fields]
-        for pdf in it:
-            rows = []
-            for msg_id, raw in zip(pdf["msg_id"], pdf["raw"]):
-                try:
-                    m = parse_eml(str(raw).encode("utf-8"))
-                    subj = m["subject"]
-                    d = int(subj.split(" ")[1])
-                except (ValueError, IndexError) as exc:
-                    # doc_id unrecoverable: sentinel row (negative id
-                    # keyed by file position) — the oracle expects
-                    # none, so any appearance is a visible mismatch
-                    rows.append(
-                        (-int(msg_id), False, None, None, None, None,
-                         str(exc))
-                    )
-                    continue
-                rows.append(
-                    (
-                        d, True,
-                        hashlib.md5(subj.encode()).hexdigest(),
-                        hashlib.md5(
-                            (m["body"] or "").encode()
-                        ).hexdigest(),
-                        m["n_parts"], m["cte"], None,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def one(msg_id, raw):
+        try:
+            m = parse_eml(str(raw).encode("utf-8"))
+            subj = m["subject"]
+            d = int(subj.split(" ")[1])
+        except (ValueError, IndexError) as exc:
+            # doc_id unrecoverable: sentinel row (negative id
+            # keyed by file position) — the oracle expects
+            # none, so any appearance is a visible mismatch
+            return [(-int(msg_id), False, None, None, None, None, str(exc))]
+        return [
+            (
+                d, True,
+                hashlib.md5(subj.encode()).hexdigest(),
+                hashlib.md5((m["body"] or "").encode()).hexdigest(),
+                m["n_parts"], m["cte"], None,
+            )
+        ]
 
-    return messages.mapInPandas(batches, schema=schema)
+    return map_rows(messages.select("msg_id", "raw"), one, schema)

@@ -26,6 +26,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from razulibs_spark.session import map_rows
 from razulibs_spark.tables import widen_python_stage
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -47,6 +48,8 @@ MEDIA_SCHEMA = StructType(
         StructField("declared_height", LongType(), True),
     ]
 )
+# The (doc_id, payload, media_format) rows the media synthesizers emit.
+SYNTH_MEDIA_SCHEMA = StructType(MEDIA_SCHEMA.fields[:3])
 
 FEATURE_SCHEMA = StructType(
     [
@@ -557,33 +560,26 @@ CHUNK_SCHEMA = StructType(
 def chunk_audio(media: DataFrame, chunk_bytes: int = 128) -> DataFrame:
     """Audio-chunking stage (audio path of the multimodal north star):
     fixed-size payload windows, one output row per chunk — the same
-    UDTF-shaped mapInPandas fan-out as sample_frames, restricted to
+    UDTF-shaped map_rows fan-out as sample_frames, restricted to
     audio rows before the Python boundary. Real sample-accurate
     chunking needs the stubbed decode; the deterministic fake hashes
     byte windows."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, hashes = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                n_chunks = (len(payload) + chunk_bytes - 1) // chunk_bytes
-                for i in range(n_chunks):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    hashes.append(
-                        hashlib.md5(
-                            payload[i * chunk_bytes:(i + 1) * chunk_bytes]
-                        ).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "chunk_idx": idxs, "chunk_md5": hashes}
-            )
+    def one(doc_id, payload):
+        if payload is None:
+            return []
+        n_chunks = (len(payload) + chunk_bytes - 1) // chunk_bytes
+        return [
+            (doc_id, i,
+             hashlib.md5(payload[i * chunk_bytes:(i + 1) * chunk_bytes]).hexdigest())
+            for i in range(n_chunks)
+        ]
 
     audio = media.filter(F.col("media_format").startswith("audio/"))
-    return widen_python_stage(audio).mapInPandas(batches, schema=CHUNK_SCHEMA)
+    return map_rows(
+        widen_python_stage(audio).select("doc_id", "payload"), one, CHUNK_SCHEMA
+    )
 
 
 FRAME_SCHEMA = StructType(
@@ -602,27 +598,22 @@ def sample_frames(media: DataFrame, every: int = 10) -> DataFrame:
     media path — still images decode for real, see decode_media); the
     deterministic fake treats each 1 KiB payload slice as one frame and
     hashes the sampled slices. The Spark shape is the real one: a
-    mapInPandas generator whose output batch is LONGER than its input
+    map_rows row function that returns more rows than it is given
     (UDTF-shaped fan-out), partitioned by doc_id upstream."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, hashes = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                n_frames = max(1, len(payload) // 1024)
-                for i in range(0, n_frames, every):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    hashes.append(
-                        hashlib.md5(payload[i * 1024:(i + 1) * 1024]).hexdigest()
-                    )
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs,
-                                "frame_md5": hashes})
+    def one(doc_id, payload):
+        if payload is None:
+            return []
+        n_frames = max(1, len(payload) // 1024)
+        return [
+            (doc_id, i, hashlib.md5(payload[i * 1024:(i + 1) * 1024]).hexdigest())
+            for i in range(0, n_frames, every)
+        ]
 
-    return widen_python_stage(media).mapInPandas(batches, schema=FRAME_SCHEMA)
+    return map_rows(
+        widen_python_stage(media).select("doc_id", "payload"), one, FRAME_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -711,111 +702,92 @@ def synthesize_decodable_media(documents: DataFrame) -> DataFrame:
     narrow and cheap at any corpus size."""
     from razulibs_spark.operators.jpeg import encode_jpeg_flat_tiles
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_ids, out_payloads, out_fmts = [], [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                kind = d % 4
-                if kind == 0:
-                    w, h = 8 + d % 17, 6 + d % 11
-                    payload = encode_bmp(
-                        w, h,
-                        lambda x, y, d=d: (
-                            (d + 7 * x) % 256,
-                            (3 * y + d // 5) % 256,
-                            (d ^ (x * y + 1)) % 256,
-                        ),
-                    )
-                    fmt = "image/bmp"
-                elif kind == 1:
-                    w, h = 5 + d % 13, 4 + d % 7
-                    payload = encode_ppm(
-                        w, h,
-                        lambda x, y, d=d: (
-                            (d * 3 + x) % 256,
-                            (d + x * y) % 256,
-                            (5 * y + d // 3) % 256,
-                        ),
-                    )
-                    fmt = "image/x-portable-pixmap"
-                elif kind == 2:
-                    n = 64 + d % 193
-                    period = 8 + d % 23
-                    samples = [
-                        ((i % period) * 2000 - period * 1000)
-                        for i in range(n)
-                    ]
-                    payload = encode_wav(samples, 8000 + (d % 3) * 4000)
-                    fmt = "audio/wav"
-                elif (d // 4) % 2 == 0:
-                    # Every 3rd PNG is Adam7 interlaced — per-pass
-                    # unfilter + scatter ride the same means oracle
-                    # (pixel set identical, order invariant).
-                    w, h = 4 + d % 9, 3 + d % 5
-                    payload = encode_png(
-                        w, h,
-                        lambda x, y, d=d: (
-                            (d * 7 + x) % 256,
-                            (d + 5 * y) % 256,
-                            (x * y + d // 7) % 256,
-                        ),
-                        interlace=(d % 3 == 1),
-                    )
-                    fmt = "image/png"
-                elif (d // 8) % 4 == 3:
-                    # Deterministic POISON row: a JPEG with no frame
-                    # header — keeps the decoded=false resilience path
-                    # hash-verified end-to-end (the oracle pins the
-                    # exact failure note).
-                    payload = b"\xff\xd8\xff\xd9"
-                    fmt = "image/jpeg"
-                else:
-                    # Real JPEG: flat 8x8 grayscale tiles survive the
-                    # DCT roundtrip BIT-exactly (DC-only blocks,
-                    # all-ones quant tables), so the SQL oracle
-                    # recomputes the stats from the same integer tile
-                    # formula. Every 5th one is encoded PROGRESSIVE
-                    # (SOF2 — spectral selection + successive
-                    # approximation — every 7th of those instead
-                    # PROGRESSIVE-ARITHMETIC SOF10, r12), the d%5==4
-                    # slot sequential ARITHMETIC (SOF9, T.81
-                    # QM-coder, r12) and the d%5==3 slot LOSSLESS
-                    # (SOF3 Annex H predictors, r12); same pixels,
-                    # same stats, so the oracle needs no new branch.
-                    w = 8 * (1 + d % 3)
-                    h = 8 * (1 + (d // 3) % 2)
-                    pa = d % 5 == 2 and d % 7 == 2
-                    payload = encode_jpeg_flat_tiles(
-                        w, h,
-                        lambda tx, ty, d=d: (5 * d + 11 * tx + 23 * ty) % 256,
-                        progressive=(d % 5 == 2 and not pa),
-                        arith=(d % 5 == 4),
-                        lossless=(d % 5 == 3),
-                        progressive_arith=pa,
-                    )
-                    fmt = "image/jpeg"
-                out_ids.append(d)
-                out_payloads.append(payload)
-                out_fmts.append(fmt)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_ids,
-                    "payload": out_payloads,
-                    "media_format": out_fmts,
-                }
+    def one(doc_id):
+        d = int(doc_id)
+        kind = d % 4
+        if kind == 0:
+            w, h = 8 + d % 17, 6 + d % 11
+            payload = encode_bmp(
+                w, h,
+                lambda x, y, d=d: (
+                    (d + 7 * x) % 256,
+                    (3 * y + d // 5) % 256,
+                    (d ^ (x * y + 1)) % 256,
+                ),
             )
+            fmt = "image/bmp"
+        elif kind == 1:
+            w, h = 5 + d % 13, 4 + d % 7
+            payload = encode_ppm(
+                w, h,
+                lambda x, y, d=d: (
+                    (d * 3 + x) % 256,
+                    (d + x * y) % 256,
+                    (5 * y + d // 3) % 256,
+                ),
+            )
+            fmt = "image/x-portable-pixmap"
+        elif kind == 2:
+            n = 64 + d % 193
+            period = 8 + d % 23
+            samples = [
+                ((i % period) * 2000 - period * 1000)
+                for i in range(n)
+            ]
+            payload = encode_wav(samples, 8000 + (d % 3) * 4000)
+            fmt = "audio/wav"
+        elif (d // 4) % 2 == 0:
+            # Every 3rd PNG is Adam7 interlaced — per-pass
+            # unfilter + scatter ride the same means oracle
+            # (pixel set identical, order invariant).
+            w, h = 4 + d % 9, 3 + d % 5
+            payload = encode_png(
+                w, h,
+                lambda x, y, d=d: (
+                    (d * 7 + x) % 256,
+                    (d + 5 * y) % 256,
+                    (x * y + d // 7) % 256,
+                ),
+                interlace=(d % 3 == 1),
+            )
+            fmt = "image/png"
+        elif (d // 8) % 4 == 3:
+            # Deterministic POISON row: a JPEG with no frame
+            # header — keeps the decoded=false resilience path
+            # hash-verified end-to-end (the oracle pins the
+            # exact failure note).
+            payload = b"\xff\xd8\xff\xd9"
+            fmt = "image/jpeg"
+        else:
+            # Real JPEG: flat 8x8 grayscale tiles survive the
+            # DCT roundtrip BIT-exactly (DC-only blocks,
+            # all-ones quant tables), so the SQL oracle
+            # recomputes the stats from the same integer tile
+            # formula. Every 5th one is encoded PROGRESSIVE
+            # (SOF2 — spectral selection + successive
+            # approximation — every 7th of those instead
+            # PROGRESSIVE-ARITHMETIC SOF10, r12), the d%5==4
+            # slot sequential ARITHMETIC (SOF9, T.81
+            # QM-coder, r12) and the d%5==3 slot LOSSLESS
+            # (SOF3 Annex H predictors, r12); same pixels,
+            # same stats, so the oracle needs no new branch.
+            w = 8 * (1 + d % 3)
+            h = 8 * (1 + (d // 3) % 2)
+            pa = d % 5 == 2 and d % 7 == 2
+            payload = encode_jpeg_flat_tiles(
+                w, h,
+                lambda tx, ty, d=d: (5 * d + 11 * tx + 23 * ty) % 256,
+                progressive=(d % 5 == 2 and not pa),
+                arith=(d % 5 == 4),
+                lossless=(d % 5 == 3),
+                progressive_arith=pa,
+            )
+            fmt = "image/jpeg"
+        return [(d, payload, fmt)]
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("payload", BinaryType(), True),
-            StructField("media_format", StringType(), True),
-        ]
+    return map_rows(
+        widen_python_stage(documents.select("doc_id")), one, SYNTH_MEDIA_SCHEMA
     )
-    return widen_python_stage(
-        documents.select("doc_id")
-    ).mapInPandas(batches, schema=schema)
 
 
 DECODE_SCHEMA = StructType(
@@ -869,43 +841,38 @@ def decode_media(media: DataFrame) -> DataFrame:
     Arrow boundary is crossed once and the fan-out is split-aware
     like every other media stage."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload, fmt in zip(
-                pdf["doc_id"], pdf["payload"], pdf["media_format"]
-            ):
-                row = {
-                    "doc_id": int(doc_id),
-                    "media_format": fmt,
-                    "decoded": False,
-                    "width": None, "height": None,
-                    "mean_r": None, "mean_g": None, "mean_b": None,
-                    "sample_rate": None, "n_channels": None,
-                    "n_samples": None, "peak": None, "rms": None,
-                    "note": None,
-                }
-                decoder = _DECODERS.get(fmt)
-                if payload is None:
-                    row["note"] = "null payload"
-                elif decoder is None:
-                    row["note"] = f"no decoder registered for {fmt}"
-                else:
-                    try:
-                        row.update(decoder(bytes(payload)))
-                        row["decoded"] = True
-                    except ValueError as exc:
-                        row["note"] = f"decode failed: {exc}"
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in DECODE_SCHEMA])
+    def one(doc_id, payload, fmt):
+        row = {
+            "doc_id": int(doc_id),
+            "media_format": fmt,
+            "decoded": False,
+            "width": None, "height": None,
+            "mean_r": None, "mean_g": None, "mean_b": None,
+            "sample_rate": None, "n_channels": None,
+            "n_samples": None, "peak": None, "rms": None,
+            "note": None,
+        }
+        decoder = _DECODERS.get(fmt)
+        if payload is None:
+            row["note"] = "null payload"
+        elif decoder is None:
+            row["note"] = f"no decoder registered for {fmt}"
+        else:
+            try:
+                row.update(decoder(bytes(payload)))
+                row["decoded"] = True
+            except ValueError as exc:
+                row["note"] = f"decode failed: {exc}"
+        return [tuple(row[name] for name in DECODE_SCHEMA.names)]
 
     # Conditional widen (r13): the synthesize stages upstream are now
     # split-aware, so the old unconditional doc_id re-hash of every
     # payload byte (capped at 4x the input split count — which widened a
     # single-split fixture to only 4 tasks) is gone. No-op at cluster
     # scale; round-robin to the core count locally.
-    return widen_python_stage(media).mapInPandas(
-        batches, schema=DECODE_SCHEMA
+    return map_rows(
+        widen_python_stage(media).select("doc_id", "payload", "media_format"),
+        one, DECODE_SCHEMA,
     )
 
 
@@ -922,60 +889,42 @@ def synthesize_gif_media(documents: DataFrame) -> DataFrame:
     size."""
     from razulibs_spark.operators.gif import encode_gif
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 11 == 6:
-                    # header + 4-color GCT + immediate trailer
-                    payload = (
-                        b"GIF89a" + (4).to_bytes(2, "little")
-                        + (3).to_bytes(2, "little") + b"\x81\x00\x00"
-                        + bytes(12) + b"\x3b"
-                    )
-                else:
-                    p = 4 + d % 13
-                    w, h = 5 + d % 12, 4 + d % 9
-                    palette = [
-                        (
-                            (d * 5 + j * 7) % 256,
-                            (d + j * 11) % 256,
-                            (3 * j + d // 3) % 256,
-                        )
-                        for j in range(p)
-                    ]
-                    pix = [
-                        (d + 3 * x + 5 * y) % p
-                        for y in range(h)
-                        for x in range(w)
-                    ]
-                    # Every 7th image is written 4-pass interlaced —
-                    # the decoder's de-interlace path rides the same
-                    # oracle (channel means are row-order invariant).
-                    payload = encode_gif(
-                        w, h, palette, pix, interlace=(d % 7 == 3)
-                    )
-                ids.append(d)
-                payloads.append(payload)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "media_format": ["image/gif"] * len(ids),
-                }
+    def one(doc_id):
+        d = int(doc_id)
+        if d % 11 == 6:
+            # header + 4-color GCT + immediate trailer
+            payload = (
+                b"GIF89a" + (4).to_bytes(2, "little")
+                + (3).to_bytes(2, "little") + b"\x81\x00\x00"
+                + bytes(12) + b"\x3b"
             )
+        else:
+            p = 4 + d % 13
+            w, h = 5 + d % 12, 4 + d % 9
+            palette = [
+                (
+                    (d * 5 + j * 7) % 256,
+                    (d + j * 11) % 256,
+                    (3 * j + d // 3) % 256,
+                )
+                for j in range(p)
+            ]
+            pix = [
+                (d + 3 * x + 5 * y) % p
+                for y in range(h)
+                for x in range(w)
+            ]
+            # Every 7th image is written 4-pass interlaced —
+            # the decoder's de-interlace path rides the same
+            # oracle (channel means are row-order invariant).
+            payload = encode_gif(
+                w, h, palette, pix, interlace=(d % 7 == 3)
+            )
+        return [(d, payload, "image/gif")]
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("payload", BinaryType(), True),
-            StructField("media_format", StringType(), True),
-        ]
+    return map_rows(
+        widen_python_stage(documents.select("doc_id")), one, SYNTH_MEDIA_SCHEMA
     )
-    return widen_python_stage(
-        documents.select("doc_id")
-    ).mapInPandas(batches, schema=schema)
 
 
 def _pixels_rgb(payload: bytes, fmt: str):
@@ -1052,38 +1001,33 @@ def image_ahash(media: DataFrame) -> DataFrame:
 
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload, fmt in zip(
-                pdf["doc_id"], pdf["payload"], pdf["media_format"]
-            ):
-                row = {
-                    "doc_id": int(doc_id), "media_format": fmt,
-                    "decoded": False, "width": None, "height": None,
-                    "bits_set": None, "ahash": None, "note": None,
-                }
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    rgb = _pixels_rgb(bytes(payload), fmt)
-                except ValueError as exc:
-                    row["note"] = str(exc)
-                else:
-                    h, w = rgb.shape[:2]
-                    gray = rgb.astype(np.int64).sum(axis=2)
-                    bits = (gray * (w * h) > int(gray.sum())).ravel()
-                    bitstring = "".join("1" if b else "0" for b in bits)
-                    row.update(
-                        decoded=True, width=int(w), height=int(h),
-                        bits_set=int(bits.sum()),
-                        ahash=hashlib.md5(bitstring.encode()).hexdigest(),
-                    )
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in AHASH_SCHEMA])
+    def one(doc_id, payload, fmt):
+        row = {
+            "doc_id": int(doc_id), "media_format": fmt,
+            "decoded": False, "width": None, "height": None,
+            "bits_set": None, "ahash": None, "note": None,
+        }
+        try:
+            if payload is None:
+                raise ValueError("null payload")
+            rgb = _pixels_rgb(bytes(payload), fmt)
+        except ValueError as exc:
+            row["note"] = str(exc)
+        else:
+            h, w = rgb.shape[:2]
+            gray = rgb.astype(np.int64).sum(axis=2)
+            bits = (gray * (w * h) > int(gray.sum())).ravel()
+            bitstring = "".join("1" if b else "0" for b in bits)
+            row.update(
+                decoded=True, width=int(w), height=int(h),
+                bits_set=int(bits.sum()),
+                ahash=hashlib.md5(bitstring.encode()).hexdigest(),
+            )
+        return [tuple(row[name] for name in AHASH_SCHEMA.names)]
 
-    return widen_python_stage(media).mapInPandas(
-        batches, schema=AHASH_SCHEMA
+    return map_rows(
+        widen_python_stage(media).select("doc_id", "payload", "media_format"),
+        one, AHASH_SCHEMA,
     )
 
 
@@ -1111,42 +1055,24 @@ def synthesize_tonal_wav_media(documents: DataFrame) -> DataFrame:
 
     t = np.arange(TONAL_N, dtype=np.float64)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 13 == 7:
-                    payload = b"RIFF" + (4).to_bytes(4, "little") + b"WAVE"
-                else:
-                    k = 3 + d % 37
-                    a = 9000 + (d % 5) * 1000
-                    w = 2.0 * math.pi * k / TONAL_N
-                    # np.round matches Python round() here (both
-                    # half-even on float64), and the oracle depends
-                    # only on the planted bin, not the sample bytes.
-                    samples = np.round(a * np.sin(w * t)).astype(np.int64)
-                    payload = encode_wav(samples, TONAL_RATE)
-                ids.append(d)
-                payloads.append(payload)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "media_format": ["audio/wav"] * len(ids),
-                }
-            )
+    def one(doc_id):
+        d = int(doc_id)
+        if d % 13 == 7:
+            payload = b"RIFF" + (4).to_bytes(4, "little") + b"WAVE"
+        else:
+            k = 3 + d % 37
+            a = 9000 + (d % 5) * 1000
+            w = 2.0 * math.pi * k / TONAL_N
+            # np.round matches Python round() here (both
+            # half-even on float64), and the oracle depends
+            # only on the planted bin, not the sample bytes.
+            samples = np.round(a * np.sin(w * t)).astype(np.int64)
+            payload = encode_wav(samples, TONAL_RATE)
+        return [(d, payload, "audio/wav")]
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("payload", BinaryType(), True),
-            StructField("media_format", StringType(), True),
-        ]
+    return map_rows(
+        widen_python_stage(documents.select("doc_id")), one, SYNTH_MEDIA_SCHEMA
     )
-    return widen_python_stage(
-        documents.select("doc_id")
-    ).mapInPandas(batches, schema=schema)
 
 
 SPECTRAL_SCHEMA = StructType(
@@ -1177,49 +1103,43 @@ def audio_spectral(media: DataFrame) -> DataFrame:
     against an oracle computing the same rational."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                row = {
-                    "doc_id": int(doc_id), "decoded": False,
-                    "sample_rate": None, "n_samples": None,
-                    "peak_bin": None, "dominant_hz": None,
-                    "tonal": None, "note": None,
-                }
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    rate, nch, samples = _wav_pcm(bytes(payload))
-                    n = len(samples) // nch
-                    x = (
-                        samples[: n * nch]
-                        .astype(np.float64)
-                        .reshape(n, nch)
-                        .mean(axis=1)
-                    )
-                    spec = np.abs(np.fft.rfft(x)) ** 2
-                    if len(spec) < 2:
-                        raise ValueError("clip too short for spectrum")
-                    body = spec[1:]  # drop DC
-                    peak = int(np.argmax(body)) + 1
-                    row.update(
-                        decoded=True,
-                        sample_rate=int(rate),
-                        n_samples=int(n),
-                        peak_bin=peak,
-                        dominant_hz=float(peak * rate) / n,
-                        tonal=bool(spec[peak] > 0.5 * float(body.sum())),
-                    )
-                except ValueError as exc:
-                    row["note"] = str(exc)
-                rows.append(row)
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in SPECTRAL_SCHEMA]
+    def one(doc_id, payload):
+        row = {
+            "doc_id": int(doc_id), "decoded": False,
+            "sample_rate": None, "n_samples": None,
+            "peak_bin": None, "dominant_hz": None,
+            "tonal": None, "note": None,
+        }
+        try:
+            if payload is None:
+                raise ValueError("null payload")
+            rate, nch, samples = _wav_pcm(bytes(payload))
+            n = len(samples) // nch
+            x = (
+                samples[: n * nch]
+                .astype(np.float64)
+                .reshape(n, nch)
+                .mean(axis=1)
             )
+            spec = np.abs(np.fft.rfft(x)) ** 2
+            if len(spec) < 2:
+                raise ValueError("clip too short for spectrum")
+            body = spec[1:]  # drop DC
+            peak = int(np.argmax(body)) + 1
+            row.update(
+                decoded=True,
+                sample_rate=int(rate),
+                n_samples=int(n),
+                peak_bin=peak,
+                dominant_hz=float(peak * rate) / n,
+                tonal=bool(spec[peak] > 0.5 * float(body.sum())),
+            )
+        except ValueError as exc:
+            row["note"] = str(exc)
+        return [tuple(row[name] for name in SPECTRAL_SCHEMA.names)]
 
-    return widen_python_stage(media).mapInPandas(
-        batches, schema=SPECTRAL_SCHEMA
+    return map_rows(
+        widen_python_stage(media).select("doc_id", "payload"), one, SPECTRAL_SCHEMA
     )
 
 

@@ -15,7 +15,6 @@ batch. No shuffle beyond the broadcast; output is one boolean per URL.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -27,6 +26,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from razulibs_spark.session import map_rows
 
 
 def parse_robots(text: str, agent: str = "*") -> list[tuple[bool, str]]:
@@ -160,27 +161,22 @@ def robots_filter(
 ) -> DataFrame:
     """urls (doc_id, host, path) × robots (host, robots_txt) →
     per-URL allow verdict. The robots side broadcasts (per-host dim);
-    matchers compile once per host per Arrow batch."""
+    matchers compile once per host per task."""
     joined = urls.join(F.broadcast(robots), "host", "left")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in ROBOTS_VERDICT_SCHEMA.fields]
-        matchers: dict[str, RobotsMatcher] = {}
-        for pdf in it:
-            rows = []
-            for doc_id, host, path, txt in zip(
-                pdf["doc_id"], pdf["host"], pdf["path"], pdf["robots_txt"]
-            ):
-                if host not in matchers:
-                    matchers[host] = RobotsMatcher(
-                        txt if isinstance(txt, str) else "", agent
-                    )
-                rows.append(
-                    (int(doc_id), host, path, matchers[host].allowed(path))
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    # One matcher per host per task: the row function's closure is
+    # unpickled once per task, so this dict lives as long as the task.
+    matchers: dict[str, RobotsMatcher] = {}
 
-    return joined.mapInPandas(batches, schema=ROBOTS_VERDICT_SCHEMA)
+    def one(doc_id, host, path, txt):
+        if host not in matchers:
+            matchers[host] = RobotsMatcher(txt if isinstance(txt, str) else "", agent)
+        return [(int(doc_id), host, path, matchers[host].allowed(path))]
+
+    return map_rows(
+        joined.select("doc_id", "host", "path", "robots_txt"), one,
+        ROBOTS_VERDICT_SCHEMA,
+    )
 
 
 def discover_sitemaps(robots: DataFrame) -> DataFrame:

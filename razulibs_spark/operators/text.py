@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from razulibs_spark.session import map_rows
+
 # BPE-ish token pattern: letter runs, digit runs, single punctuation.
 TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -1032,7 +1034,6 @@ def mojibake_repair(df: DataFrame, col: str = "text") -> DataFrame:
 
     Scale: map-only, no shuffle; at 100 TB this rides the same
     mapInPandas stage as charset decoding."""
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType,
         StringType,
@@ -1040,26 +1041,20 @@ def mojibake_repair(df: DataFrame, col: str = "text") -> DataFrame:
         StructType,
     )
 
-    def batches(it):
-        for pdf in it:
-            flags, fixed = [], []
-            for t in pdf[col]:
-                t = str(t)
-                repaired = t
-                flag = False
-                if not t.isascii():
-                    try:
-                        cand = t.encode("cp1252").decode("utf-8")
-                        if cand != t:
-                            repaired, flag = cand, True
-                    except (UnicodeEncodeError, UnicodeDecodeError):
-                        pass
-                flags.append(flag)
-                fixed.append(repaired)
-            out = pdf.copy()
-            out["was_mojibake"] = flags
-            out["repaired"] = fixed
-            yield out
+    at = df.columns.index(col)
+
+    def one(*row):
+        t = str(row[at])
+        repaired = t
+        flag = False
+        if not t.isascii():
+            try:
+                cand = t.encode("cp1252").decode("utf-8")
+                if cand != t:
+                    repaired, flag = cand, True
+            except (UnicodeEncodeError, UnicodeDecodeError):
+                pass
+        return [(*row, flag, repaired)]
 
     out_schema = StructType(
         [
@@ -1068,7 +1063,7 @@ def mojibake_repair(df: DataFrame, col: str = "text") -> DataFrame:
             StructField("repaired", StringType(), False),
         ]
     )
-    return df.mapInPandas(batches, schema=out_schema)
+    return map_rows(df, one, out_schema)
 
 
 def markdown_to_text(col: Column) -> Column:
@@ -1130,18 +1125,12 @@ def compression_signal(
 
     from pyspark.sql.types import LongType, StructField, StructType
 
-    def batches(it):
-        for pdf in it:
-            comp, ratio = [], []
-            for t in pdf[col]:
-                b = str(t).encode("utf-8")
-                c = len(zlib.compress(b, level))
-                comp.append(c)
-                ratio.append(1000 * c // len(b) if b else 1000)
-            out = pdf.copy()
-            out["comp_len"] = comp
-            out["ratio_permille"] = ratio
-            yield out
+    at = df.columns.index(col)
+
+    def one(*row):
+        b = str(row[at]).encode("utf-8")
+        c = len(zlib.compress(b, level))
+        return [(*row, c, 1000 * c // len(b) if b else 1000)]
 
     out_schema = StructType(
         [
@@ -1150,4 +1139,4 @@ def compression_signal(
             StructField("ratio_permille", LongType(), False),
         ]
     )
-    return df.mapInPandas(batches, schema=out_schema)
+    return map_rows(df, one, out_schema)

@@ -34,14 +34,12 @@ bit-identical doubles across engines.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+from razulibs_spark.operators.multimodal import SYNTH_MEDIA_SCHEMA
+from razulibs_spark.session import map_rows
 from razulibs_spark.tables import widen_python_stage
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     DoubleType,
     LongType,
@@ -224,15 +222,6 @@ def decode_avi(payload: bytes) -> dict:
 # Deterministic synthesis + distributed frame sampling
 # ---------------------------------------------------------------------------
 
-_VIDEO_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("payload", BinaryType(), True),
-        StructField("media_format", StringType(), True),
-    ]
-)
-
-
 def synthesize_video_media(documents: DataFrame) -> DataFrame:
     """Deterministic REAL AVI/MJPEG payloads from the documents table.
 
@@ -247,48 +236,35 @@ def synthesize_video_media(documents: DataFrame) -> DataFrame:
     px) so the stage is narrow at any corpus size."""
     from razulibs_spark.operators.jpeg import encode_jpeg_flat_tiles
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n_frames = 2 + d % 5
-                w = 8 * (1 + d % 3)
-                h = 8 * (1 + (d // 3) % 2)
-                frames = []
-                for f in range(n_frames):
-                    if f == 0 and d % 9 == 4:
-                        frames.append(b"\xff\xd8\xff\xd9")
-                        continue
-                    # Odd frames of every 4th doc are PROGRESSIVE
-                    # (SOF2) JPEGs — identical decoded stats (flat
-                    # tiles code the same coefficients), exercising
-                    # the Annex G scan path through the container
-                    # walk; the oracle is unchanged.
-                    frames.append(
-                        encode_jpeg_flat_tiles(
-                            w, h,
-                            lambda tx, ty, d=d, f=f: (
-                                5 * d + 11 * tx + 23 * ty + 37 * f
-                            ) % 256,
-                            progressive=(d % 4 == 1 and f % 2 == 1),
-                        )
-                    )
-                ids.append(d)
-                payloads.append(
-                    encode_avi_mjpeg(frames, w, h, fps=8 + d % 5)
+    def one(doc_id):
+        d = int(doc_id)
+        n_frames = 2 + d % 5
+        w = 8 * (1 + d % 3)
+        h = 8 * (1 + (d // 3) % 2)
+        frames = []
+        for f in range(n_frames):
+            if f == 0 and d % 9 == 4:
+                frames.append(b"\xff\xd8\xff\xd9")
+                continue
+            # Odd frames of every 4th doc are PROGRESSIVE
+            # (SOF2) JPEGs — identical decoded stats (flat
+            # tiles code the same coefficients), exercising
+            # the Annex G scan path through the container
+            # walk; the oracle is unchanged.
+            frames.append(
+                encode_jpeg_flat_tiles(
+                    w, h,
+                    lambda tx, ty, d=d, f=f: (
+                        5 * d + 11 * tx + 23 * ty + 37 * f
+                    ) % 256,
+                    progressive=(d % 4 == 1 and f % 2 == 1),
                 )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "media_format": ["video/avi"] * len(ids),
-                }
             )
+        return [(d, encode_avi_mjpeg(frames, w, h, fps=8 + d % 5), "video/avi")]
 
-    return widen_python_stage(
-        documents.select("doc_id")
-    ).mapInPandas(batches, schema=_VIDEO_SCHEMA)
+    return map_rows(
+        widen_python_stage(documents.select("doc_id")), one, SYNTH_MEDIA_SCHEMA
+    )
 
 
 VIDEO_FRAME_SCHEMA = StructType(
@@ -309,7 +285,7 @@ def sample_video_frames(media: DataFrame, every: int = 2) -> DataFrame:
     """Distributed frame sampling + decode: one Arrow pass walks each
     AVI container, keeps every ``every``-th frame, and decodes it with
     the first-principles JPEG decoder. One input row fans out to its
-    sampled frames (UDTF-shaped mapInPandas). Failures are data, not
+    sampled frames (UDTF-shaped map_rows). Failures are data, not
     errors: a bad container yields one frame_idx=-1 row, a bad frame
     yields a decoded=false row with the reason — nothing kills the
     job. Non-video rows are filtered before the Python boundary so
@@ -318,65 +294,56 @@ def sample_video_frames(media: DataFrame, every: int = 2) -> DataFrame:
         raise ValueError("every must be >= 1")
     from razulibs_spark.operators.jpeg import decode_jpeg
 
-    cols = [f.name for f in VIDEO_FRAME_SCHEMA]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                d = int(doc_id)
-                try:
-                    avi = decode_avi(payload)
-                except (ValueError, TypeError) as exc:
-                    rows.append(
-                        (d, -1, None, False, None, None, None,
-                         f"container walk failed: {exc}")
+    def one(doc_id, payload):
+        d = int(doc_id)
+        try:
+            avi = decode_avi(payload)
+        except (ValueError, TypeError) as exc:
+            return [(d, -1, None, False, None, None, None,
+                     f"container walk failed: {exc}")]
+        frames = avi["frames"]
+        if not frames:
+            # A structurally valid but frame-less container
+            # still gets an audit row — silent drops undercount
+            # doc coverage downstream.
+            return [(d, -1, 0, False, None, None, None,
+                     "container has no frames")]
+        rows = []
+        for idx in range(0, len(frames), every):
+            try:
+                st = decode_jpeg(frames[idx])
+                if st["mean_r"] == st["mean_g"] == st["mean_b"]:
+                    luma = st["mean_r"]  # grayscale: exact
+                else:
+                    # Color MJPEG: BT.601 luma from the channel
+                    # means (mean commutes with the weighted
+                    # sum; post-clip channel means make this an
+                    # approximation, but an honest one — never
+                    # the bare red channel).
+                    luma = (
+                        0.299 * st["mean_r"]
+                        + 0.587 * st["mean_g"]
+                        + 0.114 * st["mean_b"]
                     )
-                    continue
-                frames = avi["frames"]
-                if not frames:
-                    # A structurally valid but frame-less container
-                    # still gets an audit row — silent drops undercount
-                    # doc coverage downstream.
-                    rows.append(
-                        (d, -1, 0, False, None, None, None,
-                         "container has no frames")
-                    )
-                    continue
-                for idx in range(0, len(frames), every):
-                    try:
-                        st = decode_jpeg(frames[idx])
-                        if st["mean_r"] == st["mean_g"] == st["mean_b"]:
-                            luma = st["mean_r"]  # grayscale: exact
-                        else:
-                            # Color MJPEG: BT.601 luma from the channel
-                            # means (mean commutes with the weighted
-                            # sum; post-clip channel means make this an
-                            # approximation, but an honest one — never
-                            # the bare red channel).
-                            luma = (
-                                0.299 * st["mean_r"]
-                                + 0.587 * st["mean_g"]
-                                + 0.114 * st["mean_b"]
-                            )
-                        rows.append(
-                            (d, idx, len(frames), True,
-                             st["width"], st["height"], luma, None)
-                        )
-                    except ValueError as exc:
-                        rows.append(
-                            (d, idx, len(frames), False, None, None, None,
-                             f"decode failed: {exc}")
-                        )
-            yield pd.DataFrame(rows, columns=cols)
+                rows.append(
+                    (d, idx, len(frames), True,
+                     st["width"], st["height"], luma, None)
+                )
+            except ValueError as exc:
+                rows.append(
+                    (d, idx, len(frames), False, None, None, None,
+                     f"decode failed: {exc}")
+                )
+        return rows
 
     # Conditional widen (r13): the synthesize stage upstream is already
     # split-aware, so unconditionally re-hashing every payload byte by
     # doc_id was a second full-corpus shuffle with no effect at cluster
     # scale. No-op when the input is already as wide as the core count.
     videos = media.filter(F.col("media_format").startswith("video/"))
-    return widen_python_stage(videos).mapInPandas(
-        batches, schema=VIDEO_FRAME_SCHEMA
+    return map_rows(
+        widen_python_stage(videos).select("doc_id", "payload"), one,
+        VIDEO_FRAME_SCHEMA,
     )
 
 
@@ -449,13 +416,6 @@ def srt_stats(documents: DataFrame) -> DataFrame:
     directions."""
     import hashlib
 
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     out_schema = StructType(
         [
             StructField("doc_id", LongType(), False),
@@ -465,31 +425,12 @@ def srt_stats(documents: DataFrame) -> DataFrame:
         ]
     )
 
-    def batches(it):
-        import pandas as pd
+    def one(doc_id, text):
+        d = int(doc_id)
+        words = str(text).split(" ")
+        chunks = [" ".join(words[i:i + 6]) for i in range(0, len(words), 6)]
+        m = parse_srt(encode_srt(d, chunks))
+        return [(d, m["n_cues"], m["dur_ms"],
+                 hashlib.md5(m["text"].encode()).hexdigest())]
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                words = str(text).split(" ")
-                chunks = [
-                    " ".join(words[i:i + 6])
-                    for i in range(0, len(words), 6)
-                ]
-                m = parse_srt(encode_srt(d, chunks))
-                rows.append(
-                    (
-                        d,
-                        m["n_cues"],
-                        m["dur_ms"],
-                        hashlib.md5(m["text"].encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_cues", "dur_ms", "text_md5"]
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        batches, schema=out_schema
-    )
+    return map_rows(documents.select("doc_id", "text"), one, out_schema)

@@ -156,7 +156,12 @@ def write_wiki_dump(documents: DataFrame, directory: str) -> None:
     """Executor-side dump shards: one ``part-<pid>.xml`` per
     partition, each a <mediawiki> stream of <page> elements in the
     export-0.10 shape (namespaced root, <title>, <ns>, <id>,
-    <revision><text>)."""
+    <revision><text>).
+
+    It stays on ``foreachPartition``: the page list is built in memory
+    for a whole partition, and ``session.each_partition`` merges
+    partitions to one task per core, which would multiply that
+    buffer (and change the one-file-per-partition layout)."""
     import os
 
     os.makedirs(directory, exist_ok=True)

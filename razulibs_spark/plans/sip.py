@@ -30,6 +30,7 @@ from razulibs_spark.operators.manifest import (
     manifest_from_directory,
     manifest_to_json_map,
 )
+from razulibs_spark.operators.rdf import compact_triples, expand_triples
 from razulibs_spark.session import local_frame
 from razulibs_spark.sources.jsonld import jsonld_docs, write_jsonld_per_entity
 from razulibs_spark.sources.rdf_io import write_ntriples
@@ -155,19 +156,23 @@ def assemble_sip(
         events = local_frame(spark, rows, ev.EVENT_SCHEMA)
 
         # K3 + K4 sinks: byte-compatible manifest map, eventlog as RDF in
-        # one part file (2n + 2 events; the coalesce is narrow).
+        # one part file (2n + 2 events; the coalesce is narrow), its
+        # terms expanded to the PREMIS, PROV, RDF and XSD vocabulary IRIs.
         with open(os.path.join(sip_dir, "manifest.json"), "w", encoding="utf-8") as fh:
             fh.write(manifest_to_json_map(manifest))
-        write_ntriples(ev.events_to_triples(events, event_base).coalesce(1),
+        write_ntriples(expand_triples(ev.events_to_triples(events, event_base)).coalesce(1),
                        eventlog_path)
         return {"manifest": manifest, "events": events, "n_documents": n_docs}
 
 
 def _read_eventlog(spark: SparkSession, path: str) -> DataFrame:
-    """S8: recover the event frame (type codes) from the RDF log."""
+    """S8: recover the event frame (type codes) from the RDF log. The
+    terms are compacted first, so a log written with expanded IRIs and
+    one in the older prefixed form (``<premis:eventType>``) both lock
+    the SIP."""
     from razulibs_spark.sources.rdf_io import read_ntriples
 
-    t = read_ntriples(spark, path)
+    t = compact_triples(read_ntriples(spark, path))
     return t.filter(F.col("p") == "premis:eventType").select(
         F.element_at(F.split(F.col("o"), "/"), -1).alias("event_type")
     )

@@ -46,6 +46,7 @@ from razulibs_spark.operators import (
 )
 from razulibs_spark.operators.pinning import pin_iteration
 from razulibs_spark.operators.rdf import PropertyMap, entity_to_triples
+from razulibs_spark.session import each_partition, map_rows
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -1420,64 +1421,51 @@ def io_parquet_footer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 row_group_size=100,
             )
 
-    docs.repartition(8, "shard").foreachPartition(write_partition)
+    # a shard's rows land in one partition, and merging partitions
+    # keeps shards whole, so each file is written exactly once
+    each_partition(docs.repartition(8, "shard"), write_partition)
 
-    def footer_batches(it):
-        import io as _io
-        import re as _re
+    import io as _io
+    import re as _re
 
-        import pandas as pd
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                shard = int(
-                    _re.search(r"shard-(\d+)\.parquet", str(path)).group(1)
-                )
-                md = pq.ParquetFile(_io.BytesIO(bytes(content))).metadata
-                n_rows = md.num_rows
-                mins, maxs, group_rows = [], [], 0
-                ok = True
-                for g in range(md.num_row_groups):
-                    col = md.row_group(g).column(0)  # doc_id
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        ok = False
-                        continue
-                    mins.append(st.min)
-                    maxs.append(st.max)
-                    group_rows += md.row_group(g).num_rows
-                    ok = ok and st.min <= st.max
-                ok = ok and group_rows == n_rows
-                rows.append(
-                    (
-                        shard,
-                        n_rows,
-                        md.num_row_groups,
-                        min(mins) if mins else None,
-                        max(maxs) if maxs else None,
-                        ok,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "shard", "n_rows", "n_row_groups", "min_id",
-                    "max_id", "stats_cover_rows",
-                ],
+    def footer(path, content):
+        shard = int(_re.search(r"shard-(\d+)\.parquet", str(path)).group(1))
+        md = pq.ParquetFile(_io.BytesIO(bytes(content))).metadata
+        n_rows = md.num_rows
+        mins, maxs, group_rows = [], [], 0
+        ok = True
+        for g in range(md.num_row_groups):
+            col = md.row_group(g).column(0)  # doc_id
+            st = col.statistics
+            if st is None or not st.has_min_max:
+                ok = False
+                continue
+            mins.append(st.min)
+            maxs.append(st.max)
+            group_rows += md.row_group(g).num_rows
+            ok = ok and st.min <= st.max
+        ok = ok and group_rows == n_rows
+        return [
+            (
+                shard,
+                n_rows,
+                md.num_row_groups,
+                min(mins) if mins else None,
+                max(maxs) if maxs else None,
+                ok,
             )
+        ]
 
-    return (
+    return map_rows(
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.parquet")
         .load(base)
-        .select("path", "content")
-        .mapInPandas(
-            footer_batches,
-            schema="shard long, n_rows long, n_row_groups long, "
-                   "min_id long, max_id long, stats_cover_rows boolean",
-        )
+        .select("path", "content"),
+        footer,
+        "shard long, n_rows long, n_row_groups long, "
+        "min_id long, max_id long, stats_cover_rows boolean",
     )
 
 
@@ -1513,41 +1501,23 @@ def text_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposed half. Map-only Arrow pass."""
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def nfc_batches(it):
-        import hashlib
-        import unicodedata
+    import hashlib
+    import unicodedata
 
-        import pandas as pd
+    def nfc(doc_id, text):
+        d = int(doc_id)
+        head = " ".join(str(text).split(" ")[:10])
+        if d % 2 == 0:
+            # decomposed: e + COMBINING ACUTE — visually identical
+            # to the other branch, byte-different
+            raw = "cafe\u0301 resume\u0301: " + head
+        else:
+            raw = "caf\u00e9 resum\u00e9: " + head  # pre-composed
+        norm = unicodedata.normalize("NFC", raw)
+        return [(d, norm != raw, hashlib.md5(norm.encode("utf-8")).hexdigest(), len(norm))]
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                head = " ".join(str(text).split(" ")[:10])
-                if d % 2 == 0:
-                    # decomposed: e + COMBINING ACUTE — visually identical
-                    # to the other branch, byte-different
-                    raw = "cafe\u0301 resume\u0301: " + head
-                else:
-                    raw = "caf\u00e9 resum\u00e9: " + head  # pre-composed
-                norm = unicodedata.normalize("NFC", raw)
-                rows.append(
-                    (
-                        d,
-                        norm != raw,
-                        hashlib.md5(norm.encode("utf-8")).hexdigest(),
-                        len(norm),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "changed", "nfc_md5", "n_codepoints"],
-            )
-
-    return docs.mapInPandas(
-        nfc_batches,
-        schema="doc_id long, changed boolean, nfc_md5 string, "
-               "n_codepoints long",
+    return map_rows(
+        docs, nfc, "doc_id long, changed boolean, nfc_md5 string, n_codepoints long"
     )
 
 
@@ -1740,10 +1710,15 @@ def io_csv_dialect_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
                     w.writerow([doc_id, lang, f'q,{doc_id};x|y\t"z"'])
 
     # repartition ON shard: a shard's rows land in one task (hash may
-    # co-locate two shards in one partition — the writer groups by
-    # shard internally; no shard splits across partitions, so each
-    # file is written exactly once)
-    docs.repartition(8, "shard").foreachPartition(write_partition)
+    # co-locate two shards in one partition, and each_partition may merge
+    # partitions — the writer groups by shard internally; no shard splits
+    # across partitions, so each file is written exactly once)
+    each_partition(docs.repartition(8, "shard"), write_partition)
+
+    import csv as _csv
+    import hashlib
+    import io as _io
+    import re as _re
 
     from pyspark.sql.types import (
         BooleanType,
@@ -1752,6 +1727,8 @@ def io_csv_dialect_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField,
         StructType,
     )
+
+    from razulibs_spark.sources.csv_source import sniff_csv_dialect
 
     out_schema = StructType(
         [
@@ -1763,58 +1740,33 @@ def io_csv_dialect_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def sniff_batches(it):
-        import csv as _csv
-        import hashlib
-        import io as _io
-        import re as _re
-
-        import pandas as pd
-
-        from razulibs_spark.sources.csv_source import sniff_csv_dialect
-
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                shard = int(
-                    _re.search(r"shard-(\d+)\.csv", str(path)).group(1)
-                )
-                b = bytes(content)
-                d = sniff_csv_dialect(b)
-                parsed = list(
-                    _csv.reader(
-                        _io.StringIO(b.decode("utf-8")),
-                        delimiter=d["delimiter"],
-                    )
-                )
-                if d["has_header"]:
-                    parsed = parsed[1:]
-                ids = sorted(int(r[0]) for r in parsed if r)
-                rows.append(
-                    (
-                        shard,
-                        d["delimiter"],
-                        d["has_header"],
-                        len(ids),
-                        hashlib.md5(
-                            ",".join(map(str, ids)).encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "shard", "delimiter", "has_header", "n_rows",
-                    "ids_md5",
-                ],
+    def sniff(path, content):
+        shard = int(_re.search(r"shard-(\d+)\.csv", str(path)).group(1))
+        b = bytes(content)
+        d = sniff_csv_dialect(b)
+        parsed = list(
+            _csv.reader(_io.StringIO(b.decode("utf-8")), delimiter=d["delimiter"])
+        )
+        if d["has_header"]:
+            parsed = parsed[1:]
+        ids = sorted(int(r[0]) for r in parsed if r)
+        return [
+            (
+                shard,
+                d["delimiter"],
+                d["has_header"],
+                len(ids),
+                hashlib.md5(",".join(map(str, ids)).encode()).hexdigest(),
             )
+        ]
 
-    return (
+    return map_rows(
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.csv")
         .load(base)
-        .select("path", "content")
-        .mapInPandas(sniff_batches, schema=out_schema)
+        .select("path", "content"),
+        sniff,
+        out_schema,
     )
 
 
@@ -1995,25 +1947,12 @@ def multimodal_mulaw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = widen_python_stage(T(spark, sf_dir, "documents").select("doc_id"))
 
-    def fixture_batches(it):
-        import pandas as pd
+    def fixture(doc_id):
+        d = int(doc_id)
+        pcm = [(d * 31 + i * 7919) % 65536 - 32768 for i in range(64)]
+        return [(d, bytes(mulaw_encode_sample(x) for x in pcm).hex())]
 
-        for pdf in it:
-            ids, hexes = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                pcm = [
-                    (d * 31 + i * 7919) % 65536 - 32768 for i in range(64)
-                ]
-                ids.append(d)
-                hexes.append(
-                    bytes(mulaw_encode_sample(x) for x in pcm).hex()
-                )
-            yield pd.DataFrame({"doc_id": ids, "mulaw_hex": hexes})
-
-    raw = docs.mapInPandas(
-        fixture_batches, schema="doc_id long, mulaw_hex string"
-    )
+    raw = map_rows(docs, fixture, "doc_id long, mulaw_hex string")
     # The decoded array is ALIASED in its own producer projection so
     # the 64-element transform/conv chain executes once per row, not
     # once per consuming aggregate: HOFs are CodegenFallback, so the
@@ -2084,34 +2023,25 @@ def text_pii_luhn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = T(spark, sf_dir, "documents").select("doc_id")
 
-    def fixture_batches(it):
-        import pandas as pd
+    def luhn_check_digit(b15: str) -> int:
+        total = 0
+        for j in range(1, 16):  # position from the right of b15
+            d = int(b15[15 - j])
+            if j % 2 == 1:  # even position of the 16-digit PAN
+                d *= 2
+                if d > 9:
+                    d -= 9
+            total += d
+        return (10 - total % 10) % 10
 
-        def luhn_check_digit(b15: str) -> int:
-            total = 0
-            for j in range(1, 16):  # position from the right of b15
-                d = int(b15[15 - j])
-                if j % 2 == 1:  # even position of the 16-digit PAN
-                    d *= 2
-                    if d > 9:
-                        d -= 9
-                total += d
-            return (10 - total % 10) % 10
+    def fixture(doc_id):
+        d = int(doc_id)
+        b15 = str(d * 7919 % 10**15).zfill(15)
+        chk = luhn_check_digit(b15)
+        digit = chk if d % 5 == 1 else (chk + 5) % 10
+        return [(d, f"payment {b15}{digit} ok")]
 
-        for pdf in it:
-            ids, raws = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                b15 = str(d * 7919 % 10**15).zfill(15)
-                chk = luhn_check_digit(b15)
-                digit = chk if d % 5 == 1 else (chk + 5) % 10
-                ids.append(d)
-                raws.append(f"payment {b15}{digit} ok")
-            yield pd.DataFrame({"doc_id": ids, "raw": raws})
-
-    raw = docs.mapInPandas(
-        fixture_batches, schema="doc_id long, raw string"
-    )
+    raw = map_rows(docs, fixture, "doc_id long, raw string")
     cand = F.regexp_extract("raw", r"\b(\d{16})\b", 1)
     valid = luhn_valid(cand)
     return raw.select(
@@ -2339,28 +2269,19 @@ def text_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def corrupt_batches(it):
-        import pandas as pd
+    def corrupt(doc_id, text):
+        d = int(doc_id)
+        head = " ".join(str(text).split(" ")[:5])
+        if d % 3 == 0:
+            raw = "plain ascii: " + head
+        else:
+            raw = "naïve café — déjà vu: " + head
+            if d % 3 == 1:
+                # the transcode accident itself
+                raw = raw.encode("utf-8").decode("cp1252")
+        return [(d, raw)]
 
-        for pdf in it:
-            ids, raws = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                head = " ".join(str(text).split(" ")[:5])
-                if d % 3 == 0:
-                    raw = "plain ascii: " + head
-                else:
-                    raw = "naïve café — déjà vu: " + head
-                    if d % 3 == 1:
-                        # the transcode accident itself
-                        raw = raw.encode("utf-8").decode("cp1252")
-                ids.append(d)
-                raws.append(raw)
-            yield pd.DataFrame({"doc_id": ids, "raw": raws})
-
-    raw = docs.mapInPandas(
-        corrupt_batches, schema="doc_id long, raw string"
-    )
+    raw = map_rows(docs, corrupt, "doc_id long, raw string")
     fixed = mojibake_repair(raw, col="raw")
     return fixed.select(
         "doc_id",
@@ -2816,58 +2737,47 @@ def pipeline_warc_http_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _scratch("warc_httpdec_" + os.path.basename(sf_dir.rstrip("/")))
 
-    def payload_batches(it):
-        import zlib
+    import zlib
 
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                body = str(text).encode("utf-8")
-                variant = d % 4
-                hdrs = ["HTTP/1.1 200 OK", "Content-Type: text/plain"]
-                wire = body
-                if variant in (2, 3):
-                    co = zlib.compressobj(6, zlib.DEFLATED, 31)
-                    wire = co.compress(wire) + co.flush()
-                    hdrs.append("Content-Encoding: gzip")
-                if variant in (1, 3):
-                    chunks = [
-                        wire[i:i + 100] for i in range(0, len(wire), 100)
-                    ]
-                    framed = []
-                    for j, c in enumerate(chunks):
-                        ext = b";planted=1" if j == 0 else b""
-                        framed.append(
-                            b"%x" % len(c) + ext + b"\r\n" + c + b"\r\n"
-                        )
-                    trailer = (
-                        b"0\r\nX-Trailer: t\r\n\r\n"
-                        if variant == 3 else b"0\r\n\r\n"
-                    )
-                    wire = b"".join(framed) + trailer
-                    hdrs.append("Transfer-Encoding: chunked")
-                else:
-                    hdrs.append(f"Content-Length: {len(wire)}")
-                payload = (
-                    "\r\n".join(hdrs).encode("ascii") + b"\r\n\r\n" + wire
+    def wire_record(doc_id, text):
+        d = int(doc_id)
+        body = str(text).encode("utf-8")
+        variant = d % 4
+        hdrs = ["HTTP/1.1 200 OK", "Content-Type: text/plain"]
+        wire = body
+        if variant in (2, 3):
+            co = zlib.compressobj(6, zlib.DEFLATED, 31)
+            wire = co.compress(wire) + co.flush()
+            hdrs.append("Content-Encoding: gzip")
+        if variant in (1, 3):
+            chunks = [
+                wire[i:i + 100] for i in range(0, len(wire), 100)
+            ]
+            framed = []
+            for j, c in enumerate(chunks):
+                ext = b";planted=1" if j == 0 else b""
+                framed.append(
+                    b"%x" % len(c) + ext + b"\r\n" + c + b"\r\n"
                 )
-                rows.append(
-                    (
-                        "response",
-                        f"https://h{d % 8}.example/doc/{d}",
-                        "application/http; msgtype=response",
-                        payload,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "warc_type", "target_uri", "content_type", "payload",
-                ],
+            trailer = (
+                b"0\r\nX-Trailer: t\r\n\r\n"
+                if variant == 3 else b"0\r\n\r\n"
             )
+            wire = b"".join(framed) + trailer
+            hdrs.append("Transfer-Encoding: chunked")
+        else:
+            hdrs.append(f"Content-Length: {len(wire)}")
+        payload = (
+            "\r\n".join(hdrs).encode("ascii") + b"\r\n\r\n" + wire
+        )
+        return [
+            (
+                "response",
+                f"https://h{d % 8}.example/doc/{d}",
+                "application/http; msgtype=response",
+                payload,
+            )
+        ]
 
     from pyspark.sql.types import (
         BinaryType,
@@ -2884,10 +2794,10 @@ def pipeline_warc_http_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("payload", BinaryType(), False),
         ]
     )
-    records = (
-        T(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .mapInPandas(payload_batches, schema=rec_schema)
+    records = map_rows(
+        T(spark, sf_dir, "documents").select("doc_id", "text"),
+        wire_record,
+        rec_schema,
     )
     write_warc_records(records.repartition(8), base, compress=True)
     doc_id = (
@@ -4904,7 +4814,7 @@ def s6_manifest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             ) as fh:
                 fh.write(r["text"].encode("utf-8"))
 
-    docs.foreachPartition(write_part)
+    each_partition(docs, write_part)
     m = manifest_from_directory(spark, base)
     return m.select("filename", "md5hash", "file_size", "file_extension")
 
@@ -5458,6 +5368,8 @@ def j7_upload_verification(spark: SparkSession, sf_dir: str) -> DataFrame:
     razu/s3storage.py:219-255): manifest MD5 vs S3 ETag in one join
     over one LIST, multipart ETags ('-' marker) routed to a recheck
     bucket instead of a per-file download on the hot path."""
+    from razulibs_spark.sinks.object_store import upload_status
+
     p = T(spark, sf_dir, "part")
     manifest = p.select(F.col("p_name").alias("filename"),
                         F.md5("p_name").alias("local_md5"))
@@ -5471,14 +5383,13 @@ def j7_upload_verification(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("etag"),
         )
     )
-    joined = manifest.join(listing, "filename", "left")
-    status = (
-        F.when(F.col("etag").isNull(), F.lit("missing_remote"))
-        .when(F.col("etag").contains("-"), F.lit("multipart_recheck"))
-        .when(F.col("etag") == F.col("local_md5"), F.lit("verified"))
-        .otherwise(F.lit("mismatch"))
+    # The library's status codes; a null status is a verified object,
+    # and this query names md5_mismatch 'mismatch'.
+    failed = upload_status(F.col("etag"), F.col("local_md5"))
+    status = F.coalesce(F.regexp_replace(failed, "^md5_", ""), F.lit("verified"))
+    return manifest.join(listing, "filename", "left").select(
+        "filename", status.alias("status")
     )
-    return joined.select("filename", status.alias("status"))
 
 
 _A4_SQL = f"""
@@ -10455,7 +10366,7 @@ def io_bz2_foreign_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fat shard still fans out. Wikipedia ships its dumps as .bz2 for
     exactly this reason. Here the shards are written by PYTHON's bz2
     (a producer that owes Spark nothing — executor-side, one shard
-    per partition), read back through the Hadoop codec with an
+    per writer task), read back through the Hadoop codec with an
     explicit schema, and the per-lang rollup plus an ORDER-exact
     doc_id digest must hash-match the parquet oracle: one record
     lost at a block boundary or one byte mangled in transcoding
@@ -10474,26 +10385,25 @@ def io_bz2_foreign_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         from pyspark import TaskContext
 
-        lines, pid = [], None
-        for row in rows:
-            pid = TaskContext.get().partitionId() if pid is None else pid
-            lines.append(
-                json.dumps(
-                    {
-                        "doc_id": row["doc_id"],
-                        "lang": row["lang"],
-                        "text": row["text"],
-                    },
-                    sort_keys=True,
-                )
+        def line(row) -> str:
+            return json.dumps(
+                {"doc_id": row["doc_id"], "lang": row["lang"], "text": row["text"]},
+                sort_keys=True,
             )
-        if pid is not None:
-            with open(
-                os.path.join(base, f"part-{pid:05d}.jsonl.bz2"), "wb"
-            ) as fh:
-                fh.write(bz2.compress(("\n".join(lines)).encode("utf-8")))
 
-    docs.repartition(8).foreachPartition(write_partition)
+        rows = iter(rows)
+        first = next(rows, None)
+        if first is None:
+            return
+        pid = TaskContext.get().partitionId()
+        # streamed through the compressor: no partition-sized buffer
+        with bz2.open(os.path.join(base, f"part-{pid:05d}.jsonl.bz2"), "wt",
+                      encoding="utf-8") as fh:
+            fh.write(line(first))
+            for row in rows:
+                fh.write("\n" + line(row))
+
+    each_partition(docs.repartition(8), write_partition)
     back = spark.read.schema("doc_id long, lang string, text string").json(
         base
     )
@@ -14201,42 +14111,33 @@ def text_mbox_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_mbox_sharded,
     )
 
-    def chunks(it):
-        import pandas as pd
-
-        for pdf in it:
-            vals = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                msg = encode_eml(d, str(text).split(" ")).decode(
-                    "utf-8"
-                )
-                if d % 41 == 5:
-                    # mboxcl2 axis (r12): Content-Length framed,
-                    # bodies UNQUOTED — the 7bit docs plant a bare
-                    # 'From ' body line that would mis-split under
-                    # mboxrd framing; the oracle models the extra
-                    # line, so a framing error flips the hash.
-                    # LF-native like real Unix spools: CL counts
-                    # stored bytes, and the stored form is LF.
-                    msg = msg.replace("\r\n", "\n")
-                    head, body = msg.split("\n\n", 1)
-                    if d % 3 == 0:
-                        body += "\nFrom cl2 dialect"
-                    cl = len(body.encode("utf-8"))
-                    msg = (
-                        head + f"\nContent-Length: {cl}\n\n" + body
-                    )
-                    vals.append(_FROM_LINE + "\n" + msg)
-                else:
-                    vals.append(_FROM_LINE + "\n" + mbox_escape(msg))
-            yield pd.DataFrame({"value": vals})
+    def spool_entry(doc_id, text):
+        d = int(doc_id)
+        msg = encode_eml(d, str(text).split(" ")).decode("utf-8")
+        if d % 41 != 5:
+            return [(_FROM_LINE + "\n" + mbox_escape(msg),)]
+        # mboxcl2 axis (r12): Content-Length framed,
+        # bodies UNQUOTED — the 7bit docs plant a bare
+        # 'From ' body line that would mis-split under
+        # mboxrd framing; the oracle models the extra
+        # line, so a framing error flips the hash.
+        # LF-native like real Unix spools: CL counts
+        # stored bytes, and the stored form is LF.
+        msg = msg.replace("\r\n", "\n")
+        head, body = msg.split("\n\n", 1)
+        if d % 3 == 0:
+            body += "\nFrom cl2 dialect"
+        cl = len(body.encode("utf-8"))
+        msg = head + f"\nContent-Length: {cl}\n\n" + body
+        return [(_FROM_LINE + "\n" + msg,)]
 
     path = _scratch("mbox_rt")
     (
-        T(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .mapInPandas(chunks, schema="value string")
+        map_rows(
+            T(spark, sf_dir, "documents").select("doc_id", "text"),
+            spool_entry,
+            "value string",
+        )
         .coalesce(1)
         .write.mode("overwrite")
         .text(path)

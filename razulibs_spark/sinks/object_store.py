@@ -35,7 +35,7 @@ import urllib.parse
 from dataclasses import dataclass
 from typing import Callable, Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from razulibs_spark.session import each_partition, local_frame
@@ -228,22 +228,29 @@ def upload_from_manifest(manifest: DataFrame, bucket: str, client_factory,
 # J7 — upload verification.
 # ---------------------------------------------------------------------------
 
+def upload_status(etag: Column, md5hash: Column) -> Column:
+    """The J7 status of one object from its listed ETag and its
+    expected MD5: ``missing_remote`` when the ETag is null (the key is
+    not listed); ``multipart_recheck`` for a multipart ``-N`` ETag,
+    which is not the object's MD5, so the object must be re-hashed;
+    ``md5_mismatch`` when the ETag is not the expected MD5 (or there is
+    no expected MD5 to compare it with); null when the object
+    verifies."""
+    return (
+        F.when(etag.isNull(), "missing_remote")
+        .when(etag.contains("-"), "multipart_recheck")
+        .when(~etag.eqNullSafe(md5hash), "md5_mismatch")
+    )
+
+
 def verify_upload(expected: DataFrame, listing: DataFrame) -> DataFrame:
     """J7 (edepot.py:257-269, s3storage.py:219-255): the expected
     (key, md5hash) rows that the bucket does not verify, as
-    (key, status) rows. ``listing`` is a list_objects frame taken after
-    the upload. ``missing_remote``: the key is not listed;
-    ``multipart_recheck``: a multipart ``-N`` ETag, which is not the
-    object's MD5, so the object must be re-hashed; ``md5_mismatch``:
-    the ETag is not the expected MD5 (or there is no expected MD5 to
-    compare it with). An empty frame means every expected object is in
-    the bucket with the expected bytes."""
-    etag = F.col("etag")
-    status = (
-        F.when(etag.isNull(), "missing_remote")
-        .when(etag.contains("-"), "multipart_recheck")
-        .when(~etag.eqNullSafe(F.col("md5hash")), "md5_mismatch")
-    )
+    (key, status) rows with the :func:`upload_status` codes.
+    ``listing`` is a list_objects frame taken after the upload. An
+    empty frame means every expected object is in the bucket with the
+    expected bytes."""
+    status = upload_status(F.col("etag"), F.col("md5hash"))
     return (
         expected.select("key", "md5hash")
         .join(listing.select("key", "etag"), "key", "left")

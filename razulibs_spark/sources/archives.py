@@ -125,7 +125,12 @@ def write_zip_shards(
 ) -> None:
     """One ``part-<partition>.zip`` per partition, executor-side.
     Deterministic bytes: member timestamps pinned to ZIP's 1980 epoch
-    floor, deflate level fixed by zlib's default."""
+    floor, deflate level fixed by zlib's default.
+
+    It stays on ``foreachPartition``: the archive is built in memory
+    for a whole partition, and ``session.each_partition`` merges
+    partitions to one task per core, which would multiply that
+    buffer (and change the one-file-per-partition layout)."""
     import os
     import zipfile
 
@@ -165,7 +170,12 @@ def write_tar_gz_shards(
     The tar stream is built uncompressed (mtime/uid/gid pinned to 0)
     and wrapped by gzip_member (mtime=0) — fully deterministic, unlike
     tarfile's 'w:gz' which stamps the wall clock into the gzip
-    header."""
+    header.
+
+    It stays on ``foreachPartition``: the tar stream is built in memory
+    for a whole partition, and ``session.each_partition`` merges
+    partitions to one task per core, which would multiply that
+    buffer (and change the one-file-per-partition layout)."""
     import os
     import tarfile
 

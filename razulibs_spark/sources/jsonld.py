@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from razulibs_spark.operators.rdf import NAMESPACES
+from razulibs_spark.session import each_partition
 
 
 def owning_entity(subject: Column) -> Column:
@@ -286,17 +287,15 @@ def write_jsonld_per_entity(docs: DataFrame, directory: str,
     line-oriented sink for corpus scale is write_jsonld (JSON-Lines)."""
     os.makedirs(directory, exist_ok=True)
 
-    def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for entity, doc in zip(pdf["entity"], pdf["jsonld"]):
-                name = entity + suffix
-                tmp = os.path.join(directory, f".{name}.{os.getpid()}.tmp")
-                with open(tmp, "w", encoding="utf-8") as fh:
-                    fh.write(doc + "\n")
-                os.replace(tmp, os.path.join(directory, name))
-            yield pd.DataFrame({"n": [len(pdf)]})
+    def write(rows: Iterator[dict]) -> None:
+        for row in rows:
+            name = row["entity"] + suffix
+            tmp = os.path.join(directory, f".{name}.{os.getpid()}.tmp")
+            with open(tmp, "w", encoding="utf-8") as fh:
+                fh.write(row["jsonld"] + "\n")
+            os.replace(tmp, os.path.join(directory, name))
 
-    return sum(r["n"] for r in docs.mapInPandas(write, "n long").collect())
+    return each_partition(docs.select("entity", "jsonld"), write)
 
 
 def scan_sip_dir(spark: SparkSession, directory: str,

@@ -27,7 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from razulibs_spark.session import map_rows
+from razulibs_spark.session import each_partition, map_rows
 
 SITEMAP_NS = "http://www.sitemaps.org/schemas/sitemap/0.9"
 _NS = "{%s}" % SITEMAP_NS
@@ -184,7 +184,8 @@ def write_urlset_files(
     """One ``sitemap-<group>.xml[.gz]`` urlset per group (per host,
     per shard — the spec's 50k-URL cap is the writer's natural split
     unit), written executor-side on a shared FS. Repartition by the
-    group column first so one task owns each group's file. Priorities
+    group column and sort each partition by it, so one task owns each
+    group's file and holds one group at a time. Priorities
     are written with full float repr — the file agrees with the input
     frame exactly (ADVICE r8: ``{:.1f}`` silently rounded 0.55 →
     0.6)."""
@@ -200,9 +201,28 @@ def write_urlset_files(
         cols.append(changefreq_col)
     ext = ".xml.gz" if compress else ".xml"
 
+    def write_group(g: str, lines: list[str]) -> None:
+        doc = (
+            '<?xml version="1.0" encoding="UTF-8"?>\n'
+            f'<urlset xmlns="{SITEMAP_NS}">\n'
+            + "\n".join(lines)
+            + "\n</urlset>\n"
+        ).encode("utf-8")
+        if compress:
+            from razulibs_spark.sources.warc import gzip_member
+
+            doc = gzip_member(doc)
+        with open(os.path.join(directory, f"sitemap-{g}{ext}"), "wb") as fh:
+            fh.write(doc)
+
     def write_partition(rows) -> None:
-        groups: dict[str, list[str]] = {}
+        group, lines = None, []
         for row in rows:
+            g = _check_group(row[group_col])
+            if g != group:
+                if lines:
+                    write_group(group, lines)
+                group, lines = g, []
             parts = ["  <url><loc>" + _esc(row[loc_col]) + "</loc>"]
             if lastmod_col and row[lastmod_col] is not None:
                 parts.append(f"<lastmod>{_esc(row[lastmod_col])}</lastmod>")
@@ -215,27 +235,16 @@ def write_urlset_files(
                     f"<priority>{row[priority_col]!r}</priority>"
                 )
             parts.append("</url>")
-            groups.setdefault(
-                _check_group(row[group_col]), []
-            ).append("".join(parts))
-        for g, lines in groups.items():
-            doc = (
-                '<?xml version="1.0" encoding="UTF-8"?>\n'
-                f'<urlset xmlns="{SITEMAP_NS}">\n'
-                + "\n".join(lines)
-                + "\n</urlset>\n"
-            ).encode("utf-8")
-            if compress:
-                from razulibs_spark.sources.warc import gzip_member
+            lines.append("".join(parts))
+        if lines:
+            write_group(group, lines)
 
-                doc = gzip_member(doc)
-            with open(
-                os.path.join(directory, f"sitemap-{g}{ext}"), "wb"
-            ) as fh:
-                fh.write(doc)
-
-    urls.select(*cols).repartition(group_col).foreachPartition(
-        write_partition
+    # A group's rows land in one partition and, sorted, follow each
+    # other; each_partition's merge of partitions keeps them so. A task
+    # holds one group's lines at a time, and writes each file once.
+    each_partition(
+        urls.select(*cols).repartition(group_col).sortWithinPartitions(group_col),
+        write_partition,
     )
 
 

@@ -19,8 +19,9 @@ are sharded into ~1 GB warc files by construction, so file-level tasks
 ARE the distribution unit — same argument as the document-framed RDF
 scan); a single file parses executor-side in one ``session.map_rows``
 pass, its records framed ``maxRecordsPerBatch`` rows at a time. The sink
-writes one warc file per partition from the executors (shared-FS
-contract, as write_jsonld_per_entity).
+writes its warc files from the executors, one series per
+``session.each_partition`` task (shared-FS contract, as
+write_jsonld_per_entity).
 
 Structural corruption (bad magic, header without colon, short payload,
 trailing garbage) raises ValueError naming the defect — an ingest
@@ -38,7 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from razulibs_spark.session import map_rows
+from razulibs_spark.session import each_partition, map_rows
 
 WARC_RECORD_SCHEMA = StructType(
     [
@@ -421,9 +422,10 @@ def write_warc_records(
     target_uri, content_type, payload)`` — the shape a REAL crawl
     writes, interleaving warcinfo/request/response/revisit/metadata
     records in one file (write_warc_responses is the response-only
-    convenience). Same executor-side per-partition layout: one
-    ``part-<partition>.warc[.gz]`` per partition, one gzip member per
-    record; record id = the frame's ``record_id`` column when present,
+    convenience). The rows run through ``session.each_partition``,
+    which merges partitions to one task per core; each task writes
+    ``part-<task>-<seq>.warc[.gz]`` files, one gzip member per record;
+    record id = the frame's ``record_id`` column when present,
     else md5 over (type, uri, payload) — deterministic,
     collision-irrelevant at fixture scale. An optional ``refers_to``
     column writes WARC-Refers-To (how revisit records name the
@@ -436,7 +438,8 @@ def write_warc_records(
     HTML-in-WARC, so inheriting the scan partitioning makes read_warc
     parse one multi-GB file per task (a 76× wall-time cliff at the
     10× rehearsal, SCALE.md). Rollover keeps the per-file task model
-    honest at every scale with zero shuffle."""
+    honest at every scale with zero shuffle, and it bounds the buffer a
+    task holds, so merging partitions into one task grows no buffer."""
     import hashlib
     import os
 
@@ -498,7 +501,7 @@ def write_warc_records(
                 flush()
         flush()
 
-    records.select(*cols).foreachPartition(write_partition)
+    each_partition(records.select(*cols), write_partition)
 
 
 def write_warc_responses(
@@ -510,50 +513,30 @@ def write_warc_responses(
     max_records_per_file: int = 2048,
 ) -> None:
     """Sink: ``part-<partition>-<seq>.warc[.gz]`` files, each row one
-    response record (record id = md5 of the target URI —
-    deterministic, collision-irrelevant at fixture scale). Executor
-    writes on a shared filesystem, the write_jsonld_per_entity
-    contract. Tasks roll over to a new shard every
-    ``max_records_per_file`` records — see write_warc_records for why
-    shard size must not inherit the upstream scan partitioning."""
-    import hashlib
-    import os
+    response record whose payload is :func:`encode_http_response` of
+    the page (record id = md5 of the target URI — deterministic,
+    collision-irrelevant at fixture scale). A projection onto
+    write_warc_records: the HTTP envelope is built by built-in
+    expressions, so the pages never cross into Python before the
+    writer."""
+    from pyspark.sql import functions as F
 
-    _clear_own_shards(directory)  # overwrite sink (own shards only)
-    os.makedirs(directory, exist_ok=True)
-    ext = ".warc.gz" if compress else ".warc"
-
-    def write_partition(rows) -> None:
-        chunks: list[bytes] = []
-        pid = None
-        seq = 0
-
-        def flush() -> None:
-            nonlocal chunks, seq
-            if chunks:
-                with open(
-                    os.path.join(
-                        directory, f"part-{pid:05d}-{seq:04d}{ext}"
-                    ),
-                    "wb",
-                ) as fh:
-                    fh.write(b"".join(chunks))
-                chunks = []
-                seq += 1
-
-        for row in rows:
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId() if pid is None else pid
-            rec = encode_warc_record(
-                "response",
-                encode_http_response(row[html_col]),
-                record_id=hashlib.md5(row[uri_col].encode()).hexdigest(),
-                target_uri=row[uri_col],
-            )
-            chunks.append(gzip_member(rec) if compress else rec)
-            if len(chunks) >= max_records_per_file:
-                flush()
-        flush()
-
-    pages.select(uri_col, html_col).foreachPartition(write_partition)
+    uri, html = F.col(uri_col), F.col(html_col)
+    http = F.concat(
+        F.lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\nContent-Length: "),
+        F.octet_length(html).cast("string"),
+        F.lit("\r\n\r\n"),
+        html,
+    )
+    write_warc_records(
+        pages.select(
+            F.lit("response").alias("warc_type"),
+            uri.alias("target_uri"),
+            F.lit("application/http; msgtype=response").alias("content_type"),
+            F.encode(http, "UTF-8").alias("payload"),
+            F.md5(uri).alias("record_id"),
+        ),
+        directory,
+        compress=compress,
+        max_records_per_file=max_records_per_file,
+    )

@@ -651,13 +651,96 @@ def test_sip_event_log_characterization(spark, tmp_path):
     log = {}
     for t in read_ntriples(spark, os.path.join(sip, "eventlog.nt")).collect():
         log.setdefault(int(t["s"].rsplit("-e", 1)[1]), {})[t["p"]] = t["o"]
-    assert {i: (e["premis:eventType"].rsplit("/", 1)[1], [e["premis:object"]],
-                e["premis:outcomeNote"], e["premis:outcome"].rsplit("/", 1)[1],
-                e.get("premis:note"), e["prov:wasAssociatedWith"])
+    assert {i: (e[PREMIS + "eventType"].rsplit("/", 1)[1], [e[PREMIS + "object"]],
+                e[PREMIS + "outcomeNote"], e[PREMIS + "outcome"].rsplit("/", 1)[1],
+                e.get(PREMIS + "note"), e[PROV + "wasAssociatedWith"])
             for i, e in log.items()} == want
-    assert all(e["rdf:type"] == "premis:Event" and "prov:endedAtTime" in e
+    assert all(e[RDF_TYPE] == PREMIS + "Event" and PROV + "endedAtTime" in e
                for e in log.values())
     # Every logged event has both times, and none ends before it starts.
-    assert all(datetime.fromisoformat(e["prov:startedAtTime"])
-               <= datetime.fromisoformat(e["prov:endedAtTime"])
+    assert all(datetime.fromisoformat(e[PROV + "startedAtTime"])
+               <= datetime.fromisoformat(e[PROV + "endedAtTime"])
                for e in log.values())
+
+
+PREMIS = "http://www.loc.gov/premis/rdf/v3/"
+PROV = "http://www.w3.org/ns/prov#"
+RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+
+
+def test_sip_event_log_lines_use_vocabulary_iris(spark, tmp_path, monkeypatch):
+    """eventlog.nt names its predicates, types and datatypes by their
+    PREMIS, PROV, RDF and XSD IRIs, as the reference's rdflib graph
+    does, and it is still written by one job."""
+    import os
+    import re
+    import uuid
+
+    import razulibs_spark.plans.sip as sip_mod
+
+    jobs = []
+
+    def counted(triples, path):
+        sc = spark.sparkContext
+        group = f"eventlog-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            write_ntriples(triples, path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    monkeypatch.setattr(sip_mod, "write_ntriples", counted)
+    metadata, droid, vocab = _fixture(spark)
+    sip = str(tmp_path / "sip")
+    _release(sip_mod.assemble_sip(spark, csv2rdf_triples(metadata, droid, vocab), sip))
+    assert jobs == [1]
+
+    lines = [r["value"] for r in spark.read.text(os.path.join(sip, "eventlog.nt")).collect()]
+    e1 = "<https://data.razu.nl/id/event/sip-e1> "
+    stamp = r'"\d{4}-\d\d-\d\dT\d\d:\d\d:\d\dZ"'
+    timed = {line for line in lines if line.startswith(e1) and "AtTime> " in line}
+    assert len(timed) == 2 and all(
+        re.fullmatch(e1 + f"<{PROV}(?:started|ended)AtTime> {stamp}"
+                     r"\^\^<http://www\.w3\.org/2001/XMLSchema#dateTime> \.",
+                     line)
+        for line in timed
+    )
+    assert {line for line in lines if line.startswith(e1)} - timed == {
+        e1 + f"<{RDF_TYPE}> <{PREMIS}Event> .",
+        e1 + f"<{PREMIS}eventType> <http://id.loc.gov/vocabulary/preservation/eventType/ins> .",
+        e1 + f"<{PREMIS}outcome> <http://id.loc.gov/vocabulary/preservation/eventOutcome/suc> .",
+        e1 + f'<{PREMIS}outcomeNote> "Ingestion started." .',
+        e1 + f'<{PROV}wasAssociatedWith> "https://data.razu.nl/id/actor/razu" .',
+        e1 + f"<{PREMIS}object> <{sip}> .",
+    }
+    assert not [line for line in lines if re.search(r"<(?:premis|prov|rdf|xsd):", line)]
+
+
+def test_sip_event_log_in_the_prefixed_form_still_locks(spark, tmp_path):
+    """A log written before the IRIs were expanded names its terms as
+    ``<premis:eventType>``; its ingestion_end still locks the SIP."""
+    import os
+
+    import pytest
+
+    from razulibs_spark.plans.sip import SipLockedError, assemble_sip
+
+    sip = tmp_path / "sip"
+    os.makedirs(sip / "eventlog.nt")
+    ev = "<https://data.razu.nl/id/event/sip-e{}> "
+    (sip / "eventlog.nt" / "part-00000.txt").write_text(
+        ev.format(1) + "<rdf:type> <premis:Event> .\n"
+        + ev.format(1) + "<premis:eventType> "
+        "<http://id.loc.gov/vocabulary/preservation/eventType/ins> .\n"
+        + ev.format(2) + "<premis:eventType> "
+        "<http://id.loc.gov/vocabulary/preservation/eventType/ine> .\n"
+        + ev.format(2) + '<prov:endedAtTime> "2024-01-01T00:00:00Z"'
+        "^^<xsd:dateTime> .\n",
+        encoding="utf-8",
+    )
+    metadata, droid, vocab = _fixture(spark)
+    with pytest.raises(SipLockedError):
+        assemble_sip(spark, csv2rdf_triples(metadata, droid, vocab), str(sip))
+    assert sorted(os.listdir(sip)) == ["eventlog.nt"]

@@ -15,13 +15,15 @@
   source, sink or plan counts its input's partitions, which with AQE
   runs the input's shuffles before the write runs them again. Writing
   an event log is one job.
-- The file readers and payload operators run their Python rows through
-  `session.map_rows`, the one `mapInPandas` batch loop.
+- Every module runs its per-row Python work through `session.map_rows`,
+  the one `mapInPandas` batch loop; the few passes that do batch work
+  are named, each with its reason.
 """
 
 from __future__ import annotations
 
 import ast
+import glob
 import json
 import os
 import uuid
@@ -285,7 +287,10 @@ def test_lifecycle_modules_build_no_frame_from_a_python_list(module):
     assert not calls, f"{module} calls createDataFrame at {calls}; use local_frame"
 
 
-@pytest.mark.parametrize("module", ["sinks/object_store.py", "operators/manifest.py"])
+@pytest.mark.parametrize("module", [
+    "sinks/object_store.py", "operators/manifest.py",
+    "sources/jsonld.py", "sources/sitemap.py", "sources/warc.py",
+])
 def test_side_effects_run_through_each_partition(module):
     """`foreachPartition` starts a second Python worker pool beside the
     Arrow runner's and runs one task per input partition; the object
@@ -310,16 +315,41 @@ def test_archive_layers_count_no_partitions(module):
     assert not uses, f"{module} counts partitions at {uses}"
 
 
-# The file readers and payload operators whose per-row Python work runs
-# through session.map_rows; in rdfxml.py the three vectorized writers
-# keep their own batch passes.
+# Every module's per-row Python work runs through session.map_rows
+# (session.py itself holds that loop; the last test checks it). These
+# passes do batch work a row function cannot, and keep their own.
 ROW_MODULES = sorted(
-    ["sources/turtle_full.py", "sources/rdfxml.py", "sources/archives.py",
-     "sources/sitemap.py", "sources/warc.py", "operators/wikitext.py"]
-    + [f"operators/{m}.py" for m in
-       ("docx", "odt", "pptx", "xlsx", "epub", "rtf", "pdf", "eml", "mp4", "tiff")]
+    os.path.relpath(path, ROOT)
+    for path in glob.glob(os.path.join(ROOT, "**", "*.py"), recursive=True)
+    if os.path.relpath(path, ROOT) != "session.py"
 )
-OWN_BATCH_PASSES = {"sources/rdfxml.py": {"write_rdfxml", "write_trix", "write_trig"}}
+OWN_BATCH_PASSES = {
+    "operators/multimodal.py": {
+        "extract_features": "vectorized pandas column kernels, no per-row call",
+        "resize_images": "vectorized pandas column kernels, no per-row call",
+    },
+    "sources/rdfxml.py": {
+        "write_rdfxml": "vectorized string kernels over each batch of triples",
+        "write_trix": "vectorized string kernels over each batch of triples",
+        "write_trig": "vectorized string kernels over each batch of triples",
+    },
+    "operators/similarity.py": {
+        "blocked_exact_neardup": "one numpy matmul per block of rows",
+        "pq_train_codebooks": "one numpy assignment per batch of vectors",
+        "pq_encode": "one numpy encode per batch of vectors",
+        "pq_topk": "one numpy distance table per batch of codes",
+        "ivfpq_topk": "one numpy distance table per batch of candidates",
+    },
+    "operators/stats.py": {
+        "_pca_gram": "one numpy Gram matrix per batch of rows",
+    },
+    "operators/analytics.py": {
+        "heavy_hitters": "a Misra-Gries summary folded over the whole partition",
+    },
+    "sources/jsonld.py": {
+        "jsonld_docs": "carries an entity's rows from one batch into the next",
+    },
+}
 
 
 def _mapinpandas_uses(module, exempt=()) -> list[tuple[int, str]]:
@@ -335,11 +365,17 @@ def _mapinpandas_uses(module, exempt=()) -> list[tuple[int, str]]:
 
 @pytest.mark.parametrize("module", ROW_MODULES)
 def test_row_modules_run_python_rows_through_map_rows(module):
-    """One per-row runner: a reader or payload operator gives
-    `session.map_rows` its row function and builds no batch loop,
-    column list or pandas frame of its own."""
+    """One per-row runner: a module gives `session.map_rows` its row
+    function and builds no batch loop, column list or pandas frame of
+    its own, outside the batch passes named in OWN_BATCH_PASSES."""
     uses = _mapinpandas_uses(module, OWN_BATCH_PASSES.get(module, ()))
     assert not uses, f"{module} calls mapInPandas at {uses}; use session.map_rows"
+
+
+def test_own_batch_passes_still_run_their_own_pass():
+    """The list names no pass that has since moved to map_rows."""
+    for module, passes in OWN_BATCH_PASSES.items():
+        assert {name for _, name in _mapinpandas_uses(module)} == set(passes), module
 
 
 def test_map_rows_is_the_session_batch_loop():

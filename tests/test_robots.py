@@ -184,6 +184,30 @@ def test_sitemap_gzip_priority_repr_and_group_guard(spark, tmp_path):
         write_urlset_files(bad, str(tmp_path / "bad"))
 
 
+def test_urlset_files_hold_every_url_of_their_group(spark, tmp_path):
+    """Groups spread over many input partitions, and several groups
+    per writer task: each group's file is written once, with all of
+    its URLs."""
+    from razulibs_spark.sources.sitemap import (
+        read_sitemaps,
+        write_urlset_files,
+    )
+
+    urls = spark.createDataFrame(
+        [(f"h{i % 7}", f"https://h{i % 7}/p{i}", None, None) for i in range(60)],
+        "host string, loc string, lastmod string, priority double",
+    ).repartition(5)
+    out = str(tmp_path / "groups")
+    write_urlset_files(urls, out)
+    got = {
+        r["loc"]: r["source"]
+        for r in read_sitemaps(spark, out, include_source=True).collect()
+    }
+    assert got == {
+        f"https://h{i % 7}/p{i}": f"sitemap-h{i % 7}.xml" for i in range(60)
+    }
+
+
 def test_read_sitemaps_include_source_and_mixed_compression(
     spark, tmp_path
 ):

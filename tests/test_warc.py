@@ -11,6 +11,7 @@ from razulibs_spark.sources.warc import (
     gzip_member,
     parse_warc,
     read_warc,
+    write_warc_records,
     write_warc_responses,
 )
 
@@ -149,6 +150,45 @@ def test_warc_roundtrip_through_spark(spark, tmp_path):
     )
     assert got["https://ex.org/doc/3"]["http_status"] == 200
     assert all(r["warc_type"] == "response" for r in got.values())
+
+
+@pytest.mark.parametrize("compress", [True, False])
+def test_warc_responses_write_the_bytes_of_warc_records(spark, tmp_path, compress):
+    """write_warc_responses builds its HTTP envelope with built-in
+    expressions; its files hold the same bytes as write_warc_records
+    given encode_http_response of each page (multi-byte UTF-8 text
+    included, so Content-Length counts bytes, not characters), with a
+    file rollover inside the partition."""
+    import hashlib
+    import os
+
+    from razulibs_spark.session import local_frame
+
+    pages = [(f"https://ex.org/doc/{i}", f"<p>café {i} — ünïcode &amp; €</p>")
+             for i in range(7)]
+    records = [("response", uri, "application/http; msgtype=response",
+                encode_http_response(html), hashlib.md5(uri.encode()).hexdigest())
+               for uri, html in pages]
+    a, b = str(tmp_path / "responses"), str(tmp_path / "records")
+    write_warc_responses(
+        local_frame(spark, pages, "uri string, html string").coalesce(1),
+        a, compress=compress, max_records_per_file=3,
+    )
+    write_warc_records(
+        local_frame(spark, records, "warc_type string, target_uri string, "
+                    "content_type string, payload binary, record_id string").coalesce(1),
+        b, compress=compress, max_records_per_file=3,
+    )
+
+    def files(d):
+        out = {}
+        for name in sorted(os.listdir(d)):
+            with open(os.path.join(d, name), "rb") as fh:
+                out[name] = fh.read()
+        return out
+
+    got, want = files(a), files(b)
+    assert len(want) == 3 and got == want
 
 
 def test_cdx_from_records(spark):
