@@ -91,36 +91,6 @@ def word_shingles(documents: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def df_capped_candidates(shingles: DataFrame, max_df: int) -> DataFrame:
-    """Candidate pairs from the co-shingle self-join restricted to
-    shingles whose document frequency is ≤ ``max_df``.
-
-    The uncapped self-join costs Σ df² over shingles — quadratic in
-    the hottest key, so one stop-word trigram ("of the and", df=10⁶)
-    alone contributes 10¹² pair rows at web scale. Capping df bounds
-    the join cost at |shingles|·max_df while keeping every pair that
-    shares at least one non-ubiquitous shingle — the standard
-    stop-shingle filter of web-dedup pipelines (true near-dups share
-    many shingles, including rare ones; a pair sharing ONLY >max_df
-    shingles is boilerplate overlap, not duplication). Exact Jaccard
-    is then computed per candidate, so scores are uncapped-exact for
-    every surviving pair.
-    """
-    df = shingles.groupBy("shingle").agg(F.count("*").alias("_df"))
-    rare = (
-        shingles.join(df.filter(F.col("_df") <= max_df), "shingle")
-        .select("doc_id", "shingle")
-    )
-    a = rare.alias("a")
-    b = rare.alias("b")
-    return (
-        a.join(b, on="shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
-
-
 def pair_common_counts(shingles: DataFrame, max_df: int) -> DataFrame:
     """(d1, d2, common, n1, n2) for every candidate pair sharing ≥1
     shingle with document frequency ≤ ``max_df`` — `common` is the
@@ -260,7 +230,7 @@ def jaccard_pairs(
     - No `candidates` (brute-force baseline): self-join on the shingle
       key — cost is Σ over shingles of df², bounded by shingle
       cardinality, the highest-cardinality key available. Do NOT ship
-      this path at scale: route through ``df_capped_candidates`` (df
+      this path at scale: route through ``pair_common_counts`` (df
       cap), ``prefix_filter_pairs`` (exact AllPairs), or LSH banding.
     - With `candidates` (d1, d2) from LSH banding / df-cap / prefix
       filter: candidate-DRIVEN set intersection — per-doc shingle sets

@@ -37,6 +37,7 @@ from __future__ import annotations
 import io
 import zipfile
 from xml.etree import ElementTree as ET
+from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame
 from razulibs_spark.session import map_rows
@@ -157,16 +158,10 @@ DOCX_TEXT_SCHEMA = StructType(
 _WORDS_PER_PARA = 8
 
 
-def _esc(s: str) -> str:
-    return (
-        s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-    )
-
-
 def _run(text: str, preserve: bool = False, bold: bool = False) -> str:
     space = ' xml:space="preserve"' if preserve else ""
     rpr = "<w:rPr><w:b/></w:rPr>" if bold else ""
-    return f"<w:r>{rpr}<w:t{space}>{_esc(text)}</w:t></w:r>"
+    return f"<w:r>{rpr}<w:t{space}>{escape(text)}</w:t></w:r>"
 
 
 def _document_xml(d: int, words: list[str]) -> str:

@@ -42,6 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 from xml.etree import ElementTree as ET
+from xml.sax.saxutils import escape
 
 _CONTAINER_NS = "urn:oasis:names:tc:opendocument:xmlns:container"
 _OPF_NS = "http://www.idpf.org/2007/opf"
@@ -127,12 +128,6 @@ def parse_epub(payload: bytes) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _esc(s: str) -> str:
-    return (
-        s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-    )
-
-
 _WORDS_PER_PARA = 8
 
 
@@ -143,12 +138,12 @@ def _chapter_xhtml(k: int, words: list[str]) -> str:
         if len(c) >= 3:
             mid = len(c) // 2
             body = (
-                _esc(" ".join(c[:mid]))
-                + " <em>" + _esc(c[mid]) + "</em> "
-                + _esc(" ".join(c[mid + 1:]))
+                escape(" ".join(c[:mid]))
+                + " <em>" + escape(c[mid]) + "</em> "
+                + escape(" ".join(c[mid + 1:]))
             )
         else:
-            body = _esc(" ".join(c))
+            body = escape(" ".join(c))
         paras.append(f"<p>{body}</p>")
     return (
         '<?xml version="1.0" encoding="utf-8"?>'
@@ -177,7 +172,7 @@ def encode_epub(
         'unique-identifier="uid">'
         f'<metadata xmlns:dc="{_DC_NS}">'
         f"<dc:title>Doc {d}</dc:title>"
-        f"<dc:language>{_esc(lang)}</dc:language>"
+        f"<dc:language>{escape(lang)}</dc:language>"
         f'<dc:identifier id="uid">doc-{d}</dc:identifier></metadata>'
         "<manifest>"
         '<item id="c2" href="ch2.xhtml" '
@@ -239,7 +234,7 @@ def encode_epub_foreign(d: int, lang: str, words: list[str]) -> bytes:
         'unique-identifier="bookid">'
         f'<metadata xmlns:dc="{_DC_NS}">'
         f"<dc:title>Doc {d}</dc:title>"
-        f"<dc:language>{_esc(lang)}</dc:language>"
+        f"<dc:language>{escape(lang)}</dc:language>"
         f'<dc:identifier id="bookid">doc-{d}</dc:identifier></metadata>'
         "<manifest>"
         '<item id="ncx" href="toc.ncx" '
@@ -302,7 +297,7 @@ def encode_epub3_nav(d: int, lang: str, words: list[str]) -> bytes:
         'unique-identifier="uid">'
         f'<metadata xmlns:dc="{_DC_NS}">'
         f"<dc:title>Doc {d}</dc:title>"
-        f"<dc:language>{_esc(lang)}</dc:language>"
+        f"<dc:language>{escape(lang)}</dc:language>"
         f'<dc:identifier id="uid">doc-{d}</dc:identifier></metadata>'
         "<manifest>"
         '<item id="nav" href="nav.xhtml" properties="nav" '

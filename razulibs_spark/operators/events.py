@@ -155,10 +155,17 @@ def events_to_triples(events: DataFrame, base_uri: str) -> DataFrame:
     scalar properties fan out via entity_to_triples, the subjects
     array via explode — one premis:object link per related object
     (eror roles); an event without a start time has no
-    prov:startedAtTime. Narrow transformations only: the two parts are
+    prov:startedAtTime. Predicates, the rdf:type object and the
+    xsd:dateTime datatype are emitted as full IRIs, so the log
+    serializes as standards-valid N-Triples without a per-row
+    expansion; the related objects (file names, the SIP directory) are
+    written as given. Narrow transformations only: the two parts are
     disjoint by predicate, and a subject an event lists twice is one
     link, so no distinct (a shuffle) is needed."""
-    from razulibs_spark.operators.rdf import PropertyMap, entity_to_triples
+    from razulibs_spark.operators.rdf import EXPANSIONS, PropertyMap, entity_to_triples
+
+    premis, prov = EXPANSIONS["premis"], EXPANSIONS["prov"]
+    date_time = EXPANSIONS["xsd"] + "dateTime"
 
     ev = events.withColumn(
         "_uri", F.concat(F.lit(base_uri + "-e"), F.col("event_id").cast("string"))
@@ -168,9 +175,9 @@ def events_to_triples(events: DataFrame, base_uri: str) -> DataFrame:
         ev,
         F.col("_uri"),
         [
-            PropertyMap("rdf:type", F.lit("premis:Event"), "uri"),
+            PropertyMap(EXPANSIONS["rdf"] + "type", F.lit(premis + "Event"), "uri"),
             PropertyMap(
-                "premis:eventType",
+                premis + "eventType",
                 F.concat(
                     F.lit("http://id.loc.gov/vocabulary/preservation/eventType/"),
                     F.col("event_type"),
@@ -178,25 +185,25 @@ def events_to_triples(events: DataFrame, base_uri: str) -> DataFrame:
                 "uri",
             ),
             PropertyMap(
-                "premis:outcome",
+                premis + "outcome",
                 F.concat(
                     F.lit("http://id.loc.gov/vocabulary/preservation/eventOutcome/"),
                     F.col("outcome"),
                 ),
                 "uri",
             ),
-            PropertyMap("premis:note", F.col("outcome_note")),
-            PropertyMap("prov:wasAssociatedWith", F.col("implemented_by")),
-            PropertyMap("prov:startedAtTime", F.date_format(F.col("started_at"), stamp),
-                        datatype="xsd:dateTime"),
-            PropertyMap("prov:endedAtTime", F.date_format(F.col("ended_at"), stamp),
-                        datatype="xsd:dateTime"),
-            PropertyMap("premis:outcomeNote", F.col("description")),
+            PropertyMap(premis + "note", F.col("outcome_note")),
+            PropertyMap(prov + "wasAssociatedWith", F.col("implemented_by")),
+            PropertyMap(prov + "startedAtTime", F.date_format(F.col("started_at"), stamp),
+                        datatype=date_time),
+            PropertyMap(prov + "endedAtTime", F.date_format(F.col("ended_at"), stamp),
+                        datatype=date_time),
+            PropertyMap(premis + "outcomeNote", F.col("description")),
         ],
     )
     objects = ev.select(
         F.col("_uri").alias("s"),
-        F.lit("premis:object").alias("p"),
+        F.lit(premis + "object").alias("p"),
         F.explode(F.array_distinct("subjects")).alias("o"),
         F.lit("uri").alias("o_type"),
         F.lit(None).cast("string").alias("o_datatype"),

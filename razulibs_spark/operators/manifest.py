@@ -87,10 +87,16 @@ def manifest_to_json_map(manifest: DataFrame) -> str:
     small); the distributed form is `df.write.json`. One plain collect:
     ``sort_keys`` orders the filenames, so a sort in Spark would only
     add jobs."""
+    return json_map_of_rows(manifest.collect())
+
+
+def json_map_of_rows(rows) -> str:
+    """``manifest_to_json_map`` over manifest rows already collected,
+    for a caller that also checks them."""
     import json
 
     out = {}
-    for r in manifest.collect():
+    for r in rows:
         d = r.asDict()
         fn = d.pop("filename")
         out[fn] = {k: (v.isoformat() if hasattr(v, "isoformat") else v)

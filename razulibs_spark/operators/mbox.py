@@ -5,23 +5,19 @@ is trivial (messages concatenated, each introduced by a ``From ``
 separator line; body lines that would start with ``From `` are
 quoted ``>From `` — the mboxrd convention) but the FILE is the unit
 real corpora deliver, and it is routinely multi-GB — so the reader
-distributes ONE file across the cluster with the same two-pass
-parallel scan as ``read_turtle_sharded``:
-
-1. ``textFile`` splits the file into line blocks (input splits),
-2. pass 1 counts separator lines per partition (one long each,
-   collected + prefix-summed on the driver),
-3. pass 2 labels every line with its global message id and its
-   order-preserving (partition << 32 | ordinal) line number,
-4. messages reassemble in the single bounded shuffle (groupBy
-   message id, sort_array on the line number), un-quote mboxrd
-   ``>From `` runs, and parse with the existing RFC 5322 reader
-   (operators/eml.py) inside an Arrow stage.
+distributes ONE file across the cluster with the split scan every
+single-file source shares (``sources/sharded_text.split_records``,
+the same scan as ``read_turtle_sharded``): a ``From `` line starts a
+record, records begun and ended inside one input split are joined
+locally, and only the fragments at split boundaries (at most two per
+split) shuffle to be stitched. Each message then drops its ``From ``
+line, un-quotes mboxrd ``>From `` runs and parses with the existing
+RFC 5322 reader (operators/eml.py) inside an Arrow stage.
 
 Messages straddling input-split boundaries are exactly the case the
-two-pass scan exists for — the fixture forces 8 splits so every
-boundary cuts through a message. Reference analog: none (razulibs
-holds no mail); engine-native surface.
+scan exists for — the fixture forces 8 splits so every boundary cuts
+through a message. Reference analog: none (razulibs holds no mail);
+engine-native surface.
 """
 
 from __future__ import annotations
@@ -54,6 +50,16 @@ def mbox_unescape(message_text: str) -> str:
 # foreign spool writing CONTENT-LENGTH: must still route to the
 # Content-Length dialects in auto mode.
 _CL_RE = re.compile(r"^content-length:\s*(\d+)\s*$", re.IGNORECASE)
+_UNQUOTE = r"(?m)^>((?:>*)From )"
+
+
+def _after_from_line(rec):
+    """A record's text after its first (``From ``) line; NULL when the
+    record is only that line."""
+    from pyspark.sql import functions as F
+
+    nl = F.locate("\n", rec)
+    return F.when(nl > 0, rec.substr(nl + 1, F.lit(2_147_483_647)))
 
 
 def _fragment_meta(rec_id, rec):
@@ -112,8 +118,8 @@ def read_mbox_sharded(
 
     Scale shape for the CL dialects (r13 removed the O(corpus) driver
     collect; r14 distributed the fold itself — VERDICT r13 next #6):
-    the candidate fragments are reassembled once (the same bounded
-    shuffle), a map-only Arrow stage reduces each to THREE LONGS
+    the candidate fragments are the split scan's records, a map-only
+    Arrow stage reduces each to THREE LONGS
     (byte length, CL value, body-tail length), and the Content-Length
     chain recurrence folds per "guaranteed start" segment — fragments
     no earlier Content-Length can reach are provably message starts,
@@ -122,13 +128,13 @@ def read_mbox_sharded(
     boundary rows (O(splits × message span)) shuffle into parallel
     per-segment groups, and the driver composes ONE summary tuple per
     split (the read_turtle_sharded prefix-scan posture — never row
-    data). The resulting fragment→message mapping joins
-    back onto the FRAGMENT frame on rec_id, reusing the reassembly
-    exchange, and messages concatenate from whole fragments — the
-    per-line frame is never shuffled a second time (the r12 shape
-    grouped all lines twice AND collected per-record metadata to the
-    driver). Exhaustion tolerance is ≤1 byte (producers disagree on
-    whether CL counts the trailing newline). Contract: byte-exact for
+    data). The resulting fragment→message mapping joins back onto the
+    FRAGMENT frame on rec_id (a broadcast on the bounded-spool path),
+    and messages concatenate from whole fragments — no line is ever
+    shuffled on its own (the r12 shape grouped all lines twice AND
+    collected per-record metadata to the driver). Exhaustion
+    tolerance is ≤1 byte (producers disagree on whether CL counts the
+    trailing newline). Contract: byte-exact for
     LF-native spools — the Unix norm every MDA writes; a spool
     storing CRLF line endings whose CL counts the \r bytes would
     undercount here (textFile strips \r), so such producers need CL
@@ -136,35 +142,25 @@ def read_mbox_sharded(
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from razulibs_spark.sources.sharded_text import (
-        record_line_expr,
-        separator_records,
-    )
+    from razulibs_spark.sources.sharded_text import split_records
 
     if dialect not in ("rd", "cl", "cl2", "auto"):
         raise ValueError(f"mbox: unknown dialect {dialect!r}")
 
-    unquote = r"(?m)^>((?:>*)From )"
+    # every candidate record keeps its From_ line: framing for a true
+    # start, body content for a CL continuation
+    scan = split_records(
+        spark, path, lambda ln, _: (ln.startswith("From "), None), [None],
+        min_partitions,
+    )
+    frags = scan.records
     if dialect == "rd":
-        recs = separator_records(
-            spark, path,
-            is_separator=lambda ln: ln.startswith("From "),
-            min_partitions=min_partitions,
-            keep_separator=False,  # framing, not content
-        )
-        return recs.select(
+        body = _after_from_line(F.col("rec"))
+        return frags.filter(body.isNotNull()).select(
             F.col("rec_id").alias("msg_id"),
-            F.regexp_replace("rec", unquote, r"$1").alias("raw"),
+            F.regexp_replace(body, _UNQUOTE, r"$1").alias("raw"),
         )
 
-    lines = separator_records(
-        spark, path,
-        is_separator=lambda ln: ln.startswith("From "),
-        min_partitions=min_partitions,
-        keep_separator=True,  # a false separator line IS body content
-        return_lines=True,
-    )
-    frags = lines.groupBy("rec_id").agg(record_line_expr().alias("rec"))
     meta = map_rows(
         frags, _fragment_meta, "rec_id long, nbytes long, cl long, tail long"
     )
@@ -229,11 +225,13 @@ def read_mbox_sharded(
             out, columns=["rec_id", "msg_id", "is_start", "cl_framed"]
         )
 
-    if lines.rdd.getNumPartitions() <= par:
+    if scan.splits <= par:
         mapping = meta.groupBy(F.lit(0).alias("_spool")).applyInPandas(
             _stitch_fold, _fold_schema
         )
-        return _assemble_messages(frags, mapping, dialect)
+        # the mapping is as bounded as the one fold task that built
+        # it, so it broadcasts and the records never shuffle for the join
+        return _assemble_messages(frags, F.broadcast(mapping), dialect)
 
     # both pins are metadata-only (4 longs per fragment): `meta` so
     # the range sampler's pass IS upstream run #1, `meta_r` so the
@@ -372,11 +370,8 @@ def _assemble_messages(frags, mapping, dialect: str) -> DataFrame:
     filter+regroup."""
     from pyspark.sql import functions as F
 
-    unquote = r"(?m)^>((?:>*)From )"
-    nl = F.locate("\n", F.col("rec"))
-    content = (
-        F.when(~F.col("is_start"), F.col("rec"))
-        .when(nl > 0, F.col("rec").substr(nl + 1, F.lit(2_147_483_647)))
+    content = F.when(~F.col("is_start"), F.col("rec")).otherwise(
+        _after_from_line(F.col("rec"))
     )
     stitched = (
         frags.join(mapping, "rec_id")
@@ -412,7 +407,7 @@ def _assemble_messages(frags, mapping, dialect: str) -> DataFrame:
     return stitched.select(
         "msg_id",
         F.when(
-            do_unquote, F.regexp_replace("rec", unquote, r"$1")
+            do_unquote, F.regexp_replace("rec", _UNQUOTE, r"$1")
         ).otherwise(F.col("rec")).alias("raw"),
     )
 

@@ -46,6 +46,7 @@ from pyspark.sql.types import (
     StructType,
 )
 from xml.etree import ElementTree as ET
+from xml.sax.saxutils import escape
 
 _OFFICE_NS = "urn:oasis:names:tc:opendocument:xmlns:office:1.0"
 _TEXT_NS = "urn:oasis:names:tc:opendocument:xmlns:text:1.0"
@@ -119,12 +120,6 @@ def parse_odt(payload: bytes) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _esc(s: str) -> str:
-    return (
-        s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-    )
-
-
 _CONTENT_HEAD = (
     '<?xml version="1.0" encoding="UTF-8"?>'
     f'<office:document-content xmlns:office="{_OFFICE_NS}" '
@@ -154,7 +149,7 @@ def encode_odt(d: int, words: list[str], poison: bool = False) -> bytes:
     own span. ``poison``: valid OCF, correct mimetype, no
     content.xml."""
     paras = [f'<text:h text:outline-level="1">Doc {d}</text:h>']
-    w0 = _esc(words[0]) if words else "x"
+    w0 = escape(words[0]) if words else "x"
     paras.append(
         "<text:p>a<text:s text:c=\"3\"/>b<text:tab/>c"
         "<text:line-break/>d"
@@ -171,14 +166,14 @@ def encode_odt(d: int, words: list[str], poison: bool = False) -> bytes:
         if len(c) >= 3:
             mid = len(c) // 2
             body = (
-                _esc(" ".join(c[:mid]))
+                escape(" ".join(c[:mid]))
                 + ' <text:span text:style-name="T1">'
-                + _esc(c[mid])
+                + escape(c[mid])
                 + "</text:span> "
-                + _esc(" ".join(c[mid + 1:]))
+                + escape(" ".join(c[mid + 1:]))
             )
         else:
-            body = _esc(" ".join(c))
+            body = escape(" ".join(c))
         paras.append(f"<text:p>{body}</text:p>")
     content = _CONTENT_HEAD + "".join(paras) + _CONTENT_TAIL
     buf = io.BytesIO()

@@ -57,6 +57,7 @@ from pyspark.sql.types import (
     StructType,
 )
 from xml.etree import ElementTree as ET
+from xml.sax.saxutils import escape
 
 _P_NS = "http://schemas.openxmlformats.org/presentationml/2006/main"
 _A_NS = "http://schemas.openxmlformats.org/drawingml/2006/main"
@@ -240,18 +241,12 @@ def parse_pptx(payload: bytes, include_notes: bool = False) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _esc(s: str) -> str:
-    return (
-        s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-    )
-
-
 _WORDS_PER_PARA = 8
 _PARAS_PER_SLIDE = 4
 
 
 def _run(text: str) -> str:
-    return f"<a:r><a:t>{_esc(text)}</a:t></a:r>"
+    return f"<a:r><a:t>{escape(text)}</a:t></a:r>"
 
 
 def _shape(paras: list[str]) -> str:

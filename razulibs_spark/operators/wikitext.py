@@ -25,11 +25,15 @@ rendering).
 
 Scale shape: dump shards are the distribution unit (binaryFile
 per-file tasks — Wikimedia itself ships multistream dumps in
-resumable chunks); parse + strip is ONE Arrow pass per shard."""
+resumable chunks); parse + strip is ONE Arrow pass per shard. A dump
+that arrives as ONE file reads through ``read_wiki_dump_sharded``,
+which splits it into pages with the split scan every single-file
+source shares (sources/sharded_text.py)."""
 
 from __future__ import annotations
 
 import re
+from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -111,12 +115,6 @@ WIKI_TEXT_SCHEMA = StructType(
         StructField("text_md5", StringType(), False),
     ]
 )
-
-
-def _escape_xml(s: str) -> str:
-    return (
-        s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-    )
 
 
 def synthesize_wiki_text(d: int, words: list[str]) -> str:
@@ -212,7 +210,7 @@ def write_wiki_dump(documents: DataFrame, directory: str) -> None:
             "    <revision>\n"
             f"      <id>{d * 10 + 1}</id>\n"
             f'      <text bytes="{len(body.encode())}">'
-            f"{_escape_xml(body)}</text>\n"
+            f"{escape(body)}</text>\n"
             "    </revision>\n  </page>\n"
             for d, body in pages
         ]
@@ -287,23 +285,22 @@ def read_wiki_dump_sharded(
     shard it). Records frame on the dump's line discipline: every
     ``<page>`` start tag sits on its own line (true of the real
     export and of this module's template writer; page BODIES cannot
-    fake one because their ``<`` is entity-escaped). The shared
-    two-pass split-scan (sources/sharded_text.py) reassembles each
-    page — boundary-straddling included — and an Arrow stage parses
+    fake one because their ``<`` is entity-escaped). The split scan
+    every single-file source shares (sources/sharded_text.py)
+    reassembles each page — boundary-straddling included, with only
+    the fragments at split boundaries shuffled — and an Arrow stage parses
     the fragment under the export namespace, reusing the same
     title/id/text extraction and wikitext stripping as the per-file
     reader. Root open/close lines ride the dropped preamble and the
     last page's tail respectively (stripped before parse)."""
     import re as _re
 
-    from razulibs_spark.sources.sharded_text import separator_records
+    from razulibs_spark.sources.sharded_text import split_records
 
-    recs = separator_records(
-        spark, path,
-        is_separator=lambda ln: ln.lstrip().startswith("<page"),
-        min_partitions=min_partitions,
-        keep_separator=True,  # the <page> line opens the record
-    )
+    recs = split_records(
+        spark, path, lambda ln, _: (ln.lstrip().startswith("<page"), None),
+        [None], min_partitions,
+    ).records
 
     _close_re = _re.compile(r"</mediawiki>\s*$")
 

@@ -49,6 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 from xml.etree import ElementTree as ET
+from xml.sax.saxutils import escape
 
 _SS_NS = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 _REL_NS = "http://schemas.openxmlformats.org/package/2006/relationships"
@@ -306,12 +307,6 @@ def parse_xlsx(payload: bytes) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _esc(s: str) -> str:
-    return (
-        s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-    )
-
-
 _CONTENT_TYPES = (
     '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
     '<Types xmlns="http://schemas.openxmlformats.org/package/2006/'
@@ -408,7 +403,7 @@ def encode_xlsx(d: int, words: list[str], poison: bool = False) -> bytes:
     ]
     for i in range(3):
         rn = i + 2
-        w = _esc(words[i % len(words)]) if words else ""
+        w = escape(words[i % len(words)]) if words else ""
         rows.append(
             f'<row r="{rn}">'
             f'<c r="A{rn}"><v>{d * 10 + i}</v></c>'

@@ -26,11 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from razulibs_spark.operators import events as ev
-from razulibs_spark.operators.manifest import (
-    manifest_from_directory,
-    manifest_to_json_map,
-)
-from razulibs_spark.operators.rdf import compact_triples, expand_triples
+from razulibs_spark.operators.manifest import json_map_of_rows, manifest_from_directory
+from razulibs_spark.operators.rdf import EXPANSIONS
 from razulibs_spark.session import local_frame
 from razulibs_spark.sources.jsonld import jsonld_docs, write_jsonld_per_entity
 from razulibs_spark.sources.rdf_io import write_ntriples
@@ -116,8 +113,9 @@ def assemble_sip(
         # sip_dir is NOT actually shared, files land on executor-local
         # disks and the scan misses them — an incomplete archival SIP with
         # no error. A missing or unexpected file is a data-integrity
-        # failure, never a warning.
-        read_back = dict(manifest.select("filename", "md5hash").collect())
+        # failure, never a warning. The same rows become manifest.json.
+        scanned = manifest.collect()
+        read_back = {r["filename"]: r["md5hash"] for r in scanned}
         if read_back.keys() != written.keys():
             manifest.unpersist()
             raise RuntimeError(
@@ -157,22 +155,23 @@ def assemble_sip(
 
         # K3 + K4 sinks: byte-compatible manifest map, eventlog as RDF in
         # one part file (2n + 2 events; the coalesce is narrow), its
-        # terms expanded to the PREMIS, PROV, RDF and XSD vocabulary IRIs.
+        # terms already the PREMIS, PROV, RDF and XSD vocabulary IRIs.
         with open(os.path.join(sip_dir, "manifest.json"), "w", encoding="utf-8") as fh:
-            fh.write(manifest_to_json_map(manifest))
-        write_ntriples(expand_triples(ev.events_to_triples(events, event_base)).coalesce(1),
-                       eventlog_path)
+            fh.write(json_map_of_rows(scanned))
+        write_ntriples(ev.events_to_triples(events, event_base).coalesce(1), eventlog_path)
         return {"manifest": manifest, "events": events, "n_documents": n_docs}
 
 
 def _read_eventlog(spark: SparkSession, path: str) -> DataFrame:
-    """S8: recover the event frame (type codes) from the RDF log. The
-    terms are compacted first, so a log written with expanded IRIs and
-    one in the older prefixed form (``<premis:eventType>``) both lock
-    the SIP."""
+    """S8: recover the event frame (type codes) from the RDF log. Both
+    spellings of the eventType predicate match, so a log written with
+    full IRIs and one in the older prefixed form (``<premis:eventType>``)
+    both lock the SIP."""
     from razulibs_spark.sources.rdf_io import read_ntriples
 
-    t = compact_triples(read_ntriples(spark, path))
-    return t.filter(F.col("p") == "premis:eventType").select(
+    t = read_ntriples(spark, path)
+    return t.filter(
+        F.col("p").isin(EXPANSIONS["premis"] + "eventType", "premis:eventType")
+    ).select(
         F.element_at(F.split(F.col("o"), "/"), -1).alias("event_type")
     )

@@ -1,67 +1,97 @@
-"""Separator-framed records from ONE huge text file — the shared
-machinery behind the single-file sources (MBOX spools, Wikipedia XML
-dumps): real corpora deliver these as one multi-GB file, and the
-per-file task model cannot shard them.
+"""Records from ONE huge text file: the one split scan behind every
+single-file source (Turtle dumps, MBOX spools, Wikipedia XML dumps).
+Real corpora deliver these as one multi-GB file, which the per-file
+task model cannot shard.
 
-The plan is the classic two-pass parallel prefix scan:
-1. ``textFile`` splits the file into line blocks (input splits — a
-   100 GB file becomes ~800 tasks at 128 MB),
-2. pass 1 counts separator lines per partition (ONE long per
-   partition crosses to the driver, prefix-summed, broadcast),
-3. pass 2 labels every line with its global record id plus an
-   order-preserving (partition << 32 | ordinal) line number —
-   partitions are in split-offset order for a text file, so the pair
-   sorts lines back into document order,
-4. records reassemble in the single shuffle (groupBy record id,
-   sort_array inside the aggregation — bounded by RECORD size, never
-   file size).
+A caller describes its records with a line automaton: a step function
+``(line, state) -> (starts_record, next_state)`` and the list of
+states it can be in between lines. MBOX and wiki dumps need one state
+(a ``From `` or ``<page`` line starts a record); Turtle tracks whether
+the line is inside a long string and whether the previous line ended a
+statement.
 
-Records straddling split boundaries are exactly what the scan
-handles; callers force small splits in tests to prove it.
+The plan is the parallel prefix scan over that automaton:
+1. ``textFile`` splits the file into line blocks (input splits; a
+   100 GB file becomes ~800 tasks at 128 MB).
+2. Pass 1: each split reports its transfer function, i.e. for every
+   entry state the number of records that start in it and its exit
+   state. The driver composes these in split order (O(splits) small
+   tuples) and broadcasts each split's entry state and the id of the
+   record in progress when it begins.
+3. Pass 2: records that start and end inside one split are joined
+   locally and never shuffle. Only each split's head (the lines
+   before its first record start) and tail (its last record) are
+   fragments; they go through the one stitch shuffle, keyed by record
+   id and ordered by split. At most two rows per split enter it, so
+   its volume is O(splits x record size), never the file.
+
+Records are numbered from 1 in document order; lines before the first
+record start (a preamble) are dropped. Callers force small splits in
+tests so that records straddle split boundaries.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Hashable, Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 
-
-def record_line_expr():
-    """The reassembly aggregate shared by the grouped paths: lines of
-    one record, sorted by the (partition << 32 | ordinal) key, joined
-    with newlines."""
-    from pyspark.sql import functions as F
-
-    return F.array_join(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("line_no", "line"))),
-            lambda s: s["line"],
-        ),
-        "\n",
-    )
+Step = Callable[[str, Hashable], tuple[bool, Hashable]]
 
 
-def separator_records(
+class SplitScan(NamedTuple):
+    records: DataFrame  # (rec_id long, rec string)
+    picked: list[str]  # the lines ``pick`` kept, in document order
+    splits: int  # input splits of the file
+
+
+def _transfer(lines, step: Step, states: Sequence[Hashable]) -> dict:
+    """One split's transfer function: entry state -> (records started
+    in the split, exit state). The walks from different entry states
+    merge once they reach the same state, and one walk serves them all
+    from there."""
+    tracks = {s: [s] for s in states}  # current state -> entry states
+    starts = dict.fromkeys(states, 0)
+    it = iter(lines)
+    while len(tracks) > 1:
+        ln = next(it, None)
+        if ln is None:
+            break
+        merged: dict = {}
+        for cur, entries in tracks.items():
+            new, nxt = step(ln, cur)
+            if new:
+                for e in entries:
+                    starts[e] += 1
+            merged[nxt] = merged[nxt] + entries if nxt in merged else entries
+        tracks = merged
+    if len(tracks) == 1:
+        ((cur, entries),) = tracks.items()
+        n = 0
+        for ln in it:
+            new, cur = step(ln, cur)
+            n += new
+        for e in entries:
+            starts[e] += n
+        tracks = {cur: entries}
+    return {e: (starts[e], cur) for cur, es in tracks.items() for e in es}
+
+
+def split_records(
     spark,
     path: str,
-    is_separator: Callable[[str], bool],
+    step: Step,
+    states: Sequence[Hashable],
     min_partitions: int | None = None,
-    keep_separator: bool = False,
-    return_lines: bool = False,
-) -> DataFrame:
-    """(rec_id long, rec string), one row per separator-introduced
-    record, lines re-joined with ``\\n`` in document order. Lines
-    before the first separator (a preamble/header) carry rec_id 0 and
-    are DROPPED; ``keep_separator`` controls whether the separator
-    line itself opens the record text (wiki ``<page>`` lines do, mbox
-    ``From `` framing lines do not).
-
-    ``return_lines`` (r12, the Content-Length mbox dialects): return
-    the LABELED LINE frame (rec_id, line_no, line, is_sep) instead of
-    grouping — callers that must re-map record boundaries (stitching
-    falsely-split records) do so at line level and pay the reassembly
-    shuffle only once."""
+    pick: Callable[[str], bool] | None = None,
+) -> SplitScan:
+    """Split the text file at ``path`` into records, each the ``\\n``
+    join of its lines, from the line where ``step`` starts it up to the
+    next record start. ``states`` lists every state the automaton can
+    be in between lines; the first is the state at the top of the file.
+    ``pick`` selects lines (a Turtle directive header, say) that pass 1
+    gathers on the way."""
     from pyspark.sql import functions as F
 
     sc = spark.sparkContext
@@ -70,39 +100,65 @@ def separator_records(
         if min_partitions else sc.textFile(path)
     )
 
-    def _count(idx: int, it):
-        n = 0
+    def _pass1(idx: int, it):
+        picked: list[str] = []
+
+        def _picking(it):
+            for ln in it:
+                if pick(ln):
+                    picked.append(ln)
+                yield ln
+
+        transfer = _transfer(_picking(it) if pick else it, step, states)
+        yield idx, transfer, picked
+
+    summaries = sorted(lines.mapPartitionsWithIndex(_pass1).collect())
+    entry: dict[int, tuple[int, Hashable]] = {}
+    rec, state = 0, states[0]
+    for idx, transfer, _ in summaries:
+        entry[idx] = (rec, state)
+        n, state = transfer[state]
+        rec += n
+    bc_entry = sc.broadcast(entry)
+
+    def _pass2(idx: int, it):
+        # rows (frag, rec_id, split, text): a record begun and ended in
+        # this split is whole; the head and the tail are fragments
+        rec, state = bc_entry.value[idx]
+        buf: list[str] = []
+        head = True
         for ln in it:
-            if is_separator(ln):
-                n += 1
-        yield idx, n
+            new, state = step(ln, state)
+            if new:
+                if buf and rec:
+                    yield head, rec, idx, "\n".join(buf)
+                rec += 1
+                buf = []
+                head = False
+            buf.append(ln)
+        if buf and rec:
+            yield True, rec, idx, "\n".join(buf)
 
-    counts = dict(lines.mapPartitionsWithIndex(_count).collect())
-    offsets: dict[int, int] = {}
-    acc = 0
-    for i in sorted(counts):
-        offsets[i] = acc
-        acc += counts[i]
-    bc = sc.broadcast(offsets)
-
-    def _label(idx: int, it):
-        base = bc.value[idx]
-        seen = 0
-        for j, ln in enumerate(it):
-            sep = is_separator(ln)
-            if sep:
-                seen += 1
-                if not keep_separator:
-                    continue
-            yield base + seen, (idx << 32) | j, ln, sep
-
-    labeled = spark.createDataFrame(
-        lines.mapPartitionsWithIndex(_label),
-        "rec_id long, line_no long, line string, is_sep boolean",
-    ).filter(F.col("rec_id") > 0)
-    if return_lines:
-        return labeled
-    return (
-        labeled.groupBy("rec_id")
-        .agg(record_line_expr().alias("rec"))
+    parts = spark.createDataFrame(
+        lines.mapPartitionsWithIndex(_pass2),
+        "frag boolean, rec_id long, split int, rec string",
+    )
+    whole = parts.filter(~F.col("frag")).select("rec_id", "rec")
+    stitched = (
+        parts.filter("frag")
+        .groupBy("rec_id")
+        .agg(
+            F.array_join(
+                F.transform(
+                    F.sort_array(F.collect_list(F.struct("split", "rec"))),
+                    lambda s: s["rec"],
+                ),
+                "\n",
+            ).alias("rec")
+        )
+    )
+    return SplitScan(
+        whole.unionByName(stitched),
+        [ln for _, _, picked in summaries for ln in picked],
+        len(summaries),
     )

@@ -134,7 +134,7 @@ def test_event_log_write_is_one_job(spark, tmp_path):
     lines = [r["value"] for r in spark.read.text(out).collect()]
     want = {r["v"] for r in graph_union(triples).select(ntriples_line().alias("v")).collect()}
     assert len(lines) == len(set(lines)) and set(lines) == want
-    assert sum(" <premis:object> " in line for line in lines) == 3
+    assert sum(" <http://www.loc.gov/premis/rdf/v3/object> " in line for line in lines) == 3
 
 
 def test_manifest_json_map_is_one_collect(spark):
@@ -380,3 +380,11 @@ def test_own_batch_passes_still_run_their_own_pass():
 
 def test_map_rows_is_the_session_batch_loop():
     assert {name for _, name in _mapinpandas_uses("session.py")} == {"map_rows"}
+
+
+def test_one_line_scan_over_a_single_file():
+    """`textFile` (the line blocks of one file) is read in one place:
+    the split scan every single-file source shares."""
+    users = {module for module in ROW_MODULES + ["session.py"]
+             if _attribute_uses(module, {"textFile"})}
+    assert users == {"sources/sharded_text.py"}

@@ -1050,11 +1050,11 @@ def test_zorder_and_compaction_no_python_stage(spark):
 
 
 def test_sharded_single_file_reassembly_bounded(spark, tmp_path):
-    """read_mbox_sharded: the ONLY shuffle is the message-reassembly
-    hash aggregation (bounded by message size, never file size);
-    parsing is an Arrow stage, never row-wise Python; the per-line
-    sort key is inside the aggregation (sort_array), not a global
-    Sort."""
+    """read_mbox_sharded: the ONLY shuffle is the split scan's stitch
+    of boundary fragments (at most two per split, bounded by message
+    size, never file size); parsing is an Arrow stage, never row-wise
+    Python; fragments order by split inside the aggregation
+    (sort_array), not by a global Sort."""
     from razulibs_spark.operators.eml import encode_eml
     from razulibs_spark.operators.mbox import (
         _FROM_LINE,
@@ -1101,9 +1101,9 @@ def test_mbox_cl_stitch_fully_distributed(spark, tmp_path):
     posture — source-level guard below) and the cross-partition
     segments fold as parallel GROUPED applyInPandas, while a bounded
     spool keeps the one-task fold over its (cluster-constant-bounded)
-    metadata. Both paths: the per-LINE frame is shuffled exactly once
-    (its reassembly into fragments; message assembly regroups
-    fragments, never lines)."""
+    metadata. Both paths: no line is shuffled on its own (fragments
+    come from the split scan, whose only shuffle is the boundary
+    stitch), and message assembly regroups fragments."""
     import inspect
     import re as _re
 
@@ -1140,12 +1140,12 @@ def test_mbox_cl_stitch_fully_distributed(spark, tmp_path):
     assert "BatchEvalPython" not in plan
     assert _re.search(r"Scan ExistingRDD", plan), plan[:300]
     # bounded spool: the one-task fold over metadata (still a grouped
-    # fold node, single group) — plan stays the r13 shape
+    # fold node, single group); its mapping broadcasts into the join
     df_small = read_mbox_sharded(spark, str(p), dialect="auto")
     plan_small = _plan(df_small)
     assert "FlatMapGroupsInPandas" in plan_small
     exchanges = _re.findall(r"\(\d+\) Exchange", plan_small)
-    assert len(exchanges) <= 5, plan_small[:500]
+    assert len(exchanges) <= 4, plan_small[:500]
 
 
 def test_example_packing_windows_partitioned_no_global_sort(spark):

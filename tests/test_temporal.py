@@ -212,7 +212,7 @@ def test_df_capped_jaccard_candidates(spark, sf_dir):
             (r["d1"], r["d2"], r["jaccard"])
             for r in dedup.jaccard_pairs(sh, 0.5).collect()
         }
-        cand = dedup.df_capped_candidates(sh, 100)
+        cand = dedup.pair_common_counts(sh, 100).select("d1", "d2")
         capped = {
             (r["d1"], r["d2"], r["jaccard"])
             for r in dedup.jaccard_pairs(sh, 0.5, candidates=cand).collect()
