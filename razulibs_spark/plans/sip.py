@@ -109,56 +109,61 @@ def assemble_sip(
             spark, sip_dir, base_segment=sip_dir.rstrip("/") + "/"
         ).filter(F.col("filename").endswith(SUFFIX)).persist()
 
-        # Shared-FS assumption made LOUD (ADVICE r8): on a cluster whose
-        # sip_dir is NOT actually shared, files land on executor-local
-        # disks and the scan misses them — an incomplete archival SIP with
-        # no error. A missing or unexpected file is a data-integrity
-        # failure, never a warning. The same rows become manifest.json.
-        scanned = manifest.collect()
-        read_back = {r["filename"]: r["md5hash"] for r in scanned}
-        if read_back.keys() != written.keys():
+        # The caller owns the persisted manifest only once assembly
+        # returns it; on any failure before that it is released here.
+        try:
+            # Shared-FS assumption made LOUD (ADVICE r8): on a cluster whose
+            # sip_dir is NOT actually shared, files land on executor-local
+            # disks and the scan misses them — an incomplete archival SIP with
+            # no error. A missing or unexpected file is a data-integrity
+            # failure, never a warning. The same rows become manifest.json.
+            scanned = manifest.collect()
+            read_back = {r["filename"]: r["md5hash"] for r in scanned}
+            if read_back.keys() != written.keys():
+                raise RuntimeError(
+                    f"assemble_sip: manifest scan found {len(read_back)} metadata "
+                    f"files but {n_docs} were written — sip_dir {sip_dir!r} "
+                    "is not a filesystem every executor mounts (or writes "
+                    f"were lost); missing {sorted(written.keys() - read_back.keys())}, "
+                    f"unexpected {sorted(read_back.keys() - written.keys())}"
+                )
+
+            # Events in dependency order (ids dense across the groups, S8/A3):
+            # ingestion_start → one mem per document → one fix per document →
+            # ingestion_end. The documents are ranked by filename (r = 1..n):
+            # mem is 1 + r, fix is 1 + n + r, and the two singletons are 1 and
+            # 2n + 2. Fixity checks the written MD5s against the read-back ones.
+            # Every event spans the assembly: it started when assemble_sip was
+            # called and ended once the read-back scan was checked.
+            ended_at = datetime.now(timezone.utc)
+
+            def event(event_id, event_type, subject, description, outcome="suc", note=None):
+                return {"event_id": event_id, "event_type": event_type,
+                        "subjects": [subject], "implemented_by": actor,
+                        "outcome": outcome, "outcome_note": note,
+                        "started_at": started_at, "ended_at": ended_at,
+                        "description": description}
+
+            names = sorted(written)
+            n = len(names)
+            rows = [event(1, "ins", sip_dir, "Ingestion started.")]
+            rows += [event(1 + r, "mem", fn, "Metadata object created.")
+                     for r, fn in enumerate(names, 1)]
+            rows += [event(1 + n + r, "fix", fn, "Fixity check",
+                           "suc" if read_back[fn] == written[fn] else "fail", read_back[fn])
+                     for r, fn in enumerate(names, 1)]
+            rows.append(event(2 * n + 2, "ine", sip_dir, "Ingestion ended."))
+            events = local_frame(spark, rows, ev.EVENT_SCHEMA)
+
+            # K3 + K4 sinks: byte-compatible manifest map, eventlog as RDF in
+            # one part file (2n + 2 events; the coalesce is narrow), its
+            # terms already the PREMIS, PROV, RDF and XSD vocabulary IRIs.
+            with open(os.path.join(sip_dir, "manifest.json"), "w", encoding="utf-8") as fh:
+                fh.write(json_map_of_rows(scanned))
+            write_ntriples(ev.events_to_triples(events, event_base).coalesce(1), eventlog_path)
+        except BaseException:
             manifest.unpersist()
-            raise RuntimeError(
-                f"assemble_sip: manifest scan found {len(read_back)} metadata "
-                f"files but {n_docs} were written — sip_dir {sip_dir!r} "
-                "is not a filesystem every executor mounts (or writes "
-                f"were lost); missing {sorted(written.keys() - read_back.keys())}, "
-                f"unexpected {sorted(read_back.keys() - written.keys())}"
-            )
-
-        # Events in dependency order (ids dense across the groups, S8/A3):
-        # ingestion_start → one mem per document → one fix per document →
-        # ingestion_end. The documents are ranked by filename (r = 1..n):
-        # mem is 1 + r, fix is 1 + n + r, and the two singletons are 1 and
-        # 2n + 2. Fixity checks the written MD5s against the read-back ones.
-        # Every event spans the assembly: it started when assemble_sip was
-        # called and ended once the read-back scan was checked.
-        ended_at = datetime.now(timezone.utc)
-
-        def event(event_id, event_type, subject, description, outcome="suc", note=None):
-            return {"event_id": event_id, "event_type": event_type,
-                    "subjects": [subject], "implemented_by": actor,
-                    "outcome": outcome, "outcome_note": note,
-                    "started_at": started_at, "ended_at": ended_at,
-                    "description": description}
-
-        names = sorted(written)
-        n = len(names)
-        rows = [event(1, "ins", sip_dir, "Ingestion started.")]
-        rows += [event(1 + r, "mem", fn, "Metadata object created.")
-                 for r, fn in enumerate(names, 1)]
-        rows += [event(1 + n + r, "fix", fn, "Fixity check",
-                       "suc" if read_back[fn] == written[fn] else "fail", read_back[fn])
-                 for r, fn in enumerate(names, 1)]
-        rows.append(event(2 * n + 2, "ine", sip_dir, "Ingestion ended."))
-        events = local_frame(spark, rows, ev.EVENT_SCHEMA)
-
-        # K3 + K4 sinks: byte-compatible manifest map, eventlog as RDF in
-        # one part file (2n + 2 events; the coalesce is narrow), its
-        # terms already the PREMIS, PROV, RDF and XSD vocabulary IRIs.
-        with open(os.path.join(sip_dir, "manifest.json"), "w", encoding="utf-8") as fh:
-            fh.write(json_map_of_rows(scanned))
-        write_ntriples(ev.events_to_triples(events, event_base).coalesce(1), eventlog_path)
+            raise
         return {"manifest": manifest, "events": events, "n_documents": n_docs}
 
 

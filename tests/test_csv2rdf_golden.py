@@ -532,6 +532,27 @@ def test_sip_assembly_lost_write_is_loud(spark, tmp_path, monkeypatch):
             spark, csv2rdf_triples(metadata, droid, vocab), str(tmp_path / "sip"))
 
 
+def test_sip_assembly_failure_releases_the_manifest(spark, tmp_path, monkeypatch):
+    """The caller owns the persisted manifest only once assembly returns
+    it: a failure after the manifest scan (here the event-log write)
+    releases it, so no cached plan stays in the shared session."""
+    import pytest
+
+    import razulibs_spark.plans.sip as sip_mod
+
+    def failing(*args, **kwargs):
+        raise OSError("event log write failed")
+
+    monkeypatch.setattr(sip_mod, "write_ntriples", failing)
+    metadata, droid, vocab = _fixture(spark)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(OSError, match="event log write failed"):
+        sip_mod.assemble_sip(
+            spark, csv2rdf_triples(metadata, droid, vocab), str(tmp_path / "sip"))
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_sip_non_ascii_document_is_utf8(spark, tmp_path):
     """Documents keep non-ASCII text (ensure_ascii=False); the file
     holds its UTF-8 bytes whatever the locale, and fixity agrees."""

@@ -1,5 +1,6 @@
 """The session factory's JIT policy reaches the driver JVM, on
-``spark.driver.defaultJavaOptions`` and nowhere else; ``each_partition``
+``spark.driver.defaultJavaOptions`` and nowhere else, and parses
+without a word on standard output; ``each_partition``
 runs a side effect over every row once, in at most one task per core;
 ``map_rows`` calls its row function once per input row and frames the
 output ``maxRecordsPerBatch`` rows at a time."""
@@ -7,6 +8,7 @@ output ``maxRecordsPerBatch`` rows at a time."""
 from __future__ import annotations
 
 import os
+import subprocess
 from types import SimpleNamespace
 
 import pandas as pd
@@ -21,6 +23,18 @@ def test_driver_jvm_runs_the_jit_policy(spark):
     flags = JIT_POLICY.split()
     assert flags and all(f.startswith("-XX:") for f in flags)
     assert all(f in args for f in flags), (flags, args)
+
+
+def test_policy_parses_silently(spark):
+    """HotSpot drops a malformed ``CompileCommand`` with exit code 0 and
+    says so only on standard output, where it also echoes every command
+    unless ``quiet`` comes first; that stream is the Python program's.
+    The session's own ``java`` must print nothing there."""
+    java_home = spark.sparkContext._jvm.System.getProperty("java.home")
+    out = subprocess.run(
+        [os.path.join(java_home, "bin", "java"), *JIT_POLICY.split(), "-version"],
+        capture_output=True, text=True, check=True, timeout=60)
+    assert out.stdout == "", out.stdout
 
 
 def test_policy_rides_on_default_java_options(spark):
