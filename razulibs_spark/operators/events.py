@@ -158,10 +158,10 @@ def events_to_triples(events: DataFrame, base_uri: str) -> DataFrame:
     prov:startedAtTime. Predicates, the rdf:type object and the
     xsd:dateTime datatype are emitted as full IRIs, so the log
     serializes as standards-valid N-Triples without a per-row
-    expansion; the related objects (file names, the SIP directory) are
-    written as given. Narrow transformations only: the two parts are
-    disjoint by predicate, and a subject an event lists twice is one
-    link, so no distinct (a shuffle) is needed."""
+    expansion; the related objects (file names, the SIP directory's
+    name) are written as given. Narrow transformations only: the two
+    parts are disjoint by predicate, and a subject an event lists twice
+    is one link, so no distinct (a shuffle) is needed."""
     from razulibs_spark.operators.rdf import EXPANSIONS, PropertyMap, entity_to_triples
 
     premis, prov = EXPANSIONS["premis"], EXPANSIONS["prov"]

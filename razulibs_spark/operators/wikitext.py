@@ -23,12 +23,12 @@ Out of scope (documented): table syntax ``{|…|}``, magic words,
 template EXPANSION (we drop, never expand — extraction, not
 rendering).
 
-Scale shape: dump shards are the distribution unit (binaryFile
-per-file tasks — Wikimedia itself ships multistream dumps in
-resumable chunks); parse + strip is ONE Arrow pass per shard. A dump
-that arrives as ONE file reads through ``read_wiki_dump_sharded``,
-which splits it into pages with the split scan every single-file
-source shares (sources/sharded_text.py)."""
+Scale shape: dump shards are the distribution unit
+(``session.map_files`` per-file tasks — Wikimedia itself ships
+multistream dumps in resumable chunks); parse + strip is ONE Arrow
+pass per shard. A dump that arrives as ONE file reads through
+``read_wiki_dump_sharded``, which splits it into pages with the split
+scan every single-file source shares (sources/sharded_text.py)."""
 
 from __future__ import annotations
 
@@ -43,7 +43,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from razulibs_spark.session import map_rows
+from razulibs_spark.session import map_files, map_rows
 
 _MW_NS = "http://www.mediawiki.org/xml/export-0.10/"
 
@@ -243,7 +243,7 @@ def read_wiki_dump(spark: SparkSession, path: str) -> DataFrame:
     page-by-page (elements cleared as consumed — O(page) memory per
     shard), wikitext stripped in the SAME Arrow pass."""
 
-    def pages(content):
+    def pages(_path, data):
         import io
         from xml.etree import ElementTree as ET
 
@@ -254,7 +254,7 @@ def read_wiki_dump(spark: SparkSession, path: str) -> DataFrame:
         # O(page) actually true (ADVICE r9).
         root = None
         for ev, el in ET.iterparse(
-            io.BytesIO(bytes(content)), events=("start", "end")
+            io.BytesIO(data), events=("start", "end")
         ):
             if ev == "start":
                 if root is None:
@@ -267,13 +267,7 @@ def read_wiki_dump(spark: SparkSession, path: str) -> DataFrame:
             if root is not None:
                 del root[:]  # drop cleared page shells
 
-    shards = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xml")
-        .load(path)
-        .select("content")
-    )
-    return map_rows(shards, pages, WIKI_TEXT_SCHEMA)
+    return map_files(spark, path, pages, WIKI_TEXT_SCHEMA, glob="*.xml")
 
 
 def read_wiki_dump_sharded(

@@ -144,15 +144,18 @@ def assemble_sip(
                         "started_at": started_at, "ended_at": ended_at,
                         "description": description}
 
+            # The SIP is named by its directory's own name, relative like
+            # the documents' names, never by where it was staged.
+            sip_name = os.path.basename(sip_dir.rstrip("/"))
             names = sorted(written)
             n = len(names)
-            rows = [event(1, "ins", sip_dir, "Ingestion started.")]
+            rows = [event(1, "ins", sip_name, "Ingestion started.")]
             rows += [event(1 + r, "mem", fn, "Metadata object created.")
                      for r, fn in enumerate(names, 1)]
             rows += [event(1 + n + r, "fix", fn, "Fixity check",
                            "suc" if read_back[fn] == written[fn] else "fail", read_back[fn])
                      for r, fn in enumerate(names, 1)]
-            rows.append(event(2 * n + 2, "ine", sip_dir, "Ingestion ended."))
+            rows.append(event(2 * n + 2, "ine", sip_name, "Ingestion ended."))
             events = local_frame(spark, rows, ev.EVENT_SCHEMA)
 
             # K3 + K4 sinks: byte-compatible manifest map, eventlog as RDF in

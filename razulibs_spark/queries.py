@@ -46,7 +46,7 @@ from razulibs_spark.operators import (
 )
 from razulibs_spark.operators.pinning import pin_iteration
 from razulibs_spark.operators.rdf import PropertyMap, entity_to_triples
-from razulibs_spark.session import each_partition, map_rows
+from razulibs_spark.session import each_partition, map_files, map_rows
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -1424,15 +1424,22 @@ def io_parquet_footer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a shard's rows land in one partition, and merging partitions
     # keeps shards whole, so each file is written exactly once
     each_partition(docs.repartition(8, "shard"), write_partition)
+    return _parquet_footers(spark, base)
 
+
+def _parquet_footers(spark: SparkSession, directory: str) -> DataFrame:
+    """One row per ``shard-<n>.parquet`` file under ``directory``, read
+    from its footer alone: row and row-group counts, the min and max
+    ``doc_id`` over the groups' statistics, and whether the groups'
+    statistics and row counts cover the file."""
     import io as _io
     import re as _re
 
     import pyarrow.parquet as pq
 
-    def footer(path, content):
-        shard = int(_re.search(r"shard-(\d+)\.parquet", str(path)).group(1))
-        md = pq.ParquetFile(_io.BytesIO(bytes(content))).metadata
+    def footer(path, data):
+        shard = int(_re.search(r"shard-(\d+)\.parquet", path).group(1))
+        md = pq.ParquetFile(_io.BytesIO(data)).metadata
         n_rows = md.num_rows
         mins, maxs, group_rows = [], [], 0
         ok = True
@@ -1458,14 +1465,13 @@ def io_parquet_footer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
 
-    return map_rows(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(base)
-        .select("path", "content"),
+    return map_files(
+        spark,
+        directory,
         footer,
         "shard long, n_rows long, n_row_groups long, "
         "min_id long, max_id long, stats_cover_rows boolean",
+        glob="*.parquet",
     )
 
 
@@ -1714,7 +1720,13 @@ def io_csv_dialect_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitions — the writer groups by shard internally; no shard splits
     # across partitions, so each file is written exactly once)
     each_partition(docs.repartition(8, "shard"), write_partition)
+    return _sniffed_dialects(spark, base)
 
+
+def _sniffed_dialects(spark: SparkSession, directory: str) -> DataFrame:
+    """One row per ``shard-<n>.csv`` file under ``directory``: the
+    dialect ``sniff_csv_dialect`` finds, and the count and an id digest
+    of the rows parsed under it."""
     import csv as _csv
     import hashlib
     import io as _io
@@ -1740,12 +1752,11 @@ def io_csv_dialect_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def sniff(path, content):
-        shard = int(_re.search(r"shard-(\d+)\.csv", str(path)).group(1))
-        b = bytes(content)
-        d = sniff_csv_dialect(b)
+    def sniff(path, data):
+        shard = int(_re.search(r"shard-(\d+)\.csv", path).group(1))
+        d = sniff_csv_dialect(data)
         parsed = list(
-            _csv.reader(_io.StringIO(b.decode("utf-8")), delimiter=d["delimiter"])
+            _csv.reader(_io.StringIO(data.decode("utf-8")), delimiter=d["delimiter"])
         )
         if d["has_header"]:
             parsed = parsed[1:]
@@ -1760,14 +1771,7 @@ def io_csv_dialect_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
 
-    return map_rows(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.csv")
-        .load(base)
-        .select("path", "content"),
-        sniff,
-        out_schema,
-    )
+    return map_files(spark, directory, sniff, out_schema, glob="*.csv")
 
 
 _INCR_AGG_SQL = """

@@ -3,9 +3,9 @@ corpora arrive in: academic dumps and Kaggle-style datasets ship as
 .zip, crawl and log dumps as .tar.gz, and the reference's own archival
 domain moves SIPs as zipped transfer packages. The engine's job is the
 DISTRIBUTION shape, not the codec (stdlib zipfile/tarfile are the
-codec): per-FILE binaryFile tasks — archive shards are the natural
-parallelism unit exactly like WARC files — and one ``session.map_rows``
-pass that explodes each archive into (archive, member, body) rows.
+codec): per-FILE tasks — archive shards are the natural parallelism
+unit exactly like WARC files — in one ``session.map_files`` pass that
+explodes each archive into (archive, member, body) rows.
 
 Sinks write one archive per partition from the executors (the
 write_warc_records contract), byte-deterministic: member timestamps
@@ -21,6 +21,7 @@ naming the archive defect — ingest gate, not silent drop.
 from __future__ import annotations
 
 import io
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -32,7 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from razulibs_spark.session import map_rows
+from razulibs_spark.session import map_files
 
 ARCHIVE_MEMBER_SCHEMA = StructType(
     [
@@ -45,9 +46,10 @@ ARCHIVE_MEMBER_SCHEMA = StructType(
 )
 
 
-def _zip_members(name: str, content: bytes) -> list[tuple]:
+def _zip_members(path: str, content: bytes) -> list[tuple]:
     import zipfile
 
+    name = os.path.basename(path)
     try:
         zf = zipfile.ZipFile(io.BytesIO(content))
         rows = []
@@ -68,9 +70,10 @@ def _zip_members(name: str, content: bytes) -> list[tuple]:
         raise ValueError(f"zip: {name}: {exc}") from exc
 
 
-def _tar_members(name: str, content: bytes) -> list[tuple]:
+def _tar_members(path: str, content: bytes) -> list[tuple]:
     import tarfile
 
+    name = os.path.basename(path)
     try:
         tf = tarfile.open(fileobj=io.BytesIO(content))
         rows = []
@@ -87,33 +90,14 @@ def _tar_members(name: str, content: bytes) -> list[tuple]:
         raise ValueError(f"tar: {name}: {exc}") from exc
 
 
-def _read_archives(
-    spark: SparkSession, path: str, glob: str, parse
-) -> DataFrame:
-    import os
-
-    def members(p, content):
-        b = bytes(content)
-        return parse(os.path.basename(p), b) if b else []
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-    )
-    return map_rows(files, members, ARCHIVE_MEMBER_SCHEMA)
-
-
 def read_zip(spark: SparkSession, path: str) -> DataFrame:
     """ZIP shard tree → one row per member. Per-archive tasks."""
-    return _read_archives(spark, path, "*.zip", _zip_members)
+    return map_files(spark, path, _zip_members, ARCHIVE_MEMBER_SCHEMA, glob="*.zip")
 
 
 def read_tar(spark: SparkSession, path: str) -> DataFrame:
     """tar[.gz] shard tree → one row per member. Per-archive tasks."""
-    return _read_archives(spark, path, "*.tar*", _tar_members)
+    return map_files(spark, path, _tar_members, ARCHIVE_MEMBER_SCHEMA, glob="*.tar*")
 
 
 def write_zip_shards(
@@ -131,7 +115,6 @@ def write_zip_shards(
     for a whole partition, and ``session.each_partition`` merges
     partitions to one task per core, which would multiply that
     buffer (and change the one-file-per-partition layout)."""
-    import os
     import zipfile
 
     os.makedirs(directory, exist_ok=True)
@@ -176,7 +159,6 @@ def write_tar_gz_shards(
     for a whole partition, and ``session.each_partition`` merges
     partitions to one task per core, which would multiply that
     buffer (and change the one-file-per-partition layout)."""
-    import os
     import tarfile
 
     from razulibs_spark.sources.warc import gzip_member

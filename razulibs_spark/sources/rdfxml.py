@@ -6,11 +6,11 @@ in sources/rdf_io.py and sources/jsonld.py).
 These three formats are DOCUMENT-framed: an RDF/XML or TriX file is
 one XML tree, and a TriG graph block spans lines — none of them can be
 parsed per input split the way N-Triples can. The scale contract is
-therefore per-FILE parallelism: a ``binaryFile`` scan distributes one
+therefore per-FILE parallelism: ``session.map_files`` distributes one
 task per file (archive metadata documents are per-entity and small —
 the same argument as the S5 SIP dir scan), and each file parses
-executor-side in one ``session.map_rows`` pass, its triples framed
-``maxRecordsPerBatch`` rows at a time. A single multi-GB RDF/XML file
+executor-side, its triples framed ``maxRecordsPerBatch`` rows at a
+time. A single multi-GB RDF/XML file
 does not split; that is the format's nature, and the honest answer at
 100 TB is "convert to N-Triples once, then operate line-framed" — the
 writers here exist so round trips are testable, while write_ntriples
@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from razulibs_spark.operators.rdf import TRIPLE_SCHEMA
-from razulibs_spark.session import map_rows
+from razulibs_spark.session import map_files
 
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 XML_NS = "http://www.w3.org/XML/1998/namespace"
@@ -72,33 +72,6 @@ def _reject_xml_illegal(col, what: str) -> None:
             f"{col[bad].iloc[0]!r} — RDF/XML and TriX cannot represent "
             "them; serialize such data as N-Triples/TriG instead"
         )
-
-
-def _read_files(spark: SparkSession, path: str, parse, schema: StructType) -> DataFrame:
-    """``parse(content, path)``'s rows for every non-blank file under
-    ``path`` (an empty writer partition leaves an empty part file) —
-    per-file task granularity. Hidden/_SUCCESS files are skipped by
-    the source's default filter.
-
-    Task packing is left to the source: binaryFile sizes splits at
-    min(maxPartitionBytes, max(openCost, totalBytes/parallelism)), so
-    a small-file fixture already fans out to ~core-count tasks and a
-    100 TB corpus gets byte-bounded splits. (r14 measured the
-    alternative — a conditional round-robin widen of the (path,
-    content) rows: with ≤ cores files it cannot raise parallelism,
-    only shuffle the payload bytes; reverted.)"""
-
-    def parse_file(p, content):
-        raw = bytes(content)
-        return parse(raw, str(p)) if raw.strip() else []
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("path", "content")
-    )
-    return map_rows(files, parse_file, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -303,7 +276,9 @@ def read_rdfxml(spark: SparkSession, path: str) -> DataFrame:
     tasks (module docstring); each file parses executor-side with the
     first-principles subset parser. A malformed document raises — the
     scan is an ingest gate, not a best-effort filter."""
-    return _read_files(spark, path, _parse_rdfxml, TRIPLE_SCHEMA)
+    return map_files(
+        spark, path, lambda p, data: _parse_rdfxml(data, p), TRIPLE_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -518,7 +493,9 @@ def _parse_trix(content: bytes, scope: str) -> list[tuple]:
 def read_trix(spark: SparkSession, path: str) -> DataFrame:
     """S4 source: TriX documents → quads DataFrame (TRIPLE_SCHEMA +
     nullable ``g``, same shape as read_nquads). Per-file tasks."""
-    return _read_files(spark, path, _parse_trix, QUAD_SCHEMA)
+    return map_files(
+        spark, path, lambda p, data: _parse_trix(data, p), QUAD_SCHEMA
+    )
 
 
 _TRIX_HEADER = (
@@ -751,8 +728,8 @@ def read_trig(spark: SparkSession, path: str) -> DataFrame:
     DataFrame. Per-file tasks: the graph-block state machine walks one
     file per task — files parse independently, so the scan distributes
     across the corpus even though a block can't split."""
-    return _read_files(
-        spark, path, lambda raw, p: _parse_trig(raw.decode("utf-8")), QUAD_SCHEMA
+    return map_files(
+        spark, path, lambda p, data: _parse_trig(data.decode("utf-8")), QUAD_SCHEMA
     )
 
 

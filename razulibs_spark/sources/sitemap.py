@@ -5,8 +5,8 @@ crawl discovery next to robots.txt — operators/robots.py extracts the
 Two document kinds share one grammar: ``<urlset>`` files list page
 URLs with optional lastmod/changefreq/priority, ``<sitemapindex>``
 files list child sitemap URLs. A corpus snapshot of sitemap files is
-scanned per-FILE (binaryFile tasks — sitemap files are ≤50k URLs by
-spec, so file-level parallelism is the natural unit) and both kinds
+scanned per-FILE (``session.map_files`` tasks — sitemap files are ≤50k
+URLs by spec, so file-level parallelism is the natural unit) and both kinds
 land in one records frame tagged by ``kind``; frontier assembly is
 then a join/filter, not a recursive fetch (there is no network here —
 a real crawler resolves index→child by fetching, which is the
@@ -27,7 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from razulibs_spark.session import each_partition, map_rows
+from razulibs_spark.session import each_partition, map_files
 
 SITEMAP_NS = "http://www.sitemaps.org/schemas/sitemap/0.9"
 _NS = "{%s}" % SITEMAP_NS
@@ -104,26 +104,16 @@ def read_sitemaps(
             + [StructField("source", StringType(), False)]
         )
 
-    def parse_file(content, p):
+    def parse_file(p, data):
         import os
 
-        b = bytes(content)
-        if not b.strip():
-            return []
-        parsed = parse_sitemap(b)
+        parsed = parse_sitemap(data)
         if include_source:
             base = os.path.basename(p)
             return [r + (base,) for r in parsed]
         return parsed
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.{xml,xml.gz}")
-        .load(path)
-        .select("content", "path")
-    )
-    return map_rows(files, parse_file, schema)
+    return map_files(spark, path, parse_file, schema, glob="*.{xml,xml.gz}")
 
 
 _XML_ILLEGAL_RE = None  # compiled lazily

@@ -11,9 +11,9 @@ line-parseable; ``read_turtle`` raises on such a line and names
 
 This module is the foreign-document path: a recursive-descent Turtle
 1.1 parser (no rdflib in this image — written from the W3C grammar,
-https://www.w3.org/TR/turtle/#sec-grammar) distributed per FILE via
-``binaryFile`` + ``session.map_rows``. Per-file tasks are the honest
-distribution unit once statements span lines: a statement boundary
+https://www.w3.org/TR/turtle/#sec-grammar) distributed per FILE by
+``session.map_files``. Per-file tasks are the honest distribution
+unit once statements span lines: a statement boundary
 cannot be found without quote-aware scanning, so splitting inside a
 document would require a sequential pre-pass anyway. Corpora
 distribute as many-documents (the CommonCrawl shard model, same as
@@ -48,7 +48,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from razulibs_spark.session import map_rows
+from razulibs_spark.session import map_files, map_rows
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -411,21 +411,20 @@ def read_turtle_full(
     spark: SparkSession, path: str, glob: str = "*.ttl*"
 ) -> DataFrame:
     """Foreign-Turtle corpus → triples DataFrame: one Arrow task per
-    .ttl / .ttl.gz document (binaryFile; gzip sniffed by magic — the
-    shape wikidata and most public RDF dumps ship in), full-grammar
-    parse inside the task, rows in the engine's canonical
+    .ttl / .ttl.gz document (``session.map_files``; gzip sniffed by
+    magic — the shape wikidata and most public RDF dumps ship in),
+    full-grammar parse inside the task, rows in the engine's canonical
     TRIPLE_SCHEMA. Anonymous-bnode labels are prefixed with md5(file
     path) so cross-document labels never collide after union. A
     document's triples are framed ``maxRecordsPerBatch`` rows at a
-    time (``session.map_rows``), so a task holds at most one
-    document's parsed tuples, never a packed task's list of them."""
+    time, so a task holds at most one document's parsed tuples, never
+    a packed task's list of them."""
     from razulibs_spark.operators.rdf import TRIPLE_SCHEMA
 
-    def parse_file(pth, content):
+    def parse_file(pth, raw):
         import gzip
         import hashlib
 
-        raw = bytes(content)
         # real RDF corpora ship gzipped (wikidata's .ttl.gz); sniff
         # the member magic, not the file name
         if raw[:2] == b"\x1f\x8b":
@@ -433,13 +432,7 @@ def read_turtle_full(
         pfx = hashlib.md5(str(pth).encode()).hexdigest()[:8]
         return _parse_rows(raw.decode("utf-8"), bnode_prefix=pfx)
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-    )
-    return map_rows(files, parse_file, TRIPLE_SCHEMA)
+    return map_files(spark, path, parse_file, TRIPLE_SCHEMA, glob=glob)
 
 
 # ---------------------------------------------------------------------------

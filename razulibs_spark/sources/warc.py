@@ -14,11 +14,11 @@ repeated ``zlib.decompressobj`` with unused-tail chaining, keeping the
 strict "every byte belongs to a member" contract (truncated or
 zero-length members raise).
 
-Scale shape: per-FILE parallelism via ``binaryFile`` (crawl corpora
-are sharded into ~1 GB warc files by construction, so file-level tasks
-ARE the distribution unit — same argument as the document-framed RDF
-scan); a single file parses executor-side in one ``session.map_rows``
-pass, its records framed ``maxRecordsPerBatch`` rows at a time. The sink
+Scale shape: per-FILE parallelism via ``session.map_files`` (crawl
+corpora are sharded into ~1 GB warc files by construction, so
+file-level tasks ARE the distribution unit — same argument as the
+document-framed RDF scan); a single file parses executor-side, its
+records framed ``maxRecordsPerBatch`` rows at a time. The sink
 writes its warc files from the executors, one series per
 ``session.each_partition`` task (shared-FS contract, as
 write_jsonld_per_entity).
@@ -39,7 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from razulibs_spark.session import each_partition, map_rows
+from razulibs_spark.session import each_partition, map_files, map_rows
 
 WARC_RECORD_SCHEMA = StructType(
     [
@@ -312,23 +312,17 @@ def parse_warc(content: bytes) -> list[tuple]:
     return rows
 
 
-def _file_records(content) -> list[tuple]:
+def _file_records(path: str, content: bytes) -> list[tuple]:
     """The shared row function of the batch and streaming WARC scans:
-    one input row per FILE, one output row per record."""
-    b = bytes(content)
-    return parse_warc(b) if b.strip() else []
+    one input row per FILE, one output row per record (none for a
+    zero-byte file)."""
+    return parse_warc(content)
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """WARC scan → records DataFrame. Per-file tasks (module
     docstring); plain and .gz files both parse."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("content")
-    )
-    return map_rows(files, _file_records, WARC_RECORD_SCHEMA)
+    return map_files(spark, path, _file_records, WARC_RECORD_SCHEMA)
 
 
 def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -354,7 +348,7 @@ def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
         .schema(binary_file_schema)
         .option("recursiveFileLookup", "true")
         .load(path)
-        .select("content")
+        .select("path", "content")
     )
     return map_rows(files, _file_records, WARC_RECORD_SCHEMA)
 

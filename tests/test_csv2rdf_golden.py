@@ -659,8 +659,8 @@ def test_sip_event_log_characterization(spark, tmp_path):
     assert started_at is not None and started_at <= ended_at
 
     actor = "https://data.razu.nl/id/actor/razu"
-    want = {1: ("ins", [sip], "Ingestion started.", "suc", None, actor),
-            24: ("ine", [sip], "Ingestion ended.", "suc", None, actor)}
+    want = {1: ("ins", ["sip"], "Ingestion started.", "suc", None, actor),
+            24: ("ine", ["sip"], "Ingestion ended.", "suc", None, actor)}
     for fn, (mem_id, fix_id) in SIP_EVENT_IDS.items():
         with open(os.path.join(sip, fn), "rb") as fh:
             md5 = hashlib.md5(fh.read()).hexdigest()
@@ -682,6 +682,29 @@ def test_sip_event_log_characterization(spark, tmp_path):
     assert all(datetime.fromisoformat(e[PROV + "startedAtTime"])
                <= datetime.fromisoformat(e[PROV + "endedAtTime"])
                for e in log.values())
+
+
+def test_sip_event_log_names_no_staging_directory(spark, tmp_path):
+    """The event log names the SIP by its directory's own name, as it
+    names each document by its file name: the same triples assembled
+    under two parent directories log the same event objects."""
+    import os
+
+    from razulibs_spark.plans.sip import assemble_sip
+    from razulibs_spark.sources.rdf_io import read_ntriples
+
+    metadata, droid, vocab = _fixture(spark)
+    triples = csv2rdf_triples(metadata, droid, vocab)
+    objects = []
+    for parent in ("a", "a-much-longer-staging-parent"):
+        sip = str(tmp_path / parent / "sip")
+        _release(assemble_sip(spark, triples, sip))
+        log = read_ntriples(spark, os.path.join(sip, "eventlog.nt"))
+        objects.append(sorted(
+            (t["s"], t["o"]) for t in log.filter(F.col("p") == PREMIS + "object").collect()
+        ))
+    assert objects[0] == objects[1]
+    assert ("https://data.razu.nl/id/event/sip-e1", "sip") in objects[0]
 
 
 PREMIS = "http://www.loc.gov/premis/rdf/v3/"
@@ -734,7 +757,7 @@ def test_sip_event_log_lines_use_vocabulary_iris(spark, tmp_path, monkeypatch):
         e1 + f"<{PREMIS}outcome> <http://id.loc.gov/vocabulary/preservation/eventOutcome/suc> .",
         e1 + f'<{PREMIS}outcomeNote> "Ingestion started." .',
         e1 + f'<{PROV}wasAssociatedWith> "https://data.razu.nl/id/actor/razu" .',
-        e1 + f"<{PREMIS}object> <{sip}> .",
+        e1 + f"<{PREMIS}object> <sip> .",
     }
     assert not [line for line in lines if re.search(r"<(?:premis|prov|rdf|xsd):", line)]
 

@@ -18,6 +18,9 @@
 - Every module runs its per-row Python work through `session.map_rows`,
   the one `mapInPandas` batch loop; the few passes that do batch work
   are named, each with its reason.
+- Every per-file Python scan lists its files through
+  `session.map_files`; the two `binaryFile` sources that stay are
+  named, each with its reason.
 """
 
 from __future__ import annotations
@@ -388,3 +391,32 @@ def test_one_line_scan_over_a_single_file():
     users = {module for module in ROW_MODULES + ["session.py"]
              if _attribute_uses(module, {"textFile"})}
     assert users == {"sources/sharded_text.py"}
+
+
+# The `binaryFile` sources that stay outside session.map_files, each
+# with its reason.
+OWN_FILE_SCANS = {
+    ("operators/manifest.py", "manifest_from_directory"):
+        "hashes `content` in the JVM and runs no Python",
+    ("sources/warc.py", "read_warc_stream"):
+        "a streaming source must state the binaryFile schema",
+}
+
+
+def _binary_file_scans(module) -> set[tuple[str, str]]:
+    """(module, enclosing top-level function) of every ``"binaryFile"``
+    format string in ``module``."""
+    with open(os.path.join(ROOT, module), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    return {(module, top.name)
+            for top in tree.body
+            for node in ast.walk(top)
+            if isinstance(node, ast.Constant) and node.value == "binaryFile"}
+
+
+def test_one_per_file_scan():
+    """Every per-file Python scan lists its files through
+    `session.map_files`; the scans in OWN_FILE_SCANS keep their own
+    `binaryFile` source."""
+    scans = set().union(*(_binary_file_scans(m) for m in ROW_MODULES + ["session.py"]))
+    assert scans == {("session.py", "map_files")} | set(OWN_FILE_SCANS)

@@ -915,11 +915,16 @@ def test_registrable_domain_matches_reference(spark, labels):
 
 @given(st.lists(st.integers(min_value=-32768, max_value=32767),
                 min_size=1, max_size=64))
+@example(samples=[-1])
+@example(samples=[-3])
 @settings(max_examples=150, deadline=None)
 def test_mulaw_companding_is_idempotent_and_bounded(samples):
     """decode(encode(x)) is a fixed point: re-companding the decoded
-    value returns the same code, the error is bounded by the segment
-    step, and zero is exact — the G.711 contract."""
+    value decodes to the same value, the error is bounded by the
+    segment step, and zero is exact — the G.711 contract. The code is a
+    fixed point too, except G.711's negative zero: the reference
+    encoder gives -3..-1 the code 0x7F, which decodes to 0, and 0
+    encodes as 0xFF."""
     from razulibs_spark.operators.multimodal import mulaw_encode_sample
 
     def decode(code: int) -> int:
@@ -934,7 +939,13 @@ def test_mulaw_companding_is_idempotent_and_bounded(samples):
     for x in samples:
         code = mulaw_encode_sample(x)
         q = decode(code)
-        assert mulaw_encode_sample(q) == code  # fixed point
+        again = mulaw_encode_sample(q)
+        assert decode(again) == q  # the decoded value is a fixed point
+        assert (code == 0x7F) == (-3 <= x <= -1)
+        if code == 0x7F:  # negative zero
+            assert (q, again) == (0, 0xFF)
+        else:
+            assert again == code  # so is the code
         step = 8 << ((~code & 0xFF) >> 4 & 7)
         assert abs(q - min(max(x, -32635), 32635)) <= step
 
