@@ -11,10 +11,8 @@ bit-identical across engines.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,23 +44,10 @@ from razulibs_spark.operators import (
 )
 from razulibs_spark.operators.pinning import pin_iteration
 from razulibs_spark.operators.rdf import PropertyMap, entity_to_triples
-from razulibs_spark.session import each_partition, map_files, map_rows
+from razulibs_spark.session import each_partition, map_files, map_rows, scratch_path
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
-
-
-def _scratch(name: str) -> str:
-    """``name`` under this process's own directory in the system temp
-    dir, where queries stage the files they write and read back. One
-    directory per process, so two runs or two checkouts on one host
-    never share or clobber each other's files; it is removed when the
-    process exits."""
-    root = os.path.join(tempfile.gettempdir(), f"razulibs-spark-{os.getpid()}")
-    if not os.path.isdir(root):
-        os.makedirs(root, exist_ok=True)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return os.path.join(root, name)
 
 
 def query(name: str, oracle: str | None = None):
@@ -1391,7 +1376,7 @@ def io_parquet_footer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops stats, or a reader that scans instead of trusting footers
     all mismatch."""
 
-    base = _scratch("pq_footer_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("pq_footer_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base, exist_ok=True)
     docs = T(spark, sf_dir, "documents").select(
@@ -1689,7 +1674,7 @@ def io_csv_dialect_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count and an order-exact id digest per shard. Per-FILE Arrow
     tasks — the sniff reads a prefix, the parse is the same pass."""
 
-    base = _scratch("csv_dialects_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("csv_dialects_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base, exist_ok=True)
     docs = T(spark, sf_dir, "documents").select(
@@ -1802,7 +1787,7 @@ def o_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     group lost in the merge, or float drift in the sum (micro-BIGINT
     forbids it) all mismatch."""
 
-    base_dir = _scratch("incr_mv_" + os.path.basename(sf_dir.rstrip("/")))
+    base_dir = scratch_path("incr_mv_" + os.path.basename(sf_dir.rstrip("/")))
     events = T(spark, sf_dir, "events").select(
         "ts", "event_type", "user_id", "value"
     )
@@ -1855,8 +1840,8 @@ def streaming_mv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from razulibs_spark.streaming.events_stream import read_events_stream
 
     sf_key = os.path.basename(sf_dir.rstrip("/"))
-    mv_dir = _scratch(f"stream_mv_{sf_key}")
-    ckpt = _scratch(f"stream_mv_ckpt_{sf_key}")
+    mv_dir = scratch_path(f"stream_mv_{sf_key}")
+    ckpt = scratch_path(f"stream_mv_ckpt_{sf_key}")
     shutil.rmtree(mv_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     micro = F.round(F.col("value") * 1000000).cast("long")
@@ -2106,7 +2091,7 @@ def text_wikitext_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_wiki_dump,
     )
 
-    dump_dir = _scratch("wiki_dump_" + os.path.basename(sf_dir.rstrip("/")))
+    dump_dir = scratch_path("wiki_dump_" + os.path.basename(sf_dir.rstrip("/")))
 
     shutil.rmtree(dump_dir, ignore_errors=True)
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2487,7 +2472,7 @@ def pipeline_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_warc_responses,
     )
 
-    base = _scratch("warc_store_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("warc_store_" + os.path.basename(sf_dir.rstrip("/")))
     pages = synthesize_html_pages(T(spark, sf_dir, "documents")).select(
         F.concat(F.lit("https://ex.org/doc/"), F.col("doc_id")).alias("uri"),
         "html",
@@ -2630,7 +2615,7 @@ def pipeline_warc_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_warc_records,
     )
 
-    base = _scratch("warc_mixed_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("warc_mixed_" + os.path.basename(sf_dir.rstrip("/")))
     records = _mixed_warc_records(spark, sf_dir)
     write_warc_records(records.repartition(8), base, compress=True)
     return _warc_mixed_stats(read_warc(spark, base))
@@ -2695,7 +2680,7 @@ def streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_append_available_now,
     )
 
-    base = _scratch("warc_stream_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("warc_stream_" + os.path.basename(sf_dir.rstrip("/")))
     write_warc_records(
         _mixed_warc_records(spark, sf_dir).repartition(8), base,
         compress=True,
@@ -2739,7 +2724,7 @@ def pipeline_warc_http_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_warc_records,
     )
 
-    base = _scratch("warc_httpdec_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("warc_httpdec_" + os.path.basename(sf_dir.rstrip("/")))
 
     import zlib
 
@@ -2869,8 +2854,8 @@ def pipeline_corpus_from_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sf_key = os.path.basename(sf_dir.rstrip("/"))
-    src_dir = _scratch(f"crawlcorpus_src_{sf_key}")
-    wet_dir = _scratch(f"crawlcorpus_wet_{sf_key}")
+    src_dir = scratch_path(f"crawlcorpus_src_{sf_key}")
+    wet_dir = scratch_path(f"crawlcorpus_wet_{sf_key}")
     pages = synthesize_html_pages(T(spark, sf_dir, "documents")).select(
         F.concat(F.lit("https://ex.org/doc/"), F.col("doc_id")).alias("uri"),
         "html",
@@ -2976,8 +2961,8 @@ def pipeline_wet_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sf_key = os.path.basename(sf_dir.rstrip("/"))
-    src_dir = _scratch(f"wet_src_{sf_key}")
-    wet_dir = _scratch(f"wet_store_{sf_key}")
+    src_dir = scratch_path(f"wet_src_{sf_key}")
+    wet_dir = scratch_path(f"wet_store_{sf_key}")
     pages = synthesize_html_pages(T(spark, sf_dir, "documents")).select(
         F.concat(F.lit("https://ex.org/doc/"), F.col("doc_id")).alias("uri"),
         "html",
@@ -3063,8 +3048,8 @@ def pipeline_wat_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sf_key = os.path.basename(sf_dir.rstrip("/"))
-    src_dir = _scratch(f"wat_src_{sf_key}")
-    wat_dir = _scratch(f"wat_store_{sf_key}")
+    src_dir = scratch_path(f"wat_src_{sf_key}")
+    wat_dir = scratch_path(f"wat_store_{sf_key}")
     pages = synthesize_html_pages(T(spark, sf_dir, "documents")).select(
         F.concat(F.lit("https://ex.org/doc/"), F.col("doc_id")).alias("uri"),
         "html",
@@ -3144,7 +3129,7 @@ def pipeline_revisit_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_warc_records,
     )
 
-    base = _scratch("warc_revisit_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("warc_revisit_" + os.path.basename(sf_dir.rstrip("/")))
     crlf = "\r\n"
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
     uri = F.concat(
@@ -3234,7 +3219,7 @@ def pipeline_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_warc_records,
     )
 
-    base = _scratch("warc_cdx_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("warc_cdx_" + os.path.basename(sf_dir.rstrip("/")))
     write_warc_records(
         _mixed_warc_records(spark, sf_dir).repartition(8), base,
         compress=True,
@@ -3271,7 +3256,7 @@ def _archive_roundtrip(
     the central-directory walk or a byte lost to the container
     mismatches."""
 
-    base = _scratch(f"{tag}_store_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path(f"{tag}_store_" + os.path.basename(sf_dir.rstrip("/")))
     members = T(spark, sf_dir, "documents").select(
         F.concat(
             F.lit("doc-"), F.col("doc_id").cast("string"), F.lit(".txt")
@@ -3431,7 +3416,7 @@ def pipeline_sitemap_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_urlset_files,
     )
 
-    base = _scratch("sitemap_store_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("sitemap_store_" + os.path.basename(sf_dir.rstrip("/")))
     docs = T(spark, sf_dir, "documents")
     urls = docs.select(
         F.concat(F.lit("h"), F.col("doc_id") % 8).alias("host"),
@@ -3500,7 +3485,7 @@ def pipeline_sitemap_discovery(
         write_urlset_files,
     )
 
-    base = _scratch("sitemap_disc_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("sitemap_disc_" + os.path.basename(sf_dir.rstrip("/")))
     docs = T(spark, sf_dir, "documents")
     urls = docs.select(
         (F.col("doc_id") % 8).alias("hk"),
@@ -3850,7 +3835,7 @@ def pipeline_recrawl_due(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_urlset_files,
     )
 
-    base = _scratch("recrawl_store_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("recrawl_store_" + os.path.basename(sf_dir.rstrip("/")))
     docs = T(spark, sf_dir, "documents")
     urls = docs.select(
         F.concat(F.lit("h"), F.col("doc_id") % 8).alias("host"),
@@ -4806,7 +4791,7 @@ def s6_manifest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from razulibs_spark.operators.manifest import manifest_from_directory
 
-    base = _scratch("s6_store")
+    base = scratch_path("s6_store")
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base + "/bestanden", exist_ok=True)
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
@@ -4851,7 +4836,7 @@ def io_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from razulibs_spark.sources.avro import read_avro, write_avro
 
-    base = _scratch("avro_store_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("avro_store_" + os.path.basename(sf_dir.rstrip("/")))
     docs = T(spark, sf_dir, "documents")
     write_avro(docs, base, partition_by=["lang"])
     back = read_avro(spark, base)
@@ -4895,7 +4880,7 @@ def io_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     would let a later construction at another scale factor clobber
     the store an earlier DataFrame still points at."""
 
-    base = _scratch("orc_store_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("orc_store_" + os.path.basename(sf_dir.rstrip("/")))
     orders = T(spark, sf_dir, "orders")
     orders.write.mode("overwrite").partitionBy("o_orderpriority").orc(base)
     back = spark.read.orc(base)
@@ -4938,7 +4923,7 @@ def io_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     production tables pin a catalog schema once evolution settles.
     Store path keyed by sf_dir (eager write / lazy read)."""
 
-    base = _scratch("evo_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("evo_" + os.path.basename(sf_dir.rstrip("/")))
     orders = T(spark, sf_dir, "orders")
     old = orders.filter(F.month("o_orderdate") <= 6).select(
         "o_orderkey", "o_totalprice"
@@ -5535,7 +5520,7 @@ def k2_ntriples_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is lossless. Both directions are per-line, shuffle-free."""
     from razulibs_spark.sources.rdf_io import read_ntriples, write_ntriples
 
-    path = _scratch("ntriples_rt")
+    path = scratch_path("ntriples_rt")
     write_ntriples(_o2_triples_full(spark, sf_dir), path)
     return read_ntriples(spark, path).select("s", "p", "o")
 
@@ -5555,7 +5540,7 @@ def k1_jsonld_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle checks document (de)serialization is the identity."""
     from razulibs_spark.sources.jsonld import read_jsonld, write_jsonld
 
-    path = _scratch("jsonld_rt")
+    path = scratch_path("jsonld_rt")
     write_jsonld(_o2_triples_full(spark, sf_dir), path)
     return read_jsonld(spark, path).select("s", "p", "o")
 
@@ -5581,7 +5566,7 @@ def k2_turtle_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from razulibs_spark.operators.rdf import compact_triples, expand_triples
     from razulibs_spark.sources.rdf_io import read_turtle, write_turtle
 
-    path = _scratch("turtle_rt")
+    path = scratch_path("turtle_rt")
     write_turtle(expand_triples(_o2_triples_full(spark, sf_dir)), path)
     return compact_triples(read_turtle(spark, path)).select("s", "p", "o")
 
@@ -5604,7 +5589,7 @@ def k2_rdfxml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from razulibs_spark.operators.rdf import compact_triples, expand_triples
     from razulibs_spark.sources.rdfxml import read_rdfxml, write_rdfxml
 
-    path = _scratch("rdfxml_rt")
+    path = scratch_path("rdfxml_rt")
     write_rdfxml(expand_triples(_o2_triples_full(spark, sf_dir)), path)
     return compact_triples(read_rdfxml(spark, path)).select("s", "p", "o")
 
@@ -5658,7 +5643,7 @@ def k2_trig_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     set including the graph labels (null = default graph)."""
     from razulibs_spark.sources.rdfxml import read_trig, write_trig
 
-    path = _scratch("trig_rt")
+    path = scratch_path("trig_rt")
     write_trig(_quads_for_roundtrip(spark, sf_dir), path)
     return _compact_quads(read_trig(spark, path))
 
@@ -5671,7 +5656,7 @@ def k2_trix_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/rdfxml.py). Same quad oracle as TriG."""
     from razulibs_spark.sources.rdfxml import read_trix, write_trix
 
-    path = _scratch("trix_rt")
+    path = scratch_path("trix_rt")
     write_trix(_quads_for_roundtrip(spark, sf_dir), path)
     return _compact_quads(read_trix(spark, path))
 
@@ -10337,7 +10322,7 @@ def io_jsonl_gz_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Store path keyed by sf_dir (same eager-write/lazy-read hazard as
     io_orc_roundtrip)."""
 
-    base = _scratch("jsonl_gz_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("jsonl_gz_" + os.path.basename(sf_dir.rstrip("/")))
     docs = T(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "text"
     )
@@ -10376,7 +10361,7 @@ def io_bz2_foreign_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     lost at a block boundary or one byte mangled in transcoding
     mismatches."""
 
-    base = _scratch("jsonl_bz2_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("jsonl_bz2_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base, exist_ok=True)
     docs = T(spark, sf_dir, "documents").select(
@@ -12595,20 +12580,20 @@ def io_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-shuffle-per-read pattern a 100 TB store uses for its
     recurring entity↔payload joins. Tables are keyed by sf so an
     eager write at one scale never clobbers a lazy read at another;
-    the database pins LOCATION under _scratch so no spark-warehouse
+    the database pins LOCATION under scratch_path so no spark-warehouse
     directory appears wherever the harness happens to cwd."""
 
     sfx = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     spark.sql(
         "CREATE DATABASE IF NOT EXISTS bjq "
-        f"LOCATION '{_scratch('bucketed_db')}'"
+        f"LOCATION '{scratch_path('bucketed_db')}'"
     )
     # A fresh session's in-memory catalog can't see (and so can't
     # overwrite) tables a previous session left on disk — drop any
     # catalog entry AND clear the stale managed locations explicitly.
     for t in (f"orders_{sfx}", f"lineitem_{sfx}"):
         spark.sql(f"DROP TABLE IF EXISTS bjq.{t}")
-        shutil.rmtree(_scratch(f"bucketed_db/{t}"),
+        shutil.rmtree(scratch_path(f"bucketed_db/{t}"),
                       ignore_errors=True)
     from razulibs_spark.sources.bucketed import save_bucketed
 
@@ -12853,7 +12838,7 @@ def io_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from razulibs_spark.sources.bucketed import save_partitioned
 
-    base = _scratch("partitioned_docs_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("partitioned_docs_" + os.path.basename(sf_dir.rstrip("/")))
     docs = T(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars", "source"
     )
@@ -12898,7 +12883,7 @@ def io_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     caveat and proves poison rows carry no usable key. Same executor-side store pattern as
     s6_manifest_scan (path keyed by sf)."""
 
-    base = _scratch("csv_malformed_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("csv_malformed_" + os.path.basename(sf_dir.rstrip("/")))
     docs = T(spark, sf_dir, "documents").select("doc_id", "lang")
     lines = docs.select(
         F.when(
@@ -13136,7 +13121,7 @@ def k2_turtle_foreign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from razulibs_spark.sources.rdf_io import with_partition_header
     from razulibs_spark.sources.turtle_full import XSD, read_turtle_full
 
-    base = _scratch("turtle_foreign_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("turtle_foreign_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(base, ignore_errors=True)
 
     d = F.col("doc_id")
@@ -13396,7 +13381,7 @@ def k2_turtle_grouped_roundtrip(
         F.lit(None).cast("string").alias("o_lang"),
     )
     triples = _o2_triples_full(spark, sf_dir).unionByName(hub)
-    path = _scratch("turtle_grouped_rt")
+    path = scratch_path("turtle_grouped_rt")
     write_turtle_grouped(
         expand_triples(triples), path, obj_cap=100, pred_cap=4
     )
@@ -13690,7 +13675,7 @@ def io_schema_contract_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-counting aggregate per snapshot — no joins, no shuffle
     beyond the two 1-row aggs."""
 
-    base = _scratch("schema_diff_" + os.path.basename(sf_dir.rstrip("/")))
+    base = scratch_path("schema_diff_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(base, ignore_errors=True)
     docs = T(spark, sf_dir, "documents")
     a = docs.select(
@@ -14038,7 +14023,7 @@ def k2_turtle_sharded_roundtrip(
     header = spark.range(1).select(
         F.lit(TURTLE_FULL_HEADER.rstrip("\n")).alias("value")
     )
-    path = _scratch("turtle_sharded_rt")
+    path = scratch_path("turtle_sharded_rt")
     # ONE physical file, the dump shape (the single-file write is the
     # fixture constructor, not the engine plan — real dumps arrive as
     # one file; the point under test is reading it back distributed).
@@ -14135,7 +14120,7 @@ def text_mbox_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         msg = head + f"\nContent-Length: {cl}\n\n" + body
         return [(_FROM_LINE + "\n" + msg,)]
 
-    path = _scratch("mbox_rt")
+    path = scratch_path("mbox_rt")
     (
         map_rows(
             T(spark, sf_dir, "documents").select("doc_id", "text"),
@@ -14172,7 +14157,7 @@ def text_wiki_sharded_extract(
         write_wiki_dump,
     )
 
-    dump_dir = _scratch("wiki_dump1_" + os.path.basename(sf_dir.rstrip("/")))
+    dump_dir = scratch_path("wiki_dump1_" + os.path.basename(sf_dir.rstrip("/")))
     shutil.rmtree(dump_dir, ignore_errors=True)
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
     write_wiki_dump(docs.coalesce(1), dump_dir)

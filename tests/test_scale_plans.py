@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 
 from razulibs_spark import queries as Q
+from razulibs_spark.session import scratch_path
 
 SF = "/root/testdata/sf0.001"
 
@@ -677,7 +678,7 @@ def test_jsonl_gz_reads_with_explicit_schema(spark):
 
     df = Q.io_jsonl_gz_roundtrip(spark, SF)
     df.collect()
-    files = glob.glob(Q._scratch("jsonl_gz_sf0.001/*.json.gz"))
+    files = glob.glob(scratch_path("jsonl_gz_sf0.001/*.json.gz"))
     assert files, "expected gzip-compressed part files"
     assert [f.name for f in df.schema.fields] == [
         "lang", "n_docs", "sum_chars", "n_sources"
