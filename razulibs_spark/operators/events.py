@@ -125,27 +125,6 @@ def is_locked(events: DataFrame, lock_type: str = LOCK_EVENT) -> bool:
     return bool(events.filter(F.col("event_type") == lock_type).limit(1).count())
 
 
-def fixity_check_events(
-    manifest: DataFrame, fs_scan: DataFrame, actor: str, id_offset: int = 0
-) -> DataFrame:
-    """Fixity verification (razu/sip.py:168-171): recompute-and-compare
-    as a join, emitting one `fix` event per file with the outcome."""
-    joined = manifest.select("filename", F.col("md5hash").alias("_expected")).join(
-        fs_scan.select("filename", F.col("md5hash").alias("_actual")),
-        "filename",
-        "left",
-    )
-    checked = joined.select(
-        F.col("filename").alias("_subject"),
-        F.when(F.col("_actual").isNull(), F.lit("fail"))
-        .when(F.col("_actual") != F.col("_expected"), F.lit("fail"))
-        .otherwise(F.lit("suc"))
-        .alias("outcome"),
-        F.coalesce(F.col("_actual"), F.lit("missing")).alias("outcome_note"),
-    )
-    return _event_log(checked, id_offset, "fix", actor, None, "Fixity check")
-
-
 def events_to_triples(events: DataFrame, base_uri: str) -> DataFrame:
     """K4/D6: the event log as PREMIS RDF triples — feed to
     sources.jsonld.write_jsonld (eventlog JSON-LD sink,

@@ -28,7 +28,10 @@ from pyspark.sql import functions as F
 def zorder_key(d1: Column, d2: Column, bits: int = 8) -> Column:
     """Morton interleave of two ``bits``-bit dimensions → one
     2·bits-bit key (d1 on even bit positions, d2 on odd). Pure
-    codegen: the loop unrolls into a fixed shift/mask expression."""
+    codegen: the loop unrolls into a fixed shift/mask expression. The
+    inputs are cast to long, so a key of more than 15 bits per
+    dimension cannot overflow an int."""
+    d1, d2 = d1.cast("long"), d2.cast("long")
     z: Column | None = None
     for i in range(bits):
         b1 = F.shiftleft(F.shiftright(d1, i).bitwiseAND(F.lit(1)), 2 * i)

@@ -1,14 +1,11 @@
-"""Table-maintenance operators: small-file compaction and Z-order
-keys — the storage-health half of running a 100 TB lake.
+"""Table-maintenance operators: small-file compaction and table
+statistics — the storage-health half of running a 100 TB lake.
 
 Small files are the classic operational failure of long-running
 ingest (every micro-batch writes a few KB; a year later the table has
 10⁷ files and the NameNode/listing/scan-planning all crawl).
 `compact_parquet` rewrites a table to ~target-sized files. The
-Z-order key linearizes two dimensions so range predicates on EITHER
-column cluster into few row groups — the data-skipping layout trick
-transactional formats (Delta/Iceberg OPTIMIZE ZORDER) implement; here
-it is a plain deterministic column you sort by at write time.
+Z-order clustering key lives in `operators/layout.zorder_key`.
 """
 
 from __future__ import annotations
@@ -16,7 +13,7 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -41,27 +38,6 @@ def compact_parquet(
         "overwrite"
     ).parquet(out_path)
     return n_files
-
-
-def z_order_key(x: Column, y: Column, bits: int = 16) -> Column:
-    """Morton (Z-order) interleave of two pre-bucketized non-negative
-    int columns (each < 2^bits): bit i of x lands at position 2i, bit
-    i of y at 2i+1. Pure Catalyst bit arithmetic — engine-portable
-    (the DuckDB oracle spells the identical shifts), no UDF.
-
-    Sort-by-z_order_key at write time clusters rows so min/max row-
-    group stats prune on either dimension; the standard use is
-    ``df.withColumn("z", z_order_key(bucket(a), bucket(b)))
-    .repartitionByRange("z").sortWithinPartitions("z").write...``.
-    """
-    out = F.lit(0).cast("long")
-    for i in range(bits):
-        xb = F.shiftright(x.cast("long"), i).bitwiseAND(F.lit(1))
-        yb = F.shiftright(y.cast("long"), i).bitwiseAND(F.lit(1))
-        out = out.bitwiseOR(F.shiftleft(xb, 2 * i)).bitwiseOR(
-            F.shiftleft(yb, 2 * i + 1)
-        )
-    return out
 
 
 def column_stats(df: DataFrame, cols: list[str]) -> DataFrame:

@@ -421,16 +421,14 @@ FROM orders
 
 @query("o1_sequential_ids", _O1_SQL)
 def o1_sequential_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O1 dense sequential ids (razu/incrementer.py:1-11) as
-    row_number over a stable total order. Note: a global window is the
-    SIP-compatibility path only — at 100 TB the engine uses
-    content-derived hash uids instead (SURVEY §2.9 design note)."""
-    w = Window.orderBy("o_orderdate", "o_orderkey")
-    return (
-        T(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_orderdate")
-        .withColumn("seq_id", F.row_number().over(w))
-        .select("o_orderkey", "seq_id")
+    """O1 dense sequential ids (razu/incrementer.py:1-11) in a stable
+    total order, through the library's two-tier `ids.dense_ids`
+    (per-partition offsets, no single-task global window)."""
+    from razulibs_spark.operators import ids
+
+    orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    return ids.dense_ids(orders, ["o_orderdate", "o_orderkey"], "seq_id").select(
+        "o_orderkey", "seq_id"
     )
 
 
@@ -5048,11 +5046,13 @@ SELECT DISTINCT o_orderkey, o_orderstatus FROM (
 @query("u2_graph_union_dedup", _U2_SQL)
 def u2_graph_union_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U2 graph union (razu/rdf_resource.py:25-28): rdflib `+=` dedups
-    identical triples ⇒ union().distinct()."""
+    identical triples ⇒ `rdf.graph_union`."""
+    from razulibs_spark.operators.rdf import graph_union
+
     o = T(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    a = o.filter(F.col("o_orderkey") % 2 == 0)
-    b = o.filter(F.col("o_orderkey") % 3 == 0)
-    return a.unionByName(b).distinct()
+    return graph_union(
+        o.filter(F.col("o_orderkey") % 2 == 0), o.filter(F.col("o_orderkey") % 3 == 0)
+    )
 
 
 _A2_SQL = """
@@ -5145,17 +5145,14 @@ FROM orders
 @query("f9_compose_filename", _F9_SQL)
 def f9_compose_filename(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F9 maak_bestandsnaam `{jaar}_{nn:02d}_{nnn:03d}.jpg`
-    (demo/csv_luchtfotos/extra.py:46-54)."""
+    (demo/csv_luchtfotos/extra.py:46-54) through the csv2rdf plan's
+    `compose_filename`, on a synthesized `jaar-nummer` Doos-nummer."""
+    from razulibs_spark.plans.csv2rdf import compose_filename
+
+    key = F.col("o_orderkey")
+    doos = F.concat_ws("-", (1984 + key % 30).cast("string"), (1 + key % 5).cast("string"))
     o = T(spark, sf_dir, "orders")
-    name = F.concat(
-        (1984 + F.col("o_orderkey") % 30).cast("string"),
-        F.lit("_"),
-        F.lpad((1 + F.col("o_orderkey") % 5).cast("string"), 2, "0"),
-        F.lit("_"),
-        F.lpad((F.col("o_orderkey") % 999).cast("string"), 3, "0"),
-        F.lit(".jpg"),
-    )
-    return o.select("o_orderkey", name.alias("bestandsnaam"))
+    return o.select("o_orderkey", compose_filename(doos, key % 999).alias("bestandsnaam"))
 
 
 _F12_SQL = """
@@ -8394,15 +8391,14 @@ def o_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     the write-time clustering key that makes min/max row-group stats
     prune on EITHER column (the OPTIMIZE ZORDER trick as a plain
     deterministic column). Pure JVM bit arithmetic, narrow op."""
-    from razulibs_spark.operators.maintenance import z_order_key
+    from razulibs_spark.operators.layout import zorder_key
 
     e = T(spark, sf_dir, "events")
     xb = (F.col("user_id") % 1024).cast("long")
     yb = (F.floor(F.col("value")).cast("long") % 1024).cast("long")
     return e.select(
         "event_id", xb.alias("xb"), yb.alias("yb"),
-        z_order_key(F.col("user_id") % 1024,
-                    F.floor(F.col("value")).cast("long") % 1024).alias("z"),
+        zorder_key(xb, yb, bits=16).alias("z"),
     )
 
 

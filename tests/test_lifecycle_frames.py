@@ -332,9 +332,7 @@ OWN_BATCH_PASSES = {
         "resize_images": "vectorized pandas column kernels, no per-row call",
     },
     "sources/rdfxml.py": {
-        "write_rdfxml": "vectorized string kernels over each batch of triples",
-        "write_trix": "vectorized string kernels over each batch of triples",
-        "write_trig": "vectorized string kernels over each batch of triples",
+        "_write_framed": "frames each partition's batches as one document",
     },
     "operators/similarity.py": {
         "blocked_exact_neardup": "one numpy matmul per block of rows",

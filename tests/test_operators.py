@@ -293,21 +293,6 @@ def test_event_builders_and_lock(spark):
     ]
 
 
-def test_fixity_events(spark, payload_dir):
-    m = manifest_from_directory(spark, payload_dir).cache()
-    try:
-        tampered = m.withColumn(
-            "md5hash",
-            F.when(F.col("filename") == "a.jpg", F.lit("deadbeef")).otherwise(F.col("md5hash")),
-        )
-        fx = ev.fixity_check_events(tampered, m, actor="urn:actor")
-        out = {r["subjects"][0]: r["outcome"] for r in fx.collect()}
-        assert out["a.jpg"] == "fail"
-        assert out["b.tar.gz"] == "suc"
-    finally:
-        m.unpersist()
-
-
 # -- multimodal plumbing ----------------------------------------------------
 
 
@@ -694,13 +679,13 @@ def test_z_order_key_locality(spark):
     """The Morton key interleaves bits (golden values) and preserves
     2-D locality: the max z-range of any 2x2 cell block is far below
     random pairings' range."""
-    from razulibs_spark.operators.maintenance import z_order_key
+    from razulibs_spark.operators.layout import zorder_key
 
     df = spark.createDataFrame(
         [(x, y) for x in range(8) for y in range(8)], "x long, y long"
     )
     rows = {(r["x"], r["y"]): r["z"] for r in df.select(
-        "x", "y", z_order_key(F.col("x"), F.col("y"), bits=3).alias("z")
+        "x", "y", zorder_key(F.col("x"), F.col("y"), bits=3).alias("z")
     ).collect()}
     # golden: z(1,0)=1, z(0,1)=2, z(1,1)=3, z(2,2)=12, z(7,7)=63
     assert rows[(1, 0)] == 1 and rows[(0, 1)] == 2 and rows[(1, 1)] == 3

@@ -20,6 +20,7 @@ from razulibs_spark.sources.rdfxml import (
 )
 
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+XSD = "http://www.w3.org/2001/XMLSchema#"
 
 
 def _triples_df(spark):
@@ -248,6 +249,32 @@ def test_trig_parser_blocks_and_errors():
         _parse_trig("<https://g> {\n<https://h> {")
 
 
+def test_trig_statement_lines_take_trailing_comments(spark, tmp_path):
+    """A statement line ending in a `# comment` reads as read_turtle
+    reads it: one Turtle line grammar, inside and outside a block."""
+    from razulibs_spark.sources.rdf_io import read_turtle
+
+    prefix = "@prefix ex: <https://ex.org/ns#> ."
+    lines = [
+        '<https://ex.org/s1> ex:title "v # not a comment"@nl . # a comment',
+        "ex:s2 a ex:Thing .   # typed",
+        '<https://ex.org/s3> <https://ex.org/ns#n> "7"^^ex:int . #',
+        '_:b1 ex:rel <https://ex.org/s1> .# tight',
+    ]
+    (tmp_path / "t.ttl").write_text("\n".join([prefix] + lines) + "\n")
+    want = [tuple(r) for r in read_turtle(spark, str(tmp_path / "t.ttl")).collect()]
+    assert len(want) == len(lines)
+
+    graph = "https://ex.org/g"
+    (tmp_path / "q.trig").write_text(
+        "\n".join([prefix] + lines + [f"<{graph}> {{"] + lines + ["}"]) + "\n"
+    )
+    got = [tuple(r) for r in read_trig(spark, str(tmp_path / "q.trig")).collect()]
+    assert sorted(got, key=repr) == sorted(
+        [t + (None,) for t in want] + [t + (graph,) for t in want], key=repr
+    )
+
+
 def test_trix_parser_errors():
     with pytest.raises(ValueError, match="not a TriX"):
         _parse_trix(b"<html/>", "t")
@@ -276,3 +303,135 @@ def test_read_rdf_dispatches_document_formats(spark, tmp_path):
         assert _key(got.collect()) == _key(df.collect())
     with pytest.raises(ValueError, match="cannot infer"):
         read_rdf(spark, str(tmp_path / "x.unknown"))
+
+
+# A fixed two-partition frame whose part files are pinned byte for
+# byte: blank nodes spelled `bnode:` and `_:` as subject and object,
+# lang beside a datatype on one literal, the XML and N-Triples escapes
+# in a literal, an empty and a null literal, named and default graphs.
+PINNED_ROWS = [
+    ("bnode:e1", "https://ex.org/ns#title", "a&b<c>d\"e'f\tg\rh\ni",
+     "literal", XSD + "string", "nl", "https://ex.org/g1"),
+    ("_:x1", "https://ex.org/ns#rel", "bnode:e1", "bnode", None, None,
+     "https://ex.org/g1"),
+    ("https://ex.org/e2", "https://ex.org/ns#rel", "_:x1", "bnode", None,
+     None, None),
+    ("https://ex.org/e2", "https://ex.org/ns/size", "42", "literal",
+     XSD + "integer", None, None),
+    ("_:x1", RDF + "type", "https://ex.org/Thing", "uri", None, None,
+     "https://ex.org/g2"),
+    ("https://ex.org/e3?a=1&b=2", "https://ex.org/ns#note", "", "literal",
+     None, None, "https://ex.org/g1"),
+    ("https://ex.org/e3?a=1&b=2", "https://ex.org/ns#gap", None, "literal",
+     None, None, None),
+]
+
+PINNED_PARTS = {
+    "rdfxml": [
+        (
+            '<?xml version="1.0" encoding="utf-8"?>\n'
+            '<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#">\n'
+            '<rdf:Description rdf:nodeID="bd7932655587c22692c7453e95ed2ac8e">\n'
+            '  <p:title xmlns:p="https://ex.org/ns#" xml:lang="nl">a&amp;b&lt;c&gt;d"e\'f\tg&#13;h\n'
+            'i</p:title>\n'
+            '</rdf:Description>\n'
+            '<rdf:Description rdf:nodeID="bx1">\n'
+            '  <p:rel xmlns:p="https://ex.org/ns#" rdf:nodeID="bd7932655587c22692c7453e95ed2ac8e"/>\n'
+            '</rdf:Description>\n'
+            '<rdf:Description rdf:about="https://ex.org/e2">\n'
+            '  <p:rel xmlns:p="https://ex.org/ns#" rdf:nodeID="bx1"/>\n'
+            '</rdf:Description>\n'
+            '</rdf:RDF>\n'
+        ),
+        (
+            '<?xml version="1.0" encoding="utf-8"?>\n'
+            '<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#">\n'
+            '<rdf:Description rdf:about="https://ex.org/e2">\n'
+            '  <p:size xmlns:p="https://ex.org/ns/" rdf:datatype="http://www.w3.org/2001/XMLSchema#integer">42</p:size>\n'
+            '</rdf:Description>\n'
+            '<rdf:Description rdf:nodeID="bx1">\n'
+            '  <p:type xmlns:p="http://www.w3.org/1999/02/22-rdf-syntax-ns#" rdf:resource="https://ex.org/Thing"/>\n'
+            '</rdf:Description>\n'
+            '<rdf:Description rdf:about="https://ex.org/e3?a=1&amp;b=2">\n'
+            '  <p:note xmlns:p="https://ex.org/ns#"></p:note>\n'
+            '</rdf:Description>\n'
+            '<rdf:Description rdf:about="https://ex.org/e3?a=1&amp;b=2">\n'
+            '  <p:gap xmlns:p="https://ex.org/ns#"></p:gap>\n'
+            '</rdf:Description>\n'
+            '</rdf:RDF>\n'
+        ),
+    ],
+    "trix": [
+        (
+            '<?xml version="1.0" encoding="utf-8"?>\n'
+            '<TriX xmlns="http://www.w3.org/2004/03/trix/trix-1/">\n'
+            '<graph>\n'
+            '  <uri>https://ex.org/g1</uri>\n'
+            '  <triple><id>bd7932655587c22692c7453e95ed2ac8e</id><uri>https://ex.org/ns#title</uri><plainLiteral xml:lang="nl">a&amp;b&lt;c&gt;d&quot;e\'f&#9;g&#13;h&#10;i</plainLiteral></triple>\n'
+            '  <triple><id>bx1</id><uri>https://ex.org/ns#rel</uri><id>bd7932655587c22692c7453e95ed2ac8e</id></triple>\n'
+            '</graph>\n'
+            '<graph>\n'
+            '  <triple><uri>https://ex.org/e2</uri><uri>https://ex.org/ns#rel</uri><id>bx1</id></triple>\n'
+            '</graph>\n'
+            '</TriX>\n'
+        ),
+        (
+            '<?xml version="1.0" encoding="utf-8"?>\n'
+            '<TriX xmlns="http://www.w3.org/2004/03/trix/trix-1/">\n'
+            '<graph>\n'
+            '  <triple><uri>https://ex.org/e2</uri><uri>https://ex.org/ns/size</uri><typedLiteral datatype="http://www.w3.org/2001/XMLSchema#integer">42</typedLiteral></triple>\n'
+            '  <triple><uri>https://ex.org/e3?a=1&amp;b=2</uri><uri>https://ex.org/ns#gap</uri><plainLiteral></plainLiteral></triple>\n'
+            '</graph>\n'
+            '<graph>\n'
+            '  <uri>https://ex.org/g2</uri>\n'
+            '  <triple><id>bx1</id><uri>http://www.w3.org/1999/02/22-rdf-syntax-ns#type</uri><uri>https://ex.org/Thing</uri></triple>\n'
+            '</graph>\n'
+            '<graph>\n'
+            '  <uri>https://ex.org/g1</uri>\n'
+            '  <triple><uri>https://ex.org/e3?a=1&amp;b=2</uri><uri>https://ex.org/ns#note</uri><plainLiteral></plainLiteral></triple>\n'
+            '</graph>\n'
+            '</TriX>\n'
+        ),
+    ],
+    "trig": [
+        (
+            '<https://ex.org/g1> {\n'
+            '_:d7932655587c22692c7453e95ed2ac8e <https://ex.org/ns#title> "a&b<c>d\\"e\'f\\tg\\rh\\ni"@nl .\n'
+            '_:x1 <https://ex.org/ns#rel> _:d7932655587c22692c7453e95ed2ac8e .\n'
+            '}\n'
+            '<https://ex.org/e2> <https://ex.org/ns#rel> _:x1 .\n'
+        ),
+        (
+            '<https://ex.org/e2> <https://ex.org/ns/size> "42"^^<http://www.w3.org/2001/XMLSchema#integer> .\n'
+            '<https://ex.org/e3?a=1&b=2> <https://ex.org/ns#gap> "" .\n'
+            '<https://ex.org/g2> {\n'
+            '_:x1 <http://www.w3.org/1999/02/22-rdf-syntax-ns#type> <https://ex.org/Thing> .\n'
+            '}\n'
+            '<https://ex.org/g1> {\n'
+            '<https://ex.org/e3?a=1&b=2> <https://ex.org/ns#note> "" .\n'
+            '}\n'
+        ),
+    ],
+}
+
+
+@pytest.mark.parametrize("name", sorted(PINNED_PARTS))
+def test_document_writers_pin_part_file_bytes(spark, tmp_path, name):
+    """The exact bytes of every part file, so a change to a writer's
+    code that keeps its output is checked, not assumed."""
+    import glob
+
+    writer = {"rdfxml": write_rdfxml, "trix": write_trix, "trig": write_trig}[name]
+
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(PINNED_ROWS, 2),
+        "s string, p string, o string, o_type string, "
+        "o_datatype string, o_lang string, g string",
+    )
+    path = str(tmp_path / name)
+    writer(df, path)
+    parts = []
+    for part in sorted(glob.glob(path + "/part-*")):
+        with open(part, encoding="utf-8", newline="") as fh:
+            parts.append(fh.read())
+    assert parts == PINNED_PARTS[name]
