@@ -24,8 +24,9 @@ implemented the way Word does them:
   flatten in order (the text layer a dedup/quality stage wants),
 - paragraphs join with \\n.
 
-Fail-closed per row: a package without a resolvable main part (or
-unparsable XML) reports parsed=false + note, never kills the task.
+Fail-closed per row (``tables.parse_payloads``): a package without a
+resolvable main part, or a corrupt one, reports parsed=false + note,
+never kills the task.
 
 Scale shape: media synthesis and parsing are each ONE Arrow
 ``mapInPandas`` stage over binary payloads — same posture as
@@ -34,14 +35,14 @@ operators/pdf.py / tiff.py.
 
 from __future__ import annotations
 
-import io
-import zipfile
+import hashlib
 from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame
 from razulibs_spark.session import map_rows
-from razulibs_spark.tables import PAYLOAD_SCHEMA, widen_python_stage
+from razulibs_spark.sources.archives import _REL_NS, Package, zip_package
+from razulibs_spark.tables import PAYLOAD_SCHEMA, parse_payloads, widen_python_stage
 from pyspark.sql.types import (
     BooleanType,
     LongType,
@@ -52,9 +53,6 @@ from pyspark.sql.types import (
 
 _W_NS = (
     "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
-)
-_REL_NS = (
-    "http://schemas.openxmlformats.org/package/2006/relationships"
 )
 _OFFICE_DOC_TYPE = (
     "http://schemas.openxmlformats.org/officeDocument/2006/"
@@ -70,22 +68,6 @@ def _w(tag: str) -> str:
 # ---------------------------------------------------------------------------
 # Parse
 # ---------------------------------------------------------------------------
-
-
-def _main_part_name(zf: zipfile.ZipFile) -> str:
-    """Resolve the main document part via the package relationships —
-    the OPC-correct route (never assume word/document.xml; renamed
-    main parts are legal and exist in the wild)."""
-    try:
-        rels = zf.read("_rels/.rels")
-    except KeyError as exc:
-        raise ValueError("docx: package has no _rels/.rels") from exc
-    root = ET.fromstring(rels)
-    for rel in root.iter("{" + _REL_NS + "}Relationship"):
-        if rel.get("Type") == _OFFICE_DOC_TYPE:
-            target = rel.get("Target", "")
-            return target.lstrip("/")
-    raise ValueError("docx: no officeDocument relationship")
 
 
 def _paragraph_text(p: ET.Element) -> str:
@@ -108,23 +90,20 @@ def _paragraph_text(p: ET.Element) -> str:
 
 def parse_docx_text(payload: bytes) -> dict:
     """One .docx payload → {"paragraphs": [str, ...]}. Raises
-    ValueError naming the defect on an unreadable package."""
-    try:
-        zf = zipfile.ZipFile(io.BytesIO(payload))
-    except zipfile.BadZipFile as exc:
-        raise ValueError(f"docx: not a zip package ({exc})") from exc
-    with zf:
-        part = _main_part_name(zf)
-        try:
-            doc_xml = zf.read(part)
-        except KeyError as exc:
-            raise ValueError(
-                f"docx: main part {part} missing"
-            ) from exc
-        try:
-            root = ET.fromstring(doc_xml)
-        except ET.ParseError as exc:
-            raise ValueError(f"docx: malformed xml ({exc})") from exc
+    ValueError naming the defect on an unreadable package. The main
+    part is found through the package relationships — the OPC-correct
+    route (never assume word/document.xml; renamed main parts are
+    legal and exist in the wild)."""
+    pkg = Package(payload, "docx")
+    rels = pkg.rels("")
+    if rels is None:
+        raise ValueError("docx: package has no _rels/.rels")
+    part = next((p for t, p in rels.values() if t == _OFFICE_DOC_TYPE), None)
+    if part is None:
+        raise ValueError("docx: no officeDocument relationship")
+    if part not in pkg.names:
+        raise ValueError(f"docx: main part {part} missing")
+    root = pkg.xml(part)
     body = root.find(_w("body"))
     if body is None:
         raise ValueError("docx: document has no w:body")
@@ -233,20 +212,10 @@ def encode_docx(d: int, words: list[str], poison: bool = False) -> bytes:
     """One real .docx package. ``poison`` writes a structurally valid
     OPC zip whose relationships point at a main part that is not in
     the package — the fail-closed fixture."""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        stamp = (1980, 1, 1, 0, 0, 0)  # deterministic member headers
-
-        def add(name: str, data: str) -> None:
-            zi = zipfile.ZipInfo(name, date_time=stamp)
-            zi.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(zi, data)
-
-        add("[Content_Types].xml", _CONTENT_TYPES_XML)
-        add("_rels/.rels", _RELS_XML)
-        if not poison:
-            add("word/document.xml", _document_xml(d, words))
-    return buf.getvalue()
+    members = {"[Content_Types].xml": _CONTENT_TYPES_XML, "_rels/.rels": _RELS_XML}
+    if not poison:
+        members["word/document.xml"] = _document_xml(d, words)
+    return zip_package(members)
 
 
 def _document_xml_etree(d: int, words: list[str]) -> bytes:
@@ -306,25 +275,12 @@ def encode_docx_foreign(d: int, words: list[str]) -> bytes:
     the way another exporter would shape it, with identical logical
     content (the extraction output must not move)."""
     alt = "word/doc-main.xml"
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
-        stamp = (1980, 1, 1, 0, 0, 0)
-
-        def add(name: str, data) -> None:
-            zi = zipfile.ZipInfo(name, date_time=stamp)
-            zi.compress_type = zipfile.ZIP_STORED
-            zf.writestr(zi, data)
-
-        add(
-            "[Content_Types].xml",
-            _CONTENT_TYPES_XML.replace("/word/document.xml", "/" + alt),
-        )
-        add(
-            "_rels/.rels",
-            _RELS_XML.replace("word/document.xml", alt),
-        )
-        add(alt, _document_xml_etree(d, words))
-    return buf.getvalue()
+    members = {
+        "[Content_Types].xml": _CONTENT_TYPES_XML.replace("/word/document.xml", "/" + alt),
+        "_rels/.rels": _RELS_XML.replace("word/document.xml", alt),
+        alt: _document_xml_etree(d, words),
+    }
+    return zip_package(members, stored=members)
 
 
 def synthesize_docx_media(documents: DataFrame) -> DataFrame:
@@ -349,22 +305,12 @@ def synthesize_docx_media(documents: DataFrame) -> DataFrame:
     )
 
 
+def _text_stats(payload: bytes) -> tuple:
+    paragraphs = parse_docx_text(payload)["paragraphs"]
+    text = "\n".join(paragraphs)
+    return len(paragraphs), hashlib.md5(text.encode("utf-8")).hexdigest(), None
+
+
 def docx_text_stats(media: DataFrame) -> DataFrame:
     """Parse each payload for real; fail-closed per row."""
-    import hashlib
-
-    def one(doc_id, payload):
-        d = int(doc_id)
-        try:
-            m = parse_docx_text(bytes(payload))
-        except ValueError as exc:
-            return [(d, False, None, None, str(exc))]
-        text = "\n".join(m["paragraphs"])
-        return [(
-            d, True, len(m["paragraphs"]),
-            hashlib.md5(text.encode("utf-8")).hexdigest(), None,
-        )]
-
-    return map_rows(
-        media.select("doc_id", "payload"), one, DOCX_TEXT_SCHEMA
-    )
+    return parse_payloads(media, _text_stats, DOCX_TEXT_SCHEMA)

@@ -27,13 +27,13 @@ fail-closed per row. One Arrow ``mapInPandas`` pass, map-only.
 
 from __future__ import annotations
 
-import io
+import hashlib
 import posixpath
-import zipfile
 
 from pyspark.sql import DataFrame
 from razulibs_spark.session import map_rows
-from razulibs_spark.tables import PAYLOAD_SCHEMA, widen_python_stage
+from razulibs_spark.sources.archives import Package, zip_package
+from razulibs_spark.tables import PAYLOAD_SCHEMA, parse_payloads, widen_python_stage
 from pyspark.sql.types import (
     BooleanType,
     LongType,
@@ -41,7 +41,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
 
 _CONTAINER_NS = "urn:oasis:names:tc:opendocument:xmlns:container"
@@ -56,19 +55,12 @@ def parse_epub(payload: bytes) -> dict:
     joined by \\n)}."""
     from razulibs_spark.operators.html import extract_page
 
-    try:
-        zf = zipfile.ZipFile(io.BytesIO(bytes(payload)))
-    except zipfile.BadZipFile as exc:
-        raise ValueError(f"epub: not an OCF package: {exc}") from exc
-    names = set(zf.namelist())
-    if "mimetype" not in names:
-        raise ValueError("epub: OCF package without mimetype member")
-    mime = zf.read("mimetype").decode("ascii", "replace")
-    if mime != _EPUB_MIME:
-        raise ValueError(f"epub: mimetype is {mime!r}")
+    pkg = Package(payload, "epub")
+    pkg.check_mimetype(_EPUB_MIME)
+    names = pkg.names
     if "META-INF/container.xml" not in names:
         raise ValueError("epub: META-INF/container.xml missing")
-    container = ET.fromstring(zf.read("META-INF/container.xml"))
+    container = pkg.xml("META-INF/container.xml")
     rootfile = container.find(
         f"{{{_CONTAINER_NS}}}rootfiles/{{{_CONTAINER_NS}}}rootfile"
     )
@@ -78,7 +70,7 @@ def parse_epub(payload: bytes) -> dict:
     if opf_path not in names:
         raise ValueError(f"epub: OPF package {opf_path} missing")
     opf_dir = posixpath.dirname(opf_path)
-    opf = ET.fromstring(zf.read(opf_path))
+    opf = pkg.xml(opf_path)
     title = opf.findtext(f".//{{{_DC_NS}}}title") or ""
     language = opf.findtext(f".//{{{_DC_NS}}}language") or ""
     manifest = {
@@ -113,7 +105,7 @@ def parse_epub(payload: bytes) -> dict:
         part = posixpath.join(opf_dir, href) if opf_dir else href
         if part not in names:
             raise ValueError(f"epub: chapter {part} missing")
-        page = extract_page(zf.read(part).decode("utf-8"))
+        page = extract_page(pkg.read(part).decode("utf-8"))
         chapters.append("\n".join(page["blocks"]))
     return {
         "title": title,
@@ -192,29 +184,16 @@ def encode_epub(
         'media-type="application/oebps-package+xml"/></rootfiles>'
         "</container>"
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        stamp = (1980, 1, 1, 0, 0, 0)
-        zi = zipfile.ZipInfo("mimetype", date_time=stamp)
-        zi.compress_type = zipfile.ZIP_STORED
-        zf.writestr(zi, _EPUB_MIME)
-
-        def add(name: str, data: str) -> None:
-            zi = zipfile.ZipInfo(name, date_time=stamp)
-            zi.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(zi, data)
-
-        add("META-INF/container.xml", container)
-        if not poison:
-            add("book/pkg.opf", opf)
-        add("book/ch1.xhtml", _chapter_xhtml(1, c1))
-        add("book/ch2.xhtml", _chapter_xhtml(2, c2))
-        add(
-            "book/cover.xhtml",
-            '<html xmlns="http://www.w3.org/1999/xhtml"><body>'
-            "<p>COVER APPARATUS not prose</p></body></html>",
-        )
-    return buf.getvalue()
+    members = {"mimetype": _EPUB_MIME, "META-INF/container.xml": container}
+    if not poison:
+        members["book/pkg.opf"] = opf
+    members["book/ch1.xhtml"] = _chapter_xhtml(1, c1)
+    members["book/ch2.xhtml"] = _chapter_xhtml(2, c2)
+    members["book/cover.xhtml"] = (
+        '<html xmlns="http://www.w3.org/1999/xhtml"><body>'
+        "<p>COVER APPARATUS not prose</p></body></html>"
+    )
+    return zip_package(members)
 
 
 def encode_epub_foreign(d: int, lang: str, words: list[str]) -> bytes:
@@ -262,24 +241,14 @@ def encode_epub_foreign(d: int, lang: str, words: list[str]) -> bytes:
         'media-type="application/oebps-package+xml"/></rootfiles>'
         "</container>"
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        stamp = (1980, 1, 1, 0, 0, 0)
-        zi = zipfile.ZipInfo("mimetype", date_time=stamp)
-        zi.compress_type = zipfile.ZIP_STORED
-        zf.writestr(zi, _EPUB_MIME)
-
-        def add(name: str, data: str) -> None:
-            zi = zipfile.ZipInfo(name, date_time=stamp)
-            zi.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(zi, data)
-
-        add("META-INF/container.xml", container)
-        add("OEBPS/content.opf", opf)
-        add("OEBPS/toc.ncx", ncx)
-        add("OEBPS/chapter1.xhtml", _chapter_xhtml(1, c1))
-        add("OEBPS/chapter2.xhtml", _chapter_xhtml(2, c2))
-    return buf.getvalue()
+    return zip_package({
+        "mimetype": _EPUB_MIME,
+        "META-INF/container.xml": container,
+        "OEBPS/content.opf": opf,
+        "OEBPS/toc.ncx": ncx,
+        "OEBPS/chapter1.xhtml": _chapter_xhtml(1, c1),
+        "OEBPS/chapter2.xhtml": _chapter_xhtml(2, c2),
+    })
 
 
 def encode_epub3_nav(d: int, lang: str, words: list[str]) -> bytes:
@@ -327,24 +296,14 @@ def encode_epub3_nav(d: int, lang: str, words: list[str]) -> bytes:
         'media-type="application/oebps-package+xml"/></rootfiles>'
         "</container>"
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        stamp = (1980, 1, 1, 0, 0, 0)
-        zi = zipfile.ZipInfo("mimetype", date_time=stamp)
-        zi.compress_type = zipfile.ZIP_STORED
-        zf.writestr(zi, _EPUB_MIME)
-
-        def add(name: str, data: str) -> None:
-            zi = zipfile.ZipInfo(name, date_time=stamp)
-            zi.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(zi, data)
-
-        add("META-INF/container.xml", container)
-        add("EPUB/package.opf", opf)
-        add("EPUB/nav.xhtml", nav)
-        add("EPUB/ch1.xhtml", _chapter_xhtml(1, c1))
-        add("EPUB/ch2.xhtml", _chapter_xhtml(2, c2))
-    return buf.getvalue()
+    return zip_package({
+        "mimetype": _EPUB_MIME,
+        "META-INF/container.xml": container,
+        "EPUB/package.opf": opf,
+        "EPUB/nav.xhtml": nav,
+        "EPUB/ch1.xhtml": _chapter_xhtml(1, c1),
+        "EPUB/ch2.xhtml": _chapter_xhtml(2, c2),
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -394,19 +353,14 @@ def synthesize_epub_media(documents: DataFrame) -> DataFrame:
     )
 
 
+def _text_stats(payload: bytes) -> tuple:
+    m = parse_epub(payload)
+    return (
+        m["title"], m["language"], m["n_chapters"],
+        hashlib.md5(m["text"].encode("utf-8")).hexdigest(), None,
+    )
+
+
 def epub_text_stats(media: DataFrame) -> DataFrame:
     """Parse each payload for real; fail-closed per row."""
-    import hashlib
-
-    def one(doc_id, payload):
-        d = int(doc_id)
-        try:
-            m = parse_epub(bytes(payload))
-        except (ValueError, ET.ParseError) as exc:
-            return [(d, False, None, None, None, None, str(exc))]
-        return [(
-            d, True, m["title"], m["language"], m["n_chapters"],
-            hashlib.md5(m["text"].encode("utf-8")).hexdigest(), None,
-        )]
-
-    return map_rows(media.select("doc_id", "payload"), one, EPUB_TEXT_SCHEMA)
+    return parse_payloads(media, _text_stats, EPUB_TEXT_SCHEMA)

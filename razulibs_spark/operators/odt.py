@@ -32,12 +32,12 @@ map-only — the media-family shape.
 
 from __future__ import annotations
 
-import io
-import zipfile
+import hashlib
 
 from pyspark.sql import DataFrame
 from razulibs_spark.session import map_rows
-from razulibs_spark.tables import PAYLOAD_SCHEMA, widen_python_stage
+from razulibs_spark.sources.archives import Package, zip_package
+from razulibs_spark.tables import PAYLOAD_SCHEMA, parse_payloads, widen_python_stage
 from pyspark.sql.types import (
     BooleanType,
     LongType,
@@ -90,19 +90,11 @@ def _para_text(el: ET.Element) -> str:
 
 def parse_odt(payload: bytes) -> dict:
     """One .odt → {'n_paragraphs', 'text' (paragraphs joined by \\n)}."""
-    try:
-        zf = zipfile.ZipFile(io.BytesIO(bytes(payload)))
-    except zipfile.BadZipFile as exc:
-        raise ValueError(f"odt: not an OCF package: {exc}") from exc
-    names = zf.namelist()
-    if "mimetype" not in names:
-        raise ValueError("odt: OCF package without mimetype member")
-    mime = zf.read("mimetype").decode("ascii", "replace")
-    if mime != _ODT_MIME:
-        raise ValueError(f"odt: mimetype is {mime!r}, not a text document")
-    if "content.xml" not in names:
+    pkg = Package(payload, "odt")
+    pkg.check_mimetype(_ODT_MIME)
+    if "content.xml" not in pkg.names:
         raise ValueError("odt: content.xml missing in the package")
-    root = ET.fromstring(zf.read("content.xml"))
+    root = pkg.xml("content.xml")
     body = root.find(_o("body"))
     text_el = body.find(_o("text")) if body is not None else None
     if text_el is None:
@@ -176,23 +168,10 @@ def encode_odt(d: int, words: list[str], poison: bool = False) -> bytes:
             body = escape(" ".join(c))
         paras.append(f"<text:p>{body}</text:p>")
     content = _CONTENT_HEAD + "".join(paras) + _CONTENT_TAIL
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        stamp = (1980, 1, 1, 0, 0, 0)
-        # OCF: mimetype FIRST and STORED (uncompressed), per spec
-        zi = zipfile.ZipInfo("mimetype", date_time=stamp)
-        zi.compress_type = zipfile.ZIP_STORED
-        zf.writestr(zi, _ODT_MIME)
-
-        def add(name: str, data: str) -> None:
-            zi = zipfile.ZipInfo(name, date_time=stamp)
-            zi.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(zi, data)
-
-        add("META-INF/manifest.xml", _MANIFEST)
-        if not poison:
-            add("content.xml", content)
-    return buf.getvalue()
+    members = {"mimetype": _ODT_MIME, "META-INF/manifest.xml": _MANIFEST}
+    if not poison:
+        members["content.xml"] = content
+    return zip_package(members)
 
 
 def encode_odt_foreign(d: int, words: list[str]) -> bytes:
@@ -269,23 +248,13 @@ def encode_odt_foreign(d: int, words: list[str]) -> bytes:
         f'<office:document-meta xmlns:office="{_OFFICE_NS}" '
         'office:version="1.2"><office:meta/></office:document-meta>'
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        stamp = (1980, 1, 1, 0, 0, 0)
-        zi = zipfile.ZipInfo("mimetype", date_time=stamp)
-        zi.compress_type = zipfile.ZIP_STORED
-        zf.writestr(zi, _ODT_MIME)
-
-        def add(name: str, data: str) -> None:
-            zi = zipfile.ZipInfo(name, date_time=stamp)
-            zi.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(zi, data)
-
-        add("META-INF/manifest.xml", manifest)
-        add("content.xml", content)
-        add("styles.xml", styles)
-        add("meta.xml", meta)
-    return buf.getvalue()
+    return zip_package({
+        "mimetype": _ODT_MIME,
+        "META-INF/manifest.xml": manifest,
+        "content.xml": content,
+        "styles.xml": styles,
+        "meta.xml": meta,
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -325,19 +294,11 @@ def synthesize_odt_media(documents: DataFrame) -> DataFrame:
     )
 
 
+def _text_stats(payload: bytes) -> tuple:
+    m = parse_odt(payload)
+    return m["n_paragraphs"], hashlib.md5(m["text"].encode("utf-8")).hexdigest(), None
+
+
 def odt_text_stats(media: DataFrame) -> DataFrame:
     """Parse each payload for real; fail-closed per row."""
-    import hashlib
-
-    def one(doc_id, payload):
-        d = int(doc_id)
-        try:
-            m = parse_odt(bytes(payload))
-        except (ValueError, ET.ParseError) as exc:
-            return [(d, False, None, None, str(exc))]
-        return [(
-            d, True, m["n_paragraphs"],
-            hashlib.md5(m["text"].encode("utf-8")).hexdigest(), None,
-        )]
-
-    return map_rows(media.select("doc_id", "payload"), one, ODT_TEXT_SCHEMA)
+    return parse_payloads(media, _text_stats, ODT_TEXT_SCHEMA)

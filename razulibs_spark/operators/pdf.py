@@ -422,6 +422,21 @@ def _parse_string_literal(data: bytes, pos: int) -> tuple[bytes, int]:
     raise ValueError("pdf: unterminated string literal")
 
 
+def _hex_bytes(digits: bytes) -> bytes:
+    """The bytes of a ``<…>`` hex string: white space dropped, an odd
+    final digit read as followed by 0 (§7.3.4.3)."""
+    digits = re.sub(rb"\s", b"", digits)
+    try:
+        return bytes.fromhex((digits + b"0" * (len(digits) % 2)).decode("ascii"))
+    except ValueError:
+        raise ValueError(f"pdf: bad hex string {digits[:16]!r}") from None
+
+
+def _hex_int(digits: bytes) -> int:
+    """A ``<…>`` hex string read as a big-endian number (a CMap code)."""
+    return int.from_bytes(_hex_bytes(digits), "big")
+
+
 def _dict_string(body: bytes, name: bytes) -> bytes:
     """/Name value as raw bytes, accepting both forms producers emit:
     hex (<…>) and literal ((…) with escapes). Used for the /O and /U
@@ -431,10 +446,7 @@ def _dict_string(body: bytes, name: bytes) -> bytes:
         raise ValueError(f"pdf: encrypt dict without /{name.decode()}")
     tok = m.group(1)
     if tok.startswith(b"<"):
-        hexs = re.sub(rb"\s", b"", tok[1:-1])
-        if len(hexs) % 2:
-            hexs += b"0"
-        return bytes.fromhex(hexs.decode())
+        return _hex_bytes(tok[1:-1])
     val, _ = _parse_string_literal(body, m.start(1))
     return val
 
@@ -452,7 +464,7 @@ def _parse_tounicode(data: bytes) -> dict[int, str]:
     cmap: dict[int, str] = {}
 
     def _u(hx: bytes) -> str:
-        return bytes.fromhex(hx.decode()).decode("utf-16-be")
+        return _hex_bytes(hx).decode("utf-16-be", "replace")
 
     for m in re.finditer(
         rb"beginbfchar(.*?)endbfchar", data, re.S
@@ -461,7 +473,7 @@ def _parse_tounicode(data: bytes) -> dict[int, str]:
         if len(hexes) % 2:
             raise ValueError("pdf: odd bfchar pair count in ToUnicode")
         for src, dst in zip(hexes[0::2], hexes[1::2]):
-            cmap[int(src, 16)] = _u(re.sub(rb"\s", b"", dst))
+            cmap[_hex_int(src)] = _u(dst)
     for m in re.finditer(
         rb"beginbfrange(.*?)endbfrange", data, re.S
     ):
@@ -471,11 +483,11 @@ def _parse_tounicode(data: bytes) -> dict[int, str]:
             h = _HEX_PAIR_RE.search(body, pos)
             if h is None:
                 break
-            lo = int(h.group(1), 16)
+            lo = _hex_int(h.group(1))
             h2 = _HEX_PAIR_RE.search(body, h.end())
             if h2 is None:
                 raise ValueError("pdf: truncated bfrange in ToUnicode")
-            hi = int(h2.group(1), 16)
+            hi = _hex_int(h2.group(1))
             pos = h2.end()
             arr = re.match(rb"\s*\[", body[pos:])
             if arr:
@@ -486,13 +498,13 @@ def _parse_tounicode(data: bytes) -> dict[int, str]:
                 if len(dsts) != hi - lo + 1:
                     raise ValueError("pdf: bfrange array length mismatch")
                 for k, dh in enumerate(dsts):
-                    cmap[lo + k] = _u(re.sub(rb"\s", b"", dh))
+                    cmap[lo + k] = _u(dh)
                 pos = close + 1
             else:
                 h3 = _HEX_PAIR_RE.search(body, pos)
                 if h3 is None:
                     raise ValueError("pdf: truncated bfrange in ToUnicode")
-                start = int(h3.group(1), 16)
+                start = _hex_int(h3.group(1))
                 pos = h3.end()
                 for k in range(hi - lo + 1):
                     cmap[lo + k] = chr(start + k)
@@ -576,10 +588,7 @@ def _content_text(
             end = stream.find(b">", i)
             if end < 0:
                 raise ValueError("pdf: unterminated hex string")
-            hx = re.sub(rb"\s", b"", stream[i + 1:end])
-            if len(hx) % 2:
-                hx += b"0"  # odd digit count: trailing 0 per spec
-            pending.append(bytes.fromhex(hx.decode()))
+            pending.append(_hex_bytes(stream[i + 1:end]))
             i = end + 1
         elif c == 0x2F:  # /Name operand
             j = i + 1
@@ -755,7 +764,7 @@ def parse_pdf_text(payload: bytes) -> dict:
                 )
             perms_m = re.search(rb"/Perms\s*<([0-9A-Fa-f]+)>", ebody)
             if perms_m is not None and not v5_check_perms(
-                bytes.fromhex(perms_m.group(1).decode()),
+                _hex_bytes(perms_m.group(1)),
                 cand, p_int, meta,
             ):
                 raise ValueError(
@@ -765,7 +774,7 @@ def parse_pdf_text(payload: bytes) -> dict:
             file_enc_key = cand
         else:
             id_m = re.search(rb"/ID\s*\[\s*<([0-9A-Fa-f]*)>", buf)
-            id0 = bytes.fromhex(id_m.group(1).decode()) if id_m else b""
+            id0 = _hex_bytes(id_m.group(1)) if id_m else b""
             cand = file_key(
                 o_val, p_int, id0, r, length_bits, b"",
                 encrypt_metadata=meta,
@@ -990,7 +999,7 @@ def parse_pdf_text(payload: bytes) -> dict:
 
 from pyspark.sql import DataFrame  # noqa: E402
 from razulibs_spark.session import map_rows
-from razulibs_spark.tables import TYPED_PAYLOAD_SCHEMA, widen_python_stage
+from razulibs_spark.tables import TYPED_PAYLOAD_SCHEMA, parse_payloads, widen_python_stage
 from pyspark.sql.types import (  # noqa: E402
     BooleanType,
     LongType,
@@ -1108,23 +1117,18 @@ def synthesize_pdf_media(documents: DataFrame) -> DataFrame:
     )
 
 
+def _text_stats(payload: bytes) -> tuple:
+    m = parse_pdf_text(payload)
+    note = (
+        f"pdf: {m['unmapped_codes']} unmapped CID codes flagged"
+        if m["unmapped_codes"] else None
+    )
+    return (
+        m["n_pages"], m["compressed_pages"],
+        hashlib.md5(m["text"].encode("utf-8")).hexdigest(), note,
+    )
+
+
 def pdf_text_stats(media: DataFrame) -> DataFrame:
     """Parse each payload for real; fail-closed per row."""
-    import hashlib
-
-    def one(doc_id, payload):
-        d = int(doc_id)
-        try:
-            m = parse_pdf_text(bytes(payload))
-        except ValueError as exc:
-            return [(d, False, None, None, None, str(exc))]
-        note = (
-            f"pdf: {m['unmapped_codes']} unmapped CID codes flagged"
-            if m["unmapped_codes"] else None
-        )
-        return [(
-            d, True, m["n_pages"], m["compressed_pages"],
-            hashlib.md5(m["text"].encode("utf-8")).hexdigest(), note,
-        )]
-
-    return map_rows(media.select("doc_id", "payload"), one, PDF_TEXT_SCHEMA)
+    return parse_payloads(media, _text_stats, PDF_TEXT_SCHEMA)

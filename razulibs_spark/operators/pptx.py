@@ -32,8 +32,9 @@ The default stays slide-text-only so the driver oracle is unchanged.
 
 Structural corruption (missing presentation part, a sldIdLst rId
 that resolves nowhere, a listed slide part missing from the zip)
-raises ValueError naming the defect; the Spark stage is fail-closed
-per row (ET.ParseError included — the r10 ADVICE lesson).
+raises ValueError naming the defect, as does a corrupt package or
+malformed XML (``sources/archives.Package``); the Spark stage is
+fail-closed per row.
 
 Scale: one Arrow ``mapInPandas`` pass over (doc_id, payload) rows,
 stateless, linear — the media-family shape. Reference analog: none
@@ -42,13 +43,13 @@ stateless, linear — the media-family shape. Reference analog: none
 
 from __future__ import annotations
 
-import io
+import hashlib
 import posixpath
-import zipfile
 
 from pyspark.sql import DataFrame
 from razulibs_spark.session import map_rows
-from razulibs_spark.tables import PAYLOAD_SCHEMA, widen_python_stage
+from razulibs_spark.sources.archives import _REL_NS, Package, zip_package
+from razulibs_spark.tables import PAYLOAD_SCHEMA, parse_payloads, widen_python_stage
 from pyspark.sql.types import (
     BooleanType,
     LongType,
@@ -62,7 +63,6 @@ from xml.sax.saxutils import escape
 _P_NS = "http://schemas.openxmlformats.org/presentationml/2006/main"
 _A_NS = "http://schemas.openxmlformats.org/drawingml/2006/main"
 _DGM_NS = "http://schemas.openxmlformats.org/drawingml/2006/diagram"
-_REL_NS = "http://schemas.openxmlformats.org/package/2006/relationships"
 _DOC_REL_NS = (
     "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
 )
@@ -74,15 +74,6 @@ def _p(tag: str) -> str:
 
 def _a(tag: str) -> str:
     return f"{{{_A_NS}}}{tag}"
-
-
-def _resolve(base_dir: str, target: str) -> str:
-    """OPC target resolution (ECMA-376 pt.2 §9.2): leading '/' is
-    package-absolute; otherwise relative to the source part's
-    directory, ../ segments normalized."""
-    if target.startswith("/"):
-        return target.lstrip("/")
-    return posixpath.normpath(posixpath.join(base_dir, target))
 
 
 def _paragraph_text(p_el: ET.Element) -> str:
@@ -109,54 +100,31 @@ def parse_pptx(payload: bytes, include_notes: bool = False) -> dict:
     after the slide text — for a training pipeline the speaker notes
     often carry more prose than the slide. The DEFAULT stays
     slide-text-only so the driver oracle is unchanged."""
-    try:
-        zf = zipfile.ZipFile(io.BytesIO(bytes(payload)))
-    except zipfile.BadZipFile as exc:
-        raise ValueError(f"pptx: not an OPC package: {exc}") from exc
-    names = set(zf.namelist())
+    pkg = Package(payload, "pptx")
+    names = pkg.names
     if "ppt/presentation.xml" not in names:
         raise ValueError("pptx: no presentation part")
-    pres = ET.fromstring(zf.read("ppt/presentation.xml"))
+    pres = pkg.xml("ppt/presentation.xml")
     sld_lst = pres.find(_p("sldIdLst"))
     if sld_lst is None or len(sld_lst) == 0:
         raise ValueError("pptx: presentation lists no slides")
-    rels_name = "ppt/_rels/presentation.xml.rels"
-    if rels_name not in names:
+    rels = pkg.rels("ppt/presentation.xml")
+    if rels is None:
         raise ValueError("pptx: presentation has no relationships part")
-    rels = {
-        rel.get("Id"): rel.get("Target")
-        for rel in ET.fromstring(zf.read(rels_name)).findall(
-            f"{{{_REL_NS}}}Relationship"
-        )
-    }
     slide_texts: list[str] = []
     n_shapes = 0
     for sld in sld_lst.findall(_p("sldId")):
         rid = sld.get(f"{{{_DOC_REL_NS}}}id")
-        target = rels.get(rid)
-        if target is None:
+        if rid not in rels:
             raise ValueError(f"pptx: slide relationship {rid} not found")
-        part = _resolve("ppt", target)
+        part = rels[rid][1]
         if part not in names:
             raise ValueError(f"pptx: slide part {part} missing in package")
-        slide = ET.fromstring(zf.read(part))
+        slide = pkg.xml(part)
         tree = slide.find(f"{_p('cSld')}/{_p('spTree')}")
         if tree is None:
             raise ValueError(f"pptx: slide {part} has no shape tree")
-        part_dir = posixpath.dirname(part)
-        slide_rels: dict[str, tuple[str, str]] = {}
-        if include_notes:
-            srels_name = posixpath.join(
-                part_dir, "_rels", posixpath.basename(part) + ".rels"
-            )
-            if srels_name in names:
-                slide_rels = {
-                    rel.get("Id"): (rel.get("Type") or "",
-                                    rel.get("Target") or "")
-                    for rel in ET.fromstring(
-                        zf.read(srels_name)
-                    ).findall(f"{{{_REL_NS}}}Relationship")
-                }
+        slide_rels = (pkg.rels(part) or {}) if include_notes else {}
         paras: list[str] = []
 
         def walk(container: ET.Element) -> None:
@@ -192,16 +160,15 @@ def parse_pptx(payload: bytes, include_notes: bool = False) -> dict:
                             f"{{{_DGM_NS}}}relIds"
                         ):
                             rid = rel_el.get(f"{{{_DOC_REL_NS}}}dm")
-                            typ, tgt = slide_rels.get(rid, ("", ""))
-                            if not tgt:
+                            if rid not in slide_rels:
                                 continue
-                            dpart = _resolve(part_dir, tgt)
+                            dpart = slide_rels[rid][1]
                             if dpart not in names:
                                 raise ValueError(
                                     f"pptx: diagram data part {dpart} "
                                     "missing in package"
                                 )
-                            data = ET.fromstring(zf.read(dpart))
+                            data = pkg.xml(dpart)
                             for t_el in data.iter(f"{{{_DGM_NS}}}t"):
                                 for p_el in t_el.findall(_a("p")):
                                     txt = _paragraph_text(p_el)
@@ -210,15 +177,14 @@ def parse_pptx(payload: bytes, include_notes: bool = False) -> dict:
 
         walk(tree)
         if include_notes:
-            for _rid, (typ, tgt) in slide_rels.items():
+            for typ, npart in slide_rels.values():
                 if not typ.endswith("/notesSlide"):
                     continue
-                npart = _resolve(part_dir, tgt)
                 if npart not in names:
                     raise ValueError(
                         f"pptx: notes part {npart} missing in package"
                     )
-                ntree = ET.fromstring(zf.read(npart)).find(
+                ntree = pkg.xml(npart).find(
                     f"{_p('cSld')}/{_p('spTree')}"
                 )
                 if ntree is None:
@@ -416,35 +382,23 @@ def encode_pptx(d: int, words: list[str], poison: bool = False) -> bytes:
             f'<Relationships xmlns="{_REL_NS}">{rows}</Relationships>'
         )
 
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        stamp = (1980, 1, 1, 0, 0, 0)
-
-        def add(name: str, data: str) -> None:
-            zi = zipfile.ZipInfo(name, date_time=stamp)
-            zi.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(zi, data)
-
-        add("[Content_Types].xml", content_types)
-        add("_rels/.rels", root_rels)
-        add("ppt/presentation.xml", pres)
-        add("ppt/_rels/presentation.xml.rels", pres_rels)
-        add("ppt/diagrams/data1.xml", dgm_data)
-        for k, part in enumerate(slide_parts):
-            if poison and k == 0:
-                continue  # rels name it; the package lacks it
-            add(f"ppt/{part}", slide_xmls[k])
-            add(
-                f"ppt/{posixpath.dirname(part)}/_rels/"
-                f"{posixpath.basename(part)}.rels",
-                _slide_rels(k, part),
-            )
-            add(f"ppt/notesSlides/notes{k}.xml", _notes_xml(k))
-        add(
-            "ppt/slides/orphan.xml",
-            _slide_xml([_shape([_run("ORPHAN APPARATUS not prose")])]),
-        )
-    return buf.getvalue()
+    members = {
+        "[Content_Types].xml": content_types,
+        "_rels/.rels": root_rels,
+        "ppt/presentation.xml": pres,
+        "ppt/_rels/presentation.xml.rels": pres_rels,
+        "ppt/diagrams/data1.xml": dgm_data,
+    }
+    for k, part in enumerate(slide_parts):
+        if poison and k == 0:
+            continue  # rels name it; the package lacks it
+        members[f"ppt/{part}"] = slide_xmls[k]
+        rels = f"ppt/{posixpath.dirname(part)}/_rels/{posixpath.basename(part)}.rels"
+        members[rels] = _slide_rels(k, part)
+        members[f"ppt/notesSlides/notes{k}.xml"] = _notes_xml(k)
+    members["ppt/slides/orphan.xml"] = _slide_xml(
+        [_shape([_run("ORPHAN APPARATUS not prose")])])
+    return zip_package(members)
 
 
 def encode_pptx_foreign(d: int, words: list[str]) -> bytes:
@@ -521,32 +475,24 @@ def encode_pptx_foreign(d: int, words: list[str]) -> bytes:
         + _shape([_run("SPEAKER NOTES apparatus")])
         + "</p:spTree></p:cSld></p:notes>"
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        stamp = (1980, 1, 1, 0, 0, 0)
-
-        def add(name: str, data: str) -> None:
-            zi = zipfile.ZipInfo(name, date_time=stamp)
-            zi.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(zi, data)
-
-        add("[Content_Types].xml", content_types)
-        add("_rels/.rels", root_rels)
-        add("ppt/presentation.xml", pres)
-        add("ppt/_rels/presentation.xml.rels", pres_rels)
-        for k in range(n_slides):
-            add(f"ppt/slides/slide{k + 1}.xml", slide_xmls[k])
-            add(f"ppt/notesSlides/notesSlide{k + 1}.xml", notes)
-            add(
-                f"ppt/slides/_rels/slide{k + 1}.xml.rels",
-                '<?xml version="1.0" encoding="UTF-8" standalone='
-                f'"yes"?><Relationships xmlns="{_REL_NS}">'
-                '<Relationship Id="rId2" Type="http://schemas.'
-                "openxmlformats.org/officeDocument/2006/relationships/"
-                'notesSlide" Target="/ppt/notesSlides/notesSlide'
-                f'{k + 1}.xml"/></Relationships>',
-            )
-    return buf.getvalue()
+    members = {
+        "[Content_Types].xml": content_types,
+        "_rels/.rels": root_rels,
+        "ppt/presentation.xml": pres,
+        "ppt/_rels/presentation.xml.rels": pres_rels,
+    }
+    for k in range(n_slides):
+        members[f"ppt/slides/slide{k + 1}.xml"] = slide_xmls[k]
+        members[f"ppt/notesSlides/notesSlide{k + 1}.xml"] = notes
+        members[f"ppt/slides/_rels/slide{k + 1}.xml.rels"] = (
+            '<?xml version="1.0" encoding="UTF-8" standalone='
+            f'"yes"?><Relationships xmlns="{_REL_NS}">'
+            '<Relationship Id="rId2" Type="http://schemas.'
+            "openxmlformats.org/officeDocument/2006/relationships/"
+            'notesSlide" Target="/ppt/notesSlides/notesSlide'
+            f'{k + 1}.xml"/></Relationships>'
+        )
+    return zip_package(members)
 
 
 # ---------------------------------------------------------------------------
@@ -586,6 +532,14 @@ def synthesize_pptx_media(documents: DataFrame) -> DataFrame:
     )
 
 
+def _text_stats(payload: bytes, include_notes: bool) -> tuple:
+    m = parse_pptx(payload, include_notes=include_notes)
+    return (
+        m["n_slides"], m["n_shapes"],
+        hashlib.md5(m["text"].encode("utf-8")).hexdigest(), None,
+    )
+
+
 def pptx_text_stats(
     media: DataFrame, include_notes: bool = False
 ) -> DataFrame:
@@ -594,17 +548,7 @@ def pptx_text_stats(
     run, an orphan slide or a shuffled slide order all flip it.
     ``include_notes`` runs the opt-in speaker-notes + SmartArt walk
     (r12) — a separate registry entry gates that surface."""
-    import hashlib
-
-    def one(doc_id, payload):
-        d = int(doc_id)
-        try:
-            m = parse_pptx(bytes(payload), include_notes=include_notes)
-        except (ValueError, ET.ParseError) as exc:
-            return [(d, False, None, None, None, str(exc))]
-        return [(
-            d, True, m["n_slides"], m["n_shapes"],
-            hashlib.md5(m["text"].encode("utf-8")).hexdigest(), None,
-        )]
-
-    return map_rows(media.select("doc_id", "payload"), one, PPTX_TEXT_SCHEMA)
+    return parse_payloads(
+        media, lambda payload: _text_stats(payload, include_notes),
+        PPTX_TEXT_SCHEMA,
+    )

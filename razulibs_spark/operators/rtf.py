@@ -37,11 +37,12 @@ map-only — the media-family shape.
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 from pyspark.sql import DataFrame
 from razulibs_spark.session import map_rows
-from razulibs_spark.tables import PAYLOAD_SCHEMA, widen_python_stage
+from razulibs_spark.tables import PAYLOAD_SCHEMA, parse_payloads, widen_python_stage
 from pyspark.sql.types import (
     BooleanType,
     LongType,
@@ -89,6 +90,14 @@ _DOUBLE_BYTE_CODECS = {
 }
 
 
+def _hex_byte(buf: bytes, i: int) -> int:
+    """The byte of the \\'hh escape whose two hex digits start at i."""
+    try:
+        return int(buf[i:i + 2], 16)
+    except ValueError:
+        raise ValueError(f"rtf: bad \\'hh escape {buf[i - 2:i + 2]!r}") from None
+
+
 def rtf_to_text(payload: bytes) -> str:
     """One RTF document → its plain text."""
     buf = bytes(payload)
@@ -126,14 +135,14 @@ def rtf_to_text(payload: bytes) -> str:
         if c == 0x5C:  # backslash
             sym = buf[i + 1:i + 2]
             if sym == b"'":
-                b0 = int(buf[i + 2:i + 4], 16)
+                b0 = _hex_byte(buf, i + 2)
                 i += 4
                 raw = bytes([b0])
                 if any(lo <= b0 <= hi for lo, hi in dbcs_lead):
                     # DBCS lead: the trail byte follows as a second
                     # \'hh or as a raw character — both legal forms
                     if buf[i:i + 2] == b"\\'":
-                        raw += bytes([int(buf[i + 2:i + 4], 16)])
+                        raw += bytes([_hex_byte(buf, i + 2)])
                         i += 4
                     elif buf[i:i + 1] == b"\\" and buf[i + 1:i + 2] in (
                         b"\\", b"{", b"}",
@@ -400,19 +409,11 @@ def synthesize_rtf_media(documents: DataFrame) -> DataFrame:
     )
 
 
+def _text_stats(payload: bytes) -> tuple:
+    text = rtf_to_text(payload)
+    return len(text.split("\n")), hashlib.md5(text.encode("utf-8")).hexdigest(), None
+
+
 def rtf_text_stats(media: DataFrame) -> DataFrame:
     """Parse each payload for real; fail-closed per row."""
-    import hashlib
-
-    def one(doc_id, payload):
-        d = int(doc_id)
-        try:
-            text = rtf_to_text(bytes(payload))
-        except ValueError as exc:
-            return [(d, False, None, None, str(exc))]
-        return [(
-            d, True, len(text.split("\n")),
-            hashlib.md5(text.encode("utf-8")).hexdigest(), None,
-        )]
-
-    return map_rows(media.select("doc_id", "payload"), one, RTF_TEXT_SCHEMA)
+    return parse_payloads(media, _text_stats, RTF_TEXT_SCHEMA)

@@ -447,8 +447,15 @@ def encode_tiff(
 def decode_tiff(payload: bytes) -> dict:
     """One TIFF → {'width','height','n_channels','compression',
     'byte_order','pixels': bytes (interleaved row-major)}. Strict:
-    structural corruption and out-of-subset features raise."""
-    buf = bytes(payload)
+    structural corruption and out-of-subset features raise
+    ValueError."""
+    try:
+        return _decode_tiff(bytes(payload))
+    except struct.error as exc:  # a header or IFD entry cut short
+        raise ValueError(f"tiff: truncated structure ({exc})") from exc
+
+
+def _decode_tiff(buf: bytes) -> dict:
     if buf[:2] == b"II":
         e = "<"
     elif buf[:2] == b"MM":
@@ -494,6 +501,8 @@ def decode_tiff(payload: bytes) -> dict:
         return default
 
     width, height = one(256), one(257)
+    if width == 0 or height == 0:
+        raise ValueError(f"tiff: empty image {width}x{height}")
     spp = one(277, 1)
     bits_list = tags.get(258, [8] * spp)
     bits_per = bits_list[0]
@@ -688,7 +697,7 @@ def decode_tiff(payload: bytes) -> dict:
 
 from pyspark.sql import DataFrame  # noqa: E402
 from razulibs_spark.session import map_rows
-from razulibs_spark.tables import TYPED_PAYLOAD_SCHEMA, widen_python_stage
+from razulibs_spark.tables import TYPED_PAYLOAD_SCHEMA, parse_payloads, widen_python_stage
 from pyspark.sql.types import (  # noqa: E402
     BooleanType,
     DoubleType,
@@ -776,32 +785,27 @@ def synthesize_tiff_media(documents: DataFrame) -> DataFrame:
     )
 
 
+def _stats(payload: bytes) -> tuple:
+    m = decode_tiff(payload)
+    px = m["pixels"]
+    n = m["width"] * m["height"]
+    spp = m["n_channels"]
+    means = [sum(px[c::spp]) / n for c in range(spp)] + [None] * (3 - spp)
+    comp = (
+        m["compression"]
+        + ("+pred" if m["predictor"] == 2 else "")
+        + ("+tiled" if m["layout"] == "tiled" else "")
+        + ("+16" if m["bits"] == 16 else "")
+        + ("+planar" if m["planar"] == 2 else "")
+    )
+    return (
+        m["byte_order"], comp, spp, m["width"], m["height"],
+        means[0], means[1], means[2], None,
+    )
+
+
 def tiff_stats(media: DataFrame) -> DataFrame:
     """Decode each payload for real and emit per-channel means —
     fail-closed per row (poison → decoded=false + the error note,
     never a task failure)."""
-
-    def one(doc_id, payload):
-        d = int(doc_id)
-        try:
-            m = decode_tiff(bytes(payload))
-        except ValueError as exc:
-            return [(d, False, None, None, None, None, None,
-                     None, None, None, str(exc))]
-        px = m["pixels"]
-        n = m["width"] * m["height"]
-        spp = m["n_channels"]
-        means = [sum(px[c::spp]) / n for c in range(spp)] + [None] * (3 - spp)
-        comp = (
-            m["compression"]
-            + ("+pred" if m["predictor"] == 2 else "")
-            + ("+tiled" if m["layout"] == "tiled" else "")
-            + ("+16" if m["bits"] == 16 else "")
-            + ("+planar" if m["planar"] == 2 else "")
-        )
-        return [(
-            d, True, m["byte_order"], comp, spp, m["width"], m["height"],
-            means[0], means[1], means[2], None,
-        )]
-
-    return map_rows(media.select("doc_id", "payload"), one, TIFF_STATS_SCHEMA)
+    return parse_payloads(media, _stats, TIFF_STATS_SCHEMA)

@@ -34,13 +34,12 @@ stateless, linear — the media-family shape.
 
 from __future__ import annotations
 
-import io
-import posixpath
-import zipfile
+import hashlib
 
 from pyspark.sql import DataFrame
 from razulibs_spark.session import map_rows
-from razulibs_spark.tables import PAYLOAD_SCHEMA, widen_python_stage
+from razulibs_spark.sources.archives import _REL_NS, Package, zip_package
+from razulibs_spark.tables import PAYLOAD_SCHEMA, parse_payloads, widen_python_stage
 from pyspark.sql.types import (
     BooleanType,
     LongType,
@@ -52,7 +51,6 @@ from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
 
 _SS_NS = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-_REL_NS = "http://schemas.openxmlformats.org/package/2006/relationships"
 _DOC_REL_NS = (
     "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
 )
@@ -168,14 +166,11 @@ def parse_xlsx(payload: bytes) -> dict:
     answer for nearly every real spreadsheet. All other numbers stay
     lexical (exact, no float round-trip). Reference analog: pandas
     ingestion + date_type classification (razu/util.py:9-30)."""
-    try:
-        zf = zipfile.ZipFile(io.BytesIO(bytes(payload)))
-    except zipfile.BadZipFile as exc:
-        raise ValueError(f"xlsx: not an OPC package: {exc}") from exc
-    names = set(zf.namelist())
+    pkg = Package(payload, "xlsx")
+    names = pkg.names
     if "xl/workbook.xml" not in names:
         raise ValueError("xlsx: no workbook part")
-    wb = ET.fromstring(zf.read("xl/workbook.xml"))
+    wb = pkg.xml("xl/workbook.xml")
     wb_pr = wb.find(_s("workbookPr"))
     date1904 = wb_pr is not None and wb_pr.get("date1904") in (
         "1", "true",
@@ -190,48 +185,29 @@ def parse_xlsx(payload: bytes) -> dict:
         raise ValueError("xlsx: sheet without relationship id")
     # OPC walk: workbook rels resolve rId → part (never hardcode
     # worksheets/sheet1.xml — foreign producers number parts freely)
-    rels_name = "xl/_rels/workbook.xml.rels"
-    if rels_name not in names:
+    rels = pkg.rels("xl/workbook.xml")
+    if rels is None:
         raise ValueError("xlsx: workbook has no relationships part")
-    rels = ET.fromstring(zf.read(rels_name))
-    target = None
-    by_type: dict[str, str] = {}
-    for rel in rels.findall(f"{{{_REL_NS}}}Relationship"):
-        rtype = rel.get("Type", "")
-        by_type[rtype.rsplit("/", 1)[-1]] = rel.get("Target", "")
-        if rel.get("Id") == rid:
-            target = rel.get("Target")
-    if target is None:
+    if rid not in rels:
         raise ValueError(f"xlsx: relationship {rid} not found")
-    # OPC target resolution (ECMA-376 pt.2 §9.2): a leading '/' is a
-    # package-absolute part name; anything else resolves relative to
-    # the SOURCE part's directory (xl/ for workbook.xml.rels), with
-    # ../ segments normalized — foreign producers emit both forms.
-    if target.startswith("/"):
-        part = target.lstrip("/")
-    else:
-        part = posixpath.normpath(posixpath.join("xl", target))
+    part = rels[rid][1]
     if part not in names:
         raise ValueError(f"xlsx: sheet part {part} missing in package")
+    by_type = {rtype.rsplit("/", 1)[-1]: p for rtype, p in rels.values()}
 
     def _aux_part(rel_kind: str, default: str) -> str | None:
         """sharedStrings/styles part names resolve through the
         workbook rels when declared (foreign producers rename them),
         falling back to the canonical defaults."""
-        t = by_type.get(rel_kind)
-        if t:
-            p = (
-                t.lstrip("/") if t.startswith("/")
-                else posixpath.normpath(posixpath.join("xl", t))
-            )
-            if p in names:
-                return p
+        p = by_type.get(rel_kind)
+        if p in names:
+            return p
         return default if default in names else None
 
     shared: list[str] = []
     sst_part = _aux_part("sharedStrings", "xl/sharedStrings.xml")
     if sst_part:
-        sst = ET.fromstring(zf.read(sst_part))
+        sst = pkg.xml(sst_part)
         shared = [_si_text(si) for si in sst.findall(_s("si"))]
 
     # style layer: cellXfs index → numFmtId, plus custom formatCodes
@@ -239,7 +215,7 @@ def parse_xlsx(payload: bytes) -> dict:
     custom_fmts: dict[int, str] = {}
     styles_part = _aux_part("styles", "xl/styles.xml")
     if styles_part:
-        st = ET.fromstring(zf.read(styles_part))
+        st = pkg.xml(styles_part)
         nf = st.find(_s("numFmts"))
         if nf is not None:
             for f_el in nf.findall(_s("numFmt")):
@@ -253,7 +229,7 @@ def parse_xlsx(payload: bytes) -> dict:
                 for xf in cx.findall(_s("xf"))
             ]
 
-    sheet = ET.fromstring(zf.read(part))
+    sheet = pkg.xml(part)
     data = sheet.find(_s("sheetData"))
     cells: list[tuple[str, str]] = []
     n_rows = 0
@@ -432,24 +408,17 @@ def encode_xlsx(d: int, words: list[str], poison: bool = False) -> bytes:
         f'<worksheet xmlns="{_SS_NS}"><sheetData>'
         + "".join(rows) + "</sheetData></worksheet>"
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        stamp = (1980, 1, 1, 0, 0, 0)
-
-        def add(name: str, data: str) -> None:
-            zi = zipfile.ZipInfo(name, date_time=stamp)
-            zi.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(zi, data)
-
-        add("[Content_Types].xml", _CONTENT_TYPES)
-        add("_rels/.rels", _ROOT_RELS)
-        add("xl/workbook.xml", _WORKBOOK)
-        add("xl/_rels/workbook.xml.rels", _WB_RELS)
-        add("xl/sharedStrings.xml", sst)
-        add("xl/styles.xml", _STYLES)
-        if not poison:
-            add("xl/worksheets/sheetA.xml", sheet)
-    return buf.getvalue()
+    members = {
+        "[Content_Types].xml": _CONTENT_TYPES,
+        "_rels/.rels": _ROOT_RELS,
+        "xl/workbook.xml": _WORKBOOK,
+        "xl/_rels/workbook.xml.rels": _WB_RELS,
+        "xl/sharedStrings.xml": sst,
+        "xl/styles.xml": _STYLES,
+    }
+    if not poison:
+        members["xl/worksheets/sheetA.xml"] = sheet
+    return zip_package(members)
 
 
 # Foreign-producer axis: a minimal second writer shaped like the
@@ -513,22 +482,14 @@ def encode_xlsx_foreign(d: int) -> bytes:
         f'<row r="2"><c r="A2"><v>{d}</v></c></row>'
         "</sheetData></worksheet>"
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        stamp = (1980, 1, 1, 0, 0, 0)
-
-        def add(name: str, data: str) -> None:
-            zi = zipfile.ZipInfo(name, date_time=stamp)
-            zi.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(zi, data)
-
-        add("[Content_Types].xml", _FOREIGN_CT)
-        add("_rels/.rels", _ROOT_RELS)
-        add("xl/workbook.xml", _FOREIGN_WB)
-        add("xl/_rels/workbook.xml.rels", _FOREIGN_WB_RELS)
-        add("xl/styles.xml", _FOREIGN_STYLES)
-        add("xl/worksheets/sheet1.xml", sheet)
-    return buf.getvalue()
+    return zip_package({
+        "[Content_Types].xml": _FOREIGN_CT,
+        "_rels/.rels": _ROOT_RELS,
+        "xl/workbook.xml": _FOREIGN_WB,
+        "xl/_rels/workbook.xml.rels": _FOREIGN_WB_RELS,
+        "xl/styles.xml": _FOREIGN_STYLES,
+        "xl/worksheets/sheet1.xml": sheet,
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -568,24 +529,17 @@ def synthesize_xlsx_media(documents: DataFrame) -> DataFrame:
     )
 
 
+def _stats(payload: bytes) -> tuple:
+    m = parse_xlsx(payload)
+    digest = hashlib.md5(
+        "\x01".join(f"{ref}={val}" for ref, val in m["cells"]).encode("utf-8")
+    ).hexdigest()
+    return m["sheet_name"], m["n_rows"], m["n_cells"], digest, None
+
+
 def xlsx_stats(media: DataFrame) -> DataFrame:
     """Parse each payload for real; fail-closed per row. The digest is
     order-exact over ``ref=value`` pairs in document order — a wrong
     shared-string resolution, a dropped rich run, a bool emitted as
     0/1 or a formula string leaking its formula all flip it."""
-    import hashlib
-
-    def one(doc_id, payload):
-        d = int(doc_id)
-        try:
-            m = parse_xlsx(bytes(payload))
-        except (ValueError, ET.ParseError) as exc:
-            return [(d, False, None, None, None, None, str(exc))]
-        digest = hashlib.md5(
-            "\x01".join(f"{ref}={val}" for ref, val in m["cells"]).encode("utf-8")
-        ).hexdigest()
-        return [(
-            d, True, m["sheet_name"], m["n_rows"], m["n_cells"], digest, None,
-        )]
-
-    return map_rows(media.select("doc_id", "payload"), one, XLSX_STATS_SCHEMA)
+    return parse_payloads(media, _stats, XLSX_STATS_SCHEMA)

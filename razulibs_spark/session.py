@@ -57,10 +57,12 @@ option turns it on or off. It lives in ``razulibs-spark`` under
 ``$XDG_CACHE_HOME`` or ``~/.cache``, never in a checkout or under
 ``TMPDIR`` (a benchmark points that at a directory it deletes). Its
 name is keyed by the JDK build (``release``, ``lib/modules``,
-``libjvm.so``) and by the jars on the driver class path (names, sizes,
-mtimes). The first session of a key dumps it as its JVM exits
-(``-XX:ArchiveClassesAtExit``); later sessions map it
-(``-XX:SharedArchiveFile``). When that directory cannot be written,
+``libjvm.so``), by the jars on the driver class path (names, sizes,
+mtimes) and, for a heap of 32 GiB or more, by the heap's object-pointer
+mode: such a JVM runs without compressed oops, and an archive serves
+only JVMs of the mode that dumped it. The first session of a key dumps
+it as its JVM exits (``-XX:ArchiveClassesAtExit``); later sessions map
+it (``-XX:SharedArchiveFile``). When that directory cannot be written,
 sessions run without an archive.
 
 - Class-path order. JDK 17 will not dump while a non-empty directory
@@ -232,14 +234,25 @@ def _class_path_files(class_path: str) -> list[str]:
     return files
 
 
-def class_data_archive() -> tuple[str, str] | None:
-    """This host's driver class-data archive: its path (which need not
-    exist yet) and the ``spark.driver.extraClassPath`` it is dumped and
-    used with. None when the host allows no archive."""
+def _size_bytes(size: str) -> int | None:
+    """A size as Spark reads ``spark.driver.memory`` (binary units, MiB
+    for a bare number), in bytes; None when Spark would reject it."""
+    m = re.fullmatch(r"(\d+)(?:([kmgtp])b?|(b))?", size.strip().lower())
+    if m is None:
+        return None
+    return int(m.group(1)) << 10 * " kmgtp".index(m.group(2) or ("" if m.group(3) else "m"))
+
+
+def class_data_archive(heap: str) -> tuple[str, str] | None:
+    """This host's driver class-data archive for a driver of ``heap``
+    (``spark.driver.memory``): its path (which need not exist yet) and
+    the ``spark.driver.extraClassPath`` it is dumped and used with. None
+    when the host allows no archive."""
     java_home, spark_home = _java_home(), _find_spark_home()
     host_class_path = _host_class_path(spark_home)
     cache = archive_dir()
-    if java_home is None or host_class_path is None or cache is None:
+    heap_bytes = _size_bytes(heap)
+    if None in (java_home, host_class_path, cache, heap_bytes):
         return None
     jdk = [os.path.join(java_home, f) for f in ("release", "lib/modules", "lib/server/libjvm.so")]
     if not all(os.path.isfile(f) for f in jdk):
@@ -254,7 +267,10 @@ def class_data_archive() -> tuple[str, str] | None:
         except OSError:
             continue
         key.update(f"{f}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
-    install = hashlib.sha256(f"{java_home}\0{spark_home}".encode()).hexdigest()[:12]
+    install = f"{java_home}\0{spark_home}"
+    if heap_bytes >= 32 << 30:  # no compressed oops: another archive
+        install += "\0uncompressed-oops"
+    install = hashlib.sha256(install.encode()).hexdigest()[:12]
     path = os.path.join(cache, f"driver-{install}-{key.hexdigest()[:16]}.jsa")
     if re.search(r"[\s\"'\\]", path):
         return None  # the launcher splits the Java options at white space
@@ -314,6 +330,7 @@ def _install_archive(proc: subprocess.Popen, tmp: str, final: str) -> None:
 
 def get_spark(app_name: str = "razulibs-spark", cpus: int | None = None) -> SparkSession:
     n = cpus if cpus is not None else default_parallelism()
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
     java_options = JIT_POLICY
     builder = (
         SparkSession.builder.appName(app_name)
@@ -326,7 +343,7 @@ def get_spark(app_name: str = "razulibs-spark", cpus: int | None = None) -> Spar
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.warehouse.dir", scratch_path("warehouse"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "razulibs_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
@@ -335,7 +352,7 @@ def get_spark(app_name: str = "razulibs-spark", cpus: int | None = None) -> Spar
     # Only a JVM this call launches takes the archive's options.
     archive = dump = None
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
-        archive = class_data_archive()
+        archive = class_data_archive(heap)
     if archive is not None:
         path, class_path = archive
         _remove_dead_dumps(os.path.dirname(path))

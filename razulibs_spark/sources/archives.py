@@ -16,12 +16,24 @@ oracle hash the roundtrip.
 
 Strictness: a corrupt central directory / tar header raises ValueError
 naming the archive defect — ingest gate, not silent drop.
+
+``Package`` is the one ZIP reader of the library: ``read_zip`` and the
+payload formats that are ZIP containers (DOCX, XLSX, PPTX, ODT, EPUB)
+open their bytes through it, so every way a ZIP can be bad reaches
+their fail-closed passes as the same ValueError.
 """
 
 from __future__ import annotations
 
+import contextlib
 import io
+import lzma
 import os
+import posixpath
+import zipfile
+import zlib
+from collections.abc import Container
+from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -46,28 +58,104 @@ ARCHIVE_MEMBER_SCHEMA = StructType(
 )
 
 
-def _zip_members(path: str, content: bytes) -> list[tuple]:
-    import zipfile
+_REL_NS = "http://schemas.openxmlformats.org/package/2006/relationships"
 
+
+class Package:
+    """One ZIP container held in memory: an OPC package (DOCX, XLSX,
+    PPTX), an OCF package (ODT, EPUB) or a plain archive.
+
+    Every way its bytes can be bad raises ValueError prefixed with
+    ``fmt``: not a ZIP, truncated, a member that fails its CRC or
+    inflate, uses an unsupported compression method or is encrypted,
+    a missing member, malformed XML. A format checks the members it
+    needs against ``names`` first when its own message names the
+    defect."""
+
+    def __init__(self, payload: bytes, fmt: str):
+        self.fmt = fmt
+        with self._reading("not a zip package"):
+            self._zf = zipfile.ZipFile(io.BytesIO(bytes(payload)))
+        self.infos = self._zf.infolist()
+        self.names = {info.filename for info in self.infos}
+
+    @contextlib.contextmanager
+    def _reading(self, what: str):
+        # zipfile: BadZipFile (header, CRC), EOFError (cut stream),
+        # NotImplementedError (method), RuntimeError (encrypted),
+        # ValueError (wild offset); the deflate, bzip2 and LZMA codecs'
+        # own errors
+        try:
+            yield
+        except (zipfile.BadZipFile, EOFError, RuntimeError, ValueError,
+                zlib.error, OSError, lzma.LZMAError, ET.ParseError) as exc:
+            raise ValueError(f"{self.fmt}: {what}: {exc}") from exc
+
+    def read(self, member: str | zipfile.ZipInfo) -> bytes:
+        """The bytes of one member, by name or by its entry in ``infos``."""
+        name = getattr(member, "filename", member)
+        if name not in self.names:
+            raise ValueError(f"{self.fmt}: member {name} missing")
+        with self._reading(f"member {name}"):
+            return self._zf.read(member)
+
+    def xml(self, name: str) -> ET.Element:
+        data = self.read(name)
+        with self._reading(f"malformed xml in {name}"):
+            return ET.fromstring(data)
+
+    def rels(self, source: str) -> dict[str, tuple[str, str]] | None:
+        """The OPC relationships of part ``source`` ("" for the package
+        itself) as Id → (Type, target part name), or None when the
+        part has no relationships part. Targets resolve as ECMA-376
+        Part 2 §9.2 says: a leading '/' is package-absolute, any other
+        target is relative to the source part's directory, with ``../``
+        segments normalized."""
+        base_dir, base = posixpath.split(source)
+        name = posixpath.join(base_dir, "_rels", base + ".rels")
+        if name not in self.names:
+            return None
+        out = {}
+        for rel in self.xml(name).iter(f"{{{_REL_NS}}}Relationship"):
+            target = rel.get("Target", "")
+            part = (target.lstrip("/") if target.startswith("/")
+                    else posixpath.normpath(posixpath.join(base_dir, target)))
+            out[rel.get("Id")] = (rel.get("Type", ""), part)
+        return out
+
+    def check_mimetype(self, expected: str) -> None:
+        """The OCF rule of ODF and EPUB: a ``mimetype`` member names
+        the package's media type."""
+        if "mimetype" not in self.names:
+            raise ValueError(f"{self.fmt}: OCF package without mimetype member")
+        mime = self.read("mimetype").decode("ascii", "replace")
+        if mime != expected:
+            raise ValueError(f"{self.fmt}: mimetype is {mime!r}, not {expected}")
+
+
+def zip_package(members: dict[str, str | bytes], stored: Container[str] = ("mimetype",)) -> bytes:
+    """The payload encoders' ZIP writer: ``members`` (name → data) in
+    order, each deflated unless named in ``stored`` (OCF wants its
+    ``mimetype`` member first and stored), every timestamp at ZIP's
+    1980-01-01 floor so that one input gives one byte string."""
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, data in members.items():
+            info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
+            info.compress_type = zipfile.ZIP_STORED if name in stored else zipfile.ZIP_DEFLATED
+            zf.writestr(info, data)
+    return buf.getvalue()
+
+
+def _zip_members(path: str, content: bytes) -> list[tuple]:
     name = os.path.basename(path)
-    try:
-        zf = zipfile.ZipFile(io.BytesIO(content))
-        rows = []
-        for info in zf.infolist():
-            if info.is_dir():
-                continue
-            rows.append(
-                (
-                    name,
-                    info.filename,
-                    info.file_size,
-                    info.compress_type != zipfile.ZIP_STORED,
-                    zf.read(info),
-                )
-            )
-        return rows
-    except zipfile.BadZipFile as exc:
-        raise ValueError(f"zip: {name}: {exc}") from exc
+    pkg = Package(content, f"zip: {name}")
+    return [
+        (name, info.filename, info.file_size,
+         info.compress_type != zipfile.ZIP_STORED, pkg.read(info))
+        for info in pkg.infos
+        if not info.is_dir()
+    ]
 
 
 def _tar_members(path: str, content: bytes) -> list[tuple]:
@@ -115,8 +203,6 @@ def write_zip_shards(
     for a whole partition, and ``session.each_partition`` merges
     partitions to one task per core, which would multiply that
     buffer (and change the one-file-per-partition layout)."""
-    import zipfile
-
     os.makedirs(directory, exist_ok=True)
     method = zipfile.ZIP_DEFLATED if compress else zipfile.ZIP_STORED
 

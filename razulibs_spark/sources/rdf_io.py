@@ -49,11 +49,13 @@ def _terms(short) -> tuple[Column, Column, Column]:
     writer cannot spell, which becomes ``_:<md5>``. A parsed label is
     thus the same node as subject and as object, and a parsed graph
     keeps its blank-node links. Literals carry the N-Triples escapes,
-    then a language tag or a datatype IRI."""
-    s, o, o_type = F.col("s"), F.col("o"), F.col("o_type")
+    then a language tag or a datatype IRI. A null object is the empty
+    string, so its row still makes a whole statement."""
+    s, o_type = F.col("s"), F.col("o_type")
+    o = F.coalesce(F.col("o"), F.lit(""))
 
     def term(name: str, blank: Column) -> Column:
-        value = F.col(name)
+        value = o if name == "o" else F.col(name)
         return F.coalesce(short(name), F.when(blank, _bnode(value)).otherwise(
             F.concat(F.lit("<"), value, F.lit(">"))))
 

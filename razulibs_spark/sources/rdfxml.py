@@ -567,13 +567,12 @@ def _trix_graph_chunks(pdf) -> list[str]:
     """One pandas batch of widened quads → complete <graph> blocks
     (repeated blocks per label are legal TriX and merge on parse).
     Module-level and pure-pandas for the roundtrip property suite."""
-    from xml.sax.saxutils import escape
-
     chunks: list[str] = []
     for g, grp in pdf.groupby(pdf["g"].fillna(""), sort=False):
         lines = ["<graph>"]
         if g:
-            lines.append(f"  <uri>{escape(str(g))}</uri>")
+            label = _xml_attr_escape(grp["g"].iloc[:1].astype(str), "TriX value")
+            lines.append(f"  <uri>{label.iloc[0]}</uri>")
         lines.extend(_trix_triple_lines(grp))
         lines.append("</graph>")
         chunks.append("\n".join(lines))
@@ -721,9 +720,8 @@ def write_trig(triples: DataFrame, path: str) -> None:
     `cat part-*` is itself valid TriG, the same merge property as
     write_turtle. The JVM formats each line with ntriples_line(), the
     one term formatter of the line sinks; the Python pass only groups
-    the ready lines into blocks. A null object is written as the empty
-    literal: ntriples_line() would drop the term."""
+    the ready lines into blocks."""
     if "g" not in triples.columns:
         triples = triples.withColumn("g", F.lit(None).cast("string"))
-    lines = triples.fillna("", ["o"]).select(ntriples_line().alias("line"), "g")
+    lines = triples.select(ntriples_line().alias("line"), "g")
     _write_framed(lines, path, _trig_chunks)

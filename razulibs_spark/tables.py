@@ -7,6 +7,7 @@ documents embeddings — one parquet each under an sf dir.
 from __future__ import annotations
 
 import os
+from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -16,6 +17,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from razulibs_spark.session import map_rows
 
 TABLES = (
     "region",
@@ -78,6 +81,33 @@ PAYLOAD_SCHEMA = StructType(
 TYPED_PAYLOAD_SCHEMA = StructType(
     PAYLOAD_SCHEMA.fields + [StructField("media_format", StringType(), False)]
 )
+
+
+def parse_payloads(
+    media: DataFrame,
+    parse: Callable[[bytes], Sequence[Any]],
+    schema: StructType,
+) -> DataFrame:
+    """The fail-closed rule of the payload parsers: one ``map_rows``
+    pass over ``media``'s (doc_id, payload) rows into ``schema``, whose
+    fields are doc_id, a success flag, the format's values and a note.
+
+    ``parse(payload)`` returns the values after the flag, note
+    included. A ValueError, which every parser raises for a malformed
+    payload, becomes ``(doc_id, False, None…, str(exc))``, so a poison
+    row never fails its task. Any other exception is a bug, and it
+    fails the job."""
+    missing = (None,) * (len(schema.fields) - 3)
+
+    def one(doc_id, payload):
+        d = int(doc_id)
+        try:
+            values = parse(bytes(payload))
+        except ValueError as exc:
+            return [(d, False, *missing, str(exc))]
+        return [(d, True, *values)]
+
+    return map_rows(media.select("doc_id", "payload"), one, schema)
 
 
 def widen_python_stage(df: DataFrame) -> DataFrame:

@@ -24,7 +24,7 @@ def test_spine_order_not_manifest_order():
 
 
 def test_container_resolution_and_fail_closed():
-    with pytest.raises(ValueError, match="not an OCF package"):
+    with pytest.raises(ValueError, match="not a zip package"):
         parse_epub(b"PK\x03\x04junk")
     with pytest.raises(ValueError, match="OPF package .* missing"):
         parse_epub(encode_epub(19, "en", ["x"], poison=True))

@@ -21,6 +21,7 @@
 - Every per-file Python scan lists its files through
   `session.map_files`; the two `binaryFile` sources that stay are
   named, each with its reason.
+- One module opens a ZIP for reading: `sources/archives.py`.
 """
 
 from __future__ import annotations
@@ -418,3 +419,30 @@ def test_one_per_file_scan():
     `binaryFile` source."""
     scans = set().union(*(_binary_file_scans(m) for m in ROW_MODULES + ["session.py"]))
     assert scans == {("session.py", "map_files")} | set(OWN_FILE_SCANS)
+
+
+def _zip_reads(module) -> list[int]:
+    """Lines of every ``ZipFile`` that ``module`` opens in a mode other
+    than write ("w" or "x")."""
+    with open(os.path.join(ROOT, module), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    lines = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        if getattr(node.func, "attr", getattr(node.func, "id", None)) != "ZipFile":
+            continue
+        mode = node.args[1] if len(node.args) > 1 else next(
+            (k.value for k in node.keywords if k.arg == "mode"), None)
+        if not (isinstance(mode, ast.Constant) and mode.value in ("w", "x")):
+            lines.append(node.lineno)
+    return lines
+
+
+def test_one_zip_reader():
+    """ZIP payloads and archives are read through
+    `sources/archives.Package`, which reports every way their bytes can
+    be bad as one ValueError. A write-mode ZipFile is no reader."""
+    readers = {module: lines for module in ROW_MODULES + ["session.py"]
+               if (lines := _zip_reads(module))}
+    assert set(readers) == {"sources/archives.py"}, readers

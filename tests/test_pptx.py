@@ -27,7 +27,7 @@ def test_slide_order_runs_and_fields():
 
 
 def test_fail_closed_paths():
-    with pytest.raises(ValueError, match="not an OPC package"):
+    with pytest.raises(ValueError, match="not a zip package"):
         parse_pptx(b"PK\x03\x04 junk")
     with pytest.raises(ValueError, match="missing in package"):
         parse_pptx(encode_pptx(3, WORDS, poison=True))

@@ -5,6 +5,8 @@
   so `write_ntriples`, `write_turtle` and `write_turtle_grouped` give
   back the graph that was read, and an export re-imported and exported
   again gives the same lines.
+- A null object is written as the empty literal, so its row still
+  reads back as one statement.
 - `read_ntriples`, `read_nquads` and the line-subset `read_turtle` skip
   ``#`` comment lines and trailing comments, and raise on any other
   line outside their grammar instead of returning an empty triple.
@@ -76,6 +78,18 @@ def test_engine_export_reimports_to_the_same_lines(spark, tmp_path):
     write_ntriples(read_ntriples(spark, first), second)
     assert _lines(first) == _lines(second)
     assert _linked(read_ntriples(spark, second))
+
+
+@pytest.mark.parametrize("writer, reader", [
+    (write_ntriples, read_ntriples),
+    (write_turtle, read_turtle),
+])
+def test_null_object_reads_back_as_the_empty_literal(spark, tmp_path, writer, reader):
+    out = str(tmp_path / "out")
+    writer(local_frame(spark, [(EX + "s", EX + "p", None, "literal", None, None)],
+                       TRIPLE_SCHEMA), out)
+    got = [(r["s"], r["p"], r["o"], r["o_type"]) for r in reader(spark, out).collect()]
+    assert got == [(EX + "s", EX + "p", "", "literal")]
 
 
 def test_comment_lines_and_trailing_comments_are_skipped(spark, tmp_path):

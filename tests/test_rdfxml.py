@@ -224,6 +224,21 @@ def test_trix_roundtrip_with_graphs(spark, tmp_path):
     assert have == want
 
 
+def test_trix_graph_labels_use_the_checked_escaper(spark, tmp_path):
+    """A graph label is escaped as every other TriX value: an
+    XML-1.0-illegal character raises at write time instead of writing a
+    document no reader accepts, and a CR reads back as a CR."""
+    def quads(label):
+        return _triples_df(spark).limit(1).withColumn("g", F.lit(label))
+
+    with pytest.raises(Exception, match="TriX value contains XML-1.0-illegal"):
+        write_trix(quads("https://ex.org/g\x07"), str(tmp_path / "bell.trix"))
+    cr = quads("https://ex.org/g\r1")
+    write_trix(cr, str(tmp_path / "cr.trix"))
+    have = [tuple(r) for r in read_trix(spark, str(tmp_path / "cr.trix")).collect()]
+    assert have == [tuple(r) for r in cr.collect()]
+
+
 def test_trig_roundtrip_with_graphs(spark, tmp_path):
     df = _triples_df(spark).withColumn(
         "g",

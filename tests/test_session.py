@@ -10,6 +10,7 @@ output ``maxRecordsPerBatch`` rows at a time."""
 from __future__ import annotations
 
 import glob
+import hashlib
 import json
 import os
 import re
@@ -27,6 +28,7 @@ from razulibs_spark.session import (
     CDS_QUIET,
     JIT_POLICY,
     _install_archive,
+    _java_home,
     archive_dir,
     class_data_archive,
     each_partition,
@@ -207,7 +209,7 @@ def _finish(proc):
 def _archive_for(cache):
     with pytest.MonkeyPatch.context() as mp:
         mp.setenv("XDG_CACHE_HOME", str(cache))
-        found = class_data_archive()
+        found = class_data_archive("1g")
     if found is None:
         pytest.skip("this host allows no class-data archive")
     return found[0]
@@ -311,7 +313,29 @@ def test_archive_installs_only_after_a_clean_exit(tmp_path):
     assert final.read_bytes() == b"archive"
 
 
+def test_archive_name_keys_the_compressed_oops_mode(monkeypatch, tmp_path):
+    """A heap of 32 GiB or more runs without compressed oops, and an
+    archive serves only its own mode: such heaps get their own
+    ``<install>`` part, so neither mode's install deletes the other's
+    archive. Below 32 GiB the name is the one every earlier version
+    gave (install = hash of the JDK and Spark homes)."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    paths = {heap: (class_data_archive(heap) or pytest.skip("no archive on this host"))[0]
+             for heap in ("1g", "16g", "31g", "32g", "40g", "32768")}
+    small = paths["1g"]
+    assert paths["16g"] == paths["31g"] == small
+    assert paths["40g"] == paths["32768"] == paths["32g"] != small
+
+    def parts(path):  # driver, <install>, <key>.jsa
+        return os.path.basename(path).split("-")
+
+    assert parts(paths["32g"])[::2] == parts(small)[::2]
+    install = f"{_java_home()}\0{_find_spark_home()}"
+    assert parts(small)[1] == hashlib.sha256(install.encode()).hexdigest()[:12]
+    assert class_data_archive("1.5g") is None  # Spark takes no fractional size
+
+
 def test_unwritable_cache_means_no_archive(monkeypatch, tmp_path):
     (tmp_path / "file").write_text("")
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "file" / "cache"))
-    assert archive_dir() is None and class_data_archive() is None
+    assert archive_dir() is None and class_data_archive("1g") is None

@@ -56,7 +56,7 @@ def test_sheet_resolved_via_opc_walk_not_name():
 
 
 def test_fail_closed_paths():
-    with pytest.raises(ValueError, match="not an OPC package"):
+    with pytest.raises(ValueError, match="not a zip package"):
         parse_xlsx(b"PK\x03\x04 garbage")
     with pytest.raises(ValueError, match="missing in package"):
         parse_xlsx(encode_xlsx(21, ["x"], poison=True))
